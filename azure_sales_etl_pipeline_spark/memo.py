@@ -1,0 +1,104 @@
+"""Spark results shared across query calls — the package's one memo.
+
+Several query families start from the same materialized substrate: the
+blocked-Jaccard pair table, the MinHash bands, the TF-IDF and BM25 term
+tables, the DSIR features, the connected-components cluster table, the
+demo medallion lake. ``shared`` builds each substrate once per
+``(name, applicationId, sf_dir)`` and hands every later caller the same
+value; each consumer module says why its substrate is shared.
+
+The key carries the ``applicationId`` because a checkpointed frame is
+bound to the SparkContext that materialized its blocks: a hit from a
+later session would hand back a frame whose lineage points at a stopped
+context.
+
+Each entry is ``(value, releases)``: the JVM RDD handle of every
+``localCheckpoint``ed frame the build registered, and every tmp dir it
+created. ``DataFrame.unpersist`` goes through the cache manager and
+does not free ``localCheckpoint`` blocks; only the checkpoint's own RDD
+handle does.
+
+A harness that times passes (``bench.py``, ``scripts/time_family.py``,
+``scripts/count_jobs.py``, the ``perfbench`` workloads) calls
+``evict_all()`` before every pass, so each pass pays every build exactly
+once, on whichever consumer runs first, and later consumers show their
+true marginal cost. ``perfbench`` finds the store by walking the
+package for module-level ``evict_*`` callables and the dict globals
+their code names, so ``evict_all`` keeps its name and names ``_STORE``
+in its own body.
+"""
+
+from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
+from typing import Callable
+
+#: (name, applicationId, sf_dir) -> (value, releases)
+_STORE: dict[tuple[str, str, str], tuple[object, list]] = {}
+
+
+class Releases:
+    """Handed to a ``shared`` build: registers what ``evict_all`` frees."""
+
+    def __init__(self) -> None:
+        self.items: list = []
+
+    def frame(self, df):
+        """Register a ``localCheckpoint``ed frame's blocks; returns ``df``."""
+        self.items.append(df._jdf.queryExecution().analyzed().rdd())
+        return df
+
+    def tmpdir(self, prefix: str) -> str:
+        """Create a tmp dir that lives as long as the entry."""
+        path = tempfile.mkdtemp(prefix=prefix)
+        self.items.append(path)
+        return path
+
+
+def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
+    """The value memoized under ``name`` for this session and ``sf_dir``;
+    on a miss, ``build(releases)`` runs once and its value is kept."""
+    key = (name, spark.sparkContext.applicationId, sf_dir)
+    hit = _STORE.get(key)
+    if hit is None:
+        releases = Releases()
+        try:
+            value = build(releases)
+        except BaseException:
+            _free(releases.items)
+            raise
+        hit = _STORE[key] = (value, releases.items)
+    return hit[0]
+
+
+def drop_checkpoint(df) -> None:
+    """Free a ``localCheckpoint``ed frame's blocks now (a build's
+    intermediate that no kept value reads any more)."""
+    _free([df._jdf.queryExecution().analyzed().rdd()])
+
+
+def _free(releases: list) -> None:
+    for item in releases:
+        if isinstance(item, str):
+            shutil.rmtree(item, ignore_errors=True)
+            continue
+        try:
+            item.unpersist(False)
+        except Exception:  # noqa: BLE001 — session may already be gone
+            pass
+
+
+def evict_all(where: Callable[[tuple[str, str, str]], bool] | None = None) -> None:
+    """Free and drop every entry, or those whose key ``where`` accepts."""
+    for key in [k for k in _STORE if where is None or where(k)]:
+        _free(_STORE.pop(key)[1])
+
+
+@atexit.register
+def _remove_tmp_dirs() -> None:
+    """At exit the JVM takes every checkpoint block with it; only the
+    tmp dirs would outlive the process."""
+    for _value, releases in _STORE.values():
+        _free([item for item in releases if isinstance(item, str)])

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import memo
 from ..catalog import load_table
 
 _WS = r"\s+"
@@ -123,46 +124,23 @@ def _jaccard_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Shared RAW blocked-candidate pair table (doc_a, doc_b, jaccard):
-#: THREE data paths each eagerly checkpointed an IDENTICAL copy per
-#: bench pass — the registered [[ngram_jaccard_pairs]] query, the CC
-#: cluster build (``mlprep._compute_dedup_clusters``, whose comment
-#: already mandates the checkpoint as an optimizer barrier so Catalyst
-#: cannot push ``jaccard >= t`` into the blocking join), and
-#: [[cluster_labels_two_batch]]'s edge pass. One memoized build per
-#: (applicationId, sf_dir) under the _MINHASH_STAGE_CACHE honesty
-#: contract — bench evicts per pass, whichever consumer runs first
-#: pays. Values are (DataFrame, JVM RDD handle) for eager block
-#: release on evict (r14 advice #1 idiom).
-_JACCARD_PAIRS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def jaccard_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized eager checkpoint of ``_jaccard_pairs_frame`` — the
-    substrate every blocked-Jaccard consumer starts from. The
-    checkpoint doubles as the optimizer barrier the CC build needs
-    (filtering a checkpoint scan cannot be pushed into the join)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _JACCARD_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    pairs = _jaccard_pairs_frame(spark, sf_dir).localCheckpoint(eager=True)
-    _JACCARD_PAIRS_CACHE[key] = (
-        pairs,
-        pairs._jdf.queryExecution().analyzed().rdd(),
+    substrate every blocked-Jaccard consumer starts from. Three data
+    paths read the identical table: the registered
+    [[ngram_jaccard_pairs]] query, the CC cluster build
+    (``mlprep._compute_dedup_clusters``) and
+    [[cluster_labels_two_batch]]'s edge pass. The checkpoint doubles as
+    the optimizer barrier the CC build needs (filtering a checkpoint
+    scan cannot be pushed into the join)."""
+    return memo.shared(
+        "jaccard_pairs",
+        spark,
+        sf_dir,
+        lambda keep: keep.frame(
+            _jaccard_pairs_frame(spark, sf_dir).localCheckpoint(eager=True)
+        ),
     )
-    return pairs
-
-
-def evict_jaccard_pairs_cache() -> None:
-    """Drop the shared raw Jaccard pair table (bench per-pass hook),
-    eagerly freeing its checkpointed blocks."""
-    for _df, jrdd in _JACCARD_PAIRS_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _JACCARD_PAIRS_CACHE.clear()
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,41 +217,23 @@ def _simhash_bits(docs: DataFrame) -> DataFrame:
     return hashed.select("doc_id", F.array_join(bits, "").alias("simhash_bits"))
 
 
-#: Shared per-doc SimHash signature table: the registered [[simhash]]
-#: sketch query and [[simhash_hamming_pairs]] (which eagerly
-#: checkpointed its own copy) consume the IDENTICAL (doc_id,
-#: simhash_bits) table — one memoized build per (applicationId,
-#: sf_dir) under the _MINHASH_STAGE_CACHE honesty contract (bench
-#: evicts per pass; whichever consumer runs first pays). Values are
-#: (DataFrame, JVM RDD handle) for eager block release on evict.
-_SIMHASH_SIG_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def simhash_sigs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized eager checkpoint of the per-doc SimHash signature
-    table — the substrate both simhash consumers start from."""
+    table — the substrate both simhash consumers start from: the
+    registered [[simhash]] sketch query and [[simhash_hamming_pairs]]
+    read the identical (doc_id, simhash_bits) table."""
     from ..functions import spread_for_cpu
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIMHASH_SIG_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    sigs = _simhash_bits(
-        spread_for_cpu(load_table(spark, sf_dir, "documents"))
-    ).localCheckpoint(eager=True)
-    _SIMHASH_SIG_CACHE[key] = (sigs, sigs._jdf.queryExecution().analyzed().rdd())
-    return sigs
-
-
-def evict_simhash_sig_cache() -> None:
-    """Drop the shared SimHash signature table (bench per-pass hook),
-    eagerly freeing its checkpointed blocks."""
-    for _df, jrdd in _SIMHASH_SIG_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _SIMHASH_SIG_CACHE.clear()
+    return memo.shared(
+        "simhash_sigs",
+        spark,
+        sf_dir,
+        lambda keep: keep.frame(
+            _simhash_bits(
+                spread_for_cpu(load_table(spark, sf_dir, "documents"))
+            ).localCheckpoint(eager=True)
+        ),
+    )
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,90 +533,40 @@ def minhash_signature(df: DataFrame, text_col: str = "text", k: int = _MINHASH_K
     return staged.withColumn("signature", sig).drop("__hs", "__sh", "__t")
 
 
-# One (staged, bands) build per (SparkContext, sf_dir): FIVE registered
-# consumers rebuild the identical signature tables otherwise
-# (minhash_lsh_candidates, minhash_index_two_batch,
-# minhash_jaccard_estimate_check, plus minhash_recall_check and the
-# curation pipeline through lsh_candidates) — ~1 s/build steady at
-# sf0.1. Models "the band index is materialized once, queries probe
-# it"; bench evicts per PASS (evict_minhash_stage_cache — the
-# _IVF_CENTROID_CACHE honesty contract: each pass pays the build once,
-# on whichever consumer runs first). Values are (staged, bands,
-# jrdd_staged, jrdd_bands) — the JVM RDD handles are the only way to
-# eagerly free localCheckpoint blocks on evict (see
-# similarity._NORM_CORPUS_CACHE, r14 advice #1).
-_MINHASH_STAGE_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_minhash_stage_cache() -> None:
-    """Drop the shared signature/band tables (bench per-pass hook),
-    eagerly freeing their checkpointed blocks."""
-    for _staged, _bands, js, jb in _MINHASH_STAGE_CACHE.values():
-        for j in (js, jb):
-            try:
-                j.unpersist(False)
-            except Exception:  # noqa: BLE001 — session may already be gone
-                pass
-    _MINHASH_STAGE_CACHE.clear()
-
-
-#: Shared exploded 3-token-shingle index: (doc_id, g) rows where g is
-#: the sha256 hex of a distinct within-doc 3-token shingle, docs with
-#: < 3 tokens excluded. [[shingle_containment_pairs]] (here) and
-#: [[doc_novelty]] (textops) consume the IDENTICAL table and each
-#: built its own checkpointed copy (~2 s of tokenize+sha256 per build
-#: at sf0.1); one memoized build per (SparkContext, sf_dir) under the
-#: _MINHASH_STAGE_CACHE honesty contract — bench evicts per pass,
-#: whichever consumer runs first pays. Values are (DataFrame, JVM RDD
-#: handle) — the handle eagerly frees the localCheckpoint blocks on
-#: evict (r14 advice #1 idiom).
-_SHINGLE3_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def shingle3_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized inverted-index substrate every 3-shingle
-    consumer starts from: explode per-doc DISTINCT sha256 shingles.
-    Token stage behind ``plan_barrier`` so CollapseProject cannot
-    re-inline the split into per-position lambdas (SCALE.md trap 2);
-    ``spread_for_cpu`` fans the sha256-bound map across cores."""
+    consumer starts from: (doc_id, g) rows, g the sha256 hex of a
+    distinct within-doc 3-token shingle, docs with < 3 tokens excluded.
+    [[shingle_containment_pairs]] (here) and [[doc_novelty]] (textops)
+    read the identical table (~2 s of tokenize+sha256 per build at
+    sf0.1), so it is memoized. Token stage behind ``plan_barrier`` so
+    CollapseProject cannot re-inline the split into per-position
+    lambdas (SCALE.md trap 2); ``spread_for_cpu`` fans the sha256-bound
+    map across cores."""
     from ..functions import plan_barrier, spread_for_cpu
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE3_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
-    toks = _tokens()
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(F.col("t")) - (_CONT_K - 1)),
-            lambda i: F.sha2(
-                F.array_join(F.slice(F.col("t"), i, _CONT_K), " "), 256
-            ),
-        )
-    )
-    ex = (
-        plan_barrier(
-            docs.where(F.size(toks) >= _CONT_K).select(
-                "doc_id", toks.alias("t")
+    def build(keep):
+        docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
+        toks = _tokens()
+        grams = F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(F.col("t")) - (_CONT_K - 1)),
+                lambda i: F.sha2(
+                    F.array_join(F.slice(F.col("t"), i, _CONT_K), " "), 256
+                ),
             )
         )
-        .select("doc_id", F.explode(grams).alias("g"))
-        .localCheckpoint()
-    )
-    _SHINGLE3_CACHE[key] = (ex, ex._jdf.queryExecution().analyzed().rdd())
-    return ex
+        return keep.frame(
+            plan_barrier(
+                docs.where(F.size(toks) >= _CONT_K).select(
+                    "doc_id", toks.alias("t")
+                )
+            )
+            .select("doc_id", F.explode(grams).alias("g"))
+            .localCheckpoint()
+        )
 
-
-def evict_shingle3_cache() -> None:
-    """Drop the shared 3-shingle index (bench per-pass hook), eagerly
-    freeing its checkpointed blocks."""
-    for _df, jrdd in _SHINGLE3_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _SHINGLE3_CACHE.clear()
+    return memo.shared("shingle3", spark, sf_dir, build)
 
 
 def _staged_shingles_and_bands(spark: SparkSession, sf_dir: str):
@@ -665,45 +575,40 @@ def _staged_shingles_and_bands(spark: SparkSession, sf_dir: str):
     shingle array, digest array) eagerly checkpointed so the
     2-sha256-per-shingle work runs once; ``bands`` = exploded
     (doc_id, band_idx, band_hash) posting rows, also checkpointed —
-    the exact table a persisted LSH band index stores. Memoized per
-    (SparkContext, sf_dir) — see ``_MINHASH_STAGE_CACHE``."""
+    the exact table a persisted LSH band index stores. Memoized: five
+    registered consumers (those two, minhash_jaccard_estimate_check,
+    minhash_recall_check and the curation pipeline through
+    lsh_candidates) would rebuild the identical tables otherwise, ~1 s
+    per build steady at sf0.1."""
     from ..functions import plan_barrier, spread_for_cpu
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MINHASH_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit[0], hit[1]
-
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
-    r = _MINHASH_K // _LSH_BANDS
-    staged = (
-        plan_barrier(
-            plan_barrier(docs.select("doc_id", _tokens().alias("t"))).select(
-                "doc_id", F.array_distinct(_shingles(F.col("t"))).alias("sh")
+    def build(keep):
+        docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
+        r = _MINHASH_K // _LSH_BANDS
+        staged = keep.frame(
+            plan_barrier(
+                plan_barrier(docs.select("doc_id", _tokens().alias("t"))).select(
+                    "doc_id", F.array_distinct(_shingles(F.col("t"))).alias("sh")
+                )
             )
+            .withColumn("hs", _hash_slices(F.col("sh")))
+            .localCheckpoint()
         )
-        .withColumn("hs", _hash_slices(F.col("sh")))
-        .localCheckpoint()
-    )
-    sigs = [_sig_slice(F.col("hs"), i) for i in range(_MINHASH_K)]
-    bands = staged.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws("|", *[sigs[b * r + j] for j in range(r)])
-                    for b in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
-    ).localCheckpoint()
-    _MINHASH_STAGE_CACHE[key] = (
-        staged,
-        bands,
-        staged._jdf.queryExecution().analyzed().rdd(),
-        bands._jdf.queryExecution().analyzed().rdd(),
-    )
-    return staged, bands
+        sigs = [_sig_slice(F.col("hs"), i) for i in range(_MINHASH_K)]
+        bands = staged.select(
+            "doc_id",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.concat_ws("|", *[sigs[b * r + j] for j in range(r)])
+                        for b in range(_LSH_BANDS)
+                    ]
+                )
+            ).alias("band_idx", "band_hash"),
+        ).localCheckpoint()
+        return staged, keep.frame(bands)
+
+    return memo.shared("minhash_stage", spark, sf_dir, build)
 
 
 def _jaccard_verify(cand: DataFrame, staged: DataFrame) -> DataFrame:
@@ -1233,7 +1138,7 @@ def minhash_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest work is the same map-side pipeline `minhash_lsh_candidates`
     runs; nothing here shuffles more than (source, 16 slices) rows."""
     docs = load_table(spark, sf_dir, "documents")
-    # Reuse the SHARED band index (_MINHASH_STAGE_CACHE): band_hash is
+    # Reuse the SHARED band index (memo "minhash_stage"): band_hash is
     # concat_ws('|', slice[b·r] … slice[b·r+r−1]) of the SAME 8-hex
     # slices this query needs, so the per-doc signature is a SPLIT of
     # the checkpointed band rows — 0.06 s vs 2.8 s for re-deriving the

@@ -15,7 +15,6 @@ modular predicates (deterministic at every SF).
 
 from __future__ import annotations
 
-import atexit
 import datetime as dt
 import shutil
 import tempfile
@@ -23,9 +22,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import local_df
-
+from .. import memo
 from ..catalog import load_table
+from ..functions import local_df
 
 _T1 = dt.datetime(2024, 1, 1)
 _T2 = dt.datetime(2024, 2, 1)
@@ -949,34 +948,19 @@ def _segment_mart(spark: SparkSession, catalog) -> DataFrame:
     return cur.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_customers"))
 
 
-# One demo-pipeline run per (process, sf_dir): the three pipeline_*
-# queries interrogate different layers of the SAME deterministic
-# two-run orchestration (silver history / gold mart / run log), so
-# re-driving the orchestrator per query would triple the cost for
-# identical on-disk state. The cache holds the pipeline handle and its
-# tmp lake dir; dirs are reaped at interpreter exit. Determinism makes
-# this safe: same sf_dir -> bit-identical lake.
-_DEMO_PIPELINES: dict[str, tuple[object, str]] = {}
-
-
 def _demo_pipeline_cached(spark: SparkSession, sf_dir: str):
-    entry = _DEMO_PIPELINES.get(sf_dir)
-    if entry is None:
-        tmp = tempfile.mkdtemp(prefix="pipe_demo_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        entry = (_run_demo_pipeline(spark, sf_dir, tmp), tmp)
-        _DEMO_PIPELINES[sf_dir] = entry
-    return entry[0]
-
-
-def evict_demo_pipelines() -> None:
-    """Drop cached demo-pipeline runs AND their tmp lake dirs now (the
-    atexit hook only covers interpreter exit — a caller that evicts
-    per pass, like bench.py, would otherwise accumulate one orphaned
-    lake per pass until exit)."""
-    for _, tmp in _DEMO_PIPELINES.values():
-        shutil.rmtree(tmp, ignore_errors=True)
-    _DEMO_PIPELINES.clear()
+    """The demo-pipeline run, memoized with its tmp lake dir: the three
+    pipeline_* queries interrogate different layers of the SAME
+    deterministic two-run orchestration (silver history / gold mart /
+    run log), so re-driving the orchestrator per query would triple
+    the cost for identical on-disk state. Same sf_dir -> bit-identical
+    lake."""
+    return memo.shared(
+        "demo_pipeline",
+        spark,
+        sf_dir,
+        lambda keep: _run_demo_pipeline(spark, sf_dir, keep.tmpdir("pipe_demo_")),
+    )
 
 
 def _run_demo_pipeline(spark: SparkSession, sf_dir: str, tmp: str):

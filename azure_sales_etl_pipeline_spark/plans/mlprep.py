@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..functions import local_df
 from pyspark.sql.window import Window
 
+from .. import memo
 from ..catalog import load_table
 
 # md5-prefix threshold: first two hex chars <= 'cc' keeps 205/256 ≈ 80%.
@@ -794,52 +795,19 @@ def _lineage_cutter(spark: SparkSession, checkpoint_dir: str | None):
     return lambda df: df.checkpoint(eager=True)
 
 
-_CLUSTER_CACHE: dict[str, str] = {}
-
-
-def evict_cluster_cache() -> None:
-    """Drop materialized cluster tables and their tmp dirs now (bench.py
-    evicts per pass so each pass pays the full CC iteration exactly
-    once — the same honesty contract as incremental.evict_demo_pipelines)."""
-    import shutil
-
-    for tmp in _CLUSTER_CACHE.values():
-        shutil.rmtree(tmp, ignore_errors=True)
-    _CLUSTER_CACHE.clear()
-
-
-_AFFINITY_CACHE: dict[str, str] = {}
-
-
-def evict_affinity_cache() -> None:
-    """Drop materialized affinity-edge tables (bench.py evicts per pass
-    so each pass pays the lineitem self-join + support aggregate exactly
-    once — same honesty contract as evict_cluster_cache)."""
-    import shutil
-
-    for tmp in _AFFINITY_CACHE.values():
-        shutil.rmtree(tmp, ignore_errors=True)
-    _AFFINITY_CACHE.clear()
-
-
 def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The support-filtered co-purchase edge list (u, v) — memoized per
-    sf_dir to a tmp parquet table, because TWO registered graph queries
+    """The support-filtered co-purchase edge list (u, v) — memoized to
+    a tmp parquet table, because TWO registered graph queries
     (`part_affinity_triangles`, `copurchase_neighbor_jaccard`) consume
     the identical edges (the lift query needs pair COUNTS, a different
     grain, and stays independent). A production pipeline materializes
     its edge table exactly the same way; re-deriving the lineitem
     self-join per consumer doubles the dominant cost. Parquet rather
     than a cached DataFrame for the same session-hygiene reason as the
-    cluster-table memo above."""
-    import atexit
-    import shutil
-    import tempfile
+    cluster-table memo below."""
 
-    tmp = _AFFINITY_CACHE.get(sf_dir)
-    if tmp is None:
-        tmp = tempfile.mkdtemp(prefix="affinity_cache_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    def build(keep):
+        path = f"{keep.tmpdir('affinity_cache_')}/edges"
         li = (
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
@@ -860,9 +828,10 @@ def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("n_orders") >= _AFFINITY_MIN_ORDERS)
             .select("u", "v")
         )
-        edges.write.mode("overwrite").parquet(f"{tmp}/edges")
-        _AFFINITY_CACHE[sf_dir] = tmp
-    return spark.read.parquet(f"{tmp}/edges")
+        edges.write.mode("overwrite").parquet(path)
+        return path
+
+    return spark.read.parquet(memo.shared("affinity_edges", spark, sf_dir, build))
 
 
 def dedup_clusters(
@@ -878,21 +847,17 @@ def dedup_clusters(
     A parquet table rather than a cached DataFrame because callers
     (bench session hygiene) may drop checkpointed blocks between
     queries. The ``checkpoint_dir`` test knob bypasses the memo."""
-    import atexit
-    import shutil
-    import tempfile
-
     if checkpoint_dir is not None:
         return _compute_dedup_clusters(spark, sf_dir, checkpoint_dir)
-    tmp = _CLUSTER_CACHE.get(sf_dir)
-    if tmp is None:
-        tmp = tempfile.mkdtemp(prefix="cc_cache_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+
+    def build(keep):
+        path = f"{keep.tmpdir('cc_cache_')}/clusters"
         _compute_dedup_clusters(spark, sf_dir, None).write.mode(
             "overwrite"
-        ).parquet(f"{tmp}/clusters")
-        _CLUSTER_CACHE[sf_dir] = tmp
-    return spark.read.parquet(f"{tmp}/clusters")
+        ).parquet(path)
+        return path
+
+    return spark.read.parquet(memo.shared("dedup_clusters", spark, sf_dir, build))
 
 
 def _compute_dedup_clusters(
@@ -1015,6 +980,14 @@ def _compute_dedup_clusters(
             )
         )
         cur_sum = obs.get["s"]
+        if cur_sum is None and prev_sum is not None:
+            # A null sum over a non-empty label table means the
+            # DECIMAL(38,0) sum overflowed; None == None would then
+            # declare convergence on unconverged labels.
+            raise RuntimeError(
+                "dedup_clusters label-sum probe returned null after the "
+                f"non-null sum {prev_sum}: DECIMAL(38,0) overflow"
+            )
         labels = updated
         changed = cur_sum != prev_sum  # None == None for the empty graph
         prev_sum = cur_sum

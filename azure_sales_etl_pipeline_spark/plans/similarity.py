@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import memo
 from ..catalog import load_table
 from ..functions import cosine_similarity, local_df, plan_barrier
 
@@ -921,72 +922,36 @@ def _pq_encode_stats_np(df: DataFrame, books, *, qcol: str = "qfull") -> DataFra
     return df.mapInPandas(kernel, "vec_id bigint, sub bigint, code int, d2 long")
 
 
-# One trained coarse quantizer per (process, sf_dir): ann_topk_ivf and
-# ann_topk_filtered train on the IDENTICAL (vec_id, q) projection, and
-# the all-integer Lloyd build is deterministic, so sharing the k×dim
-# matrix is result-invariant — it models "the index is materialized
-# once, queries probe it" (the production split; r10 verdict called the
-# per-query rebuild acceptable-but-not-chaseworthy). bench.py evicts
-# per PASS (the _CLUSTER_CACHE honesty contract: each pass pays the
-# build once, on whichever consumer runs first).
-_IVF_CENTROID_CACHE: dict[str, list[list[int]]] = {}
-
-
-# The normalized quantized corpus (vec_id, label, vec, qfull) is the
-# shared input of the PQ family (ann_topk_pq, ann_topk_ivfpq,
-# pq_index_maintenance): one localCheckpointed copy per
-# (process, sf_dir) — the normalize+quantize projection feeds ~7
-# downstream jobs per consumer, and the three consumers' copies were
-# byte-identical. Same honesty contract as the centroid cache: bench
-# evicts per pass, whichever consumer runs first pays the build.
-# Keyed by (applicationId, sf_dir), NOT sf_dir alone: a checkpointed
-# DataFrame is bound to the SparkContext that materialized its blocks,
-# so a cache hit from a later/replacement session would hand back a
-# frame whose RDD lineage points at a stopped context (r14 advice #1).
-# The centroid cache above is immune — it stores plain Python lists.
-# Values are (DataFrame, checkpointed JVM RDD) — the RDD handle is the
-# only way to eagerly free localCheckpoint blocks (see evict below).
-_NORM_CORPUS_CACHE: dict[tuple[str, str], tuple] = {}
+def _shared_centroids(spark: SparkSession, sf_dir: str, corpus: DataFrame):
+    """The trained coarse quantizer (k×dim integer lists), memoized:
+    ann_topk_ivf, ann_topk_filtered and the other IVF consumers train
+    on the IDENTICAL (vec_id, q) projection and the all-integer Lloyd
+    build is deterministic, so sharing the matrix is result-invariant —
+    "the index is materialized once, queries probe it"."""
+    return memo.shared(
+        "ivf_centroids", spark, sf_dir, lambda _keep: _train_centroids(corpus)
+    )
 
 
 def _norm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _NORM_CORPUS_CACHE.get(key)
-    if cached is None:
+    """The normalized quantized corpus (vec_id, label, vec, qfull),
+    memoized: the shared input of the PQ family (ann_topk_pq,
+    ann_topk_ivfpq, pq_index_maintenance), whose copies were
+    byte-identical; the projection feeds ~7 downstream jobs per
+    consumer."""
+
+    def build(keep):
         emb = load_table(spark, sf_dir, "embeddings")
-        df = emb.select(
-            "vec_id",
-            "label",
-            _as_double("embedding").alias("vec"),
-            _as_qn(_as_double("embedding")).alias("qfull"),
-        ).localCheckpoint()
-        # Capture the checkpointed JVM RDD for eager eviction:
-        # DataFrame.unpersist() goes through the cacheManager and does
-        # NOT release localCheckpoint blocks (measured: persistent-RDD
-        # count stays 1 after unpersist, 0 after rdd.unpersist) — the
-        # LogicalRDD's own rdd is the handle that frees them.
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        cached = (df, jrdd)
-        _NORM_CORPUS_CACHE[key] = cached
-    return cached[0]
+        return keep.frame(
+            emb.select(
+                "vec_id",
+                "label",
+                _as_double("embedding").alias("vec"),
+                _as_qn(_as_double("embedding")).alias("qfull"),
+            ).localCheckpoint()
+        )
 
-
-def evict_ivf_centroid_cache() -> None:
-    """Drop cached ANN build artifacts — coarse quantizers and the
-    shared normalized corpus (bench per-pass honesty hook). The
-    checkpointed corpus blocks are unpersisted EAGERLY via the captured
-    JVM RDD: dropping the dict entry alone leaves them to the
-    ContextCleaner/GC (r14 advice #1), which on a long-lived session is
-    storage-leak-shaped."""
-    _IVF_CENTROID_CACHE.clear()
-    for _df, jrdd in _NORM_CORPUS_CACHE.values():
-        try:
-            # non-blocking: a stopped session makes this a no-op
-            # failure, not an error worth surfacing at evict time.
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _NORM_CORPUS_CACHE.clear()
+    return memo.shared("norm_corpus", spark, sf_dir, build)
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str, filtered: bool) -> DataFrame:
@@ -1009,10 +974,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, filtered: bool) -> DataFrame:
             "label",
         )
     )
-    centroids = _IVF_CENTROID_CACHE.get(sf_dir)
-    if centroids is None:
-        centroids = _train_centroids(corpus)
-        _IVF_CENTROID_CACHE[sf_dir] = centroids
+    centroids = _shared_centroids(spark, sf_dir, corpus)
 
     indexed = _coarse_assign_np(
         corpus,
@@ -1286,10 +1248,7 @@ def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
         )
     )
-    centroids = _IVF_CENTROID_CACHE.get(sf_dir)
-    if centroids is None:
-        centroids = _train_centroids(corpus)
-        _IVF_CENTROID_CACHE[sf_dir] = centroids
+    centroids = _shared_centroids(spark, sf_dir, corpus)
     pts = _coarse_assign_np(
         corpus, centroids, keep=[], emit=("cluster", "ab")
     ).select(
@@ -1483,10 +1442,7 @@ def embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = plan_barrier(
         emb.select("vec_id", _as_q(_as_double("embedding")).alias("q"))
     )
-    centroids = _IVF_CENTROID_CACHE.get(sf_dir)
-    if centroids is None:
-        centroids = _train_centroids(corpus)
-        _IVF_CENTROID_CACHE[sf_dir] = centroids
+    centroids = _shared_centroids(spark, sf_dir, corpus)
     assigned = _coarse_assign_np(
         corpus, centroids, keep=[], emit=("cluster", "d2")
     ).localCheckpoint(eager=True)
@@ -2365,28 +2321,6 @@ _RRF_DEPTH = 50  # per-retriever candidate depth fed into the fusion
 _RRF_K = 60  # the canonical reciprocal-rank-fusion damping constant
 
 
-# One TF-IDF term table per (SparkContext, sf_dir): FIVE query calls
-# rebuild the identical (doc_id, token, w) table otherwise
-# (sparse_retrieval_topk, hybrid_search_rrf, retrieval_rank_agreement,
-# and _first_stage_candidates under both re-rankers) — ~1.8-2.3 s per
-# build steady at sf0.1. Models "the inverted index is materialized
-# once, queries probe it"; bench evicts per PASS
-# (evict_sparse_terms_cache — the _IVF_CENTROID_CACHE honesty
-# contract). Values are (sw, jrdd) for eager block release on evict.
-_SPARSE_TERMS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_sparse_terms_cache() -> None:
-    """Drop the shared TF-IDF term table (bench per-pass hook),
-    eagerly freeing its checkpointed blocks."""
-    for _sw, jrdd in _SPARSE_TERMS_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _SPARSE_TERMS_CACHE.clear()
-
-
 def _sparse_weighted_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, token, w) TF-IDF term weights over word-BIGRAM shingles
     in integer micronat units: w = tf · floor(10⁶·ln((N+1)/(df+1))) —
@@ -2403,14 +2337,22 @@ def _sparse_weighted_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df·2 > N, idf < ln 2) are dropped: the posting-list cap that keeps
     the inverted-index join's hottest keys bounded at corpus scale.
     One (doc, shingle) shuffle for tf (checkpointed — df re-aggregates
-    from it, the corpus is never re-scanned). Memoized per
-    (SparkContext, sf_dir) — see ``_SPARSE_TERMS_CACHE``."""
-    from ..functions import LN_Z_SQL, ln_from_kz_sql, ln_k_sql, ln_m_sql
+    from it, the corpus is never re-scanned). Memoized: five query
+    calls read the identical table (sparse_retrieval_topk,
+    hybrid_search_rrf, retrieval_rank_agreement, and
+    _first_stage_candidates under both re-rankers), ~2 s per build
+    steady at sf0.1 — "the inverted index is materialized once,
+    queries probe it"."""
+    return memo.shared(
+        "sparse_terms",
+        spark,
+        sf_dir,
+        lambda keep: _build_sparse_terms(spark, sf_dir, keep),
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SPARSE_TERMS_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
+
+def _build_sparse_terms(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+    from ..functions import LN_Z_SQL, ln_from_kz_sql, ln_k_sql, ln_m_sql
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -2455,19 +2397,10 @@ def _sparse_weighted_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one materialization for all consumers (eager)
         .localCheckpoint()
     )
-    # sw is materialized; the intermediate tf checkpoint blocks are no
-    # longer reachable through any cached frame — free them now instead
-    # of leaking one tf copy per consumer call (ContextCleaner-only
-    # before this memo existed).
-    try:
-        tf._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-    _SPARSE_TERMS_CACHE[key] = (
-        sw,
-        sw._jdf.queryExecution().analyzed().rdd(),
-    )
-    return sw
+    # sw is materialized; no kept frame reads the intermediate tf
+    # checkpoint any more — free its blocks now.
+    memo.drop_checkpoint(tf)
+    return keep.frame(sw)
 
 
 def _sparse_ret_cte() -> str:
@@ -3793,10 +3726,7 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = plan_barrier(
         emb.select("vec_id", _as_q(_as_double("embedding")).alias("q"))
     )
-    centroids = _IVF_CENTROID_CACHE.get(sf_dir)
-    if centroids is None:
-        centroids = _train_centroids(corpus)
-        _IVF_CENTROID_CACHE[sf_dir] = centroids
+    centroids = _shared_centroids(spark, sf_dir, corpus)
 
     assigned = _coarse_assign_np(
         corpus, centroids, keep=["vec_id bigint"], emit=("cluster",)
@@ -4251,13 +4181,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # The coarse quantizer trains on the IDENTICAL (vec_id, q)
-    # projection the IVF family uses, so it rides the shared
-    # per-(process, sf_dir) cache — index built once per pass,
-    # whichever consumer runs first pays (r13 verdict item 2).
-    centroids = _IVF_CENTROID_CACHE.get(sf_dir)
-    if centroids is None:
-        centroids = _train_centroids(quant.select("vec_id", "q"))
-        _IVF_CENTROID_CACHE[sf_dir] = centroids
+    # projection the IVF family uses, so it shares the IVF memo.
+    centroids = _shared_centroids(spark, sf_dir, quant.select("vec_id", "q"))
     assigned = _coarse_assign_np(
         quant,
         centroids,

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import memo
 from ..catalog import load_table
 from ..functions import local_df, plan_barrier
 
@@ -577,40 +578,21 @@ _WIN_K = 3  # k-gram width (tokens)
 _WIN_W = 4  # winnowing window (grams)
 
 
-#: Shared winnowed-fingerprint table (doc_id, fingerprint): the
-#: registered [[winnowing_fingerprints]] query and
-#: [[winnowing_plagiarism_pairs]] (which checkpointed its own copy)
-#: consume the IDENTICAL table — one memoized build per
-#: (applicationId, sf_dir) under the _MINHASH_STAGE_CACHE honesty
-#: contract (bench evicts per pass; whichever consumer runs first
-#: pays). Values are (DataFrame, JVM RDD handle) for eager block
-#: release on evict.
-_WINNOW_FP_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_winnow_fp_cache() -> None:
-    """Drop the shared winnowed-fingerprint table (bench per-pass
-    hook), eagerly freeing its checkpointed blocks."""
-    for _df, jrdd in _WINNOW_FP_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _WINNOW_FP_CACHE.clear()
-
-
 def winnowing_fingerprints_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized eager checkpoint of ``_winnowing_fingerprints_frame`` —
-    the substrate both winnowing consumers start from."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _WINNOW_FP_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    fp = _winnowing_fingerprints_frame(spark, sf_dir).localCheckpoint(
-        eager=True
+    the substrate both winnowing consumers start from: the registered
+    [[winnowing_fingerprints]] query and [[winnowing_plagiarism_pairs]]
+    read the identical (doc_id, fingerprint) table."""
+    return memo.shared(
+        "winnow_fp",
+        spark,
+        sf_dir,
+        lambda keep: keep.frame(
+            _winnowing_fingerprints_frame(spark, sf_dir).localCheckpoint(
+                eager=True
+            )
+        ),
     )
-    _WINNOW_FP_CACHE[key] = (fp, fp._jdf.queryExecution().analyzed().rdd())
-    return fp
 
 
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,25 +1288,6 @@ def _unigram_surprisal_sql() -> str:
 _SURPRISAL_SQL = _unigram_surprisal_sql()
 
 
-# One per-doc bigram-surprisal table per (SparkContext, sf_dir): the
-# scored frame is |docs| slim rows and feeds both bigram_surprisal and
-# ccnet_perplexity_buckets (the minhash_source_similarity precedent:
-# read the materialized index instead of re-deriving it). Bench evicts
-# per PASS. Values are (frame, jrdd) for eager block release.
-_BIGRAM_SCORES_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_bigram_scores_cache() -> None:
-    """Drop the shared per-doc bigram-surprisal table (bench per-pass
-    hook), eagerly freeing its checkpointed blocks."""
-    for _f, jrdd in _BIGRAM_SCORES_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _BIGRAM_SCORES_CACHE.clear()
-
-
 def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document total CONDITIONAL surprisal under the corpus's own
     bigram MLE — one Markov order above ``unigram_surprisal``, which
@@ -1343,20 +1306,17 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the sum, so aggregation order can't wobble the driver hash —
     and the same by-construction portable ln (the parity pytest probes
     the production term over this query's full (n_bg, n_prefix)
-    range). The |docs|-row scored frame is memoized per (SparkContext,
-    sf_dir) — [[ccnet_perplexity_buckets]] buckets the same scores
-    (shared-index contract; bench evicts per pass via
-    ``evict_bigram_scores_cache``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BIGRAM_SCORES_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    scored = _bigram_surprisal_build(spark, sf_dir).localCheckpoint()
-    _BIGRAM_SCORES_CACHE[key] = (
-        scored,
-        scored._jdf.queryExecution().analyzed().rdd(),
+    range). The |docs|-row scored frame is memoized —
+    [[ccnet_perplexity_buckets]] buckets the same scores (read the
+    materialized index instead of re-deriving it)."""
+    return memo.shared(
+        "bigram_scores",
+        spark,
+        sf_dir,
+        lambda keep: keep.frame(
+            _bigram_surprisal_build(spark, sf_dir).localCheckpoint()
+        ),
     )
-    return scored
 
 
 def _bigram_surprisal_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3093,40 +3053,26 @@ _BM25R_N_QUERIES = 5  # doc_id < this are the query documents
 _BM25R_TOP_K = 10
 
 
-# One BM25 per-term table per (SparkContext, sf_dir): its consumers
-# (bm25_retrieval_topk, prf_query_expansion, rag_context_pack, plus
-# the retrieval-eval queries built on them) each checkpointed an
-# identical copy. Models "the index is materialized once"; bench
-# evicts per PASS (evict_bm25_cache — the _IVF_CENTROID_CACHE honesty
-# contract). Values are (per_term, jrdd) for eager block release.
-_BM25_TERMS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_bm25_cache() -> None:
-    """Drop the shared BM25 per-term table (bench per-pass hook),
-    eagerly freeing its checkpointed blocks."""
-    for _pt, jrdd in _BM25_TERMS_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _BM25_TERMS_CACHE.clear()
-
-
 def _bm25_per_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc_id, token, bm25_micro) table over word-bigram
     shingles — the scoring substrate under [[bm25_retrieval_topk]] and
     [[prf_query_expansion]]: one (doc, shingle) shuffle for tf
     (checkpointed; dl/df/totals re-aggregate from it), df-capped
     posting lists, idf via the portable ln, per-term scores floored to
-    integer micro-units. Memoized per (SparkContext, sf_dir) — see
-    ``_BM25_TERMS_CACHE``."""
-    from ..functions import LN_Z_SQL, ln_k_sql, ln_m_sql
+    integer micro-units. Memoized: its consumers (bm25_retrieval_topk,
+    prf_query_expansion, rag_context_pack and the retrieval-eval
+    queries built on them) each checkpointed an identical copy — "the
+    index is materialized once"."""
+    return memo.shared(
+        "bm25_terms",
+        spark,
+        sf_dir,
+        lambda keep: _build_bm25_per_term(spark, sf_dir, keep),
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_TERMS_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
+
+def _build_bm25_per_term(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+    from ..functions import LN_Z_SQL, ln_k_sql, ln_m_sql
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower(F.col("text"))), _WS)
@@ -3163,17 +3109,9 @@ def _bm25_per_term(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "token", F.expr(_bm25_score_sql()).alias("bm25_micro"))
         .localCheckpoint()  # feeds query side, corpus side, PRF feedback
     )
-    # per_term is materialized; free the intermediate tf checkpoint now
-    # instead of leaking one copy per consumer call.
-    try:
-        tf._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-    _BM25_TERMS_CACHE[key] = (
-        per_term,
-        per_term._jdf.queryExecution().analyzed().rdd(),
-    )
-    return per_term
+    # per_term is materialized; free the intermediate tf checkpoint now.
+    memo.drop_checkpoint(tf)
+    return keep.frame(per_term)
 
 
 def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4077,49 +4015,20 @@ _DSIR_TARGET = "src0"  # the target domain the raw pool is reweighted toward
 _DSIR_LO_K, _DSIR_HI_K = -40, 40
 
 
-# One DSIR hashed-feature index per (SparkContext, sf_dir): its two
-# consumers (dsir_importance_weights, dsir_resample_topk) otherwise
-# each checkpoint an identical copy of the dominant sha256+hex-decode
-# map. Bench evicts per PASS (the _IVF_CENTROID_CACHE honesty
-# contract). Values are (frame, jrdd) for eager block release.
-_DSIR_FEATS_CACHE: dict[tuple[str, str], tuple] = {}
-
-_DSIR_WEIGHTS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def evict_dsir_feats_cache() -> None:
-    """Drop the shared DSIR feature index (bench per-pass hook),
-    eagerly freeing its checkpointed blocks."""
-    for _f, jrdd in _DSIR_FEATS_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _DSIR_FEATS_CACHE.clear()
-
-
-def evict_dsir_weights_cache() -> None:
-    """Drop the shared DSIR importance-weights table (bench per-pass
-    hook), eagerly freeing its checkpointed blocks."""
-    for _f, jrdd in _DSIR_WEIGHTS_CACHE.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    _DSIR_WEIGHTS_CACHE.clear()
-
-
 def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc_id, source, bucket) hashed-feature index under the
     DSIR family — unigrams ∪ bigrams, sha256-hashed into ``_DSIR_B``
-    buckets. The CPU-dominant step of both consumers; memoized per
-    (SparkContext, sf_dir), see ``_DSIR_FEATS_CACHE``."""
-    from ..functions import hex_to_bigint_sql, spread_for_cpu
+    buckets. The CPU-dominant step of both consumers
+    (dsir_importance_weights, dsir_resample_topk), which otherwise each
+    checkpoint an identical copy of the sha256+hex-decode map —
+    memoized."""
+    return memo.shared(
+        "dsir_feats", spark, sf_dir, lambda keep: _build_dsir_feats(spark, sf_dir, keep)
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DSIR_FEATS_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
+
+def _build_dsir_feats(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+    from ..functions import hex_to_bigint_sql, spread_for_cpu
 
     # CPU-bound map (sha256 + 15-digit hex decode per feature) over a
     # small-file scan: spread across cores first (the containment
@@ -4147,7 +4056,7 @@ def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hx", F.expr("substr(sha2(concat('dsir:', feat), 256), 1, 15)")
         )
     )
-    feats = (
+    return keep.frame(
         plan_barrier(raw)
         .withColumn(
             "bucket",
@@ -4156,11 +4065,6 @@ def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "bucket")
         .localCheckpoint()
     )
-    _DSIR_FEATS_CACHE[key] = (
-        feats,
-        feats._jdf.queryExecution().analyzed().rdd(),
-    )
-    return feats
 
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4189,28 +4093,25 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-shuffle skeleton as the surprisal family, with the vocab
     replaced by a FIXED-width bucket table (DSIR's point: no vocab
     build, stable memory at any corpus size). The feature index is
-    memoized per (SparkContext, sf_dir) — [[dsir_resample_topk]]
-    consumes the same index, and the query's own plan was ALREADY
-    rooted at the index checkpoint, so memoization changes who pays
-    the build, never the plan (the shared-index contract; bench
-    evicts per pass via ``evict_dsir_feats_cache``).
+    memoized — [[dsir_resample_topk]] consumes the same index, and the
+    query's own plan was ALREADY rooted at the index checkpoint, so
+    memoization changes who pays the build, never the plan.
 
     The WEIGHTS table itself is memoized the same way (r16) —
     [[dsir_resample_topk]] consumes the identical table as its race
     substrate, so without the memo every resample run re-fit λ and
-    re-scored the raw pool (the registered-sketch-as-substrate lesson,
-    SCALE.md r15; bench evicts per pass via
-    ``evict_dsir_weights_cache``; same session-keyed, per-pass-evicted
-    honesty contract as every other memo)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DSIR_WEIGHTS_CACHE.get(key)
-    if hit is not None:
-        return hit[0]
-    w = _dsir_weights_from_feats(
-        _dsir_feats(spark, sf_dir).withColumn("n", F.lit(1).cast("bigint"))
-    ).localCheckpoint()
-    _DSIR_WEIGHTS_CACHE[key] = (w, w._jdf.queryExecution().analyzed().rdd())
-    return w
+    re-scored the raw pool (the registered-sketch-as-substrate lesson
+    in SCALE.md)."""
+    return memo.shared(
+        "dsir_weights",
+        spark,
+        sf_dir,
+        lambda keep: keep.frame(
+            _dsir_weights_from_feats(
+                _dsir_feats(spark, sf_dir).withColumn("n", F.lit(1).cast("bigint"))
+            ).localCheckpoint()
+        ),
+    )
 
 
 dsir_importance_weights.__doc__ = dsir_importance_weights.__doc__.format(

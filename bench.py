@@ -45,6 +45,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from azure_sales_etl_pipeline_spark import memo
 from azure_sales_etl_pipeline_spark.session import get_spark
 
 #: Full-GC cadence (queries between gc.collect + System.gc rounds).
@@ -121,56 +122,9 @@ def main() -> None:
         else:
             run_order = list(qs)
         pass_t0 = time.perf_counter()
-        # The three pipeline_* queries share one cached demo-orchestrator
-        # run per process (they read different layers of the same
-        # deterministic lake). Reset the cache each PASS so the median
-        # stays honest: every pass pays the full orchestrator cost once
-        # (on pipeline_end_to_end) and the cached-layer reads show their
-        # true marginal cost, instead of passes 2..n reporting a warm
-        # cache as if the orchestration were free.
-        from azure_sales_etl_pipeline_spark.plans import incremental, mlprep
-
-        incremental.evict_demo_pipelines()
-        # Same contract for the shared cluster table: each pass pays the
-        # full CC iteration once (first CC consumer), cached reads show
-        # their true marginal cost.
-        mlprep.evict_cluster_cache()
-        # Same contract for the shared co-purchase edge table.
-        mlprep.evict_affinity_cache()
-        # Same contract for the shared IVF coarse quantizer (ann_topk_ivf
-        # / ann_topk_filtered): each pass pays ONE Lloyd build, on
-        # whichever consumer runs first.
-        from azure_sales_etl_pipeline_spark.plans import similarity
-
-        similarity.evict_ivf_centroid_cache()
-        # Same contract for the shared MinHash signature/band tables
-        # (five consumers per pass).
-        from azure_sales_etl_pipeline_spark.plans import dedup
-
-        dedup.evict_minhash_stage_cache()
-        # Same contract for the shared raw blocked-Jaccard pair table
-        # (ngram_jaccard_pairs + CC build + cluster_labels_two_batch).
-        dedup.evict_jaccard_pairs_cache()
-        # Same contract for the shared SimHash signature table.
-        dedup.evict_simhash_sig_cache()
-        # Same contract for the shared exploded 3-shingle inverted
-        # index (doc_novelty + shingle_containment_pairs).
-        dedup.evict_shingle3_cache()
-        # Same contract for the shared TF-IDF term table (five
-        # consumers per pass).
-        similarity.evict_sparse_terms_cache()
-        # Same contract for the shared BM25 per-term table.
-        from azure_sales_etl_pipeline_spark.plans import textops
-
-        textops.evict_bm25_cache()
-        # Same contract for the shared DSIR feature index, the
-        # importance-weights table, and the per-doc bigram-surprisal
-        # table (two consumers each).
-        textops.evict_dsir_feats_cache()
-        textops.evict_dsir_weights_cache()
-        textops.evict_bigram_scores_cache()
-        # Same contract for the shared winnowed-fingerprint table.
-        textops.evict_winnow_fp_cache()
+        # Every pass pays each shared-memo build once, on whichever
+        # consumer runs first (see azure_sales_etl_pipeline_spark.memo).
+        memo.evict_all()
         for name in run_order:
             if partial:
                 est = samples[name][-1] if samples[name] else 0.0

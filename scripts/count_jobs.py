@@ -6,8 +6,7 @@ redundant checkpoints, checkpoint cadence) is evidenced by the number
 of Spark jobs a query submits — read off the DAGScheduler's job-id
 counter around the run. Unlike wall-clock on this host (±15-20 %
 between JVMs), the job count is DETERMINISTIC, so before/after deltas
-are exact. Same per-pass memo-eviction hygiene as bench.py/time_family
-(the lockstep pytest covers those two; keep this preamble matching).
+are exact. Same per-pass memo eviction as bench.py (``memo.evict_all``).
 
 Usage::
 
@@ -27,6 +26,7 @@ def main() -> None:
     name = sys.argv[1]
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 
+    from azure_sales_etl_pipeline_spark import memo
     from azure_sales_etl_pipeline_spark.session import get_spark
     from __spark_entry__ import queries
 
@@ -42,30 +42,9 @@ def main() -> None:
 
     fn(spark, sf).write.format("noop").mode("overwrite").save()  # warm
     spark.catalog.clearCache()
-    from azure_sales_etl_pipeline_spark.plans import (
-        dedup,
-        incremental,
-        mlprep,
-        similarity,
-        textops,
-    )
-
     ts = []
     for i in range(passes):
-        incremental.evict_demo_pipelines()
-        mlprep.evict_cluster_cache()
-        mlprep.evict_affinity_cache()
-        similarity.evict_ivf_centroid_cache()
-        dedup.evict_minhash_stage_cache()
-        dedup.evict_jaccard_pairs_cache()
-        dedup.evict_simhash_sig_cache()
-        dedup.evict_shingle3_cache()
-        similarity.evict_sparse_terms_cache()
-        textops.evict_bm25_cache()
-        textops.evict_dsir_feats_cache()
-        textops.evict_dsir_weights_cache()
-        textops.evict_bigram_scores_cache()
-        textops.evict_winnow_fp_cache()
+        memo.evict_all()
         j0 = next_job_id()
         t0 = time.perf_counter()
         fn(spark, sf).write.format("noop").mode("overwrite").save()

@@ -190,15 +190,15 @@ def audit(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, dict]
     # subplan — which erases the FileScan and its PushedFilters from
     # the audited plan. That is correct runtime behavior; the LEDGER
     # judges the cold plan, so clearCache() runs before EVERY query.
-    # The IVF coarse-quantizer cache, by contrast, is evicted ONCE at
-    # the start: training is deterministic, so a warm hit returns the
-    # byte-identical literal centroids a retrain would produce and the
-    # serving plan is unchanged (r15: verified feature-for-feature
-    # equal across all 45 subset∪expectation queries, 34.0 s → 16.4 s;
-    # the training job itself never appears in the audited plan).
-    from azure_sales_etl_pipeline_spark.plans import similarity
+    # The shared memos, by contrast, are evicted ONCE at the start:
+    # their builds are deterministic, so a warm hit returns the
+    # byte-identical substrate a rebuild would produce and the serving
+    # plan is unchanged (verified feature-for-feature equal across all
+    # 45 subset∪expectation queries for the IVF centroids; the build
+    # jobs never appear in the audited plan).
+    from azure_sales_etl_pipeline_spark import memo
 
-    similarity.evict_ivf_centroid_cache()
+    memo.evict_all()
     for name, fn in queries.items():
         try:
             spark.catalog.clearCache()

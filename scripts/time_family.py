@@ -29,6 +29,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
+    from azure_sales_etl_pipeline_spark import memo
     from azure_sales_etl_pipeline_spark.session import get_spark
     from __spark_entry__ import queries
 
@@ -46,33 +47,7 @@ def main() -> None:
 
     samples: dict[str, list[float]] = {n: [] for n in args.names}
     for _ in range(args.passes):
-        # Keep this evict set in lockstep with bench.py's per-pass
-        # preamble — a memo evicted there but not here makes the
-        # targeted numbers read warm vs BENCH_r*.json.
-        from azure_sales_etl_pipeline_spark.plans import (
-            dedup,
-            incremental,
-            mlprep,
-            similarity,
-            textops,
-        )
-
-        incremental.evict_demo_pipelines()
-        mlprep.evict_cluster_cache()
-        mlprep.evict_affinity_cache()
-        similarity.evict_ivf_centroid_cache()
-        dedup.evict_minhash_stage_cache()
-        dedup.evict_shingle3_cache()
-        dedup.evict_jaccard_pairs_cache()
-        # Same contract for the shared SimHash signature table.
-        dedup.evict_simhash_sig_cache()
-        similarity.evict_sparse_terms_cache()
-        textops.evict_bm25_cache()
-        textops.evict_dsir_feats_cache()
-        textops.evict_dsir_weights_cache()
-        textops.evict_bigram_scores_cache()
-        # Same contract for the shared winnowed-fingerprint table.
-        textops.evict_winnow_fp_cache()
+        memo.evict_all()
         for n in args.names:
             t0 = time.perf_counter()
             qs[n](spark, args.sf).write.format("noop").mode("overwrite").save()

@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from azure_sales_etl_pipeline_spark import memo
 from azure_sales_etl_pipeline_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -23,37 +24,13 @@ os.environ.setdefault("SPARK_GRAFT_STREAM_PARTITIONS", "2")
 
 @pytest.fixture(autouse=True)
 def _drop_tmp_dir_memos():
-    """Evict shared-memo cache entries keyed to NON-standard sf_dirs
-    after each test (r15 ADVICE #2): a test that builds a memo over its
-    own tmp dir would otherwise pin that localCheckpoint's blocks in
-    the block manager for the whole session. Entries for the shared
-    SF_DIR fixtures stay warm — they are reused across tests and the
-    session teardown releases them."""
+    """Evict shared-memo entries built over a test's own data dir after
+    each test: they would otherwise pin their checkpoint blocks and tmp
+    dirs for the whole session. Entries over the shared testdata
+    fixtures stay warm — tests reuse them, and exit frees them."""
     yield
-    from azure_sales_etl_pipeline_spark.plans import dedup, similarity, textops
-
-    for cache in (
-        dedup._JACCARD_PAIRS_CACHE,
-        dedup._SIMHASH_SIG_CACHE,
-        dedup._MINHASH_STAGE_CACHE,
-        dedup._SHINGLE3_CACHE,
-        similarity._NORM_CORPUS_CACHE,
-        similarity._SPARSE_TERMS_CACHE,
-        textops._WINNOW_FP_CACHE,
-        textops._BIGRAM_SCORES_CACHE,
-        textops._DSIR_FEATS_CACHE,
-        textops._DSIR_WEIGHTS_CACHE,
-        textops._BM25_TERMS_CACHE,
-    ):
-        for key in [k for k in cache if not str(k[-1]).startswith("/root/testdata/")]:
-            for part in cache.pop(key):
-                # entries are (frame(s)..., jrdd handle(s)...); the JVM
-                # RDD handles are what actually free checkpoint blocks
-                if hasattr(part, "unpersist") and not hasattr(part, "columns"):
-                    try:
-                        part.unpersist(False)
-                    except Exception:  # noqa: BLE001 — session may be gone
-                        pass
+    testdata = os.path.dirname(SF_DIR) + os.sep
+    memo.evict_all(where=lambda key: not str(key[2]).startswith(testdata))
 
 
 @pytest.fixture(scope="session")

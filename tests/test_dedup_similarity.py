@@ -522,10 +522,8 @@ def test_cluster_silhouette_perfect_separation(spark, tmp_path):
     points per cluster."""
     import random
 
-    from azure_sales_etl_pipeline_spark.plans.similarity import (
-        _IVF_CENTROID_CACHE,
-        cluster_silhouette,
-    )
+    from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.plans.similarity import cluster_silhouette
 
     rng = random.Random(11)
     rows = []
@@ -536,7 +534,7 @@ def test_cluster_silhouette_perfect_separation(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label string"
     ).write.parquet(str(tmp_path / "embeddings.parquet"))
-    _IVF_CENTROID_CACHE.pop(str(tmp_path), None)  # isolate from other runs
+    memo.evict_all(where=lambda key: key[2] == str(tmp_path))  # isolate
 
     out = cluster_silhouette(spark, str(tmp_path)).collect()
     assert len(out) == 16
@@ -810,8 +808,8 @@ def test_embedding_outlier_audit_flags_planted_corruption(spark, tmp_path):
     to it) must flag exactly that vector: d2*8 = 49/64*8*delta2 >
     4*sum_d2 = 224/64*delta2, while its 7 clean peers stay under the
     fence."""
+    from azure_sales_etl_pipeline_spark import memo
     from azure_sales_etl_pipeline_spark.plans.similarity import (
-        _IVF_CENTROID_CACHE,
         embedding_outlier_audit,
     )
 
@@ -829,7 +827,7 @@ def test_embedding_outlier_audit_flags_planted_corruption(spark, tmp_path):
         rows, "vec_id long, label long, embedding array<double>"
     ).write.parquet(str(tmp_path / "embeddings.parquet"))
 
-    _IVF_CENTROID_CACHE.pop(str(tmp_path), None)
+    memo.evict_all(where=lambda key: key[2] == str(tmp_path))
     out = {
         r["cluster"]: r
         for r in embedding_outlier_audit(spark, str(tmp_path)).collect()
@@ -869,48 +867,6 @@ def test_minhash_estimate_gate_exact_on_clones(spark, tmp_path):
     assert row["gate_ok"] is True
 
 
-def test_norm_corpus_cache_session_keyed_and_evicts_blocks(spark, tmp_path):
-    """r14 advice #1: the shared normalized-corpus cache must (a) key by
-    the SparkContext that materialized the checkpoint — a cache hit
-    bound to a DIFFERENT session would hand back a frame whose blocks
-    live in a stopped context — and (b) eagerly free the checkpointed
-    blocks on evict (DataFrame.unpersist does NOT release
-    localCheckpoint blocks; only the underlying RDD handle does)."""
-    import pyspark.sql.functions as F
-
-    from azure_sales_etl_pipeline_spark.plans import similarity as sim
-
-    spark.createDataFrame(
-        [(1, [3, 4], "a"), (2, [5, 12], "b")],
-        "vec_id long, embedding array<int>, label string",
-    ).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding"),
-        "label",
-    ).write.parquet(str(tmp_path / "embeddings.parquet"))
-
-    sim.evict_ivf_centroid_cache()  # isolate from earlier tests
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-
-    df = sim._norm_corpus(spark, str(tmp_path))
-    assert df.count() == 2
-    key = (spark.sparkContext.applicationId, str(tmp_path))
-    assert key in sim._NORM_CORPUS_CACHE  # session-scoped key, not bare sf_dir
-    # second call is a hit: same DataFrame object back
-    assert sim._norm_corpus(spark, str(tmp_path)) is df
-    assert jsc.getPersistentRDDs().size() == before + 1
-
-    sim.evict_ivf_centroid_cache()
-    assert not sim._NORM_CORPUS_CACHE
-    # blocking=False unpersist is async on the JVM side — poll briefly
-    import time as _t
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
 def test_semantic_dedup_blocked_matmul_matches_unblocked(spark, tmp_path, monkeypatch):
     """r14 advice #2: the pair kernel column-blocks the g×g matmul so
     per-group temp memory stays bounded as clusters grow. Forcing the
@@ -947,133 +903,6 @@ def test_semantic_dedup_blocked_matmul_matches_unblocked(spark, tmp_path, monkey
     assert any(r[0] == 102 and r[2] == 9 for r in one_block)
 
 
-def test_minhash_stage_cache_hits_and_evicts(spark, tmp_path):
-    """The shared (staged, bands) memo returns the same checkpointed
-    frames on a hit (keyed by (applicationId, sf_dir)) and eagerly
-    frees the blocks on evict — the _NORM_CORPUS_CACHE contract."""
-    from azure_sales_etl_pipeline_spark.plans import dedup
-
-    spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(12)), "en", "web", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dedup.evict_minhash_stage_cache()
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    s1, b1 = dedup._staged_shingles_and_bands(spark, str(tmp_path))
-    s2, b2 = dedup._staged_shingles_and_bands(spark, str(tmp_path))
-    assert s1 is s2 and b1 is b2  # memo hit
-    assert jsc.getPersistentRDDs().size() == before + 2
-    dedup.evict_minhash_stage_cache()
-    assert not dedup._MINHASH_STAGE_CACHE
-    import time as _t
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
-def test_shingle3_cache_hits_and_evicts(spark, tmp_path):
-    """The shared 3-shingle index memo returns the same checkpointed
-    frame on a hit and eagerly frees its blocks on evict — the
-    _MINHASH_STAGE_CACHE contract, applied to the doc_novelty /
-    shingle_containment_pairs substrate."""
-    from azure_sales_etl_pipeline_spark.plans import dedup
-
-    spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(12)), "en", "web", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dedup.evict_shingle3_cache()
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    e1 = dedup.shingle3_index(spark, str(tmp_path))
-    e2 = dedup.shingle3_index(spark, str(tmp_path))
-    assert e1 is e2  # memo hit
-    assert jsc.getPersistentRDDs().size() == before + 1
-    # 12 tokens -> 10 distinct 3-shingles for the single doc
-    assert e1.count() == 10
-    dedup.evict_shingle3_cache()
-    assert not dedup._SHINGLE3_CACHE
-    import time as _t
-
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
-def test_simhash_sig_cache_hits_and_evicts(spark, tmp_path):
-    """The shared SimHash signature memo returns the same checkpointed
-    frame on a hit (keyed by (applicationId, sf_dir)) and eagerly
-    frees its blocks on evict — the _MINHASH_STAGE_CACHE contract,
-    applied to the simhash / simhash_hamming_pairs substrate."""
-    from azure_sales_etl_pipeline_spark.plans import dedup
-
-    spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(8)), "en", "web", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dedup.evict_simhash_sig_cache()
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    s1 = dedup.simhash_sigs_raw(spark, str(tmp_path))
-    s2 = dedup.simhash_sigs_raw(spark, str(tmp_path))
-    assert s1 is s2  # memo hit
-    assert jsc.getPersistentRDDs().size() == before + 1
-    rows = s1.collect()
-    assert len(rows) == 1 and len(rows[0]["simhash_bits"]) == 64
-    dedup.evict_simhash_sig_cache()
-    assert not dedup._SIMHASH_SIG_CACHE
-    import time as _t
-
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
-def test_jaccard_pairs_cache_hits_and_evicts(spark, tmp_path):
-    """The shared raw blocked-Jaccard pair memo returns the same
-    checkpointed frame on a hit (keyed by (applicationId, sf_dir)) and
-    eagerly frees its blocks on evict — the _MINHASH_STAGE_CACHE
-    contract, applied to the substrate shared by ngram_jaccard_pairs,
-    the CC cluster build, and cluster_labels_two_batch."""
-    from azure_sales_etl_pipeline_spark.plans import dedup
-
-    text = " ".join(f"w{i}" for i in range(8))
-    spark.createDataFrame(
-        [(1, text, "en", "web", 0), (2, text + " extra", "en", "web", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dedup.evict_jaccard_pairs_cache()
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    p1 = dedup.jaccard_pairs_raw(spark, str(tmp_path))
-    p2 = dedup.jaccard_pairs_raw(spark, str(tmp_path))
-    assert p1 is p2  # memo hit
-    assert jsc.getPersistentRDDs().size() == before + 1
-    # the two same-source neighbors form exactly one candidate pair
-    rows = p1.collect()
-    assert len(rows) == 1 and rows[0]["doc_a"] == 1 and rows[0]["doc_b"] == 2
-    dedup.evict_jaccard_pairs_cache()
-    assert not dedup._JACCARD_PAIRS_CACHE
-    import time as _t
-
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
 def test_novelty_two_batch_matches_one_shot_and_kills_cross_batch_dups(
     spark, tmp_path
 ):
@@ -1083,7 +912,7 @@ def test_novelty_two_batch_matches_one_shot_and_kills_cross_batch_dups(
     persisted state, not the batch), a fresh batch-2 doc must score
     1000, and the full fold must equal doc_novelty on the union
     bit-for-bit."""
-    from azure_sales_etl_pipeline_spark.plans import dedup
+    from azure_sales_etl_pipeline_spark import memo
     from azure_sales_etl_pipeline_spark.plans.textops import (
         doc_novelty,
         novelty_two_batch,
@@ -1102,7 +931,7 @@ def test_novelty_two_batch_matches_one_shot_and_kills_cross_batch_dups(
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    dedup.evict_shingle3_cache()
+    memo.evict_all(where=lambda key: key[2] == str(tmp_path))
     folded = {
         r["doc_id"]: r
         for r in novelty_two_batch(spark, str(tmp_path)).collect()

@@ -170,3 +170,31 @@ def test_land_batch_timestamped_naming_round_trip(spark, tmp_path):
 
     ing = CsvIngestor(spark, str(tmp_path / "bronze"), clock=lambda: dtm.datetime(2024, 1, 3))
     assert ing.run(str(landing)) == {"customers": 2}
+
+
+def test_watermark_is_the_true_batch_max(spark, tmp_path):
+    """bronze_to_silver stores the batch max(ts_col) observed during the
+    SCD2 upsert's first full pass over the batch. A partial-scan action
+    fired first (take/limit) would pin a lower value; pin the invariant
+    on the initial load and on an incremental batch, each spread over
+    several files so a partial scan misses the max."""
+    from azure_sales_etl_pipeline_spark.operators.writer import append_evolve
+
+    cfg = TableConfig("customers", "id")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [cfg],
+                             clock=lambda: dt.datetime(2024, 6, 1))
+    bronze = str(pipe.catalog.path("bronze", cfg.name))
+    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
+    batches = [
+        [(i, f"n{i}", t1 + dt.timedelta(hours=i)) for i in range(40)],
+        # 20 updates, 20 inserts, and one row older than the watermark
+        [(i, f"m{i}", t2 + dt.timedelta(hours=i)) for i in range(20, 60)]
+        + [(99, "late", t1)],
+    ]
+    for rows in batches:
+        append_evolve(spark, spark.createDataFrame(
+            rows, f"id long, name string, {cfg.ts_col} timestamp"), bronze)
+        prev = pipe.watermarks.get(cfg.name)
+        expected = max(ts for _, _, ts in rows if ts > prev)
+        pipe.bronze_to_silver(cfg)
+        assert pipe.watermarks.get(cfg.name) == expected

@@ -74,38 +74,6 @@ def test_winnowing_plagiarism_pairs_guarantee_and_asymmetry(spark, tmp_path):
     assert r["match_b_permille"] == 1000 * r["n_shared"] // r["n_fp_b"]
 
 
-def test_winnow_fp_cache_hits_and_evicts(spark, tmp_path):
-    """The shared winnowed-fingerprint memo returns the same
-    checkpointed frame on a hit (keyed by (applicationId, sf_dir)) and
-    eagerly frees its blocks on evict — the _MINHASH_STAGE_CACHE
-    contract, applied to the winnowing substrate."""
-    from azure_sales_etl_pipeline_spark.plans import textops
-
-    spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(12)), "en", "web", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    textops.evict_winnow_fp_cache()
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    f1 = textops.winnowing_fingerprints_raw(spark, str(tmp_path))
-    f2 = textops.winnowing_fingerprints_raw(spark, str(tmp_path))
-    assert f1 is f2  # memo hit
-    assert jsc.getPersistentRDDs().size() == before + 1
-    # 12 tokens -> 10 grams -> 7 windows; distinct minima >= 1
-    assert 1 <= f1.count() <= 7
-    textops.evict_winnow_fp_cache()
-    assert not textops._WINNOW_FP_CACHE
-    import time as _t
-
-    for _ in range(50):
-        if jsc.getPersistentRDDs().size() == before:
-            break
-        _t.sleep(0.1)
-    assert jsc.getPersistentRDDs().size() == before
-
-
 def test_pii_redact_plants_and_scrubs(spark, docs_dir):
     out = {r["doc_id"]: r for r in pii_redact(spark, docs_dir).collect()}
     r = out[3]

@@ -48,6 +48,45 @@ def test_dedup_clusters_chain_beyond_iteration_cap(spark, tmp_path):
     assert labels[100] == 100, "singleton keeps its own cluster"
 
 
+def test_dedup_clusters_null_label_sum_after_seed_raises(spark, tmp_path, monkeypatch):
+    """A null label-sum probe after a non-null seed sum means the
+    DECIMAL(38,0) sum overflowed: the loop must raise instead of
+    reading None == None as convergence. A null seed sum is the empty
+    graph and still returns every doc as its own cluster."""
+    from pyspark.sql import Observation
+
+    from azure_sales_etl_pipeline_spark.plans import mlprep
+
+    made = []
+
+    class NullAfterSeed(Observation):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            made.append(self)
+
+        @property
+        def get(self):
+            return super().get if self is made[0] else {"s": None}
+
+    monkeypatch.setattr(mlprep, "Observation", NullAfterSeed)
+    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    clone = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    corpora = {
+        "clones": [(1, clone, "en", "src0", 50), (2, clone, "en", "src0", 50)],
+        "loners": [(1, "narwhal quokka", "en", "src0", 14), (2, "axolotl zebra", "en", "src0", 13)],
+    }
+    for name, rows in corpora.items():
+        spark.createDataFrame(rows, schema).write.parquet(
+            str(tmp_path / name / "documents.parquet")
+        )
+
+    with pytest.raises(RuntimeError, match="overflow"):
+        mlprep._compute_dedup_clusters(spark, str(tmp_path / "clones"))
+    made.clear()
+    out = mlprep._compute_dedup_clusters(spark, str(tmp_path / "loners")).collect()
+    assert {r["doc_id"]: r["cluster_id"] for r in out} == {1: 1, 2: 2}
+
+
 def test_cluster_size_histogram_planted_distribution(spark, tmp_path):
     """Planted 3-clone cluster + two singletons: the histogram must
     report exact sizes with integer corpus shares and a ≥-size
