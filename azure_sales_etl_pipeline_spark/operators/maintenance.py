@@ -22,6 +22,7 @@ HDFS/object-store note).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -250,23 +251,40 @@ def merge_fingerprint_index(
     return survivors, read_table(spark, index_path)
 
 
-_CC_FOLD_MAX_ITERS = 8
+_CC_MAX_ITERS = 8  # pointer-doubling rounds: covers diameters up to ~2^8
 
 
-def _cc_min_label(edges: DataFrame, max_iters: int = _CC_FOLD_MAX_ITERS) -> DataFrame:
-    """Min-label connected components over an edge list — ``(node,
-    label)`` for every node that appears in an edge, labeled with the
-    minimum node id reachable from it. The same pointer-doubling loop
-    as ``plans.mlprep._compute_dedup_clusters`` (see its docstring for
-    the convergence argument), but over an arbitrary ``(src, dst)``
-    edge DataFrame so ``merge_cluster_labels`` can run it on the
-    CONTRACTED label graph, whose size is proportional to the new
-    batch's edges — never the corpus.
+def _cc_min_label(
+    edges: DataFrame,
+    cut: Callable[[DataFrame], DataFrame] = lambda df: df.localCheckpoint(),
+) -> DataFrame:
+    """Min-label connected components over a ``(src, dst)`` edge list —
+    ``(node, label)`` for every node that appears in an edge, labeled
+    with the minimum node id reachable from it. The one CC kernel: the
+    corpus-wide ``plans.mlprep.dedup_clusters``, the contracted-graph
+    fold ``merge_cluster_labels`` and ``golden_part_records`` all run
+    it. Duplicate edges and ``src == dst`` edges are harmless (every
+    aggregate is a min/max), so callers need not dedup.
+
+    Min-label propagation with pointer doubling: each round is (a) one
+    equi-join (adj ⋈ labels, shuffle on node) + one min-aggregate,
+    then (b) labels compress through themselves (label ← label-of-
+    label), which halves remaining path lengths. Without (b) rounds
+    needed = component diameter (dup CHAINS make that linear); with
+    it, O(log diameter), so ``_CC_MAX_ITERS`` rounds cover diameters
+    up to ~2^8 — past that it raises rather than return partial
+    (mislabeled) components. At the fixed point every label equals the
+    min over its closed neighborhood and labels are idempotent, which
+    forces label = component minimum. ``cut`` is the per-round lineage
+    cut (``plans.mlprep._lineage_cutter``: localCheckpoint by default,
+    reliable checkpoint() for preemptible fleets), so round k never
+    replays rounds 1..k-1. Per round: ONE action, the eager cut (the
+    convergence probe rides it via ``observe()``).
 
     Node/label values are an ARBITRARY orderable type (the golden-
     record query runs this over part-name STRINGS), so every probe
-    below must stay type-generic — pinned by
-    ``tests/test_maintenance.py::test_cc_min_label_string_nodes``."""
+    below must stay type-generic — pinned by the hypothesis test in
+    ``tests/test_properties.py``."""
     # Undirected + one self-loop per node: (v, v) rows make the
     # per-round neighbor-min aggregate yield min over the CLOSED
     # neighborhood directly, so no re-join of the label table is needed
@@ -277,21 +295,15 @@ def _cc_min_label(edges: DataFrame, max_iters: int = _CC_FOLD_MAX_ITERS) -> Data
     und = edges.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")).union(
         edges.select(F.col("dst").alias("doc_a"), F.col("src").alias("doc_b"))
     )
-    adj = (
-        und.union(und.select(F.col("doc_a"), F.col("doc_a").alias("doc_b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    adj = cut(und.union(und.select(F.col("doc_a"), F.col("doc_a").alias("doc_b"))))
     # Seed each label with the closed-neighborhood min — the same
     # one-groupBy pass the identity seed needs to build the node set,
     # but it banks the first propagation round for free.
-    labels = (
-        adj.groupBy(F.col("doc_a").alias("node"))
-        .agg(F.min("doc_b").alias("label"))
-        .localCheckpoint(eager=True)
+    labels = cut(
+        adj.groupBy(F.col("doc_a").alias("node")).agg(F.min("doc_b").alias("label"))
     )
     changed = 0
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         mid = (
             adj.join(labels, adj.doc_b == labels.node)
             .groupBy("doc_a")
@@ -305,38 +317,36 @@ def _cc_min_label(edges: DataFrame, max_iters: int = _CC_FOLD_MAX_ITERS) -> Data
         )
         # Pointer doubling: label <- label(label); label values are
         # node keys present in `mid`, so the self-join is total. `mid`
-        # is intentionally NOT checkpointed: computing it twice (probe
-        # + build) is cheaper than a separate materialization job.
+        # is intentionally NOT checkpointed: both join sides reuse its
+        # one groupBy exchange, cheaper than a materialization job.
         lab_map = mid.select(
-            F.col("doc_a").alias("r_node"), F.col("mid").alias("r_lab")
+            F.col("doc_a").alias("r_node"),
+            F.col("mid").alias("r_lab"),
+            F.col("old").alias("r_old"),
         )
         # The convergence probe rides the materialization job via
-        # observe() (CollectMetrics) instead of a second count() action
-        # on the checkpointed rows — one job per round, not two. The
-        # metric is exact: it counts every row the checkpoint writes.
+        # observe() (CollectMetrics) instead of a second count() action.
+        # count(r_old) only keeps `old` alive on the lab_map side: were
+        # it pruned there, the two sides' aggregates would differ and
+        # Spark could not reuse the exchange — up to one extra job per
+        # round.
         obs = Observation()
-        updated = (
+        labels = cut(
             mid.join(lab_map, F.col("mid") == F.col("r_node"))
-            .select(
-                F.col("doc_a").alias("node"),
-                F.col("r_lab").alias("new_label"),
-                "old",
-            )
             .observe(
                 obs,
-                F.sum(
-                    (F.col("new_label") != F.col("old")).cast("long")
-                ).alias("changed"),
+                F.sum((F.col("r_lab") != F.col("old")).cast("long")).alias("changed"),
+                F.count("r_old").alias("_reuse"),
             )
-            .localCheckpoint(eager=True)
+            .select(F.col("doc_a").alias("node"), F.col("r_lab").alias("label"))
         )
         changed = obs.get["changed"] or 0
-        labels = updated.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"_cc_min_label did not converge in {max_iters} pointer-doubling "
-        f"rounds ({changed} labels still changing); raise max_iters"
+        f"_cc_min_label did not converge in {_CC_MAX_ITERS} pointer-doubling "
+        f"rounds ({changed} labels still changing): component diameter "
+        f"exceeds ~2^{_CC_MAX_ITERS}; raise _CC_MAX_ITERS"
     )
 
 
@@ -360,8 +370,10 @@ def merge_cluster_labels(
        nodes → persisted label, new nodes → themselves);
     2. contract: edges between LABELS (self-loops drop) — a graph
        whose size is O(new edges), independent of corpus size;
-    3. run min-label CC on the contracted graph (``_cc_min_label`` —
-       pointer doubling; old clusters are single contracted nodes);
+    3. run min-label CC on the contracted graph (``_cc_min_label``,
+       the same kernel ``dedup_clusters`` runs; old clusters are single
+       contracted nodes, and the repeated label edges two clusters
+       share need no dedup — the kernel's aggregates are min/max);
     4. remap: one hash join of the persisted label table against the
        label→label fix-ups (clusters untouched by the batch pass
        through), plus one lookup for the new nodes, union, staged

@@ -128,8 +128,8 @@ def jaccard_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized eager checkpoint of ``_jaccard_pairs_frame`` — the
     substrate every blocked-Jaccard consumer starts from. Three data
     paths read the identical table: the registered
-    [[ngram_jaccard_pairs]] query, the CC cluster build
-    (``mlprep._compute_dedup_clusters``) and
+    [[ngram_jaccard_pairs]] query, the CC cluster build's edge
+    selection (``mlprep._compute_dedup_clusters``) and
     [[cluster_labels_two_batch]]'s edge pass. The checkpoint doubles as
     the optimizer barrier the CC build needs (filtering a checkpoint
     scan cannot be pushed into the join)."""
@@ -1415,7 +1415,7 @@ def golden_part_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution END-TO-END — the MDM "golden record" pipeline:
     (1) blocked fuzzy matching ([[fuzzy_name_pairs]] — head-noun
     blocks, levenshtein survivors), (2) transitive closure of the
-    match graph (min-label pointer-doubling components via
+    match graph (the one min-label CC kernel,
     `operators.maintenance._cc_min_label`, run over EDGE NAMES only —
     singleton names, the overwhelming majority, skip the iteration),
     (3) survivorship: per entity cluster keep the member with the

@@ -598,7 +598,8 @@ def cluster_labels_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
     # The RAW pairs are checkpointed before the jaccard filter — same
-    # trap as _compute_dedup_clusters (see its comment): filtering
+    # trap as _compute_dedup_clusters' edge selection (see its
+    # comment; both then run the one CC kernel): filtering
     # first lets Catalyst push `jaccard >= t` into the blocking join's
     # condition, where the O(|tokens|) set-overlap runs on every
     # blocked candidate (measured 14.2 s → ~4 s for this edge step at

@@ -10,9 +10,10 @@ replay it exactly.
 
 Scale notes per operator are on the docstrings; the common theme: one
 shuffle on a small key, no driver-side data, no Python in the loop. The
-connected-components loop is the one iterative operator — each pass is
-a bounded self-join + aggregate with ``localCheckpoint`` cutting the
-lineage (without it, iteration k replays all k-1 prior joins).
+connected-components build runs the one CC kernel
+(``operators.maintenance._cc_min_label``) — each pass is a bounded
+self-join + aggregate with a lineage cut (without it, iteration k
+replays all k-1 prior joins).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from pyspark.sql.window import Window
 
 from .. import memo
 from ..catalog import load_table
+from ..operators.maintenance import _cc_min_label
 
 # md5-prefix threshold: first two hex chars <= 'cc' keeps 205/256 ≈ 80%.
 _TRAIN_PREFIX_MAX = "cc"
@@ -775,9 +777,6 @@ def _curation_pipeline_sql() -> str:
 
 
 _CC_JACCARD_MIN = 0.6
-_CC_MAX_ITERS = 8
-
-
 
 
 def _lineage_cutter(spark: SparkSession, checkpoint_dir: str | None):
@@ -869,31 +868,13 @@ def _compute_dedup_clusters(
     minimum doc_id reachable from it. Downstream keeps one doc per
     cluster_id — the standard last stage of MinHash dedup at scale.
 
-    Min-label propagation with pointer doubling over a SELF-LOOPED
-    adjacency: (v, v) rows make the per-round neighbor-min aggregate
-    yield min over the CLOSED neighborhood directly, so each round is
-    (a) one equi-join (adj ⋈ labels, shuffle on doc_id) + one
-    min-aggregate, then (b) labels compress through themselves
-    (label ← label-of-label), which halves remaining path lengths.
-    Without (b) rounds needed = component diameter (dup CHAINS make
-    that linear — a 1M-doc chain would need 1M rounds); with it,
-    O(log diameter). No cross product anywhere; state is one row per
-    doc. ``localCheckpoint`` after each round cuts the lineage so round
-    k doesn't replay rounds 1..k-1 — at 1000 executors this is the
-    difference between O(k) and O(k²) work. Convergence check is the
-    SUM of labels observed on the round's own materialization job:
-    labels are per-node non-increasing (every step a min), so the sum
-    strictly decreases until the fixed point and "sum unchanged" is
-    exactly "no label changed" — no extra action, no old-label join.
-    At the fixed point every label equals the min over its closed
-    neighborhood and labels are idempotent, which forces
-    label = component minimum.
-
-    The loop runs ONLY over nodes that appear in an edge — singleton
-    docs (the overwhelming majority after blocking: near-dups are rare)
-    never change label, so they skip the iteration entirely and union
-    back in at the end. Per round: ONE eager ``localCheckpoint``
-    materialization job over the edge-node set only.
+    The components come from the one CC kernel,
+    ``operators.maintenance._cc_min_label`` (pointer-doubling min-label
+    propagation; see its docstring for the convergence argument), with
+    this function's lineage cut for its rounds. The loop runs ONLY over
+    nodes that appear in an edge — singleton docs (the overwhelming
+    majority after blocking: near-dups are rare) never change label, so
+    they skip the iteration entirely and union back in at the end.
     """
     # Materialize the candidate pairs BEFORE filtering on jaccard: the
     # checkpoint is an optimizer barrier that keeps Catalyst from
@@ -916,94 +897,13 @@ def _compute_dedup_clusters(
         from .dedup import _jaccard_pairs_frame
 
         raw_pairs = cut(_jaccard_pairs_frame(spark, sf_dir))
-    edges = raw_pairs.where(
-        F.col("jaccard") >= _CC_JACCARD_MIN
-    ).select("doc_a", "doc_b")
-    # Undirected (propagate both ways) PLUS a self-loop per edge node:
-    # with (v, v) rows present, the per-round neighbor-min aggregate
-    # yields min over the CLOSED neighborhood directly — the separate
-    # "least(own, nbr_min)" re-join of the label table disappears from
-    # every round (measured: 48 → 41 jobs on the full sf0.1 graph,
-    # labels bit-identical; the one-time cost is |V| extra adj rows).
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    edges = raw_pairs.where(F.col("jaccard") >= _CC_JACCARD_MIN).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    adj = cut(
-        und.union(und.select(F.col("doc_a"), F.col("doc_a").alias("doc_b")))
+    labels = _cc_min_label(edges, cut).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
     all_docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # Iterate only over edge nodes. SEED each label with the closed-
-    # neighborhood min — the same one-groupBy pass the identity seed
-    # needs to build the node set, but it banks the first propagation
-    # round for free (self-loops make min(doc_b) already include self).
-    # Convergence rides the SUM of labels: every step is a min, so
-    # per-node labels are non-increasing and the label sum is strictly
-    # decreasing until the fixed point — sum unchanged ⇔ no label
-    # changed, the same stop round as an explicit changed-count, with
-    # no old-label join needed to compute it. DECIMAL(38,0) keeps the
-    # sum exact at any corpus size (1e12 ids × 1e12 nodes ≪ 1e38).
-    obs0 = Observation()
-    labels = cut(
-        adj.groupBy(F.col("doc_a").alias("doc_id"))
-        .agg(F.min("doc_b").alias("cluster_id"))
-        .observe(
-            obs0, F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
-        )
-    )
-    prev_sum = obs0.get["s"]
-    for _ in range(_CC_MAX_ITERS):
-        mid = (
-            adj.join(labels, adj.doc_b == labels.doc_id)
-            .groupBy("doc_a")
-            .agg(F.min("cluster_id").alias("mid"))
-        )
-        # Pointer doubling: label <- label(label). Every label value is
-        # itself an edge-node doc_id (mins of doc_ids), so the join is
-        # total. `mid` is intentionally NOT checkpointed: computing it
-        # twice (probe + build of this self-join) is cheaper than a
-        # separate materialization job.
-        lab_map = mid.select(
-            F.col("doc_a").alias("r_doc"), F.col("mid").alias("r_lab")
-        )
-        # ONE job per round: the convergence probe (label sum) rides
-        # the materialization via observe() (CollectMetrics in the same
-        # plan) instead of a second count() action.
-        obs = Observation()
-        updated = cut(
-            mid.join(lab_map, F.col("mid") == F.col("r_doc"))
-            .select(
-                F.col("doc_a").alias("doc_id"),
-                F.col("r_lab").alias("cluster_id"),
-            )
-            .observe(
-                obs, F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
-            )
-        )
-        cur_sum = obs.get["s"]
-        if cur_sum is None and prev_sum is not None:
-            # A null sum over a non-empty label table means the
-            # DECIMAL(38,0) sum overflowed; None == None would then
-            # declare convergence on unconverged labels.
-            raise RuntimeError(
-                "dedup_clusters label-sum probe returned null after the "
-                f"non-null sum {prev_sum}: DECIMAL(38,0) overflow"
-            )
-        labels = updated
-        changed = cur_sum != prev_sum  # None == None for the empty graph
-        prev_sum = cur_sum
-        if not changed:
-            break
-    else:
-        # Pointer doubling converges in O(log2 diameter) rounds, so
-        # _CC_MAX_ITERS=8 covers component diameters up to ~2^8. Past
-        # that, returning the partial labels would silently mislabel
-        # docs (ADVICE r3) — fail loudly instead; callers with deeper
-        # graphs raise the bound.
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {_CC_MAX_ITERS} pointer-"
-            f"doubling rounds (label sum still decreasing): component "
-            f"diameter exceeds ~2^{_CC_MAX_ITERS}; raise _CC_MAX_ITERS"
-        )
     singletons = all_docs.join(labels.select("doc_id"), "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("cluster_id")
     )

@@ -703,87 +703,6 @@ def _int_sq_dists_np(X, C):
     return x2[:, None] - 2 * (X @ C.T) + c2[None, :]
 
 
-def _lloyd_round_np(emb: DataFrame, centroids: list[list[int]]) -> list:
-    """ONE Lloyd assign+reduce round as ONE Arrow-batched job: each
-    batch assigns its rows to the nearest centroid (int64 matmul +
-    argmin — first index on ties, same as ``array_position(array_min)``)
-    and emits a k×d partial-sum block; a (cluster, dim)-keyed aggregate
-    folds the partials and only the k×d sums reach the driver. Replaces
-    the r2 persist + posexplode two-action round — the per-element HOF
-    evaluation there is CodegenFallback (interpreted, boxed), measured
-    ~0.8 s per round on 2 000 rows at sf0.1 vs ~0.1 s for this kernel.
-    All-integer, so batch boundaries cannot change the result."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-    k, d = C.shape
-
-    def kernel(batches):
-        import pandas as pd
-
-        S = np.zeros((k, d), dtype=np.int64)
-        cnt = np.zeros(k, dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            a = _int_sq_dists_np(X, C).argmin(axis=1)
-            np.add.at(S, a, X)
-            cnt += np.bincount(a, minlength=k)
-            seen = True
-        if seen:
-            ii, jj = np.meshgrid(np.arange(k), np.arange(d), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "cluster": ii.ravel().astype("int32"),
-                    "dim": jj.ravel().astype("int32"),
-                    "s": S.ravel(),
-                    "c": np.repeat(cnt, d),
-                }
-            )
-
-    return (
-        emb.select("q")
-        .mapInPandas(kernel, "cluster int, dim int, s long, c long")
-        .groupBy("cluster", "dim")
-        .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-        .where(F.col("c") > 0)
-        .collect()
-    )
-
-
-def _train_centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _IVF_ITERS) -> list[list[int]]:
-    """Mini k-means on the micro-quantized corpus (column ``q``):
-    deterministic strided seeds, then Lloyd iterations where each round
-    is ONE Arrow-batched assign+reduce job (``_lloyd_round_np`` —
-    vectorized int64 kernels per batch, k×d partial sums shuffled, the
-    r14 replacement for interpreted per-element HOF evaluation). Only
-    the k×dim centroid matrix ever reaches the driver; the corpus
-    never does. All-integer end-to-end (see ``_IVF_SCALE``), so the
-    trained index is bit-identical across engines and runs — what lets
-    the DuckDB oracle replay the whole index build."""
-    n = emb.count()
-    stride = max(n // k, 1)
-    seeds = [
-        [int(v) for v in r["q"]]
-        for r in emb.where(F.col("vec_id") % stride == 0).orderBy("vec_id").limit(k).collect()
-    ]
-    centroids = seeds
-    for _ in range(iters):
-        sums = _lloyd_round_np(emb, centroids)
-        by_cluster: dict[int, dict[int, int]] = {}
-        for r in sums:
-            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = _trunc_div(
-                int(r["s"]), int(r["c"])
-            )
-        centroids = [
-            [by_cluster[c][d] for d in sorted(by_cluster[c])] if c in by_cluster else centroids[c]
-            for c in range(len(centroids))
-        ]
-    return centroids
-
-
 def _coarse_assign_np(
     df: DataFrame,
     centroids: list[list[int]],
@@ -793,8 +712,8 @@ def _coarse_assign_np(
     emit: tuple[str, ...] = ("cluster",),
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE Arrow-batched narrow pass —
-    the serving-side twin of ``_lloyd_round_np`` (same int64 distance
-    expansion, same first-index argmin, so assignments are bit-identical
+    the serving-side twin of ``_pq_lloyd_round_np`` (exact int64
+    distances, same first-index argmin, so assignments are bit-identical
     to the ``_nearest_cluster`` HOF form it replaces; r14 — HOF argmin
     is CodegenFallback and was the IVF family's dominant per-row cost).
 
@@ -929,7 +848,7 @@ def _shared_centroids(spark: SparkSession, sf_dir: str, corpus: DataFrame):
     build is deterministic, so sharing the matrix is result-invariant —
     "the index is materialized once, queries probe it"."""
     return memo.shared(
-        "ivf_centroids", spark, sf_dir, lambda _keep: _train_centroids(corpus)
+        "ivf_centroids", spark, sf_dir, lambda _keep: _train_codebooks(corpus, "q", 1)[0]
     )
 
 
@@ -1089,7 +1008,7 @@ def ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("vec_id", _as_q(_as_double("embedding")).alias("q"))
     )
     batch_a = base.where(F.col("vec_id") % 2 == 0)
-    centroids = _train_centroids(batch_a)
+    centroids = _train_codebooks(batch_a, "q", 1)[0]
 
     assigned = _coarse_assign_np(
         base, centroids, keep=["vec_id bigint"], emit=("cluster", "d2")
@@ -1577,34 +1496,36 @@ def _with_pq_codebooks(df: DataFrame, books: list[list[list[int]]]) -> DataFrame
 
 
 
-def _train_pq_codebooks(
-    emb_q: DataFrame, k: int = _PQ_K, iters: int = _PQ_ITERS
-) -> list[list[list[int]]]:
-    """Per-subspace mini k-means over the micro-quantized corpus
-    (column ``qfull``). Strided deterministic seeds (the SAME seed rows
-    for every subspace, sliced per-subspace — what lets the oracle seed
-    from one LIMIT-k scan); each Lloyd round is ONE distributed
-    assign+reduce job covering all _PQ_M subspaces at once (keyed on
-    (sub, cluster, dim)), not _PQ_M separate jobs. Only the
-    _PQ_M×k×_PQ_SUBDIM codebook tensor reaches the driver. Empty
-    clusters keep their previous centroid, as in ``_train_centroids``."""
-    n = emb_q.count()
-    stride = max(n // k, 1)
-    seed_rows = (
-        emb_q.where(F.col("vec_id") % stride == 0)
-        .orderBy("vec_id")
-        .limit(k)
-        .collect()
-    )
-    books = [
-        [
-            [int(v) for v in r["qfull"][s * _PQ_SUBDIM : (s + 1) * _PQ_SUBDIM]]
-            for r in seed_rows
-        ]
-        for s in range(_PQ_M)
+def _train_codebooks(emb: DataFrame, col: str, m: int) -> list[list[list[int]]]:
+    """The one integer-Lloyd trainer: per-subspace mini k-means over the
+    micro-quantized vectors in ``col``, returning ``books[sub][cid]
+    [dim]``. ``m == 1`` is the IVF coarse quantizer (``_IVF_K`` lists
+    and ``_IVF_ITERS`` rounds over the whole vector — callers take
+    ``[0]``); ``m == _PQ_M`` the PQ codebooks (``_PQ_K`` codes per
+    ``_PQ_SUBDIM``-wide subspace, ``_PQ_ITERS`` rounds).
+
+    Strided deterministic seeds (the SAME seed rows for every subspace,
+    sliced per-subspace — what lets the oracle seed from one LIMIT-k
+    scan); each Lloyd round is ONE Arrow-batched assign+reduce job
+    covering all m subspaces at once (``_pq_lloyd_round_np``). Only the
+    m×k×subdim tensor ever reaches the driver; the corpus never does.
+    Empty clusters keep their previous centroid. A corpus too small to
+    yield k strided seeds trains only the seeds found — the oracle's
+    LEFT JOIN onto the seeded cids does the same. All-integer
+    end-to-end (see ``_IVF_SCALE``), so the trained index is
+    bit-identical across engines and runs — what lets the DuckDB
+    oracle (``_lloyd_rounds_sql`` / ``_pq_lloyd_sql``) replay the whole
+    index build."""
+    k, iters = (_IVF_K, _IVF_ITERS) if m == 1 else (_PQ_K, _PQ_ITERS)
+    stride = max(emb.count() // k, 1)
+    seeds = [
+        [int(v) for v in r[col]]
+        for r in emb.where(F.col("vec_id") % stride == 0).orderBy("vec_id").limit(k).collect()
     ]
+    sd = len(seeds[0]) // m
+    books = [[q[s * sd : (s + 1) * sd] for q in seeds] for s in range(m)]
     for _ in range(iters):
-        sums = _pq_lloyd_round_np(emb_q, books, k)
+        sums = _pq_lloyd_round_np(emb, col, books)
         by_key: dict[tuple[int, int], dict[int, int]] = {}
         for r in sums:
             by_key.setdefault((r["sub"], r["cluster"]), {})[r["dim"]] = _trunc_div(
@@ -1614,10 +1535,10 @@ def _train_pq_codebooks(
             [
                 [by_key[(s, c)][d] for d in sorted(by_key[(s, c)])]
                 if (s, c) in by_key
-                else books[s][c]
-                for c in range(k)
+                else book[c]
+                for c in range(len(book))
             ]
-            for s in range(_PQ_M)
+            for s, book in enumerate(books)
         ]
     return books
 
@@ -1638,9 +1559,10 @@ def _pq_assign_np(Xs, B):
     return d.argmin(axis=2)
 
 
-def _pq_lloyd_round_np(emb_q: DataFrame, books, k: int) -> list:
-    """ONE per-subspace Lloyd round over ALL _PQ_M subspaces as ONE
-    Arrow-batched job: each batch reshapes its quantized vectors to
+def _pq_lloyd_round_np(emb: DataFrame, col: str, books) -> list:
+    """ONE per-subspace Lloyd round over ALL M subspaces (M = 1 for the
+    IVF quantizer) as ONE Arrow-batched job, shaped by the ``books``
+    array (M×K×sd) over column ``col``: each batch reshapes its vectors to
     (n, M, sd) subvectors, assigns every subvector to its codebook's
     nearest centroid (``_pq_assign_np``), and emits an M×K×sd
     partial-sum block; a (sub, cluster, dim)-keyed aggregate folds the
@@ -1650,7 +1572,7 @@ def _pq_lloyd_round_np(emb_q: DataFrame, books, k: int) -> list:
     import numpy as np
 
     B = np.asarray(books, dtype=np.int64)  # (M, K, sd)
-    m, _, sd = B.shape
+    m, k, sd = B.shape
 
     def kernel(batches):
         import pandas as pd
@@ -1661,7 +1583,7 @@ def _pq_lloyd_round_np(emb_q: DataFrame, books, k: int) -> list:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["qfull"].to_numpy()).astype(np.int64)
+            X = np.stack(pdf[col].to_numpy()).astype(np.int64)
             Xs = X.reshape(X.shape[0], m, sd)
             a = _pq_assign_np(Xs, B)  # (n, M)
             mi = np.broadcast_to(np.arange(m)[None, :], a.shape)
@@ -1683,7 +1605,7 @@ def _pq_lloyd_round_np(emb_q: DataFrame, books, k: int) -> list:
             )
 
     return (
-        emb_q.select("qfull")
+        emb.select(col)
         .mapInPandas(kernel, "sub int, cluster int, dim int, s long, c long")
         .groupBy("sub", "cluster", "dim")
         .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
@@ -1711,7 +1633,8 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-lookup kernel a C++ PQ scanner runs). The only exchanges are
     the two top-k windows (shortlist, then re-rank), both bounded by
     queries×shortlist. Codebook training is the same assign+reduce
-    Lloyd loop as IVF, one job per round covering all subspaces.
+    Lloyd trainer as IVF (``_train_codebooks`` with m = _PQ_M), one job
+    per round covering all subspaces.
 
     Vectors are L2-normalized before quantization (``_as_qn``) so
     squared-L2 ADC order agrees with the cosine baseline. All-integer
@@ -1721,7 +1644,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exactly. Recall@10 vs [[ann_topk_bruteforce]] measured 0.98 at
     sf0.01; asserted ≥0.8 in tests/test_dedup_similarity.py."""
     emb_q = _norm_corpus(spark, sf_dir)
-    books = _train_pq_codebooks(emb_q.select("vec_id", "qfull"))
+    books = _train_codebooks(emb_q.select("vec_id", "qfull"), "qfull", _PQ_M)
     # Encode: one Arrow-batched narrow pass (no explode, no shuffle;
     # codes are computed once and, at scale, STORED — the 16×-smaller
     # serving artifact).
@@ -1936,7 +1859,7 @@ def pq_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_pq_lloyd_sql`` layers the PQ query uses. Output is _PQ_M rows —
     control-plane sized at any corpus."""
     base = _norm_corpus(spark, sf_dir).select("vec_id", "qfull")
-    books = _train_pq_codebooks(base.where(F.col("vec_id") % 2 == 0))
+    books = _train_codebooks(base.where(F.col("vec_id") % 2 == 0), "qfull", _PQ_M)
     enc = _pq_encode_stats_np(base, books).select(
         (F.col("vec_id") % 2 == 0).alias("is_a"),
         "sub",
@@ -2058,7 +1981,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_ivfpq_sql``). Recall@10 vs [[ann_topk_bruteforce]] asserted in
     tests/test_dedup_similarity.py."""
     emb_q = _norm_corpus(spark, sf_dir)
-    coarse = _train_centroids(emb_q.select("vec_id", F.col("qfull").alias("q")))
+    coarse = _train_codebooks(emb_q.select("vec_id", "qfull"), "qfull", 1)[0]
     # Assign + residual in one Arrow-batched narrow pass; checkpoint —
     # it feeds the PQ training loop (one job per round) AND the encode.
     assigned = _coarse_assign_np(
@@ -2068,9 +1991,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep=["vec_id bigint", "label int", "vec array<double>"],
         emit=("cluster", "res"),
     ).localCheckpoint()
-    books = _train_pq_codebooks(
-        assigned.select("vec_id", F.col("qres").alias("qfull"))
-    )
+    books = _train_codebooks(assigned.select("vec_id", "qres"), "qres", _PQ_M)
     coded = _pq_encode_np(
         assigned,
         books,
@@ -4142,7 +4063,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (smallest qualifying smaller id, deterministic), the exact int8
     dot with that exemplar, and how many qualifying predecessors it
     had. Integer-exact end-to-end: the quantizer is the shared
-    integer-Lloyd build ([[ann_topk_ivf]]'s ``_train_centroids`` /
+    integer-Lloyd build ([[ann_topk_ivf]]'s ``_train_codebooks`` /
     ``_lloyd_rounds_sql``), similarity is the int8 dot of
     [[ann_topk_int8]]'s quantization, and the threshold is an integer
     constant — so the DuckDB replay is bit-exact.

@@ -453,24 +453,3 @@ def test_bm25_index_two_batch_df_and_fold(spark, tmp_path):
     assert out["bb cc"]["df"] == 1 and out["cc dd"]["tf_total"] == 1
     # head ordering: the cross-batch bigram leads
     assert min(out.values(), key=lambda r: (-r["df"], -r["tf_total"], r["token"]))["token"] == "aa bb"
-
-
-def test_cc_min_label_string_nodes(spark):
-    """_cc_min_label is type-GENERIC: golden_part_records runs it over
-    part-NAME strings, so the convergence probe must never assume
-    numeric labels (the r16 label-SUM probe broke exactly this —
-    'blue anvil' cannot cast to DECIMAL; caught by the full sweep and
-    reverted). Chain a-b-c plus isolated pair d-e, lexicographic min."""
-    from azure_sales_etl_pipeline_spark.operators.maintenance import _cc_min_label
-
-    edges = spark.createDataFrame(
-        [("mauve bolt", "azure gear"), ("azure gear", "teal cog"),
-         ("red fan", "blue anvil")],
-        "src string, dst string",
-    )
-    got = {(r.node, r.label) for r in _cc_min_label(edges).collect()}
-    assert got == {
-        ("mauve bolt", "azure gear"), ("azure gear", "azure gear"),
-        ("teal cog", "azure gear"), ("red fan", "blue anvil"),
-        ("blue anvil", "blue anvil"),
-    }

@@ -7,6 +7,8 @@ fixture data:
 - token-budget shard assignment is a deterministic pure function of
   (ordered sizes, budget): shards are contiguous, start at 0, and no
   doc's start offset crosses into the wrong shard
+- the one connected-components kernel ≡ union-find, and the one
+  integer-Lloyd trainer ≡ a numpy reference Lloyd
 
 Hypothesis drives row multisets (with duplicates and skew) through the
 same code paths the fixture tests use; Spark jobs per example are kept
@@ -15,12 +17,30 @@ tiny (≤60 rows) so the suite stays fast.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import uuid
+from decimal import Decimal
+
+import numpy as np
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from azure_sales_etl_pipeline_spark.operators.maintenance import merge_aggregate
+from azure_sales_etl_pipeline_spark.operators.maintenance import (
+    _CC_MAX_ITERS,
+    _cc_min_label,
+    merge_aggregate,
+)
 from azure_sales_etl_pipeline_spark.plans.scale import salted_join
+from azure_sales_etl_pipeline_spark.plans.similarity import (
+    _IVF_ITERS,
+    _IVF_K,
+    _PQ_ITERS,
+    _PQ_K,
+    _PQ_M,
+    _PQ_SUBDIM,
+    _train_codebooks,
+)
 
 _slow = settings(
     max_examples=6,
@@ -325,3 +345,171 @@ def test_pq_encode_kernel_matches_reference(spark, data, k, n):
             want = dists.index(min(dists))
             assert got[i][s] == want
             assert stats[(i, s)] == (want, min(dists))
+
+
+# ---------------------------------------------------------------------------
+# The one CC kernel (``_cc_min_label``) against union-find: any id type,
+# empty graphs, duplicate edges and self-loops.
+# ---------------------------------------------------------------------------
+
+_CC_KINDS = {
+    "bigint": ("bigint", lambda i: i),
+    # "n10" < "n2": string order is not the numeric order
+    "string": ("string", lambda i: f"n{i}"),
+    # reversed order, two-digit scale
+    "decimal": ("decimal(12,2)", lambda i: Decimal(50 - i) / 4),
+}
+
+
+def _union_find_labels(edges):
+    """node → minimum node of its component; the root is always the
+    smaller of the two roots, so every root is its set's minimum."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _cc_edges(spark, kind, pairs):
+    sql_type, conv = _CC_KINDS[kind]
+    edges = [(conv(a), conv(b)) for a, b in pairs]
+    return edges, spark.createDataFrame(edges, f"src {sql_type}, dst {sql_type}")
+
+
+@pytest.mark.parametrize("kind", sorted(_CC_KINDS))
+@_slow
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 11), st.integers(0, 11)), min_size=0, max_size=14
+    )
+)
+@example(pairs=[])
+@example(pairs=[(0, 0), (1, 2), (2, 1), (1, 2), (3, 3), (4, 3)])
+@example(pairs=[(9, 10), (10, 2), (5, 11)])  # string: n10 < n11 < n2 < n5 < n9
+def test_cc_kernel_matches_union_find(spark, kind, pairs):
+    """String labels are the case the golden-record query needs (part
+    names) and the one a numeric convergence probe breaks: every probe
+    in the kernel must stay type-generic."""
+    edges, df = _cc_edges(spark, kind, pairs)
+    got = {r["node"]: r["label"] for r in _cc_min_label(df).collect()}
+    assert got == _union_find_labels(edges)
+
+
+def test_cc_kernel_raises_past_round_bound(spark):
+    """Pointer doubling settles a 383-node chain in exactly
+    ``_CC_MAX_ITERS`` rounds; one node more needs another round, and
+    the kernel must raise rather than return mislabeled components."""
+    assert _CC_MAX_ITERS == 8  # the two chain lengths below assume it
+    _, ok = _cc_edges(spark, "bigint", [(i, i + 1) for i in range(382)])
+    assert {r["label"] for r in _cc_min_label(ok).collect()} == {0}
+    _, deep = _cc_edges(spark, "bigint", [(i, i + 1) for i in range(383)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _cc_min_label(deep)
+
+
+def _jobs_in_group(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_job_count_pins_exchange_reuse(spark, tmp_path):
+    """The CC build over a planted 30-doc dup chain (5 pointer-doubling
+    rounds) fires 27 jobs: two eager cuts (adjacency, seed labels) and
+    five per round — the count of the DECIMAL label-sum loop the kernel
+    replaced. The round's ``mid ⋈ lab_map`` self-join must keep both
+    sides' aggregates identical so Spark reuses the groupBy exchange;
+    losing that reuse adds jobs
+    (31 here)."""
+    from azure_sales_etl_pipeline_spark.plans.dedup import jaccard_pairs_raw
+    from azure_sales_etl_pipeline_spark.plans.mlprep import _compute_dedup_clusters
+
+    words = [f"w{i}" for i in range(40)]
+    rows = [(i, " ".join(words[i : i + 10]), "en", "src0", 10) for i in range(30)]
+    rows.append((100, "zebra quokka axolotl narwhal pangolin", "en", "src0", 37))
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    jaccard_pairs_raw(spark, str(tmp_path))  # the memoized pair table is not CC work
+
+    assert _jobs_in_group(spark, lambda: _compute_dedup_clusters(spark, str(tmp_path))) == 27
+
+
+# ---------------------------------------------------------------------------
+# The one integer-Lloyd trainer (``_train_codebooks``) against a numpy
+# reference: m = 1 (IVF) and m = _PQ_M (PQ), duplicates, n < k.
+# ---------------------------------------------------------------------------
+
+
+def _ref_lloyd(ids, vecs, m, k, iters):
+    """Strided seeds (every stride-th vec_id in id order, at most k),
+    exact squared-L2 with first-index argmin on ties, truncate-toward-
+    zero integer means; an empty cluster keeps its previous centroid."""
+    order = sorted(range(len(ids)), key=ids.__getitem__)
+    stride = max(len(ids) // k, 1)
+    seeds = [vecs[i] for i in order if ids[i] % stride == 0][:k]
+    X = np.asarray(vecs, dtype=np.int64).reshape(len(vecs), m, -1)
+    books = np.asarray(seeds, dtype=np.int64).reshape(len(seeds), m, -1)
+    books = books.transpose(1, 0, 2).copy()
+    for _ in range(iters):
+        new = books.copy()
+        for s in range(m):
+            d = ((X[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+            a = d.argmin(axis=1)
+            for c in range(len(seeds)):
+                members = X[a == c, s]
+                n = len(members)
+                if n:
+                    new[s, c] = [t // n if t >= 0 else -(-t // n) for t in members.sum(axis=0)]
+        books = new
+    return books.tolist()
+
+
+_LLOYD_SHAPES = {1: (3, _IVF_K, _IVF_ITERS), _PQ_M: (_PQ_M * _PQ_SUBDIM, _PQ_K, _PQ_ITERS)}
+
+
+def _lloyd_frame(spark, ids, vecs):
+    return spark.createDataFrame(list(zip(ids, vecs)), "vec_id bigint, q array<bigint>")
+
+
+@pytest.mark.parametrize("m", sorted(_LLOYD_SHAPES))
+@_slow
+@given(data=st.data(), n=st.integers(min_value=1, max_value=40))
+def test_train_codebooks_matches_reference_lloyd(spark, m, data, n):
+    dim, k, iters = _LLOYD_SHAPES[m]
+    # a few distinct small-coordinate vectors, drawn with repetition:
+    # duplicate vectors and tied distances are the norm, not the edge
+    vec = st.lists(st.integers(-3, 3), min_size=dim, max_size=dim)
+    pool = data.draw(st.lists(vec, min_size=1, max_size=6))
+    vecs = data.draw(st.lists(st.sampled_from(pool), min_size=n, max_size=n))
+    # sparse ids: a stride can then match fewer than k (or n) seed rows
+    ids = data.draw(st.lists(st.integers(0, 3 * n), min_size=n, max_size=n, unique=True))
+    got = _train_codebooks(_lloyd_frame(spark, ids, vecs), "q", m)
+    assert got == _ref_lloyd(ids, vecs, m, k, iters)
+
+
+@pytest.mark.parametrize("m", sorted(_LLOYD_SHAPES))
+def test_train_codebooks_small_corpus_trains_seeds_found(spark, m):
+    """Ten vectors yield ten seeds, fewer than k = 16: the trainer
+    keeps exactly those (the PQ trainer once indexed past them and
+    raised IndexError)."""
+    dim, k, iters = _LLOYD_SHAPES[m]
+    ids = list(range(10))
+    vecs = [[(7 * i + 3 * j) % 11 - 5 for j in range(dim)] for i in ids]
+    got = _train_codebooks(_lloyd_frame(spark, ids, vecs), "q", m)
+    assert [len(book) for book in got] == [10] * m
+    assert got == _ref_lloyd(ids, vecs, m, k, iters)
