@@ -100,16 +100,14 @@ def table_exists(path: str) -> bool:
     """Existence probe for an engine-managed parquet table.
 
     Replaces the reference's ``DeltaTable.isDeltaTable(spark, path)``
-    (1_Landing_to_Bronze.py:36, 2_Bronze_to_Silver.py:74): a parquet
-    table exists when its directory holds at least one data file or a
-    ``_SUCCESS`` marker.
+    (1_Landing_to_Bronze.py:36, 2_Bronze_to_Silver.py:74): a table
+    exists when its version pointer commits one, or, in the legacy flat
+    layout, when its directory holds data files or a ``_SUCCESS``
+    marker (``operators.writer._table_dir``).
     """
-    p = Path(path)
-    if not p.exists():
-        return False
-    if (p / "_SUCCESS").exists():
-        return True
-    return any(p.rglob("*.parquet"))
+    from .operators.writer import _table_dir
+
+    return _table_dir(path) is not None
 
 
 class LayerCatalog:

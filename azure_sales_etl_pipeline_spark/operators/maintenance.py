@@ -15,15 +15,21 @@ history.
 ``compact_table`` addresses the other chronic scale wound: incremental
 appends (ingestion `append_evolve`, watermark batches) accrete small
 files until scan planning and open() overhead dominate. Compaction
-bin-packs to a target file size with a staged atomic swap (same
-local-FS boundary as writer.py — see its docstring for the
-HDFS/object-store note).
+bin-packs to a target file size.
+
+Every whole-table rewrite here commits through writer.py's one
+protocol, ``overwrite_table`` (version directory + atomic pointer flip
+carrying ``commit_meta``; single writer per table), except
+``compact_partitioned``, which rewrites partitions in place through
+``write_partitioned`` — the documented non-atomic family. writer.py's
+resolver refuses Delta tables for every read and write here.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -31,20 +37,8 @@ from pyspark.sql import functions as F
 from ..functions import local_df
 from pyspark.sql.window import Window
 
-from .writer import overwrite_table, read_table
-
-
-def _reject_delta_table(path: str, op: str) -> None:
-    """Both operators here treat the path as PLAIN parquet. A Delta table
-    (writer's ``backend='delta'`` seam) keeps tombstoned files at the
-    same root, tracked only by ``_delta_log`` — reading them as plain
-    parquet resurrects deleted rows, and a staged-swap rewrite destroys
-    the log. Refuse loudly instead of corrupting."""
-    if (Path(path) / "_delta_log").exists():
-        raise ValueError(
-            f"{path} is a Delta table (_delta_log present): {op} operates on "
-            "plain-parquet tables only — use Delta's own OPTIMIZE/MERGE"
-        )
+from ..catalog import table_exists
+from .writer import _table_dir, overwrite_table, read_table, write_partitioned
 
 
 def merge_aggregate(
@@ -98,9 +92,8 @@ def merge_aggregate(
         + [F.max(c).alias(c) for c in maxs]
         + [F.count(F.lit(1)).alias(count_col)]
     )
-    _reject_delta_table(mart_path, "merge_aggregate")
     batch_agg = batch.groupBy(*keys).agg(*agg_exprs)
-    if Path(mart_path).exists():
+    if table_exists(mart_path):
         existing = read_table(spark, mart_path)
         # Schema gate (r8 advisory): folding new aggregates against a
         # mart created WITHOUT them would die inside unionByName with an
@@ -127,11 +120,11 @@ def merge_aggregate(
         merged = existing.unionByName(batch_agg).groupBy(*keys).agg(*merge_exprs)
     else:
         merged = batch_agg
-    # overwrite_table writes to a staging dir first and swaps after the
-    # job completes, so reading mart_path inside the plan is safe — the
-    # mart stays readable until the new version replaces it wholesale.
-    # commit_meta (e.g. a streaming sink's folded batch_id) rides inside
-    # the same swap, so mart version and marker commit atomically.
+    # overwrite_table writes a new version directory and flips the
+    # pointer after the job completes, so reading mart_path inside the
+    # plan is safe — the old version stays in place until the flip.
+    # commit_meta (e.g. a streaming sink's folded batch_id) rides in the
+    # same pointer, so mart version and marker commit atomically.
     overwrite_table(merged, mart_path, commit_meta=commit_meta)
     return read_table(spark, mart_path)
 
@@ -159,11 +152,10 @@ def merge_sketch_distinct(
     narrow scan of the (pre-aggregated, sketch-sized) mart, and a
     re-union on near-unique keys.
     """
-    _reject_delta_table(mart_path, "merge_sketch_distinct")
     batch_agg = batch.groupBy(*keys).agg(
         F.hll_sketch_agg(distinct_col).alias(sketch_col)
     )
-    if Path(mart_path).exists():
+    if table_exists(mart_path):
         existing = read_table(spark, mart_path)
         merged = (
             existing.unionByName(batch_agg)
@@ -195,7 +187,7 @@ def merge_fingerprint_index(
     that are genuinely new content — first occurrence within the batch
     AND absent from the index — i.e. what an ingestion pipeline should
     forward downstream; ``index`` is the updated index read back after
-    its staged atomic swap. Keepers are FIRST-SEEN-WINS across batches
+    its atomic overwrite. Keepers are FIRST-SEEN-WINS across batches
     (an earlier batch's keeper never changes when a later batch re-sees
     the content); ``dup_count`` accumulates total occurrences.
 
@@ -208,7 +200,6 @@ def merge_fingerprint_index(
     Convergence (sequential batches ≡ one-shot exact_dedup when ids
     are batch-monotonic) is asserted in tests/test_maintenance.py.
     """
-    _reject_delta_table(index_path, "merge_fingerprint_index")
     fp = F.sha2(
         F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")), 256
     )
@@ -223,7 +214,7 @@ def merge_fingerprint_index(
         F.min(id_col).alias("keeper_doc_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
-    if Path(index_path).exists():
+    if table_exists(index_path):
         existing = read_table(spark, index_path)
         survivors = batch_first.join(
             existing.select(fingerprint_col), fingerprint_col, "left_anti"
@@ -245,7 +236,7 @@ def merge_fingerprint_index(
         survivors = batch_first
         merged = batch_idx
     # The survivors plan reads the CURRENT index files; pin the result
-    # on executors before the swap below replaces them.
+    # on executors before the overwrite below prunes them.
     survivors = survivors.localCheckpoint(eager=True)
     overwrite_table(merged, index_path, commit_meta=commit_meta)
     return survivors, read_table(spark, index_path)
@@ -376,8 +367,8 @@ def merge_cluster_labels(
        share need no dedup — the kernel's aggregates are min/max);
     4. remap: one hash join of the persisted label table against the
        label→label fix-ups (clusters untouched by the batch pass
-       through), plus one lookup for the new nodes, union, staged
-       atomic swap.
+       through), plus one lookup for the new nodes, union, atomic
+       overwrite.
 
     History is touched exactly once, by the remap join in (4) — at
     100 TB bucket the label table on ``cluster_id`` and broadcast the
@@ -392,8 +383,7 @@ def merge_cluster_labels(
     ``new_nodes``: one ``doc_id`` row per batch document (singletons
     included — they enter as their own clusters).
     """
-    _reject_delta_table(labels_path, "merge_cluster_labels")
-    if Path(labels_path).exists():
+    if table_exists(labels_path):
         old = read_table(spark, labels_path).select("doc_id", "cluster_id")
     else:
         old = local_df(spark, [], "doc_id long, cluster_id long")
@@ -423,10 +413,11 @@ def merge_cluster_labels(
     new_rows = new_nodes.select("doc_id").join(
         remap, F.col("doc_id") == F.col("r_node"), "left"
     ).select("doc_id", F.coalesce("r_lab", "doc_id").alias("cluster_id"))
-    # No pre-swap checkpoint: overwrite_table writes to a staging dir
-    # and swaps only after the job completes, so the plan's reads of the
-    # CURRENT label files (old / old_map) all happen while those files
-    # still exist — the same staging contract merge_aggregate documents.
+    # No pre-write checkpoint: overwrite_table writes a new version
+    # directory and flips the pointer only after the job completes, so
+    # the plan's reads of the CURRENT label files (old / old_map) all
+    # happen while those files still exist — the contract
+    # merge_aggregate documents.
     # An eager localCheckpoint here was a full extra materialization of
     # the merged table per fold (A/B'd in OPTIMIZATION_r16.md).
     merged = updated_old.unionByName(new_rows)
@@ -437,39 +428,45 @@ def merge_cluster_labels(
 _DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
+def _data_files(d: Path) -> list[Path]:
+    return [p for p in d.glob("*.parquet") if not p.name.startswith("_")]
+
+
+def _pack(df: DataFrame, files: list[Path], target_bytes: int) -> DataFrame:
+    """``df`` re-split toward ``target_bytes`` per file, sized from the
+    on-disk bytes of ``files`` (metadata listing — no data read). Uses
+    ``coalesce`` when shrinking (narrow — no shuffle: existing
+    partitions are concatenated) and ``repartition`` only when a single
+    oversized file must split (that one needs the shuffle)."""
+    want = max(1, -(-sum(f.stat().st_size for f in files) // target_bytes))  # ceil
+    return df.coalesce(want) if want <= len(files) else df.repartition(want)
+
+
 def compact_table(
     spark: SparkSession, path: str, target_bytes: int = _DEFAULT_TARGET_BYTES
 ) -> int:
     """Bin-pack a parquet table's files toward ``target_bytes`` each and
-    atomically swap the compacted version in. Returns the new file count.
-
-    File count is computed from the table's CURRENT on-disk bytes
-    (metadata listing — no data read), so compaction is proportional to
-    one table rewrite and can be scheduled per-partition at scale. Uses
-    ``coalesce`` when shrinking (narrow — no shuffle: existing partitions
-    are concatenated) and ``repartition`` only when the table is a single
-    oversized file that must split (that one needs the shuffle).
-    """
-    _reject_delta_table(path, "compact_table")
-    files = [p for p in Path(path).glob("*.parquet") if not p.name.startswith("_")]
+    commit the compacted version as one more ``overwrite_table`` write.
+    Returns the new file count. Compaction is proportional to one table
+    rewrite and can be scheduled per-partition at scale."""
+    d = _table_dir(path)
+    if d is None:
+        raise ValueError(f"no committed table at {path}")
+    files = _data_files(d)
     if not files:
         # Hive-partitioned layout (key=value subdirs) or empty table: a
         # whole-table coalesce would rewrite WITHOUT the partition
         # columns in the directory structure — silent layout loss.
         # Partitioned compaction must run per-partition directory.
-        subdirs = [p for p in Path(path).iterdir() if p.is_dir() and "=" in p.name]
+        subdirs = [p for p in d.iterdir() if p.is_dir() and "=" in p.name]
         if subdirs:
             raise ValueError(
                 f"{path} is Hive-partitioned ({subdirs[0].name}, ...): use "
                 "compact_partitioned, which compacts each partition directory"
             )
         raise ValueError(f"no parquet files found under {path}")
-    total = sum(p.stat().st_size for p in files)
-    want = max(1, -(-total // target_bytes))  # ceil
-    df = read_table(spark, path)
-    packed = df.coalesce(want) if want <= len(files) else df.repartition(want)
-    overwrite_table(packed, path)
-    return len([p for p in Path(path).glob("*.parquet") if not p.name.startswith("_")])
+    overwrite_table(_pack(read_table(spark, path), files, target_bytes), path)
+    return len(_data_files(_table_dir(path)))
 
 
 def compact_partitioned(
@@ -483,26 +480,36 @@ def compact_partitioned(
 
     The driver loop iterates partition METADATA (one directory name +
     size listing per partition — control-plane, no data); each
-    partition compacts independently with the same staged atomic swap,
-    so a failure mid-sweep leaves every completed partition valid and
-    every untouched partition intact. At 100 TB this is exactly how
-    compaction is scheduled anyway: per partition, prioritized by
-    small-file count, never as one table-wide job."""
-    _reject_delta_table(path, "compact_partitioned")
-    root = Path(path)
-    parts = sorted(p for p in root.iterdir() if p.is_dir() and "=" in p.name)
+    partition is rewritten by ``write_partitioned``'s dynamic partition
+    overwrite, which replaces that directory and no other. This is the
+    non-atomic family of writer.py's module docstring: a crash inside
+    one partition's replace can lose that partition, while every
+    completed partition stays valid and every untouched partition
+    intact. At 100 TB this is exactly how compaction is scheduled
+    anyway: per partition, prioritized by small-file count, never as
+    one table-wide job."""
+    root = _table_dir(path)
+    parts = [] if root != Path(path) else sorted(
+        p for p in root.iterdir() if p.is_dir() and "=" in p.name
+    )
     if not parts:
         raise ValueError(
             f"{path} has no key=value partition directories; use compact_table"
         )
-    return {p.name: compact_table(spark, str(p), target_bytes) for p in parts}
+    counts = {}
+    for part in parts:
+        key, raw = part.name.split("=", 1)
+        value = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+        df = spark.read.parquet(str(part)).withColumn(key, F.lit(value))
+        write_partitioned(_pack(df, _data_files(part), target_bytes), path, [key])
+        counts[part.name] = len(_data_files(part))
+    return counts
 
 
 def erase_cascade(
     spark: SparkSession,
     root_keys: DataFrame,
     steps: list[dict],
-    backend: str = "parquet",
 ) -> list[dict]:
     """Right-to-erasure cascade (GDPR Art. 17 / CCPA delete): remove a
     set of root entities AND every dependent row they fan out to,
@@ -525,8 +532,8 @@ def erase_cascade(
     FK), and the whole cascade is idempotent — re-running with the same
     keys matches nothing and rewrites nothing away.
 
-    Each rewrite is one anti-join + the staged atomic swap of
-    ``overwrite_table`` (erasure count stamped into ``_commit.json``).
+    Each rewrite is one anti-join + the atomic ``overwrite_table``
+    commit (erasure count stamped into its ``commit_meta``).
     At 100 TB: erasure batches are folded weekly, the anti-join is one
     keyed shuffle per table (or partition-pruned when the table is
     partitioned by the match key), and the doom sets — not the tables —
@@ -537,7 +544,7 @@ def erase_cascade(
     }
     plans: list[tuple[dict, DataFrame, DataFrame]] = []
     for st in steps:
-        df = read_table(spark, st["path"], backend)
+        df = read_table(spark, st["path"])
         doom = dooms[st["doom"]].withColumnRenamed("__doom_k", st["match"])
         if "emit" in st:
             col, name = st["emit"]
@@ -554,8 +561,8 @@ def erase_cascade(
         # observe() (CollectMetrics above and below the anti-join)
         # instead of two extra count() actions — ONE pass per table
         # computes the survivors, writes them, and audits the erasure.
-        # commit_meta is the post-staging-write callable form, so the
-        # erased-rows marker still commits inside the same atomic swap.
+        # commit_meta is the post-data-write callable form, so the
+        # erased-rows marker still commits in the same pointer flip.
         o_in, o_out = Observation(), Observation()
         keep = (
             df.observe(o_in, F.count(F.lit(1)).alias("n"))
@@ -565,7 +572,6 @@ def erase_cascade(
         overwrite_table(
             keep,
             st["path"],
-            backend,
             commit_meta=lambda o_in=o_in, o_out=o_out: {
                 "erased_rows": int(o_in.get["n"]) - int(o_out.get["n"])
             },
@@ -597,14 +603,12 @@ def merge_kmin(
     the single-pass sketch over the union of all batches under any
     batching, reordering, or redelivery (idempotence makes replays
     structurally harmless; the ``commit_meta`` marker still rides the
-    swap so fold accounting stays uniform with the additive marts).
+    commit so fold accounting stays uniform with the additive marts).
     The state is ≤ k rows forever; history is never re-read.
 
     Scale shape: the batch contributes at most its own k smallest
     (TakeOrderedAndProject — per-partition heaps, no global sort), the
     state read is k rows, and the merge is a ≤ 2k-row re-limit."""
-    from .writer import overwrite_table, read_table
-
     b = (
         batch.select(F.col(key_col).alias("h"))
         .where(F.col("h").isNotNull())
@@ -612,8 +616,7 @@ def merge_kmin(
         .orderBy("h")
         .limit(k)
     )
-    _reject_delta_table(state_path, "merge_kmin")
-    if Path(state_path).exists():
+    if table_exists(state_path):
         cur = read_table(spark, state_path).select("h")
         merged = cur.unionByName(b).distinct().orderBy("h").limit(k)
     else:

@@ -20,7 +20,8 @@ Semantics (faithful to the reference):
 
 Deliberate divergence: the reference's expire-then-append is TWO Delta
 commits with a corruption window between them (SURVEY.md §3). On plain
-parquet the engine rewrites the table as ONE staged swap —
+parquet the engine rewrites the table as ONE ``overwrite_table`` commit
+(writer.py's version-directory + pointer-flip protocol) —
 history ∪ survivors ∪ expired ∪ new-versions — so a crash leaves either
 the old table or the new one, never half.
 
@@ -28,18 +29,19 @@ Scale: the full-outer join shuffles both sides on the business key
 (sort-merge at dimension scale). The hash is computed map-side before
 the shuffle. Two storage modes behind one API:
 
-- ``n_buckets=None`` (default): whole-table staged-swap rewrite per
-  batch — simplest, atomic, right for small/medium dimensions.
+- ``n_buckets=None`` (default): whole-table ``overwrite_table`` rewrite
+  per batch — simplest, atomic, right for small/medium dimensions.
 - ``n_buckets=N``: the table is partitioned by a stable key-hash bucket
   (``pmod(xxhash64(key), N)``) and an upsert rewrites ONLY the buckets
   containing changed keys via dynamic partition overwrite
   (``partitionOverwriteMode=dynamic``, set in session.py). At 100 TB
   this turns "rewrite the dimension" into "rewrite touched buckets":
-  untouched bucket files are not read or written. Per-bucket overwrite
-  is not atomic ACROSS buckets — a crash mid-upsert leaves some buckets
-  advanced; the watermark-replay contract (advance only after success)
-  re-runs the batch and SCD2's NO-CHANGE detection makes the replay a
-  no-op for already-advanced buckets, restoring consistency. This is
+  untouched bucket files are not read or written. This is writer.py's
+  documented non-atomic family: per-bucket overwrite is not atomic
+  ACROSS buckets — a crash mid-upsert leaves some buckets advanced;
+  the watermark-replay contract (advance only after success) re-runs
+  the batch and SCD2's NO-CHANGE detection makes the replay a no-op
+  for already-advanced buckets, restoring consistency. This is
   the same at-least-once self-heal the reference relies on (SURVEY §3).
 
 An injectable ``clock`` makes effective/end timestamps deterministic for
@@ -402,11 +404,11 @@ class SCD2Table:
             staged = bucket_rows.localCheckpoint(eager=True)
             staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
         else:
-            # No pre-swap materialization needed: overwrite_table writes
-            # to a staging dir and swaps only after the job completes,
-            # so the plan's reads of the CURRENT table files happen
-            # while those files still exist (the staging contract
-            # merge_aggregate relies on). The bucketed branch above MUST
+            # No pre-write materialization needed: overwrite_table
+            # writes a new version directory and flips the pointer only
+            # after the job completes, so the plan's reads of the
+            # CURRENT table files happen while those files still exist
+            # (the contract merge_aggregate relies on). The bucketed branch above MUST
             # keep its checkpoint — dynamic partition overwrite writes
             # directly into self.path while the plan reads it.
             overwrite_table(rewritten, self.path)

@@ -3,10 +3,10 @@
 The reference keeps one watermark per (layer, table): ADF stores it in
 ``dbo.adf_watermark`` (adf/pipeline.json:186-272), the Silver notebook
 in a one-line text file (2_Bronze_to_Silver.py:44-67,143-147). The
-engine uses a single-row parquet table per key — atomic to replace,
-schema'd, and readable by any engine. Missing state defaults to
-1900-01-01, the reference's full-history sentinel
-(2_Bronze_to_Silver.py:44; adf/pipeline.json:129).
+engine uses a single-row parquet table per key, committed through
+``writer.overwrite_table`` — atomic to replace, schema'd, and readable
+by any engine. Missing state defaults to 1900-01-01, the reference's
+full-history sentinel (2_Bronze_to_Silver.py:44; adf/pipeline.json:129).
 
 Commit ordering is the reference's at-least-once contract: the caller
 advances the watermark only AFTER its write succeeds, so a crash replays
@@ -17,14 +17,14 @@ detection.
 from __future__ import annotations
 
 import datetime as dt
-import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import table_exists
 from ..functions import local_df
+from .writer import overwrite_table, read_table
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 DEFAULT_WATERMARK = dt.datetime(1900, 1, 1)
@@ -78,33 +78,22 @@ class WatermarkStore(_WatermarkOps):
         return self.root / f"{table}.wm"
 
     def get(self, table: str) -> dt.datetime:
-        p = self._path(table)
-        if not p.exists():
+        p = str(self._path(table))
+        if not table_exists(p):
             return DEFAULT_WATERMARK
-        row = self.spark.read.parquet(str(p)).first()
+        row = read_table(self.spark, p).first()
         return row["watermark"] if row else DEFAULT_WATERMARK
 
     def set(self, table: str, value: dt.datetime) -> None:
-        """Atomic replace: write to a temp dir, swap directories. Parquet
-        overwrite-in-place has a delete-then-write window; state must not.
+        """Atomic replace through the engine's table-commit protocol: a
+        crash leaves the old watermark or the new one, never none.
 
-        The rename is local-POSIX-atomic; on HDFS use FileSystem.rename,
-        and on object stores keep watermark state in a transactional
-        store (the reference uses a SQL table, adf/pipeline.json:186-272
-        — the right call at cluster scale). Even so, the worst case here
-        is a LOST watermark, never a torn one: the at-least-once replay
-        contract in the module docstring absorbs it."""
-        p = self._path(table)
-        self.root.mkdir(parents=True, exist_ok=True)
-        tmp = Path(tempfile.mkdtemp(dir=str(self.root.parent), prefix=".wm_stage_"))
+        The pointer flip is local-POSIX-atomic; on object stores keep
+        watermark state in a transactional store (``JdbcWatermarkStore``;
+        the reference uses a SQL table, adf/pipeline.json:186-272 — the
+        right call at cluster scale)."""
         df = local_df(self.spark, [(table, value)], _SCHEMA)
-        stage = tmp / "data"
-        df.coalesce(1).write.mode("overwrite").parquet(str(stage))
-        if p.exists():
-            shutil.rmtree(p)
-        shutil.move(str(stage), str(p))
-        shutil.rmtree(tmp, ignore_errors=True)
-
+        overwrite_table(df.coalesce(1), str(self._path(table)))
 
 
 class JdbcWatermarkStore(_WatermarkOps):

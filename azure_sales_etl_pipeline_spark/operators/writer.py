@@ -1,171 +1,163 @@
-"""Parquet sinks (SURVEY.md S5-S8) including the mergeSchema shim.
+"""Parquet sinks (SURVEY.md S5-S8): one whole-table commit protocol
+plus the mergeSchema shim.
 
-The reference writes Delta with ``mergeSchema=true`` appends
+The protocol is ``write_snapshot`` (``overwrite_table`` is a snapshot
+write that keeps no history): write an immutable ``v=N`` directory,
+flip the ``_current_version.json`` pointer (which also carries the
+commit metadata) with ``os.replace``, then prune. A crash at any step
+leaves the old version or the new one, never a torn table — closing the
+reference's two-commit window (SURVEY.md §3). Readers resolve the
+pointer through ``_table_dir``, falling back to the legacy flat layout
+(files at the path itself), which converts on its next overwrite. Read
+engine tables through ``read_table``: a raw ``spark.read.parquet(path)``
+sees ``v=`` as a partition column. Single-writer contract: two
+concurrent writers can both stage v=N+1 and the second flip wins; the
+orchestrator, like the reference's ADF trigger, runs one writer per
+table. ``os.replace`` is atomic on local POSIX only: HDFS needs the
+Hadoop FileSystem rename, object stores a log-based table format.
+
+The non-atomic family: ``write_partitioned`` (and the bucketed SCD2
+upsert and ``compact_partitioned``) replaces Hive partitions in place by
+dynamic partition overwrite, and ``append_evolve`` adds files. A crash
+there can leave some partitions advanced; the watermark replay re-runs
+the batch and SCD2's no-change detection makes it a no-op.
+
+Schema evolution: the reference appends Delta with ``mergeSchema=true``
 (1_Landing_to_Bronze.py:59-62). Plain parquet appends don't evolve the
 table schema, so the engine unions-by-name against the existing schema
 before appending: new columns arrive null-backfilled on old rows at
 READ time (mergeSchema on read), old columns missing from the batch are
 null-filled at write.
-
-Staged overwrite: the SCD2 rewrite and any full refresh write to a
-staging dir then swap, so readers never observe a half-written table —
-this closes the reference's two-commit vulnerability window noted in
-SURVEY.md §3 (expire and append are separate Delta commits there).
-
-Atomicity boundary: the swap uses local-filesystem rename (shutil),
-which is atomic on POSIX but NOT on object stores (S3 rename = copy +
-delete) and needs the Hadoop FileSystem API on HDFS. At cluster scale,
-route overwrites through a storage layer with an atomic commit — the
-``backend="delta"`` seam below is exactly that (the transaction log
-makes overwrite/append atomic natively); the staged-swap code is the
-local-FS/parquet implementation of the same contract.
 """
 
 from __future__ import annotations
 
-import importlib.util
+import json
+import os
 import shutil
-import tempfile
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table_exists
-
-#: Storage backends behind the engine's sinks. ``parquet`` is fully
-#: implemented; ``delta`` is the drop-in seam for environments with
-#: delta-spark installed (the reference's native format,
-#: 1_Landing_to_Bronze.py:60) — selecting it without the package raises
-#: immediately instead of failing mid-write.
-BACKENDS = ("parquet", "delta")
+_VERSION_PTR = "_current_version.json"
+#: Commit-metadata side file of the legacy flat layout, read for tables
+#: written before the pointer existed.
+_LEGACY_META = "_commit.json"
 
 
-def resolve_backend(backend: str) -> str:
-    """Validate a storage-backend choice and return its writer format.
+def _pointer(path: str | Path) -> dict | None:
+    f = Path(path) / _VERSION_PTR
+    return json.loads(f.read_text()) if f.exists() else None
 
-    Delta gives native MERGE/mergeSchema/time-travel; everything in this
-    module then delegates to ``format("delta")`` and the staged-swap /
-    union-by-name shims become unnecessary. The seam is explicit so a
-    user with delta-spark can switch per-table, not per-fork.
-    """
-    if backend not in BACKENDS:
-        raise ValueError(f"unknown storage backend {backend!r}; expected one of {BACKENDS}")
-    if backend == "delta" and importlib.util.find_spec("delta") is None:
-        raise RuntimeError(
-            "storage backend 'delta' requested but delta-spark is not "
-            "installed; install delta-spark or use backend='parquet'"
+
+def _table_dir(path: str | Path) -> Path | None:
+    """The directory holding the committed data of the table at
+    ``path`` (``path/v=N`` with a pointer, else ``path`` itself if it
+    holds a ``_SUCCESS`` marker or parquet files outside ``v=*``
+    directories — pointer-less ``v=*`` directories are uncommitted
+    stages), or None when no table is committed there.
+
+    Refuses a Delta table written by another tool: reading it as plain
+    parquet resurrects tombstoned files, and rewriting it destroys its
+    log. Every read and write goes through here."""
+    p = Path(path)
+    if (p / "_delta_log").exists():
+        raise ValueError(
+            f"{path} is a Delta table (_delta_log present): the engine reads "
+            "and writes plain-parquet tables only — use Delta's own tools"
         )
-    return backend
+    ptr = _pointer(p)
+    if ptr is not None:
+        return p / f"v={ptr['version']}"
+    if not p.exists():
+        return None
+    for child in p.iterdir():
+        if child.name.startswith("v="):
+            continue
+        if child.name == "_SUCCESS" or child.name.endswith(".parquet"):
+            return p
+        if child.is_dir() and any(child.rglob("*.parquet")):
+            return p
+    return None
 
 
-def create_table(df: DataFrame, path: str, backend: str = "parquet") -> None:
+def create_table(df: DataFrame, path: str) -> None:
     """First materialization (S6): fail if the table already exists."""
-    df.write.format(resolve_backend(backend)).mode("errorifexists").save(path)
-
-
-#: Name of the commit-metadata file ``overwrite_table`` stages inside the
-#: table directory. Underscore-prefixed so Spark's hidden-file filter
-#: keeps it out of scans.
-COMMIT_META_NAME = "_commit.json"
+    df.write.mode("errorifexists").parquet(path)
 
 
 def overwrite_table(
     df: DataFrame,
     path: str,
-    backend: str = "parquet",
     commit_meta: dict | Callable[[], dict] | None = None,
 ) -> None:
-    """Full refresh (S7) with staged swap — never a torn table.
+    """Full refresh (S7): a ``write_snapshot`` commit with ``retain=1``
+    — once it returns the path holds only the new version. ``df`` may
+    read the table it replaces.
 
-    ``commit_meta`` (optional) is a JSON-able dict written to
-    ``_commit.json`` INSIDE the staged directory before the swap, so the
-    new table version and its metadata become visible in the SAME atomic
-    rename. This is the transactional seam replay guards need: a sink
-    that records "batch N is folded in" anywhere outside the swapped
-    directory has a crash window between data commit and marker commit
-    (the round-3 streaming_mart bug). It may also be a CALLABLE
-    returning that dict, invoked after the staging write completes and
-    before the swap — the seam that lets callers stamp metrics the
-    write itself produced (``observe()`` counts) without a second pass
-    over the data, still inside the same atomic rename.
-
-    Delta backend: the transaction log makes overwrite atomic natively,
-    so no staging dance is needed. ``commit_meta`` is refused there —
-    Delta's own ``txnAppId``/``txnVersion`` is the native form of the
-    same idea and a loose side file would reintroduce the torn window.
-    """
-    if resolve_backend(backend) == "delta":
-        if commit_meta is not None:
-            raise ValueError(
-                "commit_meta is parquet-backend only; on Delta use the "
-                "transaction log's txnAppId/txnVersion for idempotent commits"
-            )
-        df.write.format("delta").mode("overwrite").option(
-            "overwriteSchema", "true"
-        ).save(path)
-        return
-    p = Path(path)
-    tmp = Path(tempfile.mkdtemp(dir=str(p.parent) if p.parent.exists() else None, prefix=".stage_"))
-    stage = tmp / "data"
-    df.write.mode("overwrite").parquet(str(stage))
-    if commit_meta is not None:
-        import json
-
-        meta = commit_meta() if callable(commit_meta) else commit_meta
-        (stage / COMMIT_META_NAME).write_text(json.dumps(meta))
-    if p.exists():
-        shutil.rmtree(p)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    shutil.move(str(stage), str(p))
-    shutil.rmtree(tmp, ignore_errors=True)
+    ``commit_meta`` (optional) is a JSON-able dict stored in the pointer,
+    so the new version and its metadata commit in the SAME rename
+    (``read_commit_meta`` reads it back): the seam replay guards need,
+    since a "batch N is folded in" marker kept anywhere else has a crash
+    window between data and marker (the round-3 streaming_mart bug). It
+    may be a CALLABLE returning the dict, invoked after the data write
+    and before the flip, to stamp metrics the write itself produced
+    (``observe()`` counts) without a second pass over the data."""
+    write_snapshot(df, path, retain=1, commit_meta=commit_meta)
 
 
 def read_commit_meta(path: str) -> dict | None:
-    """Read the ``commit_meta`` dict the last ``overwrite_table`` staged
-    into ``path``, or None if the table has none (or doesn't exist)."""
-    f = Path(path) / COMMIT_META_NAME
-    if not f.exists():
+    """The ``commit_meta`` of the table's committed version, or None if
+    it has none (or there is no table)."""
+    d = _table_dir(path)
+    if d is None:
         return None
-    import json
+    if d == Path(path):
+        f = d / _LEGACY_META
+        return json.loads(f.read_text()) if f.exists() else None
+    return _pointer(path)["meta"]
 
-    return json.loads(f.read_text())
 
-
-def append_evolve(
-    spark: SparkSession, df: DataFrame, path: str, backend: str = "parquet"
-) -> None:
+def append_evolve(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Append with schema evolution (S5): union-by-name against the
     existing table schema. New batch columns are appended to the table
     schema (old files backfill null via mergeSchema-on-read); table
-    columns missing from the batch are written as typed nulls.
-
-    Delta backend: ``mergeSchema=true`` append is the native form of this
-    whole function (the reference's exact write, 1_Landing_to_Bronze.py:60).
-    """
-    if resolve_backend(backend) == "delta":
-        df.write.format("delta").mode("append").option("mergeSchema", "true").save(path)
-        return
-    if not table_exists(path):
+    columns missing from the batch are written as typed nulls. The files
+    land in the committed version's directory."""
+    d = _table_dir(path)
+    if d is None:
         create_table(df, path)
         return
-    existing = spark.read.parquet(path).schema
+    existing = read_table(spark, path).schema
     batch_cols = {f.name for f in df.schema.fields}
     aligned = df
     for field in existing.fields:
         if field.name not in batch_cols:
             aligned = aligned.withColumn(field.name, F.lit(None).cast(field.dataType))
-    aligned.write.mode("append").parquet(path)
+    aligned.write.mode("append").parquet(str(d))
 
 
-def read_table(spark: SparkSession, path: str, backend: str = "parquet") -> DataFrame:
-    """Read an engine-managed table with schema merge across appends.
-    Under the delta backend the log supplies the (already-evolved)
-    schema, so the mergeSchema read option is parquet-path-only."""
-    if resolve_backend(backend) == "delta":
-        return spark.read.format("delta").load(path)
-    return spark.read.option("mergeSchema", "true").parquet(path)
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read an engine-managed table's committed version with schema
+    merge across appends."""
+    d = _table_dir(path)
+    if d is None:
+        raise FileNotFoundError(f"no committed table at {path}")
+    reader = spark.read.option("mergeSchema", "true")
+    stages = [] if d != Path(path) else [c for c in d.iterdir() if c.name.startswith("v=")]
+    if not stages:
+        return reader.parquet(str(d))
+    # A legacy flat table beside the v=1 stage of an overwrite that
+    # crashed before its pointer flip: Spark would read only the ``v=``
+    # directory, so name the legacy files and partitions explicitly.
+    data = [
+        str(c)
+        for c in d.iterdir()
+        if c not in stages and (not c.name.startswith((".", "_")) or "=" in c.name)
+    ]
+    return reader.option("basePath", str(d)).parquet(*data)
 
 
 def write_csv(
@@ -246,77 +238,61 @@ def create_database(spark: SparkSession, name: str) -> None:
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
 
 
-def save_managed_table(
-    df: DataFrame, qualified_name: str, mode: str = "overwrite", backend: str = "parquet"
-) -> None:
+def save_managed_table(df: DataFrame, qualified_name: str, mode: str = "overwrite") -> None:
     """Managed-table sink (S8): ``db.table`` lands in the session
     metastore and is queryable via ``spark.table(name)`` / SQL. The
     database part must already exist (``create_database``)."""
-    df.write.format(resolve_backend(backend)).mode(mode).saveAsTable(qualified_name)
+    df.write.format("parquet").mode(mode).saveAsTable(qualified_name)
 
 
 # ---------------------------------------------------------------------------
 # versioned snapshots (parquet-native time travel)
 # ---------------------------------------------------------------------------
 
-_VERSION_PTR = "_current_version.json"
-
-
 def write_snapshot(
     df: DataFrame,
     path: str,
     retain: int = 5,
-    commit_meta: dict | None = None,
+    commit_meta: dict | Callable[[], dict] | None = None,
 ) -> int:
     """Versioned table write with TIME TRAVEL — the parquet-native half
-    of what a Delta/Iceberg log provides. Each call writes a new
-    IMMUTABLE snapshot directory ``v=N`` under ``path`` (invisible to
-    readers while being written — nothing references it yet), then
-    flips the current-version POINTER file via write-then-``os.replace``
-    (atomic on POSIX): a reader always resolves to a complete version,
-    never a torn table, and concurrent readers of version N−1 keep a
-    consistent view while N lands, because old snapshot files are never
-    mutated — unlike ``overwrite_table``'s swap, which deletes the old
-    directory out from under a slow reader. Old versions stay readable
-    (``read_snapshot(..., version=k)``) until pruned past ``retain``.
-
-    What this does NOT give: multi-writer arbitration — two concurrent
-    writers can both stage v=N+1 and the second pointer flip silently
-    wins. That needs a real table-format log (the ``backend="delta"``
-    seam); single-writer pipelines (this engine's orchestrator model,
-    like the reference's ADF trigger) are the supported contract.
-
-    Returns the committed version number."""
-    import json
-    import os
-
+    of a Delta/Iceberg log and the engine's one whole-table commit:
+    write an IMMUTABLE ``v=N`` directory (no reader can resolve it yet),
+    evaluate ``commit_meta`` (see ``overwrite_table``), flip the pointer
+    that carries it via write-then-``os.replace``, then prune versions at
+    or below N − ``retain``, legacy flat files and pointer temp files.
+    Readers of version N−1 keep a consistent view while N lands, because
+    snapshot files are never mutated; old versions stay readable
+    (``read_snapshot(..., version=k)``) until pruned. Returns the
+    committed version number."""
     p = Path(path)
-    p.mkdir(parents=True, exist_ok=True)
+    _table_dir(p)  # refuses a Delta table before anything is written
     cur = snapshot_current_version(path)
     new = 1 if cur is None else cur + 1
     df.write.mode("overwrite").parquet(str(p / f"v={new}"))
+    meta = commit_meta() if callable(commit_meta) else commit_meta
     tmp = p / f".ptr_tmp_{new}"
-    tmp.write_text(
-        json.dumps({"version": new, "meta": commit_meta})
-    )
+    tmp.write_text(json.dumps({"version": new, "meta": meta}))
     os.replace(tmp, p / _VERSION_PTR)
     # max(1, retain): the just-committed version must never prune
     # itself (retain<=0 would delete v=new and leave the pointer
-    # dangling) — same guard vacuum_snapshots applies.
-    for old in snapshot_versions(path):
-        if old <= new - max(1, retain):
-            shutil.rmtree(p / f"v={old}", ignore_errors=True)
+    # dangling) — same guard vacuum_snapshots applies. Stages above
+    # the pointer are left to vacuum_snapshots.
+    keep = {_VERSION_PTR, *(f"v={v}" for v in snapshot_versions(path) if v > new - max(1, retain))}
+    for child in p.iterdir():
+        if child.name in keep:
+            continue
+        if child.is_dir():
+            shutil.rmtree(child, ignore_errors=True)
+        else:
+            child.unlink(missing_ok=True)
     return new
 
 
 def snapshot_current_version(path: str) -> int | None:
     """Version the pointer currently commits to, or None (no table)."""
-    import json
-
-    f = Path(path) / _VERSION_PTR
-    if not f.exists():
-        return None
-    return int(json.loads(f.read_text())["version"])
+    ptr = _pointer(path)
+    return None if ptr is None else int(ptr["version"])
 
 
 def snapshot_versions(path: str) -> list[int]:

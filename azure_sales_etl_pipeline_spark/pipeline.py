@@ -145,8 +145,8 @@ class MedallionPipeline:
         return stats
 
     def silver_to_gold(self, name: str) -> dict[str, int]:
-        """Materialize one gold mart: full refresh by staged-swap
-        overwrite, the reference's mode for every mart
+        """Materialize one gold mart: full refresh by ``overwrite_table``,
+        the reference's mode for every mart
         (3_Silver_to_Gold.py:60,66,72,92,112,133 / S7)."""
         df = self.gold_marts[name](self.spark, self.catalog)
         path = self.catalog.path("gold", name)

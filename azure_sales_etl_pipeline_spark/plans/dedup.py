@@ -691,8 +691,8 @@ def minhash_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch NEAR-DUP dedup against a PERSISTED LSH band index —
     the incremental production shape the r10 ledger called for: instead
     of re-banding history per crawl increment, the (doc_id, band_idx,
-    band_hash) posting rows persist (real parquet state, staged atomic
-    swaps), each new batch finds its candidates as intra-batch bucket
+    band_hash) posting rows persist (real parquet state, atomic
+    overwrites), each new batch finds its candidates as intra-batch bucket
     pairs ∪ batch×INDEX bucket joins, and then appends its own postings
     to the index. Two id-ordered batches here; because every cross-
     batch bucket pair is found when its second member arrives, the

@@ -23,7 +23,7 @@ results are summation-order independent (AQE re-partitions freely).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -556,8 +556,11 @@ def run_gold_marts(spark: SparkSession, sf_dir: str, out_root: str) -> dict[str,
         )
         written: dict[str, int] = {}
         for name, df in marts.items():
-            overwrite_table(df, f"{out_root}/{name}")
-            written[name] = spark.read.parquet(f"{out_root}/{name}").count()
+            # Rows counted by the write itself (observe), not by a
+            # re-read: one job per mart, as in silver_to_gold.
+            obs = Observation()
+            overwrite_table(df.observe(obs, F.count(F.lit(1)).alias("n")), f"{out_root}/{name}")
+            written[name] = int(obs.get["n"])
         daily.unpersist()
         return written
     finally:

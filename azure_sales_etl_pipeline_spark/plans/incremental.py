@@ -432,7 +432,7 @@ _INGEST_SQL = f"""
 def dedup_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold the documents table into a persisted fingerprint index in
     two id-ordered batches (operators.maintenance.merge_fingerprint_index
-    — real parquet state, staged atomic swaps) and return the final
+    — real parquet state, atomic overwrites) and return the final
     index. Because batch-1 ids all precede batch-2 ids, first-seen-wins
     keepers coincide with global min(doc_id), so the oracle is the
     ONE-SHOT exact-dedup recompute — the two-batch incremental path
@@ -576,7 +576,7 @@ _BM25_IDX_SQL = rf"""
 def cluster_labels_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold the near-dup graph into a persisted cluster-label table in
     two id-ordered batches (operators.maintenance.merge_cluster_labels
-    — label contraction over real parquet state, staged atomic swaps)
+    — label contraction over real parquet state, atomic overwrites)
     and return the final table. Batch 2's edge set is every candidate
     pair TOUCHING a batch-2 doc — including the cross-batch bridges
     that must merge previously-separate batch-1 clusters — so the fold

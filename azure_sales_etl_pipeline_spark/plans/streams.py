@@ -59,7 +59,7 @@ QUERIES = {
     # protocol hard-requires google.protobuf (StateMessage_pb2), which
     # this container lacks and installs are forbidden — the operator is
     # complete and gated behind an import check, its pytest skips with
-    # the reason (the delta-spark seam treatment).
+    # the reason.
     "stream_transition_matrix": stream_transition_matrix,
     "stream_kmv_distinct": stream_kmv_distinct,
     "stream_drift_monitor": stream_drift_monitor,

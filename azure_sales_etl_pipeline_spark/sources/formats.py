@@ -56,8 +56,7 @@ def write_avro(df: DataFrame, path: str) -> None:
     """Avro export (row-oriented — the streaming/Kafka interchange
     format). spark-avro is an external module since Spark 2.4 and is
     not deployed in this container: the call raises a clear error
-    unless the package is on the classpath (same gating policy as the
-    Delta storage backend)."""
+    unless the package is on the classpath."""
     try:
         df.write.mode("overwrite").format("avro").save(path)
     except Exception as e:  # noqa: BLE001

@@ -20,14 +20,13 @@ from __future__ import annotations
 
 import os
 import tempfile
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import local_df
 
-from .catalog import table_path
+from .catalog import table_exists, table_path
 
 
 def _stream_csv_source(spark: SparkSession, schema, source_glob: str) -> DataFrame:
@@ -1032,8 +1031,8 @@ def streaming_mart(
     Replay protection: ``foreachBatch`` is at-least-once, and folding a
     sum twice is NOT idempotent — so the sink records
     (checkpoint, batch_id) in a commit marker stored INSIDE the mart
-    directory and committed by the SAME atomic rename that swaps the
-    mart version in (``overwrite_table(commit_meta=...)``). Mart data
+    table and committed by the SAME atomic pointer flip that commits
+    the mart version (``overwrite_table(commit_meta=...)``). Mart data
     and folded-batch id can therefore never disagree: a crash at any
     point leaves either the old version (old marker — restart refolds
     the batch, correctly) or the new version (new marker — restart
@@ -1116,7 +1115,7 @@ def streaming_dedup_index(
     would double-count ``dup_count`` (the fold is NOT idempotent, same
     class as ``streaming_mart``'s sums), so the shared
     ``_streaming_fold`` marker commits (checkpoint, batch_id) inside
-    the same atomic swap as the index version."""
+    the same atomic pointer flip as the index version."""
 
     def fold(batch_df: DataFrame, commit_meta: dict) -> None:
         from .operators.maintenance import merge_fingerprint_index
@@ -1974,8 +1973,8 @@ def _streaming_fold(
 
     ``foreachBatch`` is at-least-once, and folding a sum twice is NOT
     idempotent — so the sink records (checkpoint, batch_id) in a commit
-    marker stored INSIDE the mart directory and committed by the SAME
-    atomic rename that swaps the mart version in
+    marker stored INSIDE the mart table and committed by the SAME
+    atomic pointer flip that commits the mart version
     (``overwrite_table(commit_meta=...)``, invoked by the fold
     callable). Mart data and folded-batch id can never disagree; see
     ``streaming_mart``'s docstring for the crash-window analysis."""
@@ -1993,7 +1992,7 @@ def _streaming_fold(
             )
     else:
         committed = {"checkpoint": checkpoint, "batch_id": -1}
-        if Path(mart_path).exists():
+        if table_exists(mart_path):
             raise ValueError(
                 f"mart {mart_path} exists but has no commit marker — "
                 "refusing to fold stream batches into a mart of unknown "

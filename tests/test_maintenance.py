@@ -17,6 +17,7 @@ from azure_sales_etl_pipeline_spark.operators.maintenance import (
     compact_table,
     merge_aggregate,
 )
+from azure_sales_etl_pipeline_spark.operators.writer import read_table
 
 from conftest import SF_DIR
 
@@ -70,7 +71,7 @@ def test_compact_table_packs_small_files(spark, tmp_path):
     assert n_before >= 40
     n_after = compact_table(spark, path, target_bytes=1 << 30)
     assert n_after == 1
-    back = spark.read.parquet(path)
+    back = read_table(spark, path)
     assert back.count() == 10_000
     assert back.agg(F.sum("v")).first()[0] == 10_000 * 9_999
 

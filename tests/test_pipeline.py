@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from azure_sales_etl_pipeline_spark.operators.writer import read_table
 from azure_sales_etl_pipeline_spark.pipeline import MedallionPipeline, TableConfig
 
 
@@ -40,7 +41,7 @@ def test_end_to_end_two_runs(spark, tmp_path):
     assert by_table["customers"].stats == {"insert": 1, "update": 1, "no_change": 0}
     assert captured == [[1, 2], [3]]
 
-    silver = pipe.spark.read.parquet(str(tmp_path / "lake" / "silver" / "customers"))
+    silver = read_table(pipe.spark, str(tmp_path / "lake" / "silver" / "customers"))
     cur = {r["id"]: r["segment"] for r in silver.where("is_current").collect()}
     assert cur == {1: "WHOLESALE", 2: "CORP", 3: "NEW"}
 
@@ -198,3 +199,63 @@ def test_watermark_is_the_true_batch_max(spark, tmp_path):
         expected = max(ts for _, _, ts in rows if ts > prev)
         pipe.bronze_to_silver(cfg)
         assert pipe.watermarks.get(cfg.name) == expected
+
+
+def test_crash_before_watermark_advance_replays_as_no_change(spark, tmp_path, monkeypatch):
+    """At-least-once replay (ROADMAP C): the process dies inside
+    WatermarkStore.set, at the rename that commits the new watermark,
+    after bronze_to_silver's upsert has committed silver. The old
+    watermark must survive, so the rerun replays exactly that window:
+    SCD2 classifies every replayed row NO CHANGE, silver keeps its
+    versions, and the watermark lands on the batch max."""
+    import os
+
+    import pytest
+
+    from azure_sales_etl_pipeline_spark.operators.writer import append_evolve
+
+    cfg = TableConfig("customers", "id")
+    clock = {"now": dt.datetime(2024, 6, 1)}
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [cfg], clock=lambda: clock["now"])
+    bronze = pipe.catalog.path("bronze", cfg.name)
+    silver = pipe.catalog.path("silver", cfg.name)
+    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
+    schema = f"id long, name string, {cfg.ts_col} timestamp"
+    first = [(i, f"n{i}", t1 + dt.timedelta(hours=i)) for i in range(10)]
+    # 5 updates, 5 inserts
+    second = [(i, f"m{i}", t2 + dt.timedelta(hours=i)) for i in range(5, 15)]
+    append_evolve(spark, spark.createDataFrame(first, schema), bronze)
+    pipe.bronze_to_silver(cfg)
+
+    wm_root = str(tmp_path / "lake" / "state")
+    crashed = []
+
+    def dying(rename):
+        def wrapper(src, dst, *a, **kw):
+            if not crashed and str(dst).startswith(wm_root):
+                crashed.append(dst)
+                raise RuntimeError("process died while committing the watermark")
+            return rename(src, dst, *a, **kw)
+
+        return wrapper
+
+    for name in ("replace", "rename"):
+        monkeypatch.setattr(os, name, dying(getattr(os, name)))
+    append_evolve(spark, spark.createDataFrame(second, schema), bronze)
+    clock["now"] = dt.datetime(2024, 7, 1)
+    with pytest.raises(RuntimeError, match="process died"):
+        pipe.bronze_to_silver(cfg)
+    monkeypatch.undo()
+
+    def versions():
+        cols = ("id", "name", "hash", "is_current", "effective_date", "end_date")
+        return sorted(tuple(r) for r in read_table(spark, silver).select(*cols).collect())
+
+    committed = versions()
+    assert len(committed) == 20  # 10 first loads (5 now expired), 5 new versions, 5 inserts
+    assert pipe.watermarks.get(cfg.name) == max(ts for *_, ts in first)
+
+    clock["now"] = dt.datetime(2024, 8, 1)
+    assert pipe.bronze_to_silver(cfg) == {"insert": 0, "update": 0, "no_change": 10}
+    assert versions() == committed
+    assert pipe.watermarks.get(cfg.name) == max(ts for *_, ts in second)

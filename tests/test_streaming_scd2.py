@@ -159,7 +159,6 @@ def test_streaming_mart_marker_commits_atomically_with_swap(spark, tmp_path):
 
     from azure_sales_etl_pipeline_spark.operators.maintenance import merge_aggregate
     from azure_sales_etl_pipeline_spark.operators.writer import (
-        COMMIT_META_NAME,
         read_commit_meta,
         read_table,
     )
@@ -180,7 +179,8 @@ def test_streaming_mart_marker_commits_atomically_with_swap(spark, tmp_path):
     meta = read_commit_meta(mart)
     assert meta is not None and meta["checkpoint"] == ckpt
     assert meta["batch_id"] >= 0
-    assert (Path(mart) / COMMIT_META_NAME).exists()
+    # the marker lives in the version pointer, committed with the data
+    assert json.loads((Path(mart) / "_current_version.json").read_text())["meta"] == meta
     # No stray marker outside the swapped directory.
     assert not Path(mart + "._mart_commit").exists()
 

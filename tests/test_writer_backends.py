@@ -1,6 +1,7 @@
-"""Round-3 surface closures: managed (metastore) tables S14/S8, the
-delta storage-backend seam, the JDBC fake-reader pushdown check S11, and
-SCD2 upsert over a schema-evolved batch."""
+"""Writer surface: managed (metastore) tables S14/S8, the JDBC
+fake-reader pushdown check S11, SCD2 upsert over a schema-evolved batch,
+versioned snapshots, and the table-commit protocol under injected
+crashes."""
 
 from __future__ import annotations
 
@@ -13,8 +14,6 @@ import pytest
 from azure_sales_etl_pipeline_spark.operators.scd2 import SCD2Table
 from azure_sales_etl_pipeline_spark.operators.writer import (
     create_database,
-    create_table,
-    resolve_backend,
     save_managed_table,
 )
 from azure_sales_etl_pipeline_spark.sources.extract import incremental_extract
@@ -45,23 +44,6 @@ def test_managed_table_round_trip(spark):
     assert spark.table("silver_test.new_customers_for_emailing").count() == 1
     spark.sql("DROP TABLE silver_test.new_customers_for_emailing")
     spark.sql("DROP DATABASE silver_test")
-
-
-# ---------------------------------------------------------------------------
-# storage-backend seam: parquet implemented, delta raises a clear error
-# when delta-spark isn't installed (it isn't, in this container)
-# ---------------------------------------------------------------------------
-
-
-def test_backend_dispatch(spark, tmp_path):
-    assert resolve_backend("parquet") == "parquet"
-    with pytest.raises(ValueError, match="unknown storage backend"):
-        resolve_backend("iceberg")
-    df = spark.range(1)
-    with pytest.raises(RuntimeError, match="delta-spark is not"):
-        create_table(df, str(tmp_path / "t"), backend="delta")
-    # the error fires BEFORE any write: nothing staged on disk
-    assert not (tmp_path / "t").exists()
 
 
 # ---------------------------------------------------------------------------
@@ -217,65 +199,6 @@ def test_jdbc_extract_live_round_trip_embedded_derby(spark, tmp_path):
     assert rows == [(2, "in-window"), (3, "at-upper")]
 
 
-def test_delta_backend_end_to_end(tmp_path):
-    """Gated proof of the backend='delta' dispatch: with delta-spark
-    installed, create → overwrite → read back round-trips through a
-    real Delta table (and the maintenance guard refuses to treat it as
-    plain parquet). Runs in a subprocess because Delta needs its SQL
-    extensions configured at session build — the shared test session
-    can't be retrofitted. Auto-skips here (sandbox has no delta-spark);
-    documented in COVERAGE.md."""
-    pytest.importorskip("delta")
-    import subprocess
-    import sys
-    import textwrap
-
-    script = textwrap.dedent(
-        f"""
-        import sys
-        sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})
-        from delta import configure_spark_with_delta_pip
-        from pyspark.sql import SparkSession
-        builder = (
-            SparkSession.builder.master("local[2]")
-            .config("spark.sql.extensions",
-                    "io.delta.sql.DeltaSparkSessionExtension")
-            .config("spark.sql.catalog.spark_catalog",
-                    "org.apache.spark.sql.delta.catalog.DeltaCatalog")
-        )
-        spark = configure_spark_with_delta_pip(builder).getOrCreate()
-        from azure_sales_etl_pipeline_spark.operators.writer import (
-            create_table, overwrite_table, read_table,
-        )
-        path = {str(tmp_path / "delta_tbl")!r}
-        create_table(
-            spark.range(5).withColumnRenamed("id", "k"), path, backend="delta"
-        )
-        overwrite_table(
-            spark.range(3).withColumnRenamed("id", "k"), path, backend="delta"
-        )
-        got = sorted(
-            r["k"] for r in read_table(spark, path, backend="delta").collect()
-        )
-        assert got == [0, 1, 2], got
-        from azure_sales_etl_pipeline_spark.operators.maintenance import (
-            compact_table,
-        )
-        try:
-            compact_table(spark, path)
-        except ValueError as e:
-            assert "_delta_log" in str(e) or "Delta" in str(e)
-        else:
-            raise AssertionError("compact_table accepted a Delta table")
-        print("DELTA_OK")
-        """
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", script], capture_output=True, text=True
-    )
-    assert "DELTA_OK" in out.stdout, out.stderr[-2000:]
-
-
 def test_wds_shards_roundtrip_and_reproducible(spark, tmp_path):
     """Tar members must reproduce payload bytes and metadata exactly,
     in deterministic (shard, key) order — and a re-export of identical
@@ -358,20 +281,6 @@ def test_wds_shards_distributed_readback(spark, tmp_path):
         assert bytes(r["payload"]) == f"payload text {k}".encode()
         assert r["lang"] == ("en" if k % 2 else "es")
         assert r["shard_id"] == k % 4
-
-
-def test_delta_gate_skips_only_on_import_absence():
-    """r6 verdict task: the delta e2e test must skip ONLY because
-    delta-spark is absent. If the package is present but broken, that
-    must surface as a FAILURE here, never hide inside importorskip."""
-    import importlib.util
-
-    spec = importlib.util.find_spec("delta")
-    if spec is None:
-        pytest.skip("delta-spark not installed: e2e gate legitimately import-absent")
-    import delta  # present → must import cleanly, else this test fails
-
-    assert hasattr(delta, "configure_spark_with_delta_pip")
 
 
 def test_wds_shards_fsspec_filesystem_branch(spark, tmp_path, monkeypatch):
@@ -564,3 +473,194 @@ def test_wds_datasource_matches_mapinpandas_reader(spark, tmp_path):
     )
     assert via_ds == via_pandas
     assert len(via_ds) == 10
+
+
+# ---------------------------------------------------------------------------
+# The one table-commit protocol under injected crashes: a fault right
+# after each step of a write (version-directory write, commit_meta
+# callable, pointer flip, prune), on each starting state (fresh path,
+# pointer table, legacy flat table). Readers must see the complete old
+# version or the complete new one, and the next write heals the debris.
+# ---------------------------------------------------------------------------
+
+_STATES = ("fresh", "pointer", "legacy")
+
+
+class _Crash(Exception):
+    """The injected fault."""
+
+
+def _crash_after(monkeypatch, step: str) -> list:
+    """Patch the primitive(s) behind ``step`` so the first call runs and
+    then raises _Crash. Returns a list that is non-empty once the fault
+    fired (a step may not occur at all, e.g. prune on a fresh path)."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    targets = {
+        "data": [(DataFrameWriter, "parquet")],
+        "flip": [(os, "replace")],
+        "prune": [(shutil, "rmtree"), (Path, "unlink")],
+    }[step]
+    fired: list = []
+    for owner, name in targets:
+        def wrapper(*a, _real=getattr(owner, name), **kw):
+            out = _real(*a, **kw)
+            if not fired:
+                fired.append(step)
+                raise _Crash(step)
+            return out
+
+        monkeypatch.setattr(owner, name, wrapper)
+    return fired
+
+
+def _visible(spark, path: str):
+    """What readers see: None (no table), or (sorted keys, commit meta)."""
+    from azure_sales_etl_pipeline_spark.catalog import table_exists
+    from azure_sales_etl_pipeline_spark.operators.writer import read_commit_meta, read_table
+
+    meta = read_commit_meta(path)
+    if not table_exists(path):
+        assert meta is None
+        return None
+    return sorted(r["k"] for r in read_table(spark, path).collect()), meta
+
+
+@pytest.mark.parametrize("state", _STATES)
+@pytest.mark.parametrize("step", ["data", "meta", "flip", "prune"])
+def test_overwrite_table_survives_crash_at_every_step(spark, tmp_path, monkeypatch, step, state):
+    import json
+
+    from azure_sales_etl_pipeline_spark.operators.writer import overwrite_table
+
+    path = str(tmp_path / "t")
+    old = spark.range(3).withColumnRenamed("id", "k")
+    new = spark.range(10, 15).withColumnRenamed("id", "k")
+    if state == "pointer":
+        overwrite_table(old, path, commit_meta={"v": "old"})
+    elif state == "legacy":
+        old.write.parquet(path)
+        (Path(path) / "_commit.json").write_text(json.dumps({"v": "old"}))
+    before = None if state == "fresh" else ([0, 1, 2], {"v": "old"})
+    after = ([10, 11, 12, 13, 14], {"v": "new"})
+
+    if step == "meta":
+        def meta():
+            raise _Crash("meta")
+        fired = [step]
+    else:
+        fired = _crash_after(monkeypatch, step)
+        meta = {"v": "new"}
+    try:
+        overwrite_table(new, path, commit_meta=meta)
+    except _Crash:
+        pass
+    monkeypatch.undo()
+    assert _visible(spark, path) in ((before, after) if fired else (after,))
+
+    overwrite_table(new, path, commit_meta={"v": "new"})
+    assert _visible(spark, path) == after
+    names = sorted(c.name for c in Path(path).iterdir())
+    assert names[0] == "_current_version.json" and len(names) == 2, names
+
+
+@pytest.mark.parametrize("state", _STATES)
+@pytest.mark.parametrize("step", ["data", "flip", "prune"])
+def test_watermark_set_survives_crash_at_every_step(spark, tmp_path, monkeypatch, step, state):
+    from azure_sales_etl_pipeline_spark.operators.watermark import (
+        DEFAULT_WATERMARK,
+        WatermarkStore,
+    )
+
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    old, new = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
+    if state == "pointer":
+        store.set("t", old)
+    elif state == "legacy":
+        spark.createDataFrame([("t", old)], "table_name string, watermark timestamp").coalesce(
+            1
+        ).write.parquet(str(store._path("t")))
+    before = DEFAULT_WATERMARK if state == "fresh" else old
+
+    fired = _crash_after(monkeypatch, step)
+    try:
+        store.set("t", new)
+    except _Crash:
+        pass
+    monkeypatch.undo()
+    assert store.get("t") in ((before, new) if fired else (new,))
+    store.set("t", new)
+    assert store.get("t") == new
+
+
+def test_delta_table_refused_by_every_reader_and_writer(spark, tmp_path):
+    """A Delta table written by another tool keeps tombstoned files
+    beside its ``_delta_log``: the engine must neither read it as plain
+    parquet nor rewrite it. The resolver refuses it for every entry
+    point, before anything is written."""
+    from azure_sales_etl_pipeline_spark.catalog import table_exists
+    from azure_sales_etl_pipeline_spark.operators.maintenance import (
+        compact_partitioned,
+        compact_table,
+        merge_aggregate,
+    )
+    from azure_sales_etl_pipeline_spark.operators.writer import (
+        append_evolve,
+        overwrite_table,
+        read_commit_meta,
+        read_table,
+        write_snapshot,
+    )
+
+    path = tmp_path / "delta_tbl"
+    spark.range(3).write.parquet(str(path))
+    (path / "_delta_log").mkdir()
+    on_disk = sorted(c.name for c in path.iterdir())
+    df = spark.range(1)
+    p = str(path)
+    calls = [
+        lambda: table_exists(p),
+        lambda: read_table(spark, p),
+        lambda: read_commit_meta(p),
+        lambda: overwrite_table(df, p),
+        lambda: write_snapshot(df, p),
+        lambda: append_evolve(spark, df, p),
+        lambda: compact_table(spark, p),
+        lambda: compact_partitioned(spark, p),
+        lambda: merge_aggregate(spark, p, df, keys=["id"], sums=[]),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="Delta table"):
+            call()
+    assert sorted(c.name for c in path.iterdir()) == on_disk
+
+
+def test_no_rmtree_then_move_swap_in_package():
+    """The delete-then-move directory swap leaves no table at the path
+    if the process dies between its two calls. Whole-table commits go
+    through writer.write_snapshot's pointer flip instead, so no function
+    in the package removes a tree and later moves one into place."""
+    import ast
+
+    import azure_sales_etl_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            lines: dict[str, list[int]] = {"rmtree": [], "move": []}
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in lines
+                ):
+                    lines[node.func.attr].append(node.lineno)
+            if lines["rmtree"] and lines["move"] and min(lines["rmtree"]) < max(lines["move"]):
+                offenders.append(f"{f.relative_to(root)}::{fn.name}")
+    assert offenders == []

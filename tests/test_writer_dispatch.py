@@ -1,162 +1,58 @@
-"""Writer-backend dispatch surface (VERDICT r4 item 8): for EVERY
-backend-aware writer — create / overwrite / append / managed — prove
+"""Writer surface: for EVERY table writer — create / overwrite / append
+/ managed — prove
 
-1. backend='parquet' is the implemented default,
-2. backend='delta' without delta-spark raises the clean RuntimeError
-   BEFORE any side effect (nothing staged on disk),
-3. an unknown backend raises ValueError,
-4. with delta-spark PRESENT (simulated), the writer dispatches to the
-   exact native Delta write — format('delta') + the right mode/options,
-   never the parquet staging shims — so a real delta-spark drop-in is
-   provably one flag.
+1. the writer writes plain parquet that reads back,
+2. a caller asking for a Delta backend (a ``backend=`` argument, which
+   no writer takes) gets an error before any side effect (nothing on
+   disk, no write issued) — never a silent parquet write in place of
+   the Delta table it asked for.
 """
 
 from __future__ import annotations
-
-import importlib.util
 
 import pytest
 
 from azure_sales_etl_pipeline_spark.operators import writer as W
 
 
-@pytest.fixture()
-def delta_installed(monkeypatch):
-    """Make resolve_backend believe delta-spark is importable."""
-    real = importlib.util.find_spec
-
-    def fake(name, *a, **kw):
-        if name == "delta":
-            return object()  # any non-None sentinel
-        return real(name, *a, **kw)
-
-    monkeypatch.setattr(importlib.util, "find_spec", fake)
-
-
-class FakeWriter:
-    """Records the fluent write chain a writer function drives."""
-
-    def __init__(self, log):
-        self.log = log
-
-    def format(self, fmt):
-        self.log["format"] = fmt
-        return self
-
-    def mode(self, m):
-        self.log["mode"] = m
-        return self
-
-    def option(self, k, v):
-        self.log.setdefault("options", {})[k] = v
-        return self
-
-    def partitionBy(self, *cols):
-        self.log["partitionBy"] = cols
-        return self
-
-    def save(self, path):
-        self.log["save"] = path
-
-    def saveAsTable(self, name):
-        self.log["saveAsTable"] = name
-
-    def parquet(self, path):
-        self.log["parquet"] = path
-
-    def csv(self, path):
-        self.log["csv"] = path
-
-
 class FakeDF:
-    def __init__(self):
-        self.log = {}
+    """Fails the test if a writer starts a write."""
 
     @property
     def write(self):
-        return FakeWriter(self.log)
+        raise AssertionError("the writer started a write")
 
 
 WRITERS = {
-    "create": lambda df, path, backend: W.create_table(df, path, backend=backend),
-    "overwrite": lambda df, path, backend: W.overwrite_table(df, path, backend=backend),
-    "append": lambda df, path, backend: W.append_evolve(None, df, path, backend=backend),
-    "managed": lambda df, path, backend: W.save_managed_table(df, "db.t", backend=backend),
+    "create": lambda df, path, **kw: W.create_table(df, path, **kw),
+    "overwrite": lambda df, path, **kw: W.overwrite_table(df, path, **kw),
+    "append": lambda df, path, **kw: W.append_evolve(None, df, path, **kw),
+    "managed": lambda df, path, **kw: W.save_managed_table(df, "db.t", **kw),
 }
-
-
-@pytest.mark.parametrize("name", sorted(WRITERS))
-def test_unknown_backend_rejected_everywhere(name, tmp_path):
-    with pytest.raises(ValueError, match="unknown storage backend"):
-        WRITERS[name](FakeDF(), str(tmp_path / "t"), "iceberg")
 
 
 @pytest.mark.parametrize("name", sorted(WRITERS))
 def test_delta_without_package_raises_before_side_effects(name, tmp_path):
     target = tmp_path / "t"
-    with pytest.raises(RuntimeError, match="delta-spark is not"):
-        WRITERS[name](FakeDF(), str(target), "delta")
+    with pytest.raises(TypeError, match="backend"):
+        WRITERS[name](FakeDF(), str(target), backend="delta")
     assert not target.exists()
-
-
-# the exact native write each writer must issue when delta IS present
-_EXPECTED_DELTA = {
-    "create": {"format": "delta", "mode": "errorifexists", "save": True},
-    "overwrite": {
-        "format": "delta",
-        "mode": "overwrite",
-        "options": {"overwriteSchema": "true"},
-        "save": True,
-    },
-    "append": {
-        "format": "delta",
-        "mode": "append",
-        "options": {"mergeSchema": "true"},
-        "save": True,
-    },
-    "managed": {"format": "delta", "mode": "overwrite", "saveAsTable": "db.t"},
-}
-
-
-@pytest.mark.parametrize("name", sorted(WRITERS))
-def test_delta_present_dispatches_native_write(name, tmp_path, delta_installed):
-    df = FakeDF()
-    WRITERS[name](df, str(tmp_path / "t"), "delta")
-    log = df.log
-    want = _EXPECTED_DELTA[name]
-    assert log["format"] == "delta"
-    assert log["mode"] == want["mode"]
-    assert log.get("options", {}) == want.get("options", {})
-    if want.get("save"):
-        assert log["save"] == str(tmp_path / "t")
-        # native path: no parquet staging, no direct .parquet() write
-        assert "parquet" not in log
-    if "saveAsTable" in want:
-        assert log["saveAsTable"] == want["saveAsTable"]
 
 
 @pytest.mark.parametrize("name", sorted(WRITERS))
 def test_parquet_default_used_by_real_pipeline(name, spark, tmp_path):
-    """backend='parquet' actually writes (the real engine default)."""
+    """Each writer actually writes parquet (the engine's one format)."""
     df = spark.createDataFrame([(1, "a")], "id int, v string")
     path = str(tmp_path / "t")
     if name == "managed":
         W.create_database(spark, "disp_test")
-        W.save_managed_table(df, "disp_test.t", backend="parquet")
+        W.save_managed_table(df, "disp_test.t")
         assert spark.table("disp_test.t").count() == 1
         spark.sql("DROP TABLE disp_test.t")
         spark.sql("DROP DATABASE disp_test")
         return
     if name == "append":
-        W.append_evolve(spark, df, path, backend="parquet")
+        W.append_evolve(spark, df, path)
     else:
-        WRITERS[name](df, path, backend="parquet")
-    assert spark.read.parquet(path).count() == 1
-
-
-def test_overwrite_delta_refuses_commit_meta(delta_installed):
-    """commit_meta is the parquet staged-swap's transactional seam; on
-    Delta the txn log is the native form — a loose side file would
-    reintroduce the torn-commit window, so the writer refuses it."""
-    with pytest.raises(ValueError, match="commit_meta is parquet-backend only"):
-        W.overwrite_table(FakeDF(), "/tmp/x", backend="delta", commit_meta={"v": 1})
+        WRITERS[name](df, path)
+    assert W.read_table(spark, path).count() == 1
