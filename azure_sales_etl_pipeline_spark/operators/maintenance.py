@@ -27,7 +27,6 @@ resolver refuses Delta tables for every read and write here.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from pathlib import Path
 from urllib.parse import unquote
 
@@ -38,6 +37,7 @@ from ..functions import local_df
 from pyspark.sql.window import Window
 
 from ..catalog import table_exists
+from .rounds import cut, iterate
 from .writer import _table_dir, overwrite_table, read_table, write_partitioned
 
 
@@ -245,10 +245,7 @@ def merge_fingerprint_index(
 _CC_MAX_ITERS = 8  # pointer-doubling rounds: covers diameters up to ~2^8
 
 
-def _cc_min_label(
-    edges: DataFrame,
-    cut: Callable[[DataFrame], DataFrame] = lambda df: df.localCheckpoint(),
-) -> DataFrame:
+def _cc_min_label(edges: DataFrame) -> DataFrame:
     """Min-label connected components over a ``(src, dst)`` edge list —
     ``(node, label)`` for every node that appears in an edge, labeled
     with the minimum node id reachable from it. The one CC kernel: the
@@ -263,14 +260,10 @@ def _cc_min_label(
     label), which halves remaining path lengths. Without (b) rounds
     needed = component diameter (dup CHAINS make that linear); with
     it, O(log diameter), so ``_CC_MAX_ITERS`` rounds cover diameters
-    up to ~2^8 — past that it raises rather than return partial
-    (mislabeled) components. At the fixed point every label equals the
-    min over its closed neighborhood and labels are idempotent, which
-    forces label = component minimum. ``cut`` is the per-round lineage
-    cut (``plans.mlprep._lineage_cutter``: localCheckpoint by default,
-    reliable checkpoint() for preemptible fleets), so round k never
-    replays rounds 1..k-1. Per round: ONE action, the eager cut (the
-    convergence probe rides it via ``observe()``).
+    up to ~2^8 — past that ``rounds.iterate`` raises rather than return
+    partial (mislabeled) components. At the fixed point every label
+    equals the min over its closed neighborhood and labels are
+    idempotent, which forces label = component minimum.
 
     Node/label values are an ARBITRARY orderable type (the golden-
     record query runs this over part-name STRINGS), so every probe
@@ -290,11 +283,11 @@ def _cc_min_label(
     # Seed each label with the closed-neighborhood min — the same
     # one-groupBy pass the identity seed needs to build the node set,
     # but it banks the first propagation round for free.
-    labels = cut(
+    seed = cut(
         adj.groupBy(F.col("doc_a").alias("node")).agg(F.min("doc_b").alias("label"))
     )
-    changed = 0
-    for _ in range(_CC_MAX_ITERS):
+
+    def pointer_double(labels: DataFrame, _rnd: int, obs: Observation) -> DataFrame:
         mid = (
             adj.join(labels, adj.doc_b == labels.node)
             .groupBy("doc_a")
@@ -306,38 +299,29 @@ def _cc_min_label(
                 ),
             )
         )
-        # Pointer doubling: label <- label(label); label values are
-        # node keys present in `mid`, so the self-join is total. `mid`
-        # is intentionally NOT checkpointed: both join sides reuse its
-        # one groupBy exchange, cheaper than a materialization job.
+        # label <- label(label), a total self-join on `mid`, left uncut:
+        # count(r_old) keeps `old` alive on the lab_map side so both
+        # sides reuse one groupBy exchange (the rule in ``rounds``).
         lab_map = mid.select(
             F.col("doc_a").alias("r_node"),
             F.col("mid").alias("r_lab"),
             F.col("old").alias("r_old"),
         )
-        # The convergence probe rides the materialization job via
-        # observe() (CollectMetrics) instead of a second count() action.
-        # count(r_old) only keeps `old` alive on the lab_map side: were
-        # it pruned there, the two sides' aggregates would differ and
-        # Spark could not reuse the exchange — up to one extra job per
-        # round.
-        obs = Observation()
-        labels = cut(
+        return (
             mid.join(lab_map, F.col("mid") == F.col("r_node"))
             .observe(
                 obs,
-                F.sum((F.col("r_lab") != F.col("old")).cast("long")).alias("changed"),
+                F.count(F.when(F.col("r_lab") != F.col("old"), 1)).alias("changed"),
                 F.count("r_old").alias("_reuse"),
             )
             .select(F.col("doc_a").alias("node"), F.col("r_lab").alias("label"))
         )
-        changed = obs.get["changed"] or 0
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"_cc_min_label did not converge in {_CC_MAX_ITERS} pointer-doubling "
-        f"rounds ({changed} labels still changing): component diameter "
-        f"exceeds ~2^{_CC_MAX_ITERS}; raise _CC_MAX_ITERS"
+
+    return iterate(
+        seed,
+        pointer_double,
+        max_rounds=_CC_MAX_ITERS,
+        converged=lambda probe: probe["changed"] == 0,
     )
 
 

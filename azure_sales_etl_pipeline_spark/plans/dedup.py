@@ -98,49 +98,38 @@ _KEEP_FIRST_SQL = """
 # ---------------------------------------------------------------------------
 
 
-def _jaccard_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAZY blocked-candidate Jaccard frame (doc_a, doc_b, jaccard)
-    — the computation behind [[ngram_jaccard_pairs]]; see
-    ``jaccard_pairs_raw`` for the shared memoized checkpoint the data
-    path consumes."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.array_distinct(_tokens()).alias("toks")
-    )
-    a = docs.alias("a")
-    b = docs.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.source") == F.col("b.source"))
-        & (F.col("b.doc_id") > F.col("a.doc_id"))
-        & (F.col("b.doc_id") <= F.col("a.doc_id") + 60),
-        "inner",
-    )
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-    return pairs.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(inter / union, 4).alias("jaccard"),
-    )
-
-
 def jaccard_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized eager checkpoint of ``_jaccard_pairs_frame`` — the
-    substrate every blocked-Jaccard consumer starts from. Three data
-    paths read the identical table: the registered
-    [[ngram_jaccard_pairs]] query, the CC cluster build's edge
-    selection (``mlprep._compute_dedup_clusters``) and
+    """Memoized eager checkpoint of the blocked-candidate Jaccard frame
+    (doc_a, doc_b, jaccard) — the substrate every blocked-Jaccard
+    consumer starts from. Three data paths read the identical table:
+    the registered [[ngram_jaccard_pairs]] query, the CC cluster
+    build's edge selection (``mlprep._compute_dedup_clusters``) and
     [[cluster_labels_two_batch]]'s edge pass. The checkpoint doubles as
     the optimizer barrier the CC build needs (filtering a checkpoint
     scan cannot be pushed into the join)."""
-    return memo.shared(
-        "jaccard_pairs",
-        spark,
-        sf_dir,
-        lambda keep: keep.frame(
-            _jaccard_pairs_frame(spark, sf_dir).localCheckpoint(eager=True)
-        ),
-    )
+
+    def build(keep):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", F.array_distinct(_tokens()).alias("toks")
+        )
+        pairs = docs.alias("a").join(
+            docs.alias("b"),
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("b.doc_id") > F.col("a.doc_id"))
+            & (F.col("b.doc_id") <= F.col("a.doc_id") + 60),
+            "inner",
+        )
+        inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
+        union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
+        return keep.frame(
+            pairs.select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.round(inter / union, 4).alias("jaccard"),
+            ).localCheckpoint(eager=True)
+        )
+
+    return memo.shared("jaccard_pairs", spark, sf_dir, build)
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

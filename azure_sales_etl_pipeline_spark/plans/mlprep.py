@@ -11,12 +11,13 @@ replay it exactly.
 Scale notes per operator are on the docstrings; the common theme: one
 shuffle on a small key, no driver-side data, no Python in the loop. The
 connected-components build runs the one CC kernel
-(``operators.maintenance._cc_min_label``) — each pass is a bounded
-self-join + aggregate with a lineage cut (without it, iteration k
-replays all k-1 prior joins).
+(``operators.maintenance._cc_min_label``); every round loop runs on
+``operators.rounds.iterate``.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -27,6 +28,7 @@ from pyspark.sql.window import Window
 
 from .. import memo
 from ..catalog import load_table
+from ..operators import rounds
 from ..operators.maintenance import _cc_min_label
 
 # md5-prefix threshold: first two hex chars <= 'cc' keeps 205/256 ≈ 80%.
@@ -779,21 +781,6 @@ def _curation_pipeline_sql() -> str:
 _CC_JACCARD_MIN = 0.6
 
 
-def _lineage_cutter(spark: SparkSession, checkpoint_dir: str | None):
-    """Per-round lineage cut for iterative algorithms. Default:
-    ``localCheckpoint`` — executor-local blocks, fastest, but an
-    executor loss mid-iteration kills the job (fine on local mode /
-    short loops). Passing ``checkpoint_dir`` switches to RELIABLE
-    ``checkpoint()`` into that directory (HDFS/shared FS on a cluster):
-    rounds survive executor loss at the cost of writing each round's
-    state to storage — the knob SCALE.md documents for long iterative
-    jobs on preemptible fleets."""
-    if checkpoint_dir is None:
-        return lambda df: df.localCheckpoint()
-    spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda df: df.checkpoint(eager=True)
-
-
 def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The support-filtered co-purchase edge list (u, v) — memoized to
     a tmp parquet table, because TWO registered graph queries
@@ -833,35 +820,26 @@ def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(memo.shared("affinity_edges", spark, sf_dir, build))
 
 
-def dedup_clusters(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoizing front door for ``_compute_dedup_clusters``: the
     converged cluster table is deterministic per sf_dir, and THREE
     registered queries consume it (dedup_clusters itself,
-    cluster_representatives, leakage_safe_split) — so the default path
-    materializes it once to a tmp parquet table and re-reads (a
-    production pipeline materializes its cluster table exactly the
-    same way; re-deriving CC per consumer triples the iteration cost).
-    A parquet table rather than a cached DataFrame because callers
-    (bench session hygiene) may drop checkpointed blocks between
-    queries. The ``checkpoint_dir`` test knob bypasses the memo."""
-    if checkpoint_dir is not None:
-        return _compute_dedup_clusters(spark, sf_dir, checkpoint_dir)
+    cluster_representatives, leakage_safe_split) — so it is
+    materialized once to a tmp parquet table and re-read (a production
+    pipeline materializes its cluster table exactly the same way;
+    re-deriving CC per consumer triples the iteration cost). A parquet
+    table rather than a cached DataFrame because callers (bench session
+    hygiene) may drop checkpointed blocks between queries."""
 
     def build(keep):
         path = f"{keep.tmpdir('cc_cache_')}/clusters"
-        _compute_dedup_clusters(spark, sf_dir, None).write.mode(
-            "overwrite"
-        ).parquet(path)
+        _compute_dedup_clusters(spark, sf_dir).write.mode("overwrite").parquet(path)
         return path
 
     return spark.read.parquet(memo.shared("dedup_clusters", spark, sf_dir, build))
 
 
-def _compute_dedup_clusters(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def _compute_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse near-duplicate documents into clusters: connected
     components over the near-dup pair graph (edges = blocked candidate
     pairs with token Jaccard >= 0.6), labeling every doc with the
@@ -870,37 +848,22 @@ def _compute_dedup_clusters(
 
     The components come from the one CC kernel,
     ``operators.maintenance._cc_min_label`` (pointer-doubling min-label
-    propagation; see its docstring for the convergence argument), with
-    this function's lineage cut for its rounds. The loop runs ONLY over
-    nodes that appear in an edge — singleton docs (the overwhelming
-    majority after blocking: near-dups are rare) never change label, so
-    they skip the iteration entirely and union back in at the end.
+    propagation; see its docstring for the convergence argument). The
+    loop runs ONLY over nodes that appear in an edge — singleton docs
+    (the overwhelming majority after blocking: near-dups are rare) never
+    change label, so they skip the iteration entirely and union back in
+    at the end.
     """
-    # Materialize the candidate pairs BEFORE filtering on jaccard: the
-    # checkpoint is an optimizer barrier that keeps Catalyst from
-    # pushing `jaccard >= t` into the blocking join's condition, where
-    # the O(|tokens|) set-overlap expression would run on every blocked
-    # candidate (pre-range-filter) instead of the few that survive —
-    # measured 12x slower at sf0.1. It also makes the union below read
-    # the pairs once instead of re-running the join per branch.
-    # Default path: the pair table is the SHARED memoized substrate
-    # (dedup.jaccard_pairs_raw — also consumed by the registered
-    # ngram_jaccard_pairs query and cluster_labels_two_batch), already
-    # eagerly checkpointed, i.e. the same barrier. The checkpoint_dir
-    # test knob keeps its own explicit cut for reliable-checkpoint runs.
-    cut = _lineage_cutter(spark, checkpoint_dir)
-    if checkpoint_dir is None:
-        from .dedup import jaccard_pairs_raw
+    from .dedup import jaccard_pairs_raw
 
-        raw_pairs = jaccard_pairs_raw(spark, sf_dir)
-    else:
-        from .dedup import _jaccard_pairs_frame
-
-        raw_pairs = cut(_jaccard_pairs_frame(spark, sf_dir))
-    edges = raw_pairs.where(F.col("jaccard") >= _CC_JACCARD_MIN).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    # The pair checkpoint keeps `jaccard >= t` out of the blocking join,
+    # where the set overlap would run on every candidate (12x at sf0.1).
+    edges = (
+        jaccard_pairs_raw(spark, sf_dir)
+        .where(F.col("jaccard") >= _CC_JACCARD_MIN)
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    labels = _cc_min_label(edges, cut).select(
+    labels = _cc_min_label(edges).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
     all_docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1158,9 +1121,7 @@ _PR_ITERS = 3
 _PR_SCALE = 1_000_000  # fixed-point micro-units
 
 
-def supplier_copurchase_pagerank(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def supplier_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank over the supplier CO-PURCHASE graph (edge =
     two suppliers fulfilling the same order): the influence/centrality
     score a marketplace runs over its supplier network, and the
@@ -1180,17 +1141,16 @@ def supplier_copurchase_pagerank(
     integer truncation), which is the conventional fixed-point form.
 
     Scale shape per round: one equi-join of edges against the rank
-    table (shuffle on the node key) + one aggregate, with
-    ``localCheckpoint`` cutting lineage so round k doesn't replay
-    rounds 1..k-1 — the dedup_clusters iteration discipline. State is
-    one row per node; edges never change, so at 100 TB they'd persist
-    pre-bucketed on src and every round co-locates for free."""
+    table (shuffle on the node key) + one aggregate, run by
+    ``operators.rounds.iterate``. State is one row per node; edges
+    never change, so at 100 TB they'd persist pre-bucketed on src and
+    every round co-locates for free."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .distinct()
     )
-    edges = (
+    edges = rounds.cut(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -1200,19 +1160,17 @@ def supplier_copurchase_pagerank(
         .select(F.col("a.l_suppkey").alias("src"), F.col("b.l_suppkey").alias("dst"))
         .distinct()
     )
-    cut = _lineage_cutter(spark, checkpoint_dir)
-    edges = cut(edges)
     # outdeg is consumed twice per round (contrib join + dangling
     # anti-join) plus once at the end: materialize the tiny per-src
     # count table once instead of re-aggregating the edge table 7×
     # (r9 verdict item 3 — measured ~0.5-0.7 s per re-aggregation at
     # sf0.1; at scale this is the degree table every PageRank system
     # materializes next to its edge list).
-    outdeg = cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    outdeg = rounds.cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     nodes = load_table(spark, sf_dir, "supplier").select("s_suppkey")
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    rank = nodes.withColumn("rank_micro", F.lit(_PR_SCALE).cast("bigint"))
-    for _it in range(_PR_ITERS):
+
+    def power_step(rank: DataFrame, _rnd: int, _obs: Observation) -> DataFrame:
         contrib = (
             edges.join(rank, edges.src == rank.s_suppkey)
             .join(outdeg, "src")
@@ -1226,7 +1184,7 @@ def supplier_copurchase_pagerank(
         dang = rank.join(outdeg, rank.s_suppkey == outdeg.src, "left_anti").agg(
             F.coalesce(F.sum("rank_micro"), F.lit(0)).cast("bigint").alias("dang_sum")
         )
-        rank = (
+        return (
             nodes.join(inc, nodes.s_suppkey == inc.dst, "left")
             .crossJoin(F.broadcast(dang))
             .crossJoin(F.broadcast(n_nodes))
@@ -1240,15 +1198,17 @@ def supplier_copurchase_pagerank(
                 ).cast("bigint").alias("rank_micro"),
             )
         )
-        # Lineage cut every SECOND round, not every round: one round of
-        # lineage is a bounded join/agg layer over checkpointed edges,
-        # and Spark's ReusedExchange dedupes the contrib shuffle where
-        # the un-cut rank subtree appears twice (contrib + dangling), so
-        # plan depth stays <= 2 rounds while the per-round serial
-        # checkpoint job halves (A/B: 55 -> 44 jobs, ~4.0 -> ~3.1 s,
-        # ranks bit-identical; OPTIMIZATION_r16.md).
-        if (_it + 1) % 2 == 0:
-            rank = cut(rank)
+
+    # Cut every SECOND round: ReusedExchange dedupes the contrib shuffle
+    # where the uncut rank subtree appears twice (contrib + dangling), so
+    # plan depth stays <= 2 rounds while the serial cut jobs halve (A/B:
+    # 55 -> 44 jobs, ~4.0 -> ~3.1 s, ranks bit-identical; OPTIMIZATION_r16.md).
+    rank = rounds.iterate(
+        nodes.withColumn("rank_micro", F.lit(_PR_SCALE).cast("bigint")),
+        power_step,
+        max_rounds=_PR_ITERS,
+        cut_every=2,
+    )
     indeg = edges.groupBy(F.col("dst").alias("s_suppkey")).agg(
         F.count(F.lit(1)).alias("n_copurchase_edges")
     )
@@ -2596,10 +2556,11 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the undirected edge list — a key-partitioned hash join whose probe
     side only ever holds the newest ring — distincts the neighbors,
     and anti-joins the visited set so every vertex keeps its FIRST
-    (minimum) hop count. ``localCheckpoint`` per round cuts the
-    iterative lineage exactly like the CC loop; the hop bound caps the
-    rounds, and at 100 TB the edge list persists pre-bucketed on ``u``
-    so every round's join is shuffle-free on the edge side.
+    (minimum) hop count. ``operators.rounds.iterate`` runs the hops and
+    cuts only each new ring: the visited set is the union of the cut
+    rings, whose blocks re-read for free, so no round copies it. At
+    100 TB the edge list persists pre-bucketed on ``u`` so every
+    round's join is shuffle-free on the edge side.
 
     The oracle unrolls the three rounds as CTEs (the house style for
     iterative algorithms — see PageRank/BPE): two independent
@@ -2608,29 +2569,26 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select("u", "v").union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    seeds = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_partkey") % _BFS_SEED_MOD == 7)
-        .select(F.col("p_partkey").alias("part"))
-    )
-    known = seeds.withColumn("hops", F.lit(0).cast("bigint")).localCheckpoint()
-    frontier = seeds
-    for hop in range(1, _BFS_MAX_HOPS + 1):
+    rings: list[DataFrame] = []
+
+    def expand(ring: DataFrame, hop: int, _obs: Observation) -> DataFrame:
+        rings.append(ring)  # the last cut ring: frontier, and visited with the rest
         nbrs = (
-            frontier.join(und, frontier.part == und.u, "inner")
+            ring.join(und, ring.part == und.u, "inner")
             .select(F.col("v").alias("part"))
             .distinct()
         )
-        new = (
-            nbrs.join(known, "part", "left_anti")
-            .withColumn("hops", F.lit(hop).cast("bigint"))
-            .localCheckpoint()
-        )
-        # known is a UNION of already-checkpointed rings — re-reading
-        # those blocks is free, so checkpointing the union again was a
-        # redundant copy of the whole visited set every round.
-        known = known.unionByName(new)
-        frontier = new.select("part")
+        return nbrs.join(
+            reduce(DataFrame.unionByName, rings), "part", "left_anti"
+        ).withColumn("hops", F.lit(hop).cast("bigint"))
+
+    seed = rounds.cut(
+        load_table(spark, sf_dir, "part")
+        .where(F.col("p_partkey") % _BFS_SEED_MOD == 7)
+        .select(F.col("p_partkey").alias("part"), F.lit(0).cast("bigint").alias("hops"))
+    )
+    last = rounds.iterate(seed, expand, max_rounds=_BFS_MAX_HOPS)
+    known = reduce(DataFrame.unionByName, rings + [last])
     return known.select(F.col("part").alias("p_partkey"), "hops")
 
 
@@ -2840,50 +2798,40 @@ def _k_core(eu: DataFrame, k: int, max_peels: int) -> DataFrame:
     within the surviving subgraph falls below ``k`` until fixpoint (or
     ``max_peels`` rounds — the oracle's unroll depth, so both engines
     compute the identical bounded-peel semantics even unconverged;
-    peeling is idempotent at fixpoint, so an early break equals running
+    peeling is idempotent at fixpoint, so an early stop equals running
     all rounds). Returns the surviving vertices with their in-core
     degree.
 
     Distributed shape per round: two vertex-keyed SEMI joins restrict
     the edge list to the surviving subgraph (the edge table never
     rewrites — only the shrinking vertex set reshuffles), one map-side-
-    combined degree aggregate, one filter. ``localCheckpoint`` cuts the
-    iterative lineage each round (the CC/PageRank discipline); the
-    monotone-shrink invariant means a COUNT equality is a sound
-    fixpoint test (peels only ever remove vertices), and the per-round
-    count action is bounded control-plane. At 100 TB the edge list
-    persists bucketed by ``u`` so the probe side of both semi joins
-    stays shuffle-free; rounds are O(peel depth), which degree-skewed
-    real graphs keep small for low k."""
-    # Vertex-count probes ride the per-round materialization via
-    # observe() instead of separate count() actions — one job per peel,
-    # not two (the CC-loop idiom; A/B in OPTIMIZATION_r16.md).
-    obs0 = Observation()
-    alive = (
-        eu.select("u")
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    n = int(obs0.get["n"])
-    for _ in range(max_peels):
+    combined degree aggregate, one filter, run by
+    ``operators.rounds.iterate``. A round that peels no vertex of
+    degree in (0, k) is the fixpoint: a vertex that left the aggregate
+    had no in-core edge, so losing it changes no degree. At 100 TB the
+    edge list persists bucketed by ``u`` so the probe side of both semi
+    joins stays shuffle-free; rounds are O(peel depth), which
+    degree-skewed real graphs keep small for low k."""
+
+    def peel(alive: DataFrame, _rnd: int, obs: Observation) -> DataFrame:
         sub = eu.join(alive, "u", "semi").join(
             alive.select(F.col("u").alias("v")), "v", "semi"
         )
-        obs = Observation()
-        survivors = (
+        return (
             sub.groupBy("u")
             .agg(F.count(F.lit(1)).alias("deg"))
+            .observe(obs, F.count(F.when(F.col("deg") < k, 1)).alias("peeled"))
             .where(F.col("deg") >= k)
             .select("u")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
         )
-        m = int(obs.get["n"])
-        alive = survivors
-        if m == n:
-            break
-        n = m
+
+    alive = rounds.iterate(
+        rounds.cut(eu.select("u").distinct()),
+        peel,
+        max_rounds=max_peels,
+        converged=lambda probe: probe["peeled"] == 0,
+        on_bound="stop",
+    )
     core_edges = eu.join(alive, "u", "semi").join(
         alive.select(F.col("u").alias("v")), "v", "semi"
     )
@@ -3138,9 +3086,7 @@ def _fx_sql() -> str:
 _LPA_ITERS = 3
 
 
-def label_propagation_communities(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous LABEL PROPAGATION over the part co-purchase graph —
     community detection, the graph primitive the family still lacked
     (next to [[dedup_clusters]] = connectivity,
@@ -3161,33 +3107,27 @@ def label_propagation_communities(
     Scale shape per round: one equi-join of the undirected edge list
     (the memoized ``_affinity_edges`` parquet — shared with the
     triangle/jaccard consumers) against the label table on the
-    neighbor key, one (node, label) hash agg, one per-node argmax agg;
-    ``localCheckpoint`` cuts lineage per round (the dedup_clusters
-    discipline). Labels are one row per node; edges never change."""
+    neighbor key, one (node, label) hash agg, one per-node argmax agg,
+    run by ``operators.rounds.iterate``. Labels are one row per node;
+    edges never change."""
     edges = _affinity_edges(spark, sf_dir)
     und = edges.select("u", "v").unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    cut = _lineage_cutter(spark, checkpoint_dir)
-    labels = cut(
-        und.select(F.col("u").alias("node")).distinct().withColumn(
-            "label", F.col("node")
-        )
-    )
-    for _ in range(_LPA_ITERS):
-        msgs = und.join(labels, und.v == labels.node).select(
-            F.col("u").alias("node"), "label"
-        )
-        votes = msgs.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
+
+    def vote(labels: DataFrame, _rnd: int, _obs: Observation) -> DataFrame:
         # Every node in the edge list has ≥1 neighbor, so the argmax
         # aggregate covers every node — no left-join fallback needed.
-        labels = cut(
-            votes.groupBy("node").agg(
-                F.expr("min_by(label, struct(-cnt, label))").alias("label")
-            )
+        return (
+            und.join(labels, und.v == labels.node)
+            .groupBy(F.col("u").alias("node"), "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .groupBy("node")
+            .agg(F.expr("min_by(label, struct(-cnt, label))").alias("label"))
         )
+
+    seed = rounds.cut(und.select(F.col("u").alias("node"), F.col("u").alias("label")).distinct())
+    labels = rounds.iterate(seed, vote, max_rounds=_LPA_ITERS)
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("community_size")
     )

@@ -24,13 +24,14 @@ import pandas as pd
 
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import memo
 from ..catalog import load_table
 from ..functions import cosine_similarity, local_df, plan_barrier
+from ..operators import rounds
 
 _N_QUERIES = 5  # vec_id < 5 are the query vectors
 _TOP_K = 10
@@ -3211,11 +3212,11 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the IVF/PQ candidate generator, the MMR contract is unchanged);
     everything after is bounded by queries × _MMR_CAND rows: pairwise
     candidate sims are |Q|·C² rows, each greedy step is a keyed join +
-    argmax on those bounded frames, parallel across queries, with
-    localCheckpoint materializing the shortlist/pairs/selection frames
-    (the pagerank-loop discipline — a fence alone re-runs the
-    corpus-wide scoring per greedy reference). Nothing iterates over
-    the corpus, and no per-step work reaches the driver."""
+    argmax on those bounded frames, parallel across queries, run by
+    ``operators.rounds.iterate``, with the shortlist and pairs frames
+    materialized once (a fence alone re-runs the corpus-wide scoring
+    per greedy reference). Nothing iterates over the corpus, and no
+    per-step work reaches the driver."""
     emb = load_table(spark, sf_dir, "embeddings")
     vec = _as_double("embedding")
     zero = F.lit(0).cast("bigint")
@@ -3252,12 +3253,12 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_rel = Window.partitionBy("query_id").orderBy(
         F.col("rel").desc(), F.col("vec_id").asc()
     )
-    # localCheckpoint, not plan_barrier: the greedy loop below references
-    # the shortlist ~10 times (pairs twice, anti-join + rescore per
-    # step) — a fence alone would re-run the corpus-wide scoring window
-    # per reference (measured 20.5 s at sf0.1; ~3 s materialized). The
-    # frame is |Q|·C rows — the iterative-loop discipline of pagerank.
-    cand = (
+    # A cut, not plan_barrier: the greedy loop below references the
+    # shortlist ~10 times (pairs twice, anti-join + rescore per step) —
+    # a fence alone would re-run the corpus-wide scoring window per
+    # reference (measured 20.5 s at sf0.1; ~3 s materialized). The
+    # frame is |Q|·C rows.
+    cand = rounds.cut(
         quant.join(
             F.broadcast(queries), F.col("vec_id") != F.col("query_id")
         )
@@ -3270,7 +3271,6 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w_rel))
         .where(F.col("rn") <= _MMR_CAND)
         .select("query_id", "vec_id", "rel", "q")
-        .localCheckpoint()
     )
     a = cand.select(
         "query_id", F.col("vec_id").alias("va"), F.col("q").alias("qa")
@@ -3278,7 +3278,7 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = cand.select(
         "query_id", F.col("vec_id").alias("vb"), F.col("q").alias("qb")
     )
-    pairs = (
+    pairs = rounds.cut(  # |Q|·C² rows, read once per greedy step
         a.join(b, "query_id")
         .where(F.col("va") != F.col("vb"))
         .select(
@@ -3287,9 +3287,8 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vb",
             idot(F.col("qa"), F.col("qb")).alias("sim"),
         )
-        .localCheckpoint()  # |Q|·C² rows, read once per greedy step
     )
-    sel = (
+    first = rounds.cut(
         cand.withColumn("rn", F.row_number().over(w_rel))
         .where(F.col("rn") == 1)
         .select(
@@ -3299,9 +3298,9 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("bigint").alias("mmr_rank"),
             (F.lit(_MMR_LAM) * F.col("rel")).cast("bigint").alias("mmr_score"),
         )
-        .localCheckpoint()
     )
-    for step in range(2, _MMR_K + 1):
+
+    def pick_next(sel: DataFrame, rnd: int, _obs: Observation) -> DataFrame:
         maxsim = (
             pairs.join(
                 sel.select("query_id", F.col("vec_id").alias("vb")),
@@ -3339,11 +3338,13 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "vec_id",
                 "rel",
-                F.lit(step).cast("bigint").alias("mmr_rank"),
+                F.lit(rnd + 1).cast("bigint").alias("mmr_rank"),
                 "mmr_score",
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint()
+        return sel.unionByName(pick)
+
+    sel = rounds.iterate(first, pick_next, max_rounds=_MMR_K - 1)
     return sel.orderBy("query_id", "mmr_rank")
 
 

@@ -13,13 +13,14 @@ partial aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
+from pyspark.sql import Column, DataFrame, Observation, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import memo
 from ..catalog import load_table
 from ..functions import local_df, plan_barrier
+from ..operators import rounds
 
 # Whitespace tokenizer shared by every operator (and mirrored in each
 # oracle): trim, split on runs of whitespace.
@@ -1814,26 +1815,26 @@ def bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane); the merge itself is a single JVM-side ``replace`` of
     ``(a)(b)``→``(ab)`` — the paren delimiters make left-to-right
     replace exactly BPE's greedy non-overlapping merge, with no UDF
-    and no per-symbol lambda. localCheckpoint per round cuts the
-    lineage, PageRank-loop discipline (words restricted to [a-z]+ so
-    delimiters can never occur inside a symbol)."""
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(_tokens()).alias("w"))
+    and no per-symbol lambda (words restricted to [a-z]+ so delimiters
+    can never occur inside a symbol). ``operators.rounds.iterate`` runs
+    the rounds and stops once no word has two symbols left."""
+    seed = rounds.cut(
+        load_table(spark, sf_dir, "documents")
+        .select(F.explode(_tokens()).alias("w"))
         .where(F.col("w").rlike("^[a-z]+$") & (F.length("w") >= 2))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.expr(
+                "concat('(', array_join(transform(sequence(1, length(w)), "
+                "i -> substring(w, i, 1)), ')('), ')')"
+            ).alias("s"),
+            "n",
+        )
     )
-    state = vocab.select(
-        F.expr(
-            "concat('(', array_join(transform(sequence(1, length(w)), "
-            "i -> substring(w, i, 1)), ')('), ')')"
-        ).alias("s"),
-        "n",
-    ).localCheckpoint(eager=True)
-
     merges = []
-    for rnd in range(1, _BPE_MERGE_ROUNDS + 1):
+
+    def merge(state: DataFrame, rnd: int, obs: Observation) -> DataFrame:
         pairs = (
             state.select(
                 F.split(
@@ -1855,13 +1856,21 @@ def bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("n").alias("cnt"))
         )
         top = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1).collect()
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], top[0]["cnt"]
-        merges.append((rnd, a, b, a + b, int(cnt)))
-        state = state.withColumn(
-            "s", F.expr(f"replace(s, '({a})({b})', '({a}{b})')")
-        ).localCheckpoint(eager=True)
+        if top:  # empty only for an empty vocabulary
+            a, b, cnt = top[0]
+            merges.append((rnd, a, b, a + b, int(cnt)))
+            state = state.withColumn("s", F.expr(f"replace(s, '({a})({b})', '({a}{b})')"))
+        return state.observe(
+            obs, F.count(F.when(F.col("s").contains(")("), 1)).alias("mergeable")
+        )
+
+    rounds.iterate(
+        seed,
+        merge,
+        max_rounds=_BPE_MERGE_ROUNDS,
+        converged=lambda probe: probe["mergeable"] == 0,
+        on_bound="stop",
+    )
     return local_df(
         spark, merges, "round int, lhs string, rhs string, merged string, n_occurrences bigint"
     )

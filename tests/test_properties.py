@@ -9,6 +9,7 @@ fixture data:
   doc's start offset crosses into the wrong shard
 - the one connected-components kernel ≡ union-find, and the one
   integer-Lloyd trainer ≡ a numpy reference Lloyd
+- ``operators.rounds.iterate`` honours its bound, cut cadence and null probes
 
 Hypothesis drives row multisets (with duplicates and skew) through the
 same code paths the fixture tests use; Spark jobs per example are kept
@@ -31,6 +32,7 @@ from azure_sales_etl_pipeline_spark.operators.maintenance import (
     _cc_min_label,
     merge_aggregate,
 )
+from azure_sales_etl_pipeline_spark.operators.rounds import iterate
 from azure_sales_etl_pipeline_spark.plans.scale import salted_join
 from azure_sales_etl_pipeline_spark.plans.similarity import (
     _IVF_ITERS,
@@ -41,6 +43,7 @@ from azure_sales_etl_pipeline_spark.plans.similarity import (
     _PQ_SUBDIM,
     _train_codebooks,
 )
+from tests.conftest import SF_DIR
 
 _slow = settings(
     max_examples=6,
@@ -447,6 +450,141 @@ def test_dedup_clusters_job_count_pins_exchange_reuse(spark, tmp_path):
     jaccard_pairs_raw(spark, str(tmp_path))  # the memoized pair table is not CC work
 
     assert _jobs_in_group(spark, lambda: _compute_dedup_clusters(spark, str(tmp_path))) == 27
+
+
+# Jobs per cold run (memos evicted, noop write) at sf0.001 under this
+# session's 4 shuffle partitions: the counts before the round loops
+# moved onto ``operators.rounds.iterate``. A loop consumer may only
+# get cheaper.
+_LOOP_CONSUMER_JOBS = {
+    "dedup_clusters": 35,
+    "cluster_labels_two_batch": 64,
+    "golden_part_records": 27,
+    "supplier_copurchase_pagerank": 45,
+    "label_propagation_communities": 24,
+    "k_core_vertices": 16,
+    "copurchase_bfs_hops": 23,
+    "bpe_merge_steps": 19,
+    "mmr_rerank_topk": 52,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_CONSUMER_JOBS))
+def test_loop_consumer_job_count(spark, name):
+    from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.plans import registry
+
+    fn = registry()[0][name]
+    memo.evict_all()
+    jobs = _jobs_in_group(
+        spark, lambda: fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    )
+    assert jobs <= _LOOP_CONSUMER_JOBS[name], f"{name}: {jobs} jobs"
+
+
+# ---------------------------------------------------------------------------
+# ``operators.rounds.iterate`` on a toy counter:
+# round r holds x = r, and the probe reads "x reached the target".
+# ---------------------------------------------------------------------------
+
+
+def _count_to(target):
+    def count_up(state, _rnd, obs):
+        return state.select((F.col("x") + 1).alias("x")).observe(
+            obs, F.count(F.when(F.col("x") >= target, 1)).alias("done")
+        )
+
+    return count_up
+
+
+@_slow
+@given(
+    target=st.integers(1, 6),
+    max_rounds=st.integers(1, 5),
+    cut_every=st.sampled_from([1, 2]),
+    on_bound=st.sampled_from(["raise", "stop"]),
+)
+@example(target=6, max_rounds=5, cut_every=1, on_bound="raise")
+@example(target=6, max_rounds=5, cut_every=1, on_bound="stop")
+@example(target=3, max_rounds=5, cut_every=2, on_bound="raise")
+@example(target=6, max_rounds=5, cut_every=2, on_bound="stop")
+def test_iterate_bound_and_cut_cadence(spark, target, max_rounds, cut_every, on_bound):
+    """Only every ``cut_every``-th round materializes (one job each) and
+    reads its probe; the loop stops at the first such round that
+    converged. Past the bound, "raise" raises and "stop" returns the
+    bound-round state."""
+    cut_rounds = [r for r in range(1, max_rounds + 1) if r % cut_every == 0]
+    settled = next((r for r in cut_rounds if r >= target), None)
+
+    def run():
+        seed = spark.range(1).select(F.lit(0).cast("bigint").alias("x"))
+        return iterate(
+            seed,
+            _count_to(target),
+            max_rounds=max_rounds,
+            converged=lambda probe: probe["done"] > 0,
+            on_bound=on_bound,
+            cut_every=cut_every,
+        )
+
+    if settled is None and on_bound == "raise":
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run()
+        return
+    out = []
+    jobs = _jobs_in_group(spark, lambda: out.append(run()))
+    last = settled or max_rounds
+    assert out[0].first()["x"] == last
+    assert jobs == sum(r <= last for r in cut_rounds)
+
+
+def test_iterate_raises_on_null_probe(spark):
+    """``sum`` over zero rows is null; ``iterate`` must not read it as
+    converged (a ``None or 0`` would)."""
+
+    def empty(state, _rnd, obs):
+        return state.where(F.col("x") < 0).observe(obs, F.sum("x").alias("changed"))
+
+    seed = spark.range(1).select(F.lit(0).cast("bigint").alias("x"))
+    with pytest.raises(RuntimeError, match="null probe"):
+        iterate(seed, empty, max_rounds=3, converged=lambda probe: not probe["changed"])
+
+
+def test_round_loops_go_through_iterate():
+    """The lineage-cut policy lives in ``operators.rounds`` alone: no
+    ``for … in range(…)`` or ``while`` loop elsewhere in the package
+    calls ``.localCheckpoint(`` or ``.checkpoint(``, and no function
+    takes a cut policy as a ``cut`` or ``checkpoint_dir`` parameter."""
+    import ast
+    from pathlib import Path
+
+    import azure_sales_etl_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                params = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+                if params & {"cut", "checkpoint_dir"}:
+                    offenders.append(f"{rel}:{node.lineno} parameter")
+            range_loop = (
+                isinstance(node, ast.For)
+                and isinstance(node.iter, ast.Call)
+                and isinstance(node.iter.func, ast.Name)
+                and node.iter.func.id == "range"
+            )
+            if (range_loop or isinstance(node, ast.While)) and rel != "operators/rounds.py":
+                if any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("localCheckpoint", "checkpoint")
+                    for n in ast.walk(node)
+                ):
+                    offenders.append(f"{rel}:{node.lineno} loop")
+    assert offenders == []
 
 
 # ---------------------------------------------------------------------------

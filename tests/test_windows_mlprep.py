@@ -429,36 +429,47 @@ def test_span_corruption_masks_deterministic_and_budgeted(spark):
     assert all(r["span_start"] + r["span_len"] <= docs[r["doc_id"]] for r in rows)
 
 
-def test_iterative_ops_reliable_checkpoint_knob(spark, tmp_path):
-    """checkpoint_dir switches the iterative loops from localCheckpoint
-    (fast, dies with an executor) to reliable checkpoint() into a
-    shared directory — same results, state actually written under the
-    dir (the SCALE.md knob for preemptible fleets)."""
-    from azure_sales_etl_pipeline_spark.plans.mlprep import (
-        dedup_clusters,
-        supplier_copurchase_pagerank,
-    )
+@pytest.fixture
+def session_checkpoint_dir(spark, tmp_path):
+    """A session checkpoint dir — what ``spark.checkpoint.dir`` sets at
+    startup — unset again on teardown."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield tmp_path / "ckpt"
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
 
-    ckpt = tmp_path / "reliable_ckpt"
-    got = sorted(
-        map(tuple, dedup_clusters(spark, SF_DIR, checkpoint_dir=str(ckpt)).collect())
-    )
-    want = sorted(map(tuple, dedup_clusters(spark, SF_DIR).collect()))
-    assert got == want
-    assert any(ckpt.rglob("*")), "no reliable checkpoint state written"
 
-    # Both iterative loops route through the ONE _lineage_cutter helper,
-    # and a lineage cut is an identity on data — the dedup_clusters
-    # equivalence above already proves checkpoint() == localCheckpoint()
-    # on values. For pagerank, pin only the WIRING: the knob must reach
-    # the cutter (fresh dir gains state) and the loop must still
-    # converge to a full result set.
-    ckpt_pr = tmp_path / "reliable_ckpt_pr"
-    got_pr = supplier_copurchase_pagerank(
-        spark, SF_DIR, checkpoint_dir=str(ckpt_pr)
-    ).collect()
-    assert len(got_pr) > 0
-    assert any(ckpt_pr.rglob("*")), "pagerank knob did not reach the cutter"
+_ROUND_LOOPS = (
+    "dedup_clusters",
+    "k_core_vertices",
+    "supplier_copurchase_pagerank",
+    "label_propagation_communities",
+    "copurchase_bfs_hops",
+    "bpe_merge_steps",
+    "mmr_rerank_topk",
+)
+
+
+def test_iterative_ops_reliable_checkpoint_knob(spark, request):
+    """With a session checkpoint dir set, every round loop cuts its
+    lineage with reliable checkpoint() into that dir (rounds survive
+    executor loss on a preemptible fleet) and returns exactly the
+    values of the default localCheckpoint run."""
+    from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.plans import registry
+
+    fns = {name: registry()[0][name] for name in _ROUND_LOOPS}
+
+    def run(fn):
+        memo.evict_all()  # a warm cluster-table memo would skip the CC loop
+        return sorted(map(tuple, fn(spark, SF_DIR).collect()))
+
+    want = {name: run(fn) for name, fn in fns.items()}
+    ckpt = request.getfixturevalue("session_checkpoint_dir")
+    for name, fn in fns.items():
+        before = set(ckpt.rglob("*"))
+        assert run(fn) == want[name], name
+        assert set(ckpt.rglob("*")) - before, f"{name} wrote no reliable checkpoint"
 
 
 def test_curation_funnel_single_scan(spark):
