@@ -44,9 +44,10 @@ def table_path(sf_dir: str, name: str) -> str:
 #: only — every query still scans and computes from the parquet data on
 #: every invocation; the testdata tables this catalog fronts are
 #: immutable, and test corpora live in per-test tmp dirs (unique
-#: paths). Mutable engine-managed tables (medallion layers, marts) go
-#: through ``operators.writer.read_table``, which does NOT use this
-#: cache.
+#: paths). Mutable engine-managed tables (medallion layers, marts) do
+#: not use this cache: ``operators.writer.read_table`` pins their
+#: schema from the version pointer each commit writes, so they skip
+#: inference too and still see every schema change.
 _SCHEMA_CACHE: dict[str, "object"] = {}
 
 

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table_exists
 from ..functions import hash_diff, utcnow_naive
-from .writer import overwrite_table, read_table
+from .writer import overwrite_table, read_table, table_schema
 
 SCD_COLS = ("hash", "is_current", "effective_date", "end_date")
 BUCKET_COL = "__bucket"
@@ -195,7 +195,7 @@ class SCD2Table:
             )
         tracked_fields = [
             f
-            for f in self.history().schema.fields
+            for f in table_schema(self.spark, self.path).fields
             if f.name != self.key and f.name not in SCD_COLS and f.name != BUCKET_COL
         ]
         missing = (

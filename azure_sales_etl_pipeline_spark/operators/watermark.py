@@ -5,8 +5,10 @@ The reference keeps one watermark per (layer, table): ADF stores it in
 in a one-line text file (2_Bronze_to_Silver.py:44-67,143-147). The
 engine uses a single-row parquet table per key, committed through
 ``writer.overwrite_table`` — atomic to replace, schema'd, and readable
-by any engine. Missing state defaults to 1900-01-01, the reference's
-full-history sentinel (2_Bronze_to_Silver.py:44; adf/pipeline.json:129).
+by any engine. The value also rides the commit's metadata, so ``get``
+reads it from the version pointer without a Spark job. Missing state
+defaults to 1900-01-01, the reference's full-history sentinel
+(2_Bronze_to_Silver.py:44; adf/pipeline.json:129).
 
 Commit ordering is the reference's at-least-once contract: the caller
 advances the watermark only AFTER its write succeeds, so a crash replays
@@ -24,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table_exists
 from ..functions import local_df
-from .writer import overwrite_table, read_table
+from .writer import overwrite_table, read_commit_meta, read_table
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 DEFAULT_WATERMARK = dt.datetime(1900, 1, 1)
@@ -79,6 +81,10 @@ class WatermarkStore(_WatermarkOps):
 
     def get(self, table: str) -> dt.datetime:
         p = str(self._path(table))
+        meta = read_commit_meta(p)
+        if meta and "watermark" in meta:
+            return dt.datetime.fromisoformat(meta["watermark"])
+        # Legacy tables: committed without the value in the metadata.
         if not table_exists(p):
             return DEFAULT_WATERMARK
         row = read_table(self.spark, p).first()
@@ -93,7 +99,9 @@ class WatermarkStore(_WatermarkOps):
         the reference uses a SQL table, adf/pipeline.json:186-272 — the
         right call at cluster scale)."""
         df = local_df(self.spark, [(table, value)], _SCHEMA)
-        overwrite_table(df.coalesce(1), str(self._path(table)))
+        overwrite_table(
+            df.coalesce(1), str(self._path(table)), commit_meta={"watermark": value.isoformat()}
+        )
 
 
 class JdbcWatermarkStore(_WatermarkOps):

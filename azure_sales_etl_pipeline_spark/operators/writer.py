@@ -1,20 +1,28 @@
 """Parquet sinks (SURVEY.md S5-S8): one whole-table commit protocol
-plus the mergeSchema shim.
+plus the schema-evolving append.
 
 The protocol is ``write_snapshot`` (``overwrite_table`` is a snapshot
 write that keeps no history): write an immutable ``v=N`` directory,
-flip the ``_current_version.json`` pointer (which also carries the
-commit metadata) with ``os.replace``, then prune. A crash at any step
-leaves the old version or the new one, never a torn table — closing the
-reference's two-commit window (SURVEY.md §3). Readers resolve the
-pointer through ``_table_dir``, falling back to the legacy flat layout
-(files at the path itself), which converts on its next overwrite. Read
-engine tables through ``read_table``: a raw ``spark.read.parquet(path)``
-sees ``v=`` as a partition column. Single-writer contract: two
-concurrent writers can both stage v=N+1 and the second flip wins; the
-orchestrator, like the reference's ADF trigger, runs one writer per
-table. ``os.replace`` is atomic on local POSIX only: HDFS needs the
-Hadoop FileSystem rename, object stores a log-based table format.
+flip the ``_current_version.json`` pointer with ``os.replace``, then
+prune. The pointer carries the version, the commit metadata and the
+table's Spark schema, so one rename commits all three. A crash at any
+step leaves the old version or the new one, never a torn table —
+closing the reference's two-commit window (SURVEY.md §3). Readers
+resolve the pointer through ``_table_dir``, falling back to the legacy
+flat layout (files at the path itself), which converts on its next
+overwrite. Read engine tables through ``read_table``: a raw
+``spark.read.parquet(path)`` sees ``v=`` as a partition column.
+Single-writer contract: two concurrent writers can both stage v=N+1
+and the second flip wins; the orchestrator, like the reference's ADF
+trigger, runs one writer per table. ``os.replace`` is atomic on local
+POSIX only: HDFS needs the Hadoop FileSystem rename, object stores a
+log-based table format.
+
+Schema is served from the commit, the way a metastore serves it:
+``read_table`` hands the pointer's schema to the parquet reader, which
+then infers nothing and fires no Spark job. Footer inference
+(``mergeSchema`` on read, one job per read) is the fallback for tables
+whose pointer predates the schema field and for the legacy flat layout.
 
 The non-atomic family: ``write_partitioned`` (and the bucketed SCD2
 upsert and ``compact_partitioned``) replaces Hive partitions in place by
@@ -23,11 +31,12 @@ there can leave some partitions advanced; the watermark replay re-runs
 the batch and SCD2's no-change detection makes it a no-op.
 
 Schema evolution: the reference appends Delta with ``mergeSchema=true``
-(1_Landing_to_Bronze.py:59-62). Plain parquet appends don't evolve the
-table schema, so the engine unions-by-name against the existing schema
-before appending: new columns arrive null-backfilled on old rows at
-READ time (mergeSchema on read), old columns missing from the batch are
-null-filled at write.
+(1_Landing_to_Bronze.py:59-62). ``append_evolve`` owns an evolving
+table's schema instead: it unions the batch by name against the
+committed schema, null-fills table columns the batch lacks, refuses a
+column whose type changed, and re-commits the pointer's schema as the
+existing columns followed by new ones in arrival order. Old files
+backfill the new columns with nulls at read time.
 """
 
 from __future__ import annotations
@@ -40,6 +49,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _VERSION_PTR = "_current_version.json"
 #: Commit-metadata side file of the legacy flat layout, read for tables
@@ -83,11 +93,6 @@ def _table_dir(path: str | Path) -> Path | None:
     return None
 
 
-def create_table(df: DataFrame, path: str) -> None:
-    """First materialization (S6): fail if the table already exists."""
-    df.write.mode("errorifexists").parquet(path)
-
-
 def overwrite_table(
     df: DataFrame,
     path: str,
@@ -120,31 +125,74 @@ def read_commit_meta(path: str) -> dict | None:
     return _pointer(path)["meta"]
 
 
+def _pinned_schema(path: str | Path) -> StructType | None:
+    ptr = _pointer(path)
+    return None if ptr is None or "schema" not in ptr else StructType.fromJson(ptr["schema"])
+
+
+def _flip(p: Path, ptr: dict) -> None:
+    """Commit ``ptr`` as the table's pointer: write a temp file, then
+    ``os.replace`` it over the old pointer."""
+    tmp = p / f".ptr_tmp_{ptr['version']}"
+    tmp.write_text(json.dumps(ptr))
+    os.replace(tmp, p / _VERSION_PTR)
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The committed schema of the table at ``path``: the pointer's
+    (no Spark job), else inferred from the file footers."""
+    schema = _pinned_schema(path)
+    return schema if schema is not None else read_table(spark, path).schema
+
+
 def append_evolve(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Append with schema evolution (S5): union-by-name against the
-    existing table schema. New batch columns are appended to the table
-    schema (old files backfill null via mergeSchema-on-read); table
-    columns missing from the batch are written as typed nulls. The files
-    land in the committed version's directory."""
+    table's committed schema. The first write to a fresh path is a
+    ``write_snapshot`` commit. New batch columns join the schema after
+    the existing ones, in arrival order (old files read them as null);
+    table columns missing from the batch are written as typed nulls. A
+    batch column whose type differs from the table's raises ValueError
+    before anything is written.
+
+    The files land in the committed version's directory. On a pointer
+    table the evolved schema is committed before the files are written,
+    so no appended row is ever visible without its columns."""
     d = _table_dir(path)
     if d is None:
-        create_table(df, path)
+        write_snapshot(df, path, retain=1)
         return
-    existing = read_table(spark, path).schema
-    batch_cols = {f.name for f in df.schema.fields}
+    existing = table_schema(spark, path)
+    have = {f.name: f.dataType for f in existing.fields}
+    # simpleString ignores nullability, which parquet reads drop anyway.
+    clash = [
+        f"{f.name} ({have[f.name].simpleString()} in the table, "
+        f"{f.dataType.simpleString()} in the batch)"
+        for f in df.schema.fields
+        if f.name in have and f.dataType.simpleString() != have[f.name].simpleString()
+    ]
+    if clash:
+        raise ValueError(f"append to {path} changes column types: {', '.join(clash)}")
     aligned = df
     for field in existing.fields:
-        if field.name not in batch_cols:
+        if field.name not in df.columns:
             aligned = aligned.withColumn(field.name, F.lit(None).cast(field.dataType))
+    ptr = _pointer(path)
+    if ptr is not None:
+        evolved = StructType(existing.fields + [f for f in df.schema.fields if f.name not in have])
+        if ptr.get("schema") != evolved.jsonValue():
+            _flip(Path(path), {**ptr, "schema": evolved.jsonValue()})
     aligned.write.mode("append").parquet(str(d))
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read an engine-managed table's committed version with schema
-    merge across appends."""
+    """Read an engine-managed table's committed version: with the
+    pointer's schema, else with schema merge across the files."""
     d = _table_dir(path)
     if d is None:
         raise FileNotFoundError(f"no committed table at {path}")
+    schema = _pinned_schema(path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(str(d))
     reader = spark.read.option("mergeSchema", "true")
     stages = [] if d != Path(path) else [c for c in d.iterdir() if c.name.startswith("v=")]
     if not stages:
@@ -259,7 +307,8 @@ def write_snapshot(
     of a Delta/Iceberg log and the engine's one whole-table commit:
     write an IMMUTABLE ``v=N`` directory (no reader can resolve it yet),
     evaluate ``commit_meta`` (see ``overwrite_table``), flip the pointer
-    that carries it via write-then-``os.replace``, then prune versions at
+    that carries it and ``df``'s schema via write-then-``os.replace``
+    (``df.schema`` is analysis only: no job), then prune versions at
     or below N − ``retain``, legacy flat files and pointer temp files.
     Readers of version N−1 keep a consistent view while N lands, because
     snapshot files are never mutated; old versions stay readable
@@ -271,9 +320,7 @@ def write_snapshot(
     new = 1 if cur is None else cur + 1
     df.write.mode("overwrite").parquet(str(p / f"v={new}"))
     meta = commit_meta() if callable(commit_meta) else commit_meta
-    tmp = p / f".ptr_tmp_{new}"
-    tmp.write_text(json.dumps({"version": new, "meta": meta}))
-    os.replace(tmp, p / _VERSION_PTR)
+    _flip(p, {"version": new, "meta": meta, "schema": df.schema.jsonValue()})
     # max(1, retain): the just-committed version must never prune
     # itself (retain<=0 would delete v=new and leave the pointer
     # dangling) — same guard vacuum_snapshots applies. Stages above

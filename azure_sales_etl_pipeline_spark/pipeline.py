@@ -31,7 +31,7 @@ from .catalog import LayerCatalog, table_exists
 from .functions import local_df, utcnow_naive
 from .operators.scd2 import SCD2Table
 from .operators.watermark import WatermarkStore
-from .operators.writer import overwrite_table, read_table
+from .operators.writer import append_evolve, overwrite_table, read_table
 from .sources.ingest import CsvIngestor
 
 #: Persisted run-log row shape (the reference DESCRIBES a logging table,
@@ -194,9 +194,8 @@ class MedallionPipeline:
                 )
         # One tiny control-plane file per run, appended — the log IS a
         # queryable engine table (vs the reference's described-only one).
-        local_df(self.spark, rows, RUN_LOG_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.log_path)
+        log = local_df(self.spark, rows, RUN_LOG_SCHEMA).coalesce(1)
+        append_evolve(self.spark, log, self.log_path)
 
     # -- driver -------------------------------------------------------------
 

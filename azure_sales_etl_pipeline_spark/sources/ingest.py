@@ -11,8 +11,8 @@ Lifecycle per table (faithful to the reference):
   the engine-added audit columns (S2; :41-42) so types never drift.
 - enrich with audit columns: ingestion_timestamp (injectable clock, F1)
   and source_file lineage (F2; :54-55)
-- append with schema evolution (S5 shim in operators.writer; :59-62),
-  create on first write (S6; :65-67)
+- append with schema evolution (S5, ``operators.writer.append_evolve``;
+  :59-62), which also creates the table on first write (S6; :65-67)
 - empty input short-circuits (P12; :49) with df.isEmpty(), not .rdd
 
 Scale: CSV read parallelism is per-file/per-split; the audit columns are
@@ -33,7 +33,7 @@ from pyspark.sql.types import StructType
 
 from ..catalog import table_exists
 from ..functions import utcnow_naive
-from ..operators.writer import append_evolve, read_table
+from ..operators.writer import append_evolve, table_schema
 
 AUDIT_COLS = ("ingestion_timestamp", "source_file")
 
@@ -74,7 +74,7 @@ class CsvIngestor:
         path = self.bronze_path(table)
         if not table_exists(path):
             return None
-        full = read_table(self.spark, path).schema
+        full = table_schema(self.spark, path)
         return StructType([f for f in full.fields if f.name not in AUDIT_COLS])
 
     def ingest(self, table: str, csv_path: str) -> int:

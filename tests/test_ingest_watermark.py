@@ -66,6 +66,23 @@ def test_append_evolve_missing_column_null_filled(spark, tmp_path):
     assert rows[2]["name"] is None
 
 
+def test_append_evolve_refuses_type_change_before_writing(spark, tmp_path):
+    """A batch column whose type differs from the table's is refused
+    before any file or pointer changes: the table reads as before."""
+    from pathlib import Path
+
+    import pytest
+
+    path = str(tmp_path / "t")
+    append_evolve(spark, spark.createDataFrame([(1, "a")], "id bigint, name string"), path)
+    on_disk = {f: f.read_bytes() for f in Path(path).rglob("*") if f.is_file()}
+    with pytest.raises(ValueError, match=r"name \(string in the table, int in the batch\)"):
+        append_evolve(spark, spark.createDataFrame([(2, 7, "x")], "id bigint, name int, new string"),
+                      path)
+    assert {f: f.read_bytes() for f in Path(path).rglob("*") if f.is_file()} == on_disk
+    assert [tuple(r) for r in read_table(spark, path).collect()] == [(1, "a")]
+
+
 def test_discover_skips_underscore(tmp_path):
     (tmp_path / "_checkpoint").mkdir(parents=True)
     (tmp_path / "real").mkdir()

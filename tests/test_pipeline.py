@@ -259,3 +259,22 @@ def test_crash_before_watermark_advance_replays_as_no_change(spark, tmp_path, mo
     assert pipe.bronze_to_silver(cfg) == {"insert": 0, "update": 0, "no_change": 10}
     assert versions() == committed
     assert pipe.watermarks.get(cfg.name) == max(ts for *_, ts in second)
+
+
+def test_legacy_flat_run_log_stays_readable_and_appendable(spark, tmp_path):
+    """A run log written in the flat layout (raw parquet appends, no
+    version pointer) keeps reading and takes the next run's rows."""
+    from pathlib import Path
+
+    from azure_sales_etl_pipeline_spark.functions import local_df
+    from azure_sales_etl_pipeline_spark.pipeline import RUN_LOG_SCHEMA
+
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [],
+                             clock=lambda: dt.datetime(2024, 6, 1))
+    old = [(7, dt.datetime(2024, 5, 1), "__ingest__", True, 3, None, None, None, None)]
+    local_df(spark, old, RUN_LOG_SCHEMA).coalesce(1).write.parquet(pipe.log_path)
+    (tmp_path / "landing").mkdir()
+    pipe.run(str(tmp_path / "landing"))
+    log = sorted((r["run_id"], r["stage"], r["n_insert"]) for r in pipe.run_log().collect())
+    assert log == [(7, "__ingest__", 3), (8, "__ingest__", 0)]
+    assert not (Path(pipe.log_path) / "_current_version.json").exists()

@@ -10,6 +10,8 @@ fixture data:
 - the one connected-components kernel ≡ union-find, and the one
   integer-Lloyd trainer ≡ a numpy reference Lloyd
 - ``operators.rounds.iterate`` honours its bound, cut cadence and null probes
+- an evolving append's pinned schema reads the same rows, types and
+  nullability as footer inference, in ``existing + arrivals`` order
 
 Hypothesis drives row multisets (with duplicates and skew) through the
 same code paths the fixture tests use; Spark jobs per example are kept
@@ -18,6 +20,7 @@ tiny (≤60 rows) so the suite stays fast.
 
 from __future__ import annotations
 
+import datetime as dt
 import uuid
 from decimal import Decimal
 
@@ -651,3 +654,153 @@ def test_train_codebooks_small_corpus_trains_seeds_found(spark, m):
     got = _train_codebooks(_lloyd_frame(spark, ids, vecs), "q", m)
     assert [len(book) for book in got] == [10] * m
     assert got == _ref_lloyd(ids, vecs, m, k, iters)
+
+
+# ---------------------------------------------------------------------------
+# Schema-carrying commits: ``append_evolve`` pins an evolving table's
+# schema in the version pointer, and ``read_table`` serves it without
+# footer inference. The reference is the footer-merging read of the same
+# files.
+# ---------------------------------------------------------------------------
+
+_EVOLVE_TYPES = {
+    "c_bigint": ("bigint", st.integers(-(2**40), 2**40)),
+    "c_string": ("string", st.text(alphabet="ab ,z", max_size=4)),
+    "c_decimal": (
+        "decimal(12,2)",
+        st.decimals(min_value=-(10**6), max_value=10**6, places=2),
+    ),
+    "c_ts": ("timestamp", st.datetimes(min_value=dt.datetime(1990, 1, 1))),
+    "c_ntz": ("timestamp_ntz", st.datetimes(min_value=dt.datetime(1990, 1, 1))),
+    "c_array": ("array<bigint>", st.lists(st.none() | st.integers(-9, 9), max_size=3)),
+    "c_struct": (
+        "struct<a:bigint,b:string>",
+        st.tuples(st.none() | st.integers(-9, 9), st.none() | st.text("xy", max_size=2)),
+    ),
+}
+
+
+@st.composite
+def _evolving_appends(draw):
+    """1-4 batches, each a random subset of the column pool in random
+    order, with random nullability; a column keeps its type throughout."""
+    batches = []
+    for _ in range(draw(st.integers(1, 4))):
+        cols = draw(st.lists(st.sampled_from(sorted(_EVOLVE_TYPES)), min_size=1, max_size=4,
+                             unique=True))
+        nullable = [draw(st.booleans()) for _ in cols]
+        values = [
+            _EVOLVE_TYPES[c][1] if not n else st.none() | _EVOLVE_TYPES[c][1]
+            for c, n in zip(cols, nullable)
+        ]
+        rows = draw(st.lists(st.tuples(*values), min_size=1, max_size=3))
+        batches.append((cols, nullable, rows))
+    return batches
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(batches=_evolving_appends())
+def test_append_evolve_pins_schema_like_merge_read(spark, tmp_path_factory, batches):
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+    from azure_sales_etl_pipeline_spark.operators.writer import (
+        _table_dir,
+        append_evolve,
+        read_table,
+    )
+
+    path = str(tmp_path_factory.mktemp("evolve") / "t")
+    arrivals: list[str] = []
+    for cols, nullable, rows in batches:
+        schema = StructType([
+            StructField(c, _parse_datatype_string(_EVOLVE_TYPES[c][0]), n)
+            for c, n in zip(cols, nullable)
+        ])
+        append_evolve(spark, spark.createDataFrame(rows, schema), path)
+        arrivals += [c for c in cols if c not in arrivals]
+
+    got = read_table(spark, path)
+    merged = spark.read.option("mergeSchema", "true").parquet(str(_table_dir(path)))
+    assert got.columns == arrivals
+    assert sorted(got.schema, key=lambda f: f.name) == sorted(merged.schema, key=lambda f: f.name)
+    assert {f.name: f.dataType.simpleString() for f in got.schema} == {
+        c: _EVOLVE_TYPES[c][0] for c in arrivals
+    }
+
+    def rows(df):
+        return sorted(repr(r) for r in df.select(*sorted(arrivals)).collect())
+
+    assert rows(got) == rows(merged)
+    assert len(rows(got)) == sum(len(r) for *_, r in batches)
+
+
+def test_pointer_table_reads_fire_no_jobs(spark, tmp_path):
+    """The pointer serves the schema, so resolving a pointer table's
+    read, its schema and a watermark fires no Spark job."""
+    from azure_sales_etl_pipeline_spark.operators.watermark import WatermarkStore
+    from azure_sales_etl_pipeline_spark.operators.writer import (
+        append_evolve,
+        overwrite_table,
+        read_table,
+        table_schema,
+    )
+
+    snap, app = str(tmp_path / "snap"), str(tmp_path / "app")
+    overwrite_table(spark.range(3), snap)
+    append_evolve(spark, spark.createDataFrame([(1,)], "k bigint"), app)
+    append_evolve(spark, spark.createDataFrame([("x", 2)], "v string, k bigint"), app)
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    store.set("t", dt.datetime(2024, 5, 6, 7, 8, 9, 123456))
+    for path in (snap, app):
+        assert _jobs_in_group(
+            spark, lambda: (read_table(spark, path).schema, table_schema(spark, path))
+        ) == 0, path
+    got = []
+    assert _jobs_in_group(spark, lambda: got.append(store.get("t"))) == 0
+    assert got == [dt.datetime(2024, 5, 6, 7, 8, 9, 123456)]
+    assert read_table(spark, app).columns == ["k", "v"]
+
+
+def test_pointer_without_schema_reads_through_fallback(spark, tmp_path):
+    """A pointer committed before it carried a schema (or a watermark
+    value) still reads through footer inference; the next evolving
+    append commits the schema into it."""
+    import json
+    from pathlib import Path
+
+    from azure_sales_etl_pipeline_spark.operators.watermark import WatermarkStore
+    from azure_sales_etl_pipeline_spark.operators.writer import (
+        append_evolve,
+        overwrite_table,
+        read_commit_meta,
+        read_table,
+        table_schema,
+    )
+
+    def strip(path, *keys):
+        f = Path(path) / "_current_version.json"
+        ptr = json.loads(f.read_text())
+        f.write_text(json.dumps({k: v for k, v in ptr.items() if k not in keys}))
+
+    path = str(tmp_path / "t")
+    overwrite_table(spark.createDataFrame([(1, "a")], "k bigint, v string"), path,
+                    commit_meta={"m": 1})
+    pinned = read_table(spark, path)
+    want = (pinned.schema, sorted(pinned.collect()))
+    strip(path, "schema")
+    got = read_table(spark, path)
+    assert (got.schema, sorted(got.collect())) == want
+    assert table_schema(spark, path) == want[0] and read_commit_meta(path) == {"m": 1}
+
+    append_evolve(spark, spark.createDataFrame([(2, 3.5)], "k bigint, w double"), path)
+    assert _jobs_in_group(spark, lambda: read_table(spark, path).schema) == 0
+    assert [tuple(r) for r in read_table(spark, path).orderBy("k").collect()] == [
+        (1, "a", None), (2, None, 3.5)
+    ]
+
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    overwrite_table(spark.createDataFrame([("t", dt.datetime(2024, 1, 2))],
+                                          "table_name string, watermark timestamp"),
+                    str(store._path("t")))
+    assert store.get("t") == dt.datetime(2024, 1, 2)

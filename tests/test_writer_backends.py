@@ -596,6 +596,28 @@ def test_watermark_set_survives_crash_at_every_step(spark, tmp_path, monkeypatch
     assert store.get("t") == new
 
 
+@pytest.mark.parametrize("step", ["flip", "data"])
+def test_evolving_append_never_shows_a_row_without_its_columns(spark, tmp_path, monkeypatch, step):
+    """An append that adds a column commits the evolved schema before
+    its files: a crash after either step shows the old rows (the new
+    column null) or every row with its value, never a new row whose
+    new column is hidden."""
+    from azure_sales_etl_pipeline_spark.operators.writer import append_evolve, read_table
+
+    path = str(tmp_path / "t")
+    append_evolve(spark, spark.range(3).withColumnRenamed("id", "k"), path)
+    batch = spark.createDataFrame([(10, "x"), (11, "y")], "k bigint, c string")
+    fired = _crash_after(monkeypatch, step)
+    with pytest.raises(_Crash):
+        append_evolve(spark, batch, path)
+    monkeypatch.undo()
+    assert fired == [step]
+    got = sorted(tuple(r) for r in read_table(spark, path).collect())
+    old = [(0, None), (1, None), (2, None)]
+    assert got in (old, old + [(10, "x"), (11, "y")])
+    assert read_table(spark, path).columns == ["k", "c"]
+
+
 def test_delta_table_refused_by_every_reader_and_writer(spark, tmp_path):
     """A Delta table written by another tool keeps tombstoned files
     beside its ``_delta_log``: the engine must neither read it as plain
@@ -612,6 +634,7 @@ def test_delta_table_refused_by_every_reader_and_writer(spark, tmp_path):
         overwrite_table,
         read_commit_meta,
         read_table,
+        table_schema,
         write_snapshot,
     )
 
@@ -624,6 +647,7 @@ def test_delta_table_refused_by_every_reader_and_writer(spark, tmp_path):
     calls = [
         lambda: table_exists(p),
         lambda: read_table(spark, p),
+        lambda: table_schema(spark, p),
         lambda: read_commit_meta(p),
         lambda: overwrite_table(df, p),
         lambda: write_snapshot(df, p),

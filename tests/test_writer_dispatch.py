@@ -1,5 +1,5 @@
-"""Writer surface: for EVERY table writer — create / overwrite / append
-/ managed — prove
+"""Writer surface: for EVERY table writer — overwrite / append /
+managed — prove
 
 1. the writer writes plain parquet that reads back,
 2. a caller asking for a Delta backend (a ``backend=`` argument, which
@@ -24,7 +24,6 @@ class FakeDF:
 
 
 WRITERS = {
-    "create": lambda df, path, **kw: W.create_table(df, path, **kw),
     "overwrite": lambda df, path, **kw: W.overwrite_table(df, path, **kw),
     "append": lambda df, path, **kw: W.append_evolve(None, df, path, **kw),
     "managed": lambda df, path, **kw: W.save_managed_table(df, "db.t", **kw),
