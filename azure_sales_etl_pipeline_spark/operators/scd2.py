@@ -21,13 +21,18 @@ Semantics (faithful to the reference):
 Deliberate divergence: the reference's expire-then-append is TWO Delta
 commits with a corruption window between them (SURVEY.md §3). On plain
 parquet the engine rewrites the table as ONE ``overwrite_table`` commit
-(writer.py's version-directory + pointer-flip protocol) —
-history ∪ survivors ∪ expired ∪ new-versions — so a crash leaves either
-the old table or the new one, never half.
+(writer.py's version-directory + pointer-flip protocol) — history ∪
+current rows (expired where changed) ∪ new versions — so a crash leaves
+either the old table or the new one, never half.
 
-Scale: the full-outer join shuffles both sides on the business key
-(sort-merge at dimension scale). The hash is computed map-side before
-the shuffle. Two storage modes behind one API:
+Scale: one pass. The batch (hashed map-side) and the current rows are
+shuffled ONCE on the business key into a full-outer join that carries
+both sides' full rows and classifies every pair; ``rounds.cut``
+materializes it once, the per-action counts ride that cut as observed
+metrics, and the rewrite and ``on_insert`` read the cut. A key repeated
+on either side (the join fans out to one row per pair) is handled
+row-locally by per-key windows that reuse the join's shuffle. An
+all-NO-CHANGE replay stops after the cut. Two storage modes behind one API:
 
 - ``n_buckets=None`` (default): whole-table ``overwrite_table`` rewrite
   per batch — simplest, atomic, right for small/medium dimensions.
@@ -36,13 +41,15 @@ the shuffle. Two storage modes behind one API:
   containing changed keys via dynamic partition overwrite
   (``partitionOverwriteMode=dynamic``, set in session.py). At 100 TB
   this turns "rewrite the dimension" into "rewrite touched buckets":
-  untouched bucket files are not read or written. This is writer.py's
-  documented non-atomic family: per-bucket overwrite is not atomic
-  ACROSS buckets — a crash mid-upsert leaves some buckets advanced;
-  the watermark-replay contract (advance only after success) re-runs
-  the batch and SCD2's NO-CHANGE detection makes the replay a no-op
-  for already-advanced buckets, restoring consistency. This is
-  the same at-least-once self-heal the reference relies on (SURVEY §3).
+  untouched bucket files are not rewritten, and only the touched
+  buckets' history is read back (the join scans the current rows of
+  every bucket). This is writer.py's documented non-atomic family:
+  per-bucket overwrite is not atomic ACROSS buckets — a crash
+  mid-upsert leaves some buckets advanced; the watermark-replay
+  contract (advance only after success) re-runs the batch and SCD2's
+  NO-CHANGE detection makes the replay a no-op for already-advanced
+  buckets, restoring consistency. This is the same at-least-once
+  self-heal the reference relies on (SURVEY §3).
 
 An injectable ``clock`` makes effective/end timestamps deterministic for
 tests and oracles (SURVEY.md F1 nondeterminism risk).
@@ -51,17 +58,21 @@ tests and oracles (SURVEY.md F1 nondeterminism risk).
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table_exists
 from ..functions import hash_diff, utcnow_naive
+from ..memo import drop_checkpoint
+from .rounds import cut
 from .writer import overwrite_table, read_table, table_schema
 
 SCD_COLS = ("hash", "is_current", "effective_date", "end_date")
 BUCKET_COL = "__bucket"
+_ACTIONS = ("INSERT", "UPDATE", "NO CHANGE", "ABSENT")
 
 
 class SCD2Table:
@@ -106,14 +117,14 @@ class SCD2Table:
     def _bucket_of(self, key_col: Column) -> Column:
         return F.pmod(F.xxhash64(key_col), F.lit(self.n_buckets)).cast("int")
 
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        return df.withColumn(BUCKET_COL, self._bucket_of(F.col(self.key)))
+
     # -- reads ------------------------------------------------------------
 
     def history(self) -> DataFrame:
         df = read_table(self.spark, self.path)
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
-
-    def _history_raw(self) -> DataFrame:
-        return read_table(self.spark, self.path)
 
     def current(self) -> DataFrame:
         return self.history().where(F.col("is_current"))
@@ -225,13 +236,22 @@ class SCD2Table:
             return self.tracked_cols
         return [c for c in df.columns if c != self.key and c not in SCD_COLS]
 
-    def _with_scd(self, df: DataFrame, now: dt.datetime) -> DataFrame:
+    def _hashed(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("hash", hash_diff(self._tracked(df)))
+
+    @staticmethod
+    def _stamp(df: DataFrame, now: dt.datetime) -> DataFrame:
         return (
-            df.withColumn("hash", hash_diff(self._tracked(df)))
-            .withColumn("is_current", F.lit(True))
+            df.withColumn("is_current", F.lit(True))
             .withColumn("effective_date", F.lit(now).cast("timestamp"))
             .withColumn("end_date", F.lit(None).cast("timestamp"))
         )
+
+    def _stats(self, insert: int, update: int, no_change: int, deleted: int) -> dict[str, int]:
+        stats = {"insert": insert, "update": update, "no_change": no_change}
+        if self.on_delete == "expire":
+            stats["deleted"] = deleted
+        return stats
 
     # -- the operator -------------------------------------------------------
 
@@ -259,167 +279,146 @@ class SCD2Table:
             # observe() — counting `first` afterwards re-executed the
             # whole source plan a second time.
             obs = Observation()
-            first = self._with_scd(source, now).observe(
+            first = self._stamp(self._hashed(source), now).observe(
                 obs, F.count(F.lit(1)).alias("n")
             )
             if self.n_buckets:
-                first = first.withColumn(BUCKET_COL, self._bucket_of(F.col(self.key)))
+                first = self._bucketed(first)
                 first.write.partitionBy(BUCKET_COL).mode("errorifexists").parquet(self.path)
             else:
                 overwrite_table(first, self.path)
             n = int(obs.get["n"])
+            if self.n_buckets and not n:
+                # No row, no bucket directory, no schema to read back:
+                # leave no table, so the next batch is the first load.
+                shutil.rmtree(self.path)
             if self.on_insert is not None and n:
                 self.on_insert(source)
-            stats0 = {"insert": n, "update": 0, "no_change": 0}
-            if self.on_delete == "expire":
-                stats0["deleted"] = 0
-            return stats0
+            return self._stats(n, 0, 0, 0)
 
-        target = self.history().cache()
-        tgt_current = target.where(F.col("is_current"))
-
-        s = source.withColumn("hash", hash_diff(self._tracked(source))).alias("s")
-        t = tgt_current.alias("t")
-        key_s, key_t = F.col(f"s.{self.key}"), F.col(f"t.{self.key}")
-
-        joined = s.join(t, key_s == key_t, "full_outer")
-        classified = joined.select(
-            F.coalesce(key_s, key_t).alias("__key"),
-            F.when(key_t.isNull(), "INSERT")
-            .when(key_s.isNull(), "ABSENT")
-            .when(F.col("s.hash") != F.col("t.hash"), "UPDATE")
-            .otherwise("NO CHANGE")
-            .alias("__action"),
-        ).cache()
-
-        counts = {
-            r["__action"]: r["n"]
-            for r in classified.groupBy("__action").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        n_insert = counts.get("INSERT", 0)
-        n_update = counts.get("UPDATE", 0)
+        # One pass (module docstring): classify, cut, write from the cut.
+        src = self._hashed(source)
+        tgt = self.history().where(F.col("is_current"))
+        s, t = _side(src, "s", self.key), _side(tgt, "t", self.key)
+        s_in, t_in = F.col("__s_row").isNotNull(), F.col("__t_row").isNotNull()
+        # A key repeated on either side fans the join out to one row per
+        # (batch row, current row) pair. Each side's per-key window
+        # (computed after the join's key shuffle, so no extra exchange)
+        # keeps the decision per key and each side's row once: a key is
+        # updated unless every hash on both sides is equal; a current
+        # row leaves the cut once (with the key's first batch row), and a
+        # batch row becomes a new version once (with the first current row).
+        one_hash = F.col("__s_hash") == F.col("__t_hash")
+        updated = s_in & t_in & ~F.coalesce(one_hash, F.lit(False))
         # ABSENT rows become deletions only in "expire" mode; in the
         # default mode they're detected-but-unacted (reference parity).
-        n_delete = counts.get("ABSENT", 0) if expire_mode else 0
-        stats = {
-            "insert": n_insert,
-            "update": n_update,
-            "no_change": counts.get("NO CHANGE", 0),
-        }
-        if self.on_delete == "expire":
-            stats["deleted"] = n_delete
-        if n_insert == 0 and n_update == 0 and n_delete == 0:
-            classified.unpersist()
-            target.unpersist()
-            return stats
-
-        # Keys whose bucket/table content changes this batch: new-version
-        # keys plus (expire mode) deleted keys. Source has no rows for
-        # ABSENT keys, so including them in the new-versions semi-join is
-        # a no-op — one key set serves both purposes.
-        expire_actions = ("UPDATE", "ABSENT") if expire_mode else ("UPDATE",)
-        changed_keys = classified.where(
-            F.col("__action").isin("INSERT", *expire_actions)
-        ).select("__key")
-        expire_keys = (
-            classified.where(F.col("__action").isin(*expire_actions))
-            .select("__key")
-            .distinct()
+        expire = updated | (t_in & ~s_in) if expire_mode else updated
+        joined = s.join(t, F.col(f"s__{self.key}") == F.col(f"t__{self.key}"), "full_outer")
+        joined = joined.select(
+            *[c for c in joined.columns if not c.startswith("__")],
+            F.when(~t_in, "INSERT")
+            .when(~s_in, "ABSENT")
+            .when(F.col("s__hash") != F.col("t__hash"), "UPDATE")
+            .otherwise("NO CHANGE")
+            .alias("__action"),
+            expire.alias("__expire"),
+            (t_in & (~s_in | (F.col("__s_row") == F.col("__s_first")))).alias("__current"),
+            (s_in & (~t_in | (updated & (F.col("__t_row") == F.col("__t_first"))))).alias("__new"),
         )
-
-        # New current versions: source rows whose key is INSERT or UPDATE
-        # (the reference's select("s.*") after filtering actions, :122).
-        new_versions = self._with_scd(
-            source.join(
-                F.broadcast(changed_keys)
-                if n_insert + n_update + n_delete < 1_000_000
-                else changed_keys,
-                source[self.key] == F.col("__key"),
-                "left_semi",
-            ),
-            now,
-        )
-
-        # Expire old current versions of updated keys (the reference's
-        # MERGE whenMatchedUpdate, :127-133).
-        expiring = (
-            tgt_current.join(expire_keys, tgt_current[self.key] == F.col("__key"), "left_semi")
-            .withColumn("is_current", F.lit(False))
-            .withColumn("end_date", F.lit(now).cast("timestamp"))
-        )
-        surviving_current = tgt_current.join(
-            expire_keys, tgt_current[self.key] == F.col("__key"), "left_anti"
-        )
-        history_rows = target.where(~F.col("is_current"))
-
-        # allowMissingColumns: a schema-evolved batch (new source column,
-        # or a column the batch dropped) null-backfills the other side —
-        # same contract as writer.append_evolve. A strict select(*cols)
-        # here raised AnalysisException on evolved batches (r2 advisory).
-        rewritten = (
-            history_rows.unionByName(surviving_current, allowMissingColumns=True)
-            .unionByName(expiring, allowMissingColumns=True)
-            .unionByName(new_versions, allowMissingColumns=True)
-        )
+        action = F.col("__action")
+        metrics = [F.count(F.when(action == a, 1)).alias(a) for a in _ACTIONS]
         if self.n_buckets:
-            # Surgical path: rewrite only buckets containing a changed key.
-            # Re-read the target pruned on the PARTITION column (__bucket
-            # isin(...) → partition pruning: untouched buckets are neither
-            # read nor written), rebuild those buckets' full content, and
-            # let dynamic partition overwrite replace exactly those
-            # directories.
-            changed_buckets = [
-                r["b"]
-                for r in changed_keys.select(
-                    self._bucket_of(F.col("__key")).alias("b")
+            key = F.coalesce(F.col(f"s__{self.key}"), F.col(f"t__{self.key}"))
+            metrics.append(
+                F.collect_set(
+                    F.when(F.col("__expire") | F.col("__new"), self._bucket_of(key))
+                ).alias("buckets")
+            )
+        obs = Observation()
+        joined = cut(joined.observe(obs, *metrics))
+        try:
+            m = obs.get
+            n_insert, n_update = m["INSERT"], m["UPDATE"]
+            n_delete = m["ABSENT"] if expire_mode else 0
+            stats = self._stats(n_insert, n_update, m["NO CHANGE"], n_delete)
+            if n_insert == 0 and n_update == 0 and n_delete == 0:
+                return stats
+
+            expired = F.col("__expire")
+            current = joined.where(F.col("__current")).select(
+                *[
+                    (~expired).alias(c) if c == "is_current"
+                    else F.when(expired, F.lit(now).cast("timestamp"))
+                    .otherwise(F.col("t__end_date")).alias(c) if c == "end_date"
+                    else F.col(f"t__{c}").alias(c)
+                    for c in tgt.columns
+                ]
+            )
+            new = self._stamp(
+                joined.where(F.col("__new")).select(
+                    *[F.col(f"s__{c}").alias(c) for c in src.columns]
+                ),
+                now,
+            )
+
+            # allowMissingColumns: a schema-evolved batch (new source
+            # column, or a column the batch dropped) null-backfills the
+            # other side — same contract as writer.append_evolve.
+            if self.n_buckets:
+                # Surgical path: rewrite only buckets containing a changed
+                # key. The history read prunes on the PARTITION column
+                # (untouched buckets are neither read nor written); the
+                # changed buckets' current and new rows come from the cut.
+                # Staged before the write: dynamic partition overwrite
+                # writes into self.path while the plan reads it.
+                in_changed = F.col(BUCKET_COL).isin(m["buckets"])
+                current, new = (self._bucketed(d).where(in_changed) for d in (current, new))
+                staged = cut(
+                    read_table(self.spark, self.path)
+                    .where(in_changed & ~F.col("is_current"))
+                    .unionByName(current, allowMissingColumns=True)
+                    .unionByName(new, allowMissingColumns=True)
                 )
-                .distinct()
-                .collect()
-            ]
-            pruned = self._history_raw().where(F.col(BUCKET_COL).isin(changed_buckets))
-            pruned_cur = pruned.where(F.col("is_current"))
-            bucket_rows = (
-                pruned.where(~F.col("is_current"))
-                .unionByName(
-                    pruned_cur.join(
-                        expire_keys, pruned_cur[self.key] == F.col("__key"), "left_anti"
-                    ),
-                    allowMissingColumns=True,
+                try:
+                    staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
+                finally:
+                    drop_checkpoint(staged)
+            else:
+                # No pre-write materialization needed: overwrite_table
+                # writes a new version directory and flips the pointer
+                # only after the job completes, so the plan's reads of the
+                # CURRENT table files happen while those files still exist.
+                overwrite_table(
+                    self.history()
+                    .where(~F.col("is_current"))
+                    .unionByName(current, allowMissingColumns=True)
+                    .unionByName(new, allowMissingColumns=True),
+                    self.path,
                 )
-                .unionByName(
-                    pruned_cur.join(
-                        expire_keys, pruned_cur[self.key] == F.col("__key"), "left_semi"
+
+            if self.on_insert is not None and n_insert:
+                self.on_insert(
+                    joined.where(action == "INSERT").select(
+                        *[F.col(f"s__{c}").alias(c) for c in source.columns]
                     )
-                    .withColumn("is_current", F.lit(False))
-                    .withColumn("end_date", F.lit(now).cast("timestamp")),
-                    allowMissingColumns=True,
                 )
-                .unionByName(
-                    new_versions.withColumn(
-                        BUCKET_COL, self._bucket_of(F.col(self.key))
-                    ),
-                    allowMissingColumns=True,
-                )
-            )
-            staged = bucket_rows.localCheckpoint(eager=True)
-            staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
-        else:
-            # No pre-write materialization needed: overwrite_table
-            # writes a new version directory and flips the pointer only
-            # after the job completes, so the plan's reads of the
-            # CURRENT table files happen while those files still exist
-            # (the contract merge_aggregate relies on). The bucketed branch above MUST
-            # keep its checkpoint — dynamic partition overwrite writes
-            # directly into self.path while the plan reads it.
-            overwrite_table(rewritten, self.path)
+            return stats
+        finally:
+            drop_checkpoint(joined)
 
-        if self.on_insert is not None and n_insert:
-            insert_keys = classified.where(F.col("__action") == "INSERT").select("__key")
-            inserts = source.join(
-                insert_keys, source[self.key] == F.col("__key"), "left_semi"
-            )
-            self.on_insert(inserts)
 
-        classified.unpersist()
-        target.unpersist()
-        return stats
+def _side(df: DataFrame, side: str, key: str) -> DataFrame:
+    """One join side: ``df``'s columns as ``<side>__<col>``, a
+    ``__<side>_row`` row id, and per key the first row id
+    (``__<side>_first``) and the hash all its rows share
+    (``__<side>_hash``; null if they differ)."""
+    row, by_key = f"__{side}_row", Window.partitionBy(f"{side}__{key}")
+    lo, hi = (agg(f"{side}__hash").over(by_key) for agg in (F.min, F.max))
+    return (
+        df.select(
+            *[F.col(c).alias(f"{side}__{c}") for c in df.columns],
+            F.monotonically_increasing_id().alias(row),
+        )
+        .withColumn(f"__{side}_first", F.min(row).over(by_key))
+        .withColumn(f"__{side}_hash", F.when(lo == hi, lo))
+    )

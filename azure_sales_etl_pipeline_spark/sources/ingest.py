@@ -8,7 +8,8 @@ Lifecycle per table (faithful to the reference):
   accepts the inferSchema DECIMAL→double degradation (SURVEY §1.2) —
   so does the engine.
 - SUBSEQUENT loads: pin the reader to the existing Bronze schema minus
-  the engine-added audit columns (S2; :41-42) so types never drift.
+  the engine-added audit columns (S2; :41-42) so types never drift; a
+  batch that adds a column is inferred and cast back (``ingest``).
 - enrich with audit columns: ingestion_timestamp (injectable clock, F1)
   and source_file lineage (F2; :54-55)
 - append with schema evolution (S5, ``operators.writer.append_evolve``;
@@ -29,7 +30,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..catalog import table_exists
 from ..functions import utcnow_naive
@@ -84,17 +85,30 @@ class CsvIngestor:
         Divergence from the reference, deliberate: imposing the pinned
         StructType on the CSV reader (1_Landing_to_Bronze.py:41-42)
         silently DROPS columns the batch added, so mergeSchema-on-write
-        never sees them. The engine instead infers, then casts the
-        already-known columns back to their pinned types — type drift is
-        still impossible, but new columns survive to evolve the table.
+        never sees them. The engine reads the header first (one
+        first-line job): a batch whose columns the table already has is
+        parsed with the pinned types in header order (FAILFAST, so a
+        malformed value fails the load), with no inference pass. A batch
+        that adds a column is inferred, then the already-known columns
+        are cast back to their pinned types — type drift is still
+        impossible, but new columns survive to evolve the table.
         """
         pinned = self._pinned_schema(table)
-        df = self.spark.read.option("header", "true").option("inferSchema", "true").csv(csv_path)
+        reader = self.spark.read.option("header", "true")
+        types = {f.name: f.dataType for f in pinned.fields} if pinned else {}
+        names = reader.csv(csv_path).columns if pinned else []
+        if names and all(c in types for c in names):
+            df = (
+                reader.schema(StructType([StructField(c, types[c]) for c in names]))
+                .option("mode", "FAILFAST")
+                .csv(csv_path)
+            )
+        else:
+            df = reader.option("inferSchema", "true").csv(csv_path)
         # Capture lineage BEFORE any projection: the _metadata pseudo-column
         # only resolves against the file-source relation (F2).
         df = df.withColumn("source_file", F.col("_metadata.file_path"))
-        if pinned is not None:
-            types = {f.name: f.dataType for f in pinned.fields}
+        if types:
             df = df.select(
                 *[
                     F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)

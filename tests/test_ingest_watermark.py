@@ -57,6 +57,55 @@ def test_schema_evolution_null_backfill(spark, tmp_path):
     assert rows[1]["ingestion_timestamp"] == dt.datetime(2024, 1, 1)
 
 
+def test_pinned_and_evolving_loads_keep_bronze_rows_and_schema(spark, tmp_path):
+    """A pinned load (header columns all known, here reordered and one
+    missing) parses with the pinned types instead of inferring and
+    casting back; an evolving load (a new column) still infers. Bronze
+    rows and column types are the same either way."""
+    landing = tmp_path / "landing"
+    csv = landing / "t" / "b.csv"
+    clock = {"now": dt.datetime(2024, 1, 1)}
+    ing = CsvIngestor(spark, str(tmp_path / "bronze"), clock=lambda: clock["now"])
+    write_csv(csv, "id,amount,name,day,ts,flag\n1,1.5,Alice,2024-01-01,2024-01-01 10:00:00,true\n")
+    assert ing.run(str(landing)) == {"t": 1}
+    clock["now"] = dt.datetime(2024, 1, 2)
+    write_csv(csv, "amount,id,name,ts,flag\n3,2,Bob,2024-01-02 11:30:00,false\n,3,,,\n")
+    assert ing.run(str(landing)) == {"t": 2}
+    clock["now"] = dt.datetime(2024, 1, 3)
+    write_csv(csv, "id,name,tier,amount\n4,Dan,GOLD,2.25\n")
+    assert ing.run(str(landing)) == {"t": 1}
+
+    bronze = read_table(spark, str(tmp_path / "bronze" / "t"))
+    assert bronze.dtypes == [
+        ("id", "int"), ("amount", "double"), ("name", "string"), ("day", "date"),
+        ("ts", "timestamp"), ("flag", "boolean"), ("source_file", "string"),
+        ("ingestion_timestamp", "timestamp"), ("tier", "string"),
+    ]
+    rows = sorted(tuple(r) for r in bronze.drop("source_file").collect())
+    assert rows == [
+        (1, 1.5, "Alice", dt.date(2024, 1, 1), dt.datetime(2024, 1, 1, 10), True,
+         dt.datetime(2024, 1, 1), None),
+        (2, 3.0, "Bob", None, dt.datetime(2024, 1, 2, 11, 30), False,
+         dt.datetime(2024, 1, 2), None),
+        (3, None, None, None, None, None, dt.datetime(2024, 1, 2), None),
+        (4, 2.25, "Dan", None, None, None, dt.datetime(2024, 1, 3), "GOLD"),
+    ]
+
+
+def test_pinned_load_keeps_digit_strings(spark, tmp_path):
+    """A string column whose batch values all look numeric keeps their
+    text: inferring the batch typed "007" as int 7 before the cast back."""
+    landing = tmp_path / "landing"
+    csv = landing / "t" / "b.csv"
+    ing = CsvIngestor(spark, str(tmp_path / "bronze"))
+    write_csv(csv, "id,zip\n1,A1\n")
+    ing.run(str(landing))
+    write_csv(csv, "id,zip\n2,007\n")
+    ing.run(str(landing))
+    rows = read_table(spark, str(tmp_path / "bronze" / "t")).select("id", "zip").collect()
+    assert sorted(map(tuple, rows)) == [(1, "A1"), (2, "007")]
+
+
 def test_append_evolve_missing_column_null_filled(spark, tmp_path):
     """Batch missing a table column writes typed nulls (union-by-name)."""
     path = str(tmp_path / "t")

@@ -12,6 +12,8 @@ fixture data:
 - ``operators.rounds.iterate`` honours its bound, cut cadence and null probes
 - an evolving append's pinned schema reads the same rows, types and
   nullability as footer inference, in ``existing + arrivals`` order
+- the SCD2 upsert (both delete modes, bucketed or not, with
+  ``ensure_members``) ≡ a plain-Python SCD2 reference
 
 Hypothesis drives row multisets (with duplicates and skew) through the
 same code paths the fixture tests use; Spark jobs per example are kept
@@ -21,7 +23,9 @@ tiny (≤60 rows) so the suite stays fast.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import uuid
+from collections import Counter
 from decimal import Decimal
 
 import numpy as np
@@ -30,12 +34,14 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from azure_sales_etl_pipeline_spark.catalog import table_exists
 from azure_sales_etl_pipeline_spark.operators.maintenance import (
     _CC_MAX_ITERS,
     _cc_min_label,
     merge_aggregate,
 )
 from azure_sales_etl_pipeline_spark.operators.rounds import iterate
+from azure_sales_etl_pipeline_spark.operators.scd2 import SCD2Table
 from azure_sales_etl_pipeline_spark.plans.scale import salted_join
 from azure_sales_etl_pipeline_spark.plans.similarity import (
     _IVF_ITERS,
@@ -453,6 +459,170 @@ def test_dedup_clusters_job_count_pins_exchange_reuse(spark, tmp_path):
     jaccard_pairs_raw(spark, str(tmp_path))  # the memoized pair table is not CC work
 
     assert _jobs_in_group(spark, lambda: _compute_dedup_clusters(spark, str(tmp_path))) == 27
+
+
+def _ref_hash(row, tracked):
+    """``sha2(concat_ws('||', tracked), 256)``: nulls are skipped."""
+    text = "||".join(str(row[c]) for c in tracked if row.get(c) is not None)
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+class _RefDim:
+    """Plain-Python SCD2 over non-null keys: the join counts pairs, a
+    key with any UPDATE pair expires ALL its current rows and versions
+    ALL its batch rows, and ABSENT keys expire only in expire mode. An
+    empty first load of a bucketed table leaves no table."""
+
+    def __init__(self, expire: bool, bucketed: bool):
+        self.expire, self.bucketed, self.cols, self.rows = expire, bucketed, [], None
+
+    def upsert(self, cols, batch, now, expire_absent=None):
+        expire = self.expire if expire_absent is None else expire_absent
+        src = [dict(zip(cols, r)) for r in batch]
+        for s in src:
+            s["hash"] = _ref_hash(s, [c for c in cols if c != "id"])
+        stats = {"insert": 0, "update": 0, "no_change": 0}
+        if self.expire:
+            stats["deleted"] = 0
+        stamp = {"is_current": True, "effective_date": now, "end_date": None}
+        if self.rows is None:
+            if src or not self.bucketed:
+                self.cols, self.rows = list(cols), [{**s, **stamp} for s in src]
+            stats["insert"] = len(src)
+            return stats
+        current = [t for t in self.rows if t["is_current"]]
+        pairs = Counter()
+        updated = set()
+        for s in src:
+            matches = [t for t in current if t["id"] == s["id"]]
+            pairs["insert"] += not matches
+            for t in matches:
+                kind = "update" if t["hash"] != s["hash"] else "no_change"
+                pairs[kind] += 1
+                if kind == "update":
+                    updated.add(s["id"])
+        batch_keys = {s["id"] for s in src}
+        absent = [t for t in current if t["id"] not in batch_keys] if expire else []
+        stats.update({k: pairs[k] for k in ("insert", "update", "no_change")})
+        if self.expire:
+            stats["deleted"] = len(absent)
+        if not (pairs["insert"] or pairs["update"] or absent):
+            return stats
+        current_keys = {t["id"] for t in current}
+        for t in current:
+            if t["id"] in updated or (expire and t["id"] not in batch_keys):
+                t["is_current"], t["end_date"] = False, now
+        self.rows += [
+            {**s, **stamp} for s in src if s["id"] in updated or s["id"] not in current_keys
+        ]
+        self.cols += [c for c in cols if c not in self.cols]
+        return stats
+
+    def members(self, keys, now):
+        missing = sorted(set(keys) - {t["id"] for t in self.rows if t["is_current"]})
+        if not missing:
+            return 0
+        blank = (None,) * (len(self.cols) - 1)
+        return self.upsert(self.cols, [(k, *blank) for k in missing], now, False)["insert"]
+
+
+_SCD2_VALUES = st.sampled_from(["a", "b", None])
+
+
+@st.composite
+def _scd2_steps(draw):
+    """1-4 steps: batches over keys 0-5 (repeats allowed) whose columns
+    may gain ``tier``, and after the first batch ``ensure_members``."""
+    steps = []
+    for i in range(draw(st.integers(1, 4))):
+        if i and draw(st.integers(0, 3)) == 0:
+            steps.append(("members", draw(st.lists(_keys, min_size=1, max_size=4))))
+            continue
+        cols = _DIM + (("tier",) if draw(st.booleans()) else ())
+        row = st.tuples(_keys, *[_SCD2_VALUES] * (len(cols) - 1))
+        steps.append(("batch", cols, draw(st.lists(row, max_size=8))))
+    return steps
+
+
+_DIM = ("id", "name", "segment")
+_SCD2_EXAMPLE = [
+    # key 3 loads twice, so it has two current rows
+    ("batch", _DIM, [(1, "a", None), (2, "b", "x"), (3, "a", "a"), (3, "a", "a")]),
+    # key 1: (a, null) vs (null, a) hash alike; key 2 repeats: one UPDATE,
+    # one NO CHANGE pair; key 3 ABSENT; key 4 INSERT; tier evolves in
+    ("batch", (*_DIM, "tier"),
+     [(1, None, "a", None), (2, "b", "y", "a"), (2, "b", "x", None), (4, "a", None, "b")]),
+    ("members", [3, 5, 5]),
+    ("batch", _DIM, [(5, "a", "b"), (3, "a", "a"), (3, "b", None)]),
+]
+
+
+@settings(_slow, max_examples=4)  # each example runs up to four upserts
+@given(
+    steps=_scd2_steps(),
+    on_delete=st.sampled_from(["ignore", "expire"]),
+    n_buckets=st.sampled_from([None, 3]),
+)
+@example(steps=_SCD2_EXAMPLE, on_delete="ignore", n_buckets=None)
+@example(steps=_SCD2_EXAMPLE, on_delete="expire", n_buckets=3)
+@example(  # an empty batch expires every key
+    steps=[("batch", _DIM, [(0, "a", "a")]), ("batch", _DIM, [])],
+    on_delete="expire",
+    n_buckets=None,
+)
+@example(  # an empty first load of a bucketed table leaves no table
+    steps=[("batch", _DIM, []), ("members", [1]), ("batch", _DIM, [(1, "a", "a")])],
+    on_delete="ignore",
+    n_buckets=3,
+)
+def test_scd2_upsert_matches_reference(spark, tmp_path_factory, steps, on_delete, n_buckets):
+    now = [dt.datetime(2024, 1, 1)]
+    dim = SCD2Table(
+        spark, str(tmp_path_factory.mktemp("scd2") / "dim"), "id",
+        clock=lambda: now[0], n_buckets=n_buckets, on_delete=on_delete,
+    )
+    ref = _RefDim(on_delete == "expire", n_buckets is not None)
+    for i, step in enumerate(steps):
+        now[0] = dt.datetime(2024, 1, 1) + dt.timedelta(days=i)
+        if step[0] == "members":
+            keys = spark.createDataFrame([(k,) for k in step[1]], "id bigint")
+            if ref.rows is None:
+                with pytest.raises(ValueError, match="no initial load"):
+                    dim.ensure_members(keys)
+            else:
+                assert dim.ensure_members(keys) == ref.members(step[1], now[0])
+            continue
+        _, cols, rows = step
+        schema = ", ".join(f"{c} {'bigint' if c == 'id' else 'string'}" for c in cols)
+        batch = spark.createDataFrame(rows, schema)
+        assert dim.upsert(batch) == ref.upsert(cols, rows, now[0])
+    assert table_exists(dim.path) == (ref.rows is not None)
+    if ref.rows is None:
+        return
+    hist = dim.history()
+    names = sorted(hist.columns)
+    assert set(names) == set(ref.cols) | {"hash", "is_current", "effective_date", "end_date"}
+    got = sorted((tuple(r[c] for c in names) for r in hist.collect()), key=repr)
+    want = sorted((tuple(r.get(c) for c in names) for r in ref.rows), key=repr)
+    assert got == want
+
+
+def test_scd2_upsert_job_count(spark, tmp_path):
+    """One upsert is one cut of the classifying full-outer join (its
+    counts ride the cut as observed metrics) plus the table write; a
+    replay whose rows are all NO CHANGE stops after the cut. Classifying
+    with a separate count job and re-joining the batch for the rewrite
+    costs more jobs on both paths (12 and 6 here)."""
+    schema = "id bigint, name string, segment string"
+    dim = SCD2Table(spark, str(tmp_path / "dim"), "id", clock=lambda: dt.datetime(2024, 1, 1))
+    dim.upsert(spark.createDataFrame([(i, f"n{i}", "A") for i in range(40)], schema))
+    batch = spark.createDataFrame(
+        [(i, f"n{i}", "B" if i % 5 == 0 else "A") for i in range(45)], schema
+    )
+    changing = _jobs_in_group(spark, lambda: dim.upsert(batch))
+    replay = _jobs_in_group(spark, lambda: dim.upsert(batch))
+    assert changing <= 4  # two AQE map stages + the cut, then the write
+    assert replay <= 3
 
 
 # Jobs per cold run (memos evicted, noop write) at sf0.001 under this

@@ -315,3 +315,120 @@ def test_enrich_asof_facts_with_own_validity_columns(spark, tmp_path):
     out = {r["fact_id"]: r for r in enriched.collect()}
     assert out[100]["dim_attr"] == "v2" and out[100]["effective_date"] == t1
     assert out[101]["dim_attr"] == "v1" and out[101]["end_date"] is None
+
+
+def _versions(dim):
+    return sorted(
+        (r["id"], r["name"], r["segment"], r["is_current"], r["effective_date"], r["end_date"])
+        for r in dim.history().collect()
+    )
+
+
+@pytest.mark.parametrize("on_delete", ["ignore", "expire"])
+def test_repeated_batch_keys_expire_once_and_version_every_row(spark, tmp_path, clock, on_delete):
+    """A batch that repeats a business key matching a current row (the
+    full-outer join fans out to one row per duplicate) still expires that
+    current row ONCE, and every source row of a key with any changed
+    duplicate becomes a new version — the NO CHANGE duplicate included.
+    A key loaded twice has two current rows; an update expires both and
+    adds one successor."""
+    state, tick = clock
+    dim = make_dim(spark, tmp_path, state, on_delete=on_delete)
+    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
+    dim.upsert(
+        df(spark, [(1, "A", "R"), (2, "B", "C"), (4, "D", "X"), (4, "D", "X"), (5, "E", "Q")])
+    )
+    tick(t2)
+    stats = dim.upsert(
+        df(
+            spark,
+            [
+                (1, "A", "W"), (1, "A", "R"),      # UPDATE + NO CHANGE duplicate
+                (2, "B", "X"), (2, "B", "Y"),      # two UPDATEs
+                (3, "C", "N"), (3, "C", "N"),      # two INSERTs, identical rows
+                (4, "D", "Z"),                     # one row over two current rows
+            ],
+        )
+    )
+    expected_stats = {"insert": 2, "update": 5, "no_change": 1}
+    if on_delete == "expire":
+        expected_stats["deleted"] = 1  # key 5
+    assert stats == expected_stats
+
+    closed = [(1, "A", "R", False, t1, t2), (2, "B", "C", False, t1, t2),
+              (4, "D", "X", False, t1, t2), (4, "D", "X", False, t1, t2)]
+    key5 = (5, "E", "Q", False, t1, t2) if on_delete == "expire" else (5, "E", "Q", True, t1, None)
+    new = [(1, "A", "R", True, t2, None), (1, "A", "W", True, t2, None),
+           (2, "B", "X", True, t2, None), (2, "B", "Y", True, t2, None),
+           (3, "C", "N", True, t2, None), (3, "C", "N", True, t2, None),
+           (4, "D", "Z", True, t2, None)]
+    assert _versions(dim) == sorted(closed + new + [key5])
+
+    # Replaying only NO CHANGE duplicates writes nothing.
+    tick(dt.datetime(2024, 3, 1))
+    before = _versions(dim)
+    replay = dim.upsert(df(spark, [(4, "D", "Z"), (4, "D", "Z")]), expire_absent=False)
+    expected_stats = {"insert": 0, "update": 0, "no_change": 2}
+    if on_delete == "expire":
+        expected_stats["deleted"] = 0
+    assert replay == expected_stats
+    assert _versions(dim) == before
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("fault", ["write", "on_insert", "bucketed_write", "none_bucketed"])
+def test_upsert_releases_its_materializations(spark, tmp_path, clock, monkeypatch, fault):
+    """An upsert leaves no persisted frame behind — neither when the
+    table write or the ``on_insert`` hook raises, nor after a bucketed
+    upsert's pre-write staging."""
+    from pyspark.sql import DataFrameWriter
+
+    from azure_sales_etl_pipeline_spark.operators import scd2
+
+    state, tick = clock
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected fault")
+
+    armed = []
+
+    def hook(d):
+        if armed:
+            boom()
+
+    bucketed = fault in ("bucketed_write", "none_bucketed")
+    dim = make_dim(spark, tmp_path, state, on_insert=hook, n_buckets=4 if bucketed else None)
+    dim.upsert(df(spark, [(1, "A", "R"), (2, "B", "C")]))
+    tick(dt.datetime(2024, 2, 1))
+    if fault == "write":
+        monkeypatch.setattr(scd2, "overwrite_table", boom)
+    elif fault == "bucketed_write":
+        monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    elif fault == "on_insert":
+        armed.append(True)
+    before = _persistent_rdds(spark)
+    batch = df(spark, [(1, "A", "W"), (3, "C", "N")])
+    if fault == "none_bucketed":
+        dim.upsert(batch)
+    else:
+        with pytest.raises(RuntimeError, match="injected fault"):
+            dim.upsert(batch)
+    assert _persistent_rdds(spark) == before
+
+
+def test_null_business_key_rows_never_match(spark, tmp_path, clock):
+    """A null key equals nothing: a batch row with a null key is an
+    INSERT that lands as a new version, and a current row with a null
+    key is ABSENT from every batch (expired in expire mode)."""
+    state, tick = clock
+    dim = make_dim(spark, tmp_path, state, on_delete="expire")
+    dim.upsert(df(spark, [(1, "A", "R"), (None, "Z", "R")]))
+    tick(dt.datetime(2024, 2, 1))
+    assert dim.upsert(df(spark, [(1, "A", "W"), (None, "Y", "R")])) == {
+        "insert": 1, "update": 1, "no_change": 0, "deleted": 1,
+    }
+    cur = sorted(((r["id"], r["name"]) for r in dim.current().collect()), key=repr)
+    assert cur == [(1, "A"), (None, "Y")]
