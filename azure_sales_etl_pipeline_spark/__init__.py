@@ -9,8 +9,8 @@ Subpackages / modules
                    incremental extract (JDBC-shaped).
 - ``operators``  : engine machinery — watermark store, hash-diff SCD2
                    upsert, parquet sinks with schema-evolving append.
-- ``functions``  : reusable column expressions (hash-diff, date hierarchy,
-                   safe ratios, vector math).
+- ``functions``  : reusable column expressions (hash-diff, safe ratios,
+                   vector math).
 - ``plans``      : the query library — every entry in the driver contract's
                    ``queries()`` registry, grouped by domain (gold,
                    relational, incremental, dedup, similarity, textops).

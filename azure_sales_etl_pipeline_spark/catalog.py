@@ -93,10 +93,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
 def table_exists(path: str) -> bool:
     """Existence probe for an engine-managed parquet table.
 

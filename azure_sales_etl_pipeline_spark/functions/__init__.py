@@ -69,16 +69,6 @@ def hash_diff(cols: Sequence[str]) -> Column:
     return F.sha2(F.concat_ws("||", *[F.col(c).cast("string") for c in cols]), 256)
 
 
-def date_hierarchy(ts_col: str) -> dict[str, Column]:
-    """Calendar hierarchy columns (reference 3_Silver_to_Gold.py:52-55)."""
-    return {
-        "order_date": F.to_date(F.col(ts_col)),
-        "order_year": F.year(F.col(ts_col)),
-        "order_quarter": F.quarter(F.col(ts_col)),
-        "order_month": F.month(F.col(ts_col)),
-    }
-
-
 def safe_ratio(num: Column, den: Column) -> Column:
     """``num / den`` with the reference's divide-by-zero guard
     (3_Silver_to_Gold.py:90): denominator <= 0 is replaced by 1."""

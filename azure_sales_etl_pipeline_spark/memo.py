@@ -12,20 +12,19 @@ bound to the SparkContext that materialized its blocks: a hit from a
 later session would hand back a frame whose lineage points at a stopped
 context.
 
-Each entry is ``(value, releases)``: the JVM RDD handle of every
-``localCheckpoint``ed frame the build registered, and every tmp dir it
-created. ``DataFrame.unpersist`` goes through the cache manager and
-does not free ``localCheckpoint`` blocks; only the checkpoint's own RDD
-handle does.
+Each entry is ``(value, releases)``: every tmp dir the build created,
+and the JVM RDD handle of every ``rounds.cut`` it made. The build runs
+inside its own ``rounds.scope()``, so its cuts belong to the entry,
+never to the query scope that happened to pay for the build (the
+ownership contract is in ``operators/rounds.py``).
 
 A harness that times passes (``bench.py``, ``scripts/time_family.py``,
 ``scripts/count_jobs.py``, the ``perfbench`` workloads) calls
 ``evict_all()`` before every pass, so each pass pays every build exactly
-once, on whichever consumer runs first, and later consumers show their
-true marginal cost. ``perfbench`` finds the store by walking the
-package for module-level ``evict_*`` callables and the dict globals
-their code names, so ``evict_all`` keeps its name and names ``_STORE``
-in its own body.
+once. ``perfbench`` finds the store by walking the package for
+module-level ``evict_*`` callables and the dict globals their code
+names, so ``evict_all`` keeps its name and names ``_STORE`` in its own
+body.
 """
 
 from __future__ import annotations
@@ -35,20 +34,18 @@ import shutil
 import tempfile
 from typing import Callable
 
+from .operators import rounds
+
 #: (name, applicationId, sf_dir) -> (value, releases)
 _STORE: dict[tuple[str, str, str], tuple[object, list]] = {}
 
 
 class Releases:
-    """Handed to a ``shared`` build: registers what ``evict_all`` frees."""
+    """Handed to a ``shared`` build: registers what ``evict_all`` frees
+    besides the build's cuts."""
 
     def __init__(self) -> None:
         self.items: list = []
-
-    def frame(self, df):
-        """Register a ``localCheckpoint``ed frame's blocks; returns ``df``."""
-        self.items.append(df._jdf.queryExecution().analyzed().rdd())
-        return df
 
     def tmpdir(self, prefix: str) -> str:
         """Create a tmp dir that lives as long as the entry."""
@@ -59,13 +56,17 @@ class Releases:
 
 def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
     """The value memoized under ``name`` for this session and ``sf_dir``;
-    on a miss, ``build(releases)`` runs once and its value is kept."""
+    on a miss, ``build(releases)`` runs once and its value is kept
+    together with the cuts it made."""
     key = (name, spark.sparkContext.applicationId, sf_dir)
     hit = _STORE.get(key)
     if hit is None:
         releases = Releases()
         try:
-            value = build(releases)
+            with rounds.scope() as cuts:
+                value = build(releases)
+                releases.items += cuts
+                cuts.clear()  # the entry owns them now
         except BaseException:
             _free(releases.items)
             raise
@@ -73,21 +74,11 @@ def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
     return hit[0]
 
 
-def drop_checkpoint(df) -> None:
-    """Free a ``localCheckpoint``ed frame's blocks now (a build's
-    intermediate that no kept value reads any more)."""
-    _free([df._jdf.queryExecution().analyzed().rdd()])
-
-
 def _free(releases: list) -> None:
     for item in releases:
         if isinstance(item, str):
             shutil.rmtree(item, ignore_errors=True)
-            continue
-        try:
-            item.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
+    rounds.free([item for item in releases if not isinstance(item, str)])
 
 
 def evict_all(where: Callable[[tuple[str, str, str]], bool] | None = None) -> None:

@@ -237,7 +237,7 @@ def merge_fingerprint_index(
         merged = batch_idx
     # The survivors plan reads the CURRENT index files; pin the result
     # on executors before the overwrite below prunes them.
-    survivors = survivors.localCheckpoint(eager=True)
+    survivors = cut(survivors)
     overwrite_table(merged, index_path, commit_meta=commit_meta)
     return survivors, read_table(spark, index_path)
 
@@ -509,7 +509,7 @@ def erase_cascade(
         }
 
     with the root key set registered as doom-set ``"root"``. All doom
-    sets are resolved (and localCheckpointed) BEFORE any rewrite, then
+    sets are resolved (and cut) BEFORE any rewrite, then
     tables rewrite CHILDREN-FIRST: a crash between rewrites leaves a
     partially-erased but referentially-INTACT star (children vanish
     before their parents, so no intermediate state ever has a dangling
@@ -524,7 +524,7 @@ def erase_cascade(
     are what crosses stage boundaries. Returns parent-first
     ``[{table, rows_before, rows_removed, rows_after}, ...]``."""
     dooms: dict[str, DataFrame] = {
-        "root": root_keys.toDF("__doom_k").distinct().localCheckpoint()
+        "root": cut(root_keys.toDF("__doom_k").distinct())
     }
     plans: list[tuple[dict, DataFrame, DataFrame]] = []
     for st in steps:
@@ -532,11 +532,10 @@ def erase_cascade(
         doom = dooms[st["doom"]].withColumnRenamed("__doom_k", st["match"])
         if "emit" in st:
             col, name = st["emit"]
-            dooms[name] = (
+            dooms[name] = cut(
                 df.join(doom, st["match"], "left_semi")
                 .select(F.col(col).alias("__doom_k"))
                 .distinct()
-                .localCheckpoint()
             )
         plans.append((st, df, doom))
     report: list[dict] = []

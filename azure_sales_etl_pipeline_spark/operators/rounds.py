@@ -1,12 +1,32 @@
-"""Bounded Spark-side iteration in one place. CC, k-core, PageRank,
-label propagation, BFS, BPE and MMR run their rounds through
-``iterate``, which owns the lineage cut and its cadence, the per-round
+"""The package's one materialization policy, and bounded Spark-side
+iteration on top of it. Every eager cut in the package is ``cut(df)``;
+CC, k-core, PageRank, label propagation, BFS, BPE and MMR run their
+rounds through ``iterate``, which owns the cut cadence, the per-round
 probe, the convergence test and the bound.
 
 ``cut`` is the one lineage-cut policy: a reliable ``checkpoint()`` when
 the session has a checkpoint directory (Spark's ``spark.checkpoint.dir``
 on a shared FS: rounds survive executor loss on a preemptible fleet),
 else ``localCheckpoint()`` (fastest; an executor loss kills the loop).
+
+Every cut has an owner that frees it — the split between lineage and
+persistence of "Resilient Distributed Datasets" (NSDI 2012). While a
+``scope()`` is open on this thread, each ``cut`` registers with the
+innermost one, and the scope frees its cuts on exit; ``memo.shared``
+builds inside its own scope and adopts what it registered, so a memo
+entry owns its build's cuts until ``memo.evict_all``. A harness wraps
+each query call plus its final write in ``scope()``, so a query's cuts
+never outlive it. ``release(df)`` frees one cut now (a build's
+intermediate that no kept frame reads any more); ``iterate`` releases
+nothing, since a step may read every earlier round (BFS unions its
+rings). A cut made with no scope open has no owner: only a JVM GC
+frees it.
+
+Freeing goes through the cut's own RDD handle. ``DataFrame.unpersist``
+and ``spark.catalog.clearCache()`` go through the cache manager, which
+never saw a checkpoint, so both leave its blocks persistent; and Spark
+keeps a reliable checkpoint's files after the RDD is gone, so freeing
+deletes its ``getCheckpointFile()`` directory too.
 
 A probe rides the round's one materialization through ``observe()``, so
 it costs no ``count()`` job. Write probes as ``F.count(F.when(cond, 1))``
@@ -25,16 +45,71 @@ Spark Engine of Azure Synapse" (VLDB 2021).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation
+
+#: ``stack``: the open scopes on this thread, innermost last; each is
+#: the list of the cuts' JVM RDD handles it owns
+_SCOPES = threading.local()
 
 
 def cut(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` now and cut its lineage (policy above)."""
+    """Materialize ``df`` now and cut its lineage (policy above); the
+    innermost open scope owns the result."""
     if df.sparkSession.sparkContext.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=True)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(_handle(out))
+    return out
+
+
+@contextmanager
+def scope() -> Iterator[list]:
+    """Own every cut made on this thread until exit, then free them.
+    Yields the owned handles: a caller that moves them out (as
+    ``memo.shared`` does) takes over freeing them."""
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    owned: list = []
+    stack.append(owned)
+    try:
+        yield owned
+    finally:
+        stack.pop()
+        free(owned)
+
+
+def release(df: DataFrame) -> None:
+    """Free the cut ``df`` now and drop it from its owning scope."""
+    rdd = _handle(df)
+    rid = rdd.id()
+    for owned in getattr(_SCOPES, "stack", ()):
+        owned[:] = [h for h in owned if h.id() != rid]
+    free([rdd])
+
+
+def free(handles: list) -> None:
+    """Unpersist each cut's blocks and delete its checkpoint files."""
+    for rdd in handles:
+        try:
+            rdd.unpersist(False)
+            ckpt = rdd.getCheckpointFile()
+            if ckpt.isDefined():
+                path = SparkContext._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+                path.getFileSystem(rdd.context().hadoopConfiguration()).delete(path, True)
+        except Exception:  # noqa: BLE001 — session may already be gone
+            pass
+
+
+def _handle(df: DataFrame):
+    """The JVM RDD holding a cut's blocks (its plan is a LogicalRDD)."""
+    return df._jdf.queryExecution().analyzed().rdd()
 
 
 def iterate(

@@ -66,8 +66,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table_exists
 from ..functions import hash_diff, utcnow_naive
-from ..memo import drop_checkpoint
-from .rounds import cut
+from .rounds import cut, scope
 from .writer import overwrite_table, read_table, table_schema
 
 SCD_COLS = ("hash", "is_current", "effective_date", "end_date")
@@ -335,8 +334,8 @@ class SCD2Table:
                 ).alias("buckets")
             )
         obs = Observation()
-        joined = cut(joined.observe(obs, *metrics))
-        try:
+        with scope():  # frees every cut below on the way out
+            joined = cut(joined.observe(obs, *metrics))
             m = obs.get
             n_insert, n_update = m["INSERT"], m["UPDATE"]
             n_delete = m["ABSENT"] if expire_mode else 0
@@ -379,10 +378,7 @@ class SCD2Table:
                     .unionByName(current, allowMissingColumns=True)
                     .unionByName(new, allowMissingColumns=True)
                 )
-                try:
-                    staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
-                finally:
-                    drop_checkpoint(staged)
+                staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
             else:
                 # No pre-write materialization needed: overwrite_table
                 # writes a new version directory and flips the pointer
@@ -403,8 +399,6 @@ class SCD2Table:
                     )
                 )
             return stats
-        finally:
-            drop_checkpoint(joined)
 
 
 def _side(df: DataFrame, side: str, key: str) -> DataFrame:

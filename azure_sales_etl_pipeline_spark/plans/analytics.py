@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import hex_to_bigint_sql, local_df
+from ..operators.rounds import cut
 
 
 def revenue_rollup_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1105,7 +1106,7 @@ def order_drift_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned: the totals row and the final projection both consume the
     # bin counts; without materialization each branch re-scans orders
     # (|bins| rows to pin — bounded by the value range).
-    bins = (
+    bins = cut(
         orders.groupBy(
             F.floor(F.col("o_totalprice") / _HIST_BIN_WIDTH)
             .cast("bigint")
@@ -1115,7 +1116,6 @@ def order_drift_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(split, 1)).alias("n_before"),
             F.count(F.when(~split, 1)).alias("n_after"),
         )
-        .localCheckpoint()
     )
     totals = bins.agg(
         F.sum("n_before").alias("tot_before"),
@@ -1208,7 +1208,7 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row totals broadcast back."""
     orders = load_table(spark, sf_dir, "orders")
     split = F.col("o_orderdate") < F.lit(_DRIFT_SPLIT_DATE).cast("timestamp")
-    bins = (
+    bins = cut(
         orders.groupBy(
             F.floor(F.col("o_totalprice") / _HIST_BIN_WIDTH)
             .cast("bigint")
@@ -1218,7 +1218,6 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(split, 1)).alias("n_before"),
             F.count(F.when(~split, 1)).alias("n_after"),
         )
-        .localCheckpoint()
     )
     totals = bins.agg(
         F.sum("n_before").alias("tot_before"),
@@ -1294,14 +1293,13 @@ def supplier_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS DECIMAL(18,4))), 2) * 100 AS BIGINT)"
         ).alias("revenue_cents")
     )
-    # Eager localCheckpoint pins the (pid, row) layout: the rank branch
+    # The eager cut pins the (pid, row) layout: the rank branch
     # and the totals branch below must see the SAME range split (the
     # sampled boundaries are not guaranteed identical across
     # re-evaluations — same trap documented at mlprep.token_budget_shards).
-    ranged = (
+    ranged = cut(
         per_supp.repartitionByRange(_GINI_RANGES, "revenue_cents", "l_suppkey")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("pcnt"))
     offsets = (
@@ -1688,13 +1686,12 @@ def priority_status_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     pos = F.col("o_orderstatus") == "F"
-    cats = (
+    cats = cut(
         orders.groupBy("o_orderpriority")
         .agg(
             F.count(F.when(pos, 1)).cast("bigint").alias("n_pos"),
             F.count(F.when(~pos, 1)).cast("bigint").alias("n_neg"),
         )
-        .localCheckpoint()
     )
     totals = cats.agg(
         F.sum("n_pos").cast("bigint").alias("tot_pos"),
@@ -1774,11 +1771,10 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit = F.substring(
         F.floor(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 1, 1
     ).cast("int")
-    counts = (
+    counts = cut(
         orders.select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-        .localCheckpoint()
     )
     total = counts.agg(F.sum("n_orders").cast("bigint").alias("tot"))
     return (
@@ -1852,7 +1848,7 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import hex_to_bigint_sql
 
     events = load_table(spark, sf_dir, "events")
-    hashes = (
+    hashes = cut(
         events.where(F.col("user_id").isNotNull())  # NULLs sort FIRST on
         # Spark / LAST on DuckDB and must never occupy a sketch slot —
         # same filter as the streamed fold's merge_kmin
@@ -1862,7 +1858,7 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .distinct()
-        .localCheckpoint()  # feeds the top-k AND the exact count
+        # feeds the top-k AND the exact count
     )
     kth = (
         hashes.orderBy("h")
@@ -2083,13 +2079,12 @@ def event_weekday_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import LN_Z_SQL, ln_k_sql, ln_m_sql
 
     events = load_table(spark, sf_dir, "events")
-    cells = (
+    cells = cut(
         events.select(
             "event_type", F.expr(_WEEKDAY_SPARK).cast("int").alias("weekday")
         )
         .groupBy("event_type", "weekday")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_xy"))
-        .localCheckpoint()
     )
     mx = cells.groupBy("event_type").agg(F.sum("n_xy").cast("bigint").alias("n_x"))
     my = cells.groupBy("weekday").agg(F.sum("n_xy").cast("bigint").alias("n_y"))
@@ -2283,12 +2278,11 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("metric", "value"),
     )
-    # Eager localCheckpoint pins the (pid, row) layout: rank and count
+    # The eager cut pins the (pid, row) layout: rank and count
     # branches must see the SAME sampled range split (the gini trap).
-    ranged = (
+    ranged = cut(
         stacked.repartitionByRange(_RFM_RANGES, "metric", "value", "o_custkey")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     counts = ranged.groupBy("metric", "pid").agg(
         F.count(F.lit(1)).alias("pcnt")
@@ -2394,10 +2388,9 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).alias("x")
     )
-    ranged = (
+    ranged = cut(
         daily.repartitionByRange(_CUSUM_RANGES, "day")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     ptot = ranged.groupBy("pid").agg(
         F.count(F.lit(1)).alias("pcnt"), F.sum("x").alias("psum")
@@ -2483,14 +2476,13 @@ def seasonality_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt is a BASIC op, unlike the banned libm pow/ln.
 
     Shape per lag: one map-side-combined hash-agg to day grain (shared
-    via localCheckpoint), one self equi-join on the shifted key, one
+    via cut), one self equi-join on the shifted key, one
     scalar aggregate. Day grain is calendar-bounded; nothing here grows
     with row count."""
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    daily = cut(
         orders.groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()
     )
     out = None
     for lag in _AUTOCORR_LAGS:
@@ -2656,7 +2648,7 @@ def order_priority_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
        group; past that, grain the metric per day/segment and average,
        or accept the 1-ulp double path — documented, not silent).
 
-    The eager localCheckpoint pins the sampled range boundaries so the
+    The eager cut pins the sampled range boundaries so the
     cumsum branch and the totals branch see the SAME pid layout (the
     ``token_budget_shards`` lesson — correctness must not ride on
     ReusedExchange).
@@ -2670,10 +2662,9 @@ def order_priority_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     vg = base.groupBy("o_orderstatus", "score").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("pos").alias("pos")
     )
-    ranged = (
+    ranged = cut(
         vg.repartitionByRange(_AUC_RANGES, "o_orderstatus", "score")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     local_below = F.coalesce(
         F.sum("cnt").over(
@@ -3000,10 +2991,9 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin the (pid, row) layout — same materialization discipline as
     # token_budget_shards: the window branch and the totals branch must
     # see the SAME sampled range boundaries.
-    ranged = (
+    ranged = cut(
         vals.repartitionByRange(_KS_RANGES, "v_cents")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     w = W.partitionBy("pid").orderBy("v_cents").rowsBetween(
         W.unboundedPreceding, 0
@@ -3117,13 +3107,13 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .mlprep import _prefix_offsets
 
     orders = load_table(spark, sf_dir, "orders")
-    # localCheckpoint the tiny day grain AND the slope grain: days fans
+    # Cut the tiny day grain AND the slope grain: days fans
     # out three ways (both join sides + the n_days scalar) and slopes
     # two ways (median branch + n_pairs scalar) — and repartitionByRange
     # adds a SAMPLING pass — so without the cuts the orders scan ran 3×
     # and the ~3M-pair broadcast join ~3× (measured 22.9 s at sf0.1;
     # 2.6 s with the cuts).
-    days = (
+    days = cut(
         orders.groupBy(
             F.datediff(F.col("o_orderdate"), F.lit(_TS_EPOCH).cast("date"))
             .cast("bigint")
@@ -3133,7 +3123,6 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)")
             .alias("y")
         )
-        .localCheckpoint()
     )
     a, b = days.alias("a"), days.alias("b")
     # The slopes are ~100% DISTINCT (high-resolution milli-cent values),
@@ -3143,7 +3132,7 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-repartition once, rank = per-partition row_number +
     # per-partition offsets. Still zero single-partition windows; the
     # per-partition sort is bounded by n_pairs/_TS_RANGES.
-    slopes = (
+    slopes = cut(
         a.join(F.broadcast(b), F.col("a.x") < F.col("b.x"))
         .select(
             # The 1000× widening used to run in DECIMAL(38,0) — measured
@@ -3164,7 +3153,6 @@ def theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartitionByRange(_TS_RANGES, "slope_milli")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     w_rn = Window.partitionBy("pid").orderBy("slope_milli")
     totals = slopes.groupBy("pid").agg(F.count(F.lit(1)).alias("pcnt"))
@@ -3230,7 +3218,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE 1-row aggregate (no median machinery); ties re-aggregate the
     2.4k-row day table."""
     orders = load_table(spark, sf_dir, "orders")
-    days = (
+    days = cut(
         orders.groupBy(
             F.datediff(F.col("o_orderdate"), F.lit(_TS_EPOCH).cast("date"))
             .cast("bigint")
@@ -3240,7 +3228,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)")
             .alias("y")
         )
-        .localCheckpoint()
     )
     a, b = days.alias("a"), days.alias("b")
     s_stat = (
@@ -3622,10 +3609,9 @@ def spearman_balance_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def rank2(col: str) -> DataFrame:
         vals = rows.groupBy(col).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        ranged = (
+        ranged = cut(
             vals.repartitionByRange(_SPEAR_RANGES, col)
             .withColumn("pid", F.spark_partition_id())
-            .localCheckpoint()
         )
         w = (
             Window.partitionBy("pid")
@@ -3890,12 +3876,12 @@ def seasonal_decompose_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderdate", F.col("o_totalprice").cast("decimal(18,2)").alias("p")
     )
-    daily = (
+    daily = cut(
         orders.groupBy(F.col("o_orderdate").alias("d"))
         .agg(
             (F.round(F.sum("p"), 2) * 100).cast("bigint").alias("rev_cents")
         )
-        .localCheckpoint()  # the bounded series feeds 3 consumers below
+        # the bounded series feeds 3 consumers below
     )
     nbr = daily.select(F.col("d").alias("d2"), F.col("rev_cents").alias("r2"))
     trend = (

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from .. import memo
 from ..catalog import load_table
+from ..operators.rounds import cut
 
 _WS = r"\s+"
 
@@ -108,7 +109,7 @@ def jaccard_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     the optimizer barrier the CC build needs (filtering a checkpoint
     scan cannot be pushed into the join)."""
 
-    def build(keep):
+    def build(_keep):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", F.array_distinct(_tokens()).alias("toks")
         )
@@ -121,12 +122,12 @@ def jaccard_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
         union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-        return keep.frame(
+        return cut(
             pairs.select(
                 F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"),
                 F.round(inter / union, 4).alias("jaccard"),
-            ).localCheckpoint(eager=True)
+            )
         )
 
     return memo.shared("jaccard_pairs", spark, sf_dir, build)
@@ -217,10 +218,8 @@ def simhash_sigs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simhash_sigs",
         spark,
         sf_dir,
-        lambda keep: keep.frame(
-            _simhash_bits(
-                spread_for_cpu(load_table(spark, sf_dir, "documents"))
-            ).localCheckpoint(eager=True)
+        lambda _keep: cut(
+            _simhash_bits(spread_for_cpu(load_table(spark, sf_dir, "documents")))
         ),
     )
 
@@ -534,7 +533,7 @@ def shingle3_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     map across cores."""
     from ..functions import plan_barrier, spread_for_cpu
 
-    def build(keep):
+    def build(_keep):
         docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
         toks = _tokens()
         grams = F.array_distinct(
@@ -545,14 +544,13 @@ def shingle3_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        return keep.frame(
+        return cut(
             plan_barrier(
                 docs.where(F.size(toks) >= _CONT_K).select(
                     "doc_id", toks.alias("t")
                 )
             )
             .select("doc_id", F.explode(grams).alias("g"))
-            .localCheckpoint()
         )
 
     return memo.shared("shingle3", spark, sf_dir, build)
@@ -571,31 +569,32 @@ def _staged_shingles_and_bands(spark: SparkSession, sf_dir: str):
     per build steady at sf0.1."""
     from ..functions import plan_barrier, spread_for_cpu
 
-    def build(keep):
+    def build(_keep):
         docs = spread_for_cpu(load_table(spark, sf_dir, "documents"))
         r = _MINHASH_K // _LSH_BANDS
-        staged = keep.frame(
+        staged = cut(
             plan_barrier(
                 plan_barrier(docs.select("doc_id", _tokens().alias("t"))).select(
                     "doc_id", F.array_distinct(_shingles(F.col("t"))).alias("sh")
                 )
             )
             .withColumn("hs", _hash_slices(F.col("sh")))
-            .localCheckpoint()
         )
         sigs = [_sig_slice(F.col("hs"), i) for i in range(_MINHASH_K)]
-        bands = staged.select(
-            "doc_id",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.concat_ws("|", *[sigs[b * r + j] for j in range(r)])
-                        for b in range(_LSH_BANDS)
-                    ]
-                )
-            ).alias("band_idx", "band_hash"),
-        ).localCheckpoint()
-        return staged, keep.frame(bands)
+        bands = cut(
+            staged.select(
+                "doc_id",
+                F.posexplode(
+                    F.array(
+                        *[
+                            F.concat_ws("|", *[sigs[b * r + j] for j in range(r)])
+                            for b in range(_LSH_BANDS)
+                        ]
+                    )
+                ).alias("band_idx", "band_hash"),
+            )
+        )
+        return staged, bands
 
     return memo.shared("minhash_stage", spark, sf_dir, build)
 
@@ -745,11 +744,11 @@ def minhash_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 new_pairs = bucket_pairs(batch, batch)
                 merged = batch
             pair_frames.append(
-                new_pairs.distinct().localCheckpoint(eager=True)
+                cut(new_pairs.distinct())
             )
             overwrite_table(merged, index_path)
         cand = pair_frames[0].unionByName(pair_frames[1]).distinct()
-        return _jaccard_verify(cand, staged).localCheckpoint(eager=True)
+        return cut(_jaccard_verify(cand, staged))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1249,10 +1248,9 @@ def minhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..functions import plan_barrier
 
-    staged = (
+    staged = cut(
         plan_barrier(docs.select("doc_id", _tokens().alias("t")))
         .select("doc_id", F.array_distinct(_shingles(F.col("t"))).alias("sh"))
-        .localCheckpoint()
     )
     inv = staged.select("doc_id", F.explode("sh").alias("shingle"))
     pairs = (
@@ -1420,10 +1418,10 @@ def golden_part_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     collation on both engines)."""
     from ..operators.maintenance import _cc_min_label
 
-    pairs = (
+    pairs = cut(
         fuzzy_name_pairs(spark, sf_dir)
         .select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-        .localCheckpoint()  # feeds both CC directions; blocks re-running the fuzzy join
+        # feeds both CC directions; blocks re-running the fuzzy join
     )
     edge_labels = _cc_min_label(pairs)
     parts = load_table(spark, sf_dir, "part")
@@ -1801,10 +1799,10 @@ def record_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact), pair scores are 4-term integer adds, and the thresholds are
     integer micronat constants. Output: review-band-and-above pairs
     with per-field agreement flags."""
-    # localCheckpoint: the parts projection feeds the freq pass, both
+    # cut: the parts projection feeds the freq pass, both
     # blocking-join sides, and both attribute join-backs — ~6 jobs
     # otherwise re-running the scan+split lineage each time.
-    parts = _rl_parts(spark, sf_dir).localCheckpoint()
+    parts = cut(_rl_parts(spark, sf_dir))
     # ONE stacked pass for all field frequencies (field, value) — the
     # per-field loop ran |fields| separate scan+agg jobs. String-cast
     # is injective for every compared field, so the per-value counts

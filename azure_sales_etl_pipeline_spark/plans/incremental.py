@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..catalog import load_table
 from ..functions import local_df
+from ..operators.rounds import cut
 
 _T1 = dt.datetime(2024, 1, 1)
 _T2 = dt.datetime(2024, 2, 1)
@@ -83,8 +84,8 @@ def scd2_two_batch_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             "end_date",
         )
         # Materialize distributed BEFORE the temp dir disappears —
-        # localCheckpoint pins blocks on executors, no driver collect.
-        return hist.localCheckpoint(eager=True)
+        # the cut pins blocks on executors, no driver collect.
+        return cut(hist)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -193,7 +194,7 @@ def scd2_delete_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
             "effective_date",
             "end_date",
         )
-        return hist.localCheckpoint(eager=True)
+        return cut(hist)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -250,7 +251,7 @@ def watermark_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch1 = events.where(F.col("event_id") < 500)
         store.advance_from(batch1, "ts", "events")
         batch2 = store.cut(events, "ts", "events")
-        return batch2.localCheckpoint(eager=True)
+        return cut(batch2)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -412,7 +413,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ing.run(f"{tmp}/landing2")
 
         bronze = read_table(spark, f"{tmp}/bronze/orders").drop("source_file")
-        return bronze.localCheckpoint(eager=True)
+        return cut(bronze)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -453,9 +454,7 @@ def dedup_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, index = merge_fingerprint_index(
             spark, f"{tmp}/index", docs.where(F.col("doc_id") > mid)
         )
-        return index.select(
-            "fingerprint", "keeper_doc_id", "dup_count"
-        ).localCheckpoint(eager=True)
+        return cut(index.select("fingerprint", "keeper_doc_id", "dup_count"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -500,12 +499,12 @@ def bm25_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
         ),
     ).otherwise(F.array().cast("array<string>"))
-    tf = (
+    tf = cut(
         docs.select("doc_id", toks.alias("toks"))
         .select("doc_id", F.explode(bigrams).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint(eager=True)  # both batches slice this one table
+        # both batches slice this one table
     )
     from ..operators.maintenance import merge_aggregate
 
@@ -527,7 +526,7 @@ def bm25_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             sums=["tf"],
             count_col="df",
         )
-        return (
+        return cut(
             stats.orderBy(
                 F.col("df").desc(), F.col("tf").desc(), F.col("token").asc()
             )
@@ -537,7 +536,6 @@ def bm25_index_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("df").cast("bigint").alias("df"),
                 F.col("tf").cast("bigint").alias("tf_total"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -607,10 +605,9 @@ def cluster_labels_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # substrate (dedup.jaccard_pairs_raw — same barrier, built once
     # per pass across its three consumers).
     pairs = jaccard_pairs_raw(spark, sf_dir)
-    edges = (
+    edges = cut(
         pairs.where(F.col("jaccard") >= _CC_JACCARD_MIN)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     tmp = tempfile.mkdtemp(prefix="ccidx_q_")
     try:
@@ -630,7 +627,7 @@ def cluster_labels_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             docs.where(F.col("doc_id") > mid),
         )
-        return final.select("doc_id", "cluster_id").localCheckpoint(eager=True)
+        return cut(final.select("doc_id", "cluster_id"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -702,7 +699,7 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("change_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
         )
-        return diff.localCheckpoint(eager=True)
+        return cut(diff)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -765,7 +762,7 @@ def partition_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("revenue_cents"),
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -833,7 +830,7 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for label, ts in (("mid", _T_MID), ("final", _T3))
         ]
-        return snaps[0].unionByName(snaps[1]).localCheckpoint(eager=True)
+        return cut(snaps[0].unionByName(snaps[1]))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -901,7 +898,7 @@ def late_dimension_inferred(spark: SparkSession, sf_dir: str) -> DataFrame:
             "effective_date",
             "end_date",
         )
-        return hist.localCheckpoint(eager=True)
+        return cut(hist)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1029,7 +1026,7 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "effective_date",
         "end_date",
     )
-    return hist.localCheckpoint(eager=True)
+    return cut(hist)
 
 
 _PIPE_E2E_SQL = f"""
@@ -1063,7 +1060,7 @@ def pipeline_gold_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.writer import read_table
 
     mart = read_table(spark, pipe.catalog.path("gold", "customer_segments"))
-    return mart.localCheckpoint(eager=True)
+    return cut(mart)
 
 
 _PIPE_GOLD_SQL = """
@@ -1082,7 +1079,7 @@ def pipeline_run_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     outcome per run with stage-appropriate counts. The oracle derives
     every count from ``customer`` with the same modular predicates."""
     pipe = _demo_pipeline_cached(spark, sf_dir)
-    return pipe.run_log().localCheckpoint(eager=True)
+    return cut(pipe.run_log())
 
 
 _PIPE_LOG_SQL = f"""
@@ -1232,14 +1229,16 @@ def fact_temporal_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined = dim.enrich_asof(facts, "o_custkey", "fact_ts").withColumn(
             "segment_at_fact", F.col("dim_c_mktsegment")
         )
-        return joined.select(
-            F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
-            F.col("o_custkey").cast("bigint").alias("o_custkey"),
-            F.when(F.col("o_orderkey") % 2 == 0, "mid")
-            .otherwise("late")
-            .alias("fact_label"),
-            "segment_at_fact",
-        ).localCheckpoint(eager=True)
+        return cut(
+            joined.select(
+                F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
+                F.col("o_custkey").cast("bigint").alias("o_custkey"),
+                F.when(F.col("o_orderkey") % 2 == 0, "mid")
+                .otherwise("late")
+                .alias("fact_label"),
+                "segment_at_fact",
+            )
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

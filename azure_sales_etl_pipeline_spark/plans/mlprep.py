@@ -189,17 +189,16 @@ def token_budget_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens")
     )
-    # The eager localCheckpoint PINS the (pid, row) assignment: the
+    # The eager cut PINS the (pid, row) assignment: the
     # window branch and the totals branch below both consume `ranged`,
     # and without materialization each would re-evaluate the range
     # partitioner independently — whose sampled boundaries are not
     # guaranteed identical across evaluations, so the offsets could
     # describe a different pid layout than the cumsum rows (silently
     # wrong shards). Correctness here must not ride on ReusedExchange.
-    ranged = (
+    ranged = rounds.cut(
         docs.repartitionByRange(_SHARD_RANGES, "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     local_cum = F.sum("n_tokens").over(
         W.partitionBy("pid").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
@@ -274,10 +273,9 @@ def _pack_segments(docs: DataFrame) -> DataFrame:
     # Same materialization discipline as token_budget_shards: pin the
     # (pid, row) layout so the cumsum branch and the totals branch
     # describe the same partitioning.
-    ranged = (
+    ranged = rounds.cut(
         docs.repartitionByRange(_SHARD_RANGES, "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     local_cum = F.sum("n_tokens").over(
         W.partitionBy("pid").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
@@ -560,7 +558,7 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each stage keeps its own audited plan (this function
     adds only semi-/anti-joins on doc_id between stages); survivor
-    frames are localCheckpointed so stage N+1 never re-runs stages
+    frames are cut so stage N+1 never re-runs stages
     1..N; the only driver-side values are the six stage counts — the
     report IS control-plane data. At 100 TB the checkpoints become the
     persisted inter-stage tables every curation run materializes
@@ -573,7 +571,7 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    # Every stage count rides that stage's (eager) localCheckpoint via
+    # Every stage count rides that stage's (eager) cut via
     # observe() — the per-stage count() actions were a second scan of
     # each checkpointed survivor set, and n0 was a separate scan of the
     # corpus. One CollectMetrics above the semi-join's probe side
@@ -586,11 +584,10 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s1 = (
+    s1 = rounds.cut(
         docs.observe(o0, F.count(F.lit(1)).alias("n"))
         .join(keepers, "doc_id", "left_semi")
         .observe(o1, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n0, n1 = int(o0.get["n"]), int(o1.get["n"])
 
@@ -605,10 +602,9 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     o2 = Observation()
-    s2 = (
+    s2 = rounds.cut(
         s1.join(near_drops, "doc_id", "left_anti")
         .observe(o2, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n2 = int(o2.get["n"])
 
@@ -616,18 +612,16 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         _rebuilt_agg().alias("text")
     )
     o3 = Observation()
-    s3 = (
+    s3 = rounds.cut(
         rebuilt.where(F.col("text") != "")
         .observe(o3, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n3 = int(o3.get["n"])
 
     o4 = Observation()
-    s4 = (
+    s4 = rounds.cut(
         s3.where(_quality_exprs()["keep"])
         .observe(o4, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n4 = int(o4.get["n"])
 
@@ -635,10 +629,9 @@ def curation_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clean_ids = _bloom(spark, sf_dir).select("doc_id")
     o5 = Observation()
-    s5 = (
+    s5 = rounds.cut(
         s4.join(clean_ids, "doc_id", "left_semi")
         .observe(o5, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n5 = int(o5.get["n"])
 
@@ -794,11 +787,10 @@ def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(keep):
         path = f"{keep.tmpdir('affinity_cache_')}/edges"
-        li = (
+        li = rounds.cut(
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
             .distinct()
-            .localCheckpoint()
         )
         pairs = (
             li.alias("a")
@@ -815,6 +807,7 @@ def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
         )
         edges.write.mode("overwrite").parquet(path)
+        rounds.release(li)  # the entry keeps the parquet table, not the cut
         return path
 
     return spark.read.parquet(memo.shared("affinity_edges", spark, sf_dir, build))
@@ -833,7 +826,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(keep):
         path = f"{keep.tmpdir('cc_cache_')}/clusters"
-        _compute_dedup_clusters(spark, sf_dir).write.mode("overwrite").parquet(path)
+        with rounds.scope():  # the entry keeps the parquet table, not the rounds
+            _compute_dedup_clusters(spark, sf_dir).write.mode("overwrite").parquet(path)
         return path
 
     return spark.read.parquet(memo.shared("dedup_clusters", spark, sf_dir, build))
@@ -1761,7 +1755,7 @@ def global_shuffle_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHIN each partition, plus per-partition row-count offsets from
     the tiny (n_ranges)-row totals table — no global single-partition
     window anywhere; Spark's range sort IS the distributed shuffle. The
-    eager ``localCheckpoint`` pins the sampled range boundaries for the
+    eager ``rounds.cut`` pins the sampled range boundaries for the
     same two-consumer reason documented on ``token_budget_shards``.
     """
     from pyspark.sql.window import Window as W
@@ -1772,10 +1766,9 @@ def global_shuffle_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             "skey"
         ),
     )
-    ranged = (
+    ranged = rounds.cut(
         docs.repartitionByRange(_SHARD_RANGES, "skey", "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     local_rn = F.row_number().over(W.partitionBy("pid").orderBy("skey", "doc_id"))
     staged = ranged.withColumn("local_rn", local_rn)
@@ -1972,7 +1965,7 @@ def wds_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("payload_sha_sum"),
             )
         )
-        return agg.localCheckpoint(eager=True)
+        return rounds.cut(agg)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -2363,11 +2356,10 @@ def part_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-orders) kills the random-co-occurrence tail before the two
     frequency joins; the top-20 is TakeOrderedAndProject (per-partition
     heaps + driver merge), never a global sort."""
-    li = (
+    li = rounds.cut(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint()
     )
     n_orders = li.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
@@ -3323,12 +3315,12 @@ def epoch_waterfill_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     it should be: it feeds a training launcher, not a shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
-    t = (
+    t = rounds.cut(
         docs.select("source", F.size(toks).alias("nt"))
         .groupBy("source")
         .agg(F.sum("nt").cast("bigint").alias("t"))
         .withColumn("c", (F.lit(_EPOCH_CAP) * F.col("t")).cast("bigint"))
-        .localCheckpoint()  # |sources| rows feed 3 joins below
+        # |sources| rows feed 3 joins below
     )
     tot = t.agg(
         F.sum("t").cast("bigint").alias("tot"),
@@ -3490,7 +3482,7 @@ def logreg_probe_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_tok = F.size(toks)
-    feats = (
+    feats = rounds.cut(
         docs.select(
             n_tok.alias("n"),
             F.size(F.array_distinct(toks)).alias("nd"),
@@ -3506,7 +3498,7 @@ def logreg_probe_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "x3"
             ),
         )
-        .localCheckpoint()  # one materialization feeds all GD rounds
+        # one materialization feeds all GD rounds
     )
     d = 4
     w = [0.0] * d
@@ -3703,12 +3695,11 @@ def _doremi_from_counts(spark: SparkSession, ct: DataFrame) -> DataFrame:
     tots = ct.groupBy("source").agg(F.sum("c").cast("bigint").alias("tot"))
     # (source, token, c, tot, q9) — read by the reference pass and by
     # every round's mixture+loss pass: compute once.
-    ctq = (
+    ctq = rounds.cut(
         ct.join(tots, "source")
         .withColumn(
             "q9", F.expr(f"CAST(({_DOREMI_Q9} * c) DIV tot AS BIGINT)")
         )
-        .localCheckpoint()
     )
     tot_by_src = {r["source"]: int(r["tot"]) for r in tots.collect()}
 
@@ -3907,7 +3898,7 @@ def doremi_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.maintenance import merge_aggregate
 
-    positions = _doremi_positions(spark, sf_dir).localCheckpoint()
+    positions = rounds.cut(_doremi_positions(spark, sf_dir))
     mid = positions.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
     tmp = tempfile.mkdtemp(prefix="doremict_")
     try:
@@ -3922,7 +3913,7 @@ def doremi_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 count_col="c",
             )
         ct = state.select("source", "token", F.col("c").cast("bigint").alias("c"))
-        return _doremi_from_counts(spark, ct).localCheckpoint(eager=True)
+        return rounds.cut(_doremi_from_counts(spark, ct))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..operators.rounds import cut
 
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,12 +403,11 @@ def media_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Media bytes never shuffle (the [[media_dedup]]
     discipline: only doc_ids, dims, and counts move)."""
     media = _payloads(spark, sf_dir)
-    feats = (
+    feats = cut(
         _align_sign_rows(media)
         .groupBy("doc_id", "dim")
         .agg(F.sum("sign").cast("bigint").alias("val"))
         # read three times (media leg, caption leg, norms) — compute once
-        .localCheckpoint()
     )
     docs = load_table(spark, sf_dir, "documents")
     return _align_report(_align_score(_align_pairs(docs), feats))
@@ -570,7 +570,7 @@ def media_alignment_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sums=["val"],
                 count_col="c",
             )
-            # No localCheckpoint here: merge_aggregate already returns a
+            # No cut here: merge_aggregate already returns a
             # read of the MATERIALIZED parquet mart, so a checkpoint
             # would be a second copy of the same bytes in the block
             # manager (growing with the mart at scale). A/B at sf0.1:
@@ -580,11 +580,11 @@ def media_alignment_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "dim", F.col("val").cast("bigint").alias("val")
             )
             batch_pairs = _align_pairs(docs.where(pred))
-            candidates = (
+            candidates = cut(
                 batch_pairs
                 if pending is None
                 else batch_pairs.unionByName(pending)
-            ).localCheckpoint()
+            )
             # Restrict the mart to the scoring frontier BEFORE the norm
             # aggregate: _align_score groups feats by doc_id for norms,
             # and without this semi-join every batch would re-aggregate
@@ -598,12 +598,12 @@ def media_alignment_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
             )
             frontier_feats = feats.join(frontier_ids, "doc_id", "left_semi")
-            per = _align_score(candidates, frontier_feats).localCheckpoint()
+            per = cut(_align_score(candidates, frontier_feats))
             scored = per if scored is None else scored.unionByName(per)
             # not-yet-scoreable pairs wait for their caption's batch
-            pending = candidates.join(
-                per.select("pair_id"), "pair_id", "left_anti"
-            ).localCheckpoint()
+            pending = cut(
+                candidates.join(per.select("pair_id"), "pair_id", "left_anti")
+            )
         return _align_report(scored)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

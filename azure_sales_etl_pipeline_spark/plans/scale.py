@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..operators.rounds import cut
 from .temporal import _ASOF_SQL
 
 _N_SALTS = 32
@@ -358,7 +359,7 @@ def bucketed_join_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated fact-to-fact join paid as a local merge instead of a full
     shuffle of both tables.
 
-    The join-agg executes eagerly (localCheckpoint) while the
+    The join-agg executes eagerly (cut) while the
     no-broadcast conf and the bucketed tables exist; the driver then
     hashes the pinned result. Quantities are integral doubles in the
     testdata, so the sum lands exactly on both engines as BIGINT."""
@@ -381,7 +382,7 @@ def bucketed_join_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("l_quantity").cast("bigint").alias("total_qty"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -484,11 +485,10 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer without it (ReusedExchange is not guaranteed across the
     # branches). |keys| rows — cheap to pin, and the corpus scan runs
     # exactly once.
-    counts = (
+    counts = cut(
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     totals = counts.agg(
         F.count(F.lit(1)).alias("n_keys"),

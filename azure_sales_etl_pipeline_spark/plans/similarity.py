@@ -860,15 +860,15 @@ def _norm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical; the projection feeds ~7 downstream jobs per
     consumer."""
 
-    def build(keep):
+    def build(_keep):
         emb = load_table(spark, sf_dir, "embeddings")
-        return keep.frame(
+        return rounds.cut(
             emb.select(
                 "vec_id",
                 "label",
                 _as_double("embedding").alias("vec"),
                 _as_qn(_as_double("embedding")).alias("qfull"),
-            ).localCheckpoint()
+            )
         )
 
     return memo.shared("norm_corpus", spark, sf_dir, build)
@@ -1356,16 +1356,16 @@ def embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize-once index the whole ANN family probes); assignment is
     the usual broadcast-centroid narrow map; the audit is ONE
     cluster-key aggregate plus a broadcast (k-row) join-back and a
-    second aggregate over the same assignment (localCheckpointed —
+    second aggregate over the same assignment (cut —
     computed once). Output is k rows — control-plane sized."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = plan_barrier(
         emb.select("vec_id", _as_q(_as_double("embedding")).alias("q"))
     )
     centroids = _shared_centroids(spark, sf_dir, corpus)
-    assigned = _coarse_assign_np(
-        corpus, centroids, keep=[], emit=("cluster", "d2")
-    ).localCheckpoint(eager=True)
+    assigned = rounds.cut(
+        _coarse_assign_np(corpus, centroids, keep=[], emit=("cluster", "d2"))
+    )
     per = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("d2").cast("decimal(38,0)")).alias("sum_d2"),
@@ -1985,13 +1985,15 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse = _train_codebooks(emb_q.select("vec_id", "qfull"), "qfull", 1)[0]
     # Assign + residual in one Arrow-batched narrow pass; checkpoint —
     # it feeds the PQ training loop (one job per round) AND the encode.
-    assigned = _coarse_assign_np(
-        emb_q,
-        coarse,
-        qcol="qfull",
-        keep=["vec_id bigint", "label int", "vec array<double>"],
-        emit=("cluster", "res"),
-    ).localCheckpoint()
+    assigned = rounds.cut(
+        _coarse_assign_np(
+            emb_q,
+            coarse,
+            qcol="qfull",
+            keep=["vec_id bigint", "label int", "vec array<double>"],
+            emit=("cluster", "res"),
+        )
+    )
     books = _train_codebooks(assigned.select("vec_id", "qres"), "qres", _PQ_M)
     coded = _pq_encode_np(
         assigned,
@@ -2269,11 +2271,11 @@ def _sparse_weighted_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sparse_terms",
         spark,
         sf_dir,
-        lambda keep: _build_sparse_terms(spark, sf_dir, keep),
+        lambda _keep: _build_sparse_terms(spark, sf_dir),
     )
 
 
-def _build_sparse_terms(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+def _build_sparse_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import LN_Z_SQL, ln_from_kz_sql, ln_k_sql, ln_m_sql
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2289,15 +2291,14 @@ def _build_sparse_terms(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
         docs.select("doc_id", toks.alias("toks"))
         .select("doc_id", F.explode(bigrams).alias("token"))
     )
-    tf = (
+    tf = rounds.cut(
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
     )
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     arg = "((n_docs + 1.0e0) / (df + 1.0e0))"
-    sw = (
+    sw = rounds.cut(
         tf.join(dfreq, "token")
         .crossJoin(F.broadcast(n))
         .where(F.col("df") * 2 <= F.col("n_docs"))
@@ -2317,12 +2318,11 @@ def _build_sparse_terms(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
             ).alias("w"),
         )
         # one materialization for all consumers (eager)
-        .localCheckpoint()
     )
     # sw is materialized; no kept frame reads the intermediate tf
-    # checkpoint any more — free its blocks now.
-    memo.drop_checkpoint(tf)
-    return keep.frame(sw)
+    # cut any more — free it now.
+    rounds.release(tf)
+    return sw
 
 
 def _sparse_ret_cte() -> str:
@@ -3064,9 +3064,8 @@ def late_interaction_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     after retrieval is queries×depth-bounded — the same discipline as
     [[mmr_rerank_topk]]."""
     docs = load_table(spark, sf_dir, "documents")
-    first = _first_stage_candidates(spark, sf_dir).localCheckpoint(
-        eager=True
-    )  # |Q|·_CE_DEPTH rows, consumed twice (candidate ids + pair join)
+    # |Q|·_CE_DEPTH rows, consumed twice (candidate ids + pair join)
+    first = rounds.cut(_first_stage_candidates(spark, sf_dir))
     tv = _token_vectors(docs)
     split_toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     qtok = (

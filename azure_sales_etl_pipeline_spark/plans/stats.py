@@ -46,6 +46,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import _dlit, hex_to_bigint_sql, local_df, plan_barrier
+from ..operators.rounds import cut
 
 # ---------------------------------------------------------------------------
 # Poisson bootstrap confidence interval
@@ -334,7 +335,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus-sized work ends at the (winner, loser)
     groupBy — everything after runs on the ≤ |brands|² pair-count table
-    (localCheckpointed: each round would otherwise replay the full
+    (cut: each round would otherwise replay the full
     lineage). Per round, each denominator term n_ij/(p_i+p_j) is
     FLOORED to integer micro-units before the Σ_j sum and each updated
     strength re-floored before the normalization sum, so every
@@ -504,7 +505,7 @@ def bradley_terry_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.maintenance import merge_aggregate
 
-    games = _bt_games(spark, sf_dir).localCheckpoint()
+    games = cut(_bt_games(spark, sf_dir))
     mid = games.agg(F.expr("percentile(l_orderkey, 0.5)")).first()[0]
     tmp = tempfile.mkdtemp(prefix="btpairs_")
     try:
@@ -524,7 +525,7 @@ def bradley_terry_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n"),
             F.col("won").cast("bigint").alias("w"),
         )
-        return _bt_fit(pairs).localCheckpoint(eager=True)
+        return cut(_bt_fit(pairs))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -958,10 +959,9 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     )
     cal = scored.where("is_cal")
     grain = cal.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    ranged = (
+    ranged = cut(
         grain.repartitionByRange(_CONF_RANGES, "s")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     w = Window.partitionBy("pid").orderBy("s").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1186,7 +1186,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(max_j min_k mean) EXACTLY: the published micro-unit fit is
     the floored true PAV solution, not an approximation of it."""
     orders = load_table(spark, sf_dir, "orders")
-    pos_grain = (
+    pos_grain = cut(
         orders.select(
             F.expr(
                 "CAST(CAST(floor(o_totalprice) AS BIGINT)"
@@ -1201,7 +1201,6 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("y").cast("bigint").alias("s"),
         )
-        .localCheckpoint()
     )
     # everything below runs on the <= ~50-row grain: triangular joins,
     # never a window, never corpus-sized data
@@ -1430,7 +1429,7 @@ def eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", (F.col("l_returnflag") == "R").cast("bigint").alias("r")
     )
-    ent = (
+    ent = cut(
         li.groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1448,7 +1447,6 @@ def eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ),
         )
-        .localCheckpoint()
     )
     prior = ent.agg(
         F.count(F.lit(1)).cast("bigint").alias("g"),
@@ -1587,14 +1585,13 @@ def group_sequential_obf(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 16, 10) AS INT) % 2"
         ).alias("arm"),
     )
-    grain = (
+    grain = cut(
         orders.groupBy("yr", "arm")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.expr("sum(CAST(cents AS DECIMAL(38,0)))").alias("s"),
             F.expr("sum(CAST(cents AS DECIMAL(38,0)) * cents)").alias("ss"),
         )
-        .localCheckpoint()
     )
     looks = (
         grain.select("yr")

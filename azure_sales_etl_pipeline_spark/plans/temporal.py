@@ -28,6 +28,7 @@ from ..functions import local_df
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..operators.rounds import cut
 
 _SESSION_GAP_SECS = 30 * 60
 
@@ -1037,13 +1038,12 @@ def range_join_order_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.col("c_nationkey").cast("bigint").alias("nation")
     )
     # o feeds three consumers (interval side, point side, final left
-    # join) — localCheckpoint so the orders scan + customer join runs
+    # join) — cut so the orders scan + customer join runs
     # once, not per consumer (ReusedExchange is not guaranteed across
     # differently-partitioned reads; r13 self-review finding).
-    o = (
+    o = cut(
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .select("o_orderkey", "nation", "day")
-        .localCheckpoint()
     )
     w = _RJ_WINDOW_DAYS
     iv = o.select(
@@ -1187,7 +1187,7 @@ def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(s, _SHAP_W[s]) for s in range(2**_SHAP_N)],
         "mask INT, w BIGINT",
     )
-    v = (
+    v = cut(
         allmasks.join(F.broadcast(coal), "mask", "left")
         .select(
             "mask",
@@ -1198,7 +1198,6 @@ def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE 0 END AS BIGINT)"
             ).alias("v_micro"),
         )
-        .localCheckpoint()
     )
     chans = local_df(
         spark, list(_SHAP_CHANNELS), "channel STRING, bit INT"

@@ -288,7 +288,7 @@ def fertility_budgets_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
-    per_doc = _fertility_per_doc(docs).localCheckpoint()
+    per_doc = rounds.cut(_fertility_per_doc(docs))
     tmp = tempfile.mkdtemp(prefix="fertct_")
     try:
         state = None
@@ -306,7 +306,7 @@ def fertility_budgets_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").cast("bigint").alias("n_words"),
             F.col("sw").cast("bigint").alias("n_subwords"),
         )
-        return _budgets_from_lang_grain(grain).localCheckpoint(eager=True)
+        return rounds.cut(_budgets_from_lang_grain(grain))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -588,11 +588,7 @@ def winnowing_fingerprints_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         "winnow_fp",
         spark,
         sf_dir,
-        lambda keep: keep.frame(
-            _winnowing_fingerprints_frame(spark, sf_dir).localCheckpoint(
-                eager=True
-            )
-        ),
+        lambda _keep: rounds.cut(_winnowing_fingerprints_frame(spark, sf_dir)),
     )
 
 
@@ -1314,9 +1310,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bigram_scores",
         spark,
         sf_dir,
-        lambda keep: keep.frame(
-            _bigram_surprisal_build(spark, sf_dir).localCheckpoint()
-        ),
+        lambda _keep: rounds.cut(_bigram_surprisal_build(spark, sf_dir)),
     )
 
 
@@ -1952,12 +1946,12 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; the ratio uses truncating ``div`` (portable)."""
     merges = bpe_merge_steps(spark, sf_dir).collect()  # <=5 rows
     docs = load_table(spark, sf_dir, "documents")
-    wt = (
+    wt = rounds.cut(
         docs.select("source", F.explode(_tokens()).alias("w"))
         .where(F.col("w").rlike("^[a-z]+$") & (F.length("w") >= 2))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint()  # feeds the distinct-vocab encode AND the join
+        # feeds the distinct-vocab encode AND the join
     )
     vocab = wt.select("w").distinct().select(
         "w",
@@ -2082,10 +2076,9 @@ def source_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the grid's left join) read the (source, token) counts — the
     # unfenced plan re-tokenized the whole corpus once per consumer
     # (8 scans measured). |sources|×|vocab| rows to pin.
-    st = (
+    st = rounds.cut(
         tok.groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("n_st"))
-        .localCheckpoint()
     )
     src_tot = st.groupBy("source").agg(F.sum("n_st").alias("n_src"))
     tok_tot = (
@@ -2973,10 +2966,10 @@ def bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.length("token") > 0)
         .select("doc_id", F.lower("token").alias("token"))
     )
-    tf = (
+    tf = rounds.cut(
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()  # feeds dl, df, tot_tokens, and the join
+        # feeds dl, df, tot_tokens, and the join
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
@@ -3076,11 +3069,11 @@ def _bm25_per_term(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bm25_terms",
         spark,
         sf_dir,
-        lambda keep: _build_bm25_per_term(spark, sf_dir, keep),
+        lambda _keep: _build_bm25_per_term(spark, sf_dir),
     )
 
 
-def _build_bm25_per_term(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+def _build_bm25_per_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import LN_Z_SQL, ln_k_sql, ln_m_sql
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3095,10 +3088,10 @@ def _build_bm25_per_term(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
     tok = docs.select("doc_id", toks.alias("toks")).select(
         "doc_id", F.explode(bigrams).alias("token")
     )
-    tf = (
+    tf = rounds.cut(
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()  # dl/df/totals re-aggregate from this
+        # dl/df/totals re-aggregate from this
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     dfreq = tf.groupBy("token").agg(
@@ -3107,7 +3100,7 @@ def _build_bm25_per_term(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
     scalars = docs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     ).crossJoin(tf.agg(F.sum("tf").cast("bigint").alias("tot_tokens")))
-    per_term = (
+    per_term = rounds.cut(
         tf.join(dl, "doc_id")
         .join(dfreq, "token")
         .crossJoin(F.broadcast(scalars))
@@ -3116,11 +3109,11 @@ def _build_bm25_per_term(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
         .withColumn("__ln_m", F.expr(ln_m_sql(_BM25_IDF_ARG, "__ln_k")))
         .withColumn("__ln_z", F.expr(LN_Z_SQL))
         .select("doc_id", "token", F.expr(_bm25_score_sql()).alias("bm25_micro"))
-        .localCheckpoint()  # feeds query side, corpus side, PRF feedback
+        # feeds query side, corpus side, PRF feedback
     )
-    # per_term is materialized; free the intermediate tf checkpoint now.
-    memo.drop_checkpoint(tf)
-    return keep.frame(per_term)
+    # per_term is materialized; free the intermediate tf cut now.
+    rounds.release(tf)
+    return per_term
 
 
 def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3993,15 +3986,15 @@ def novelty_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_novel"))
             )
             reports.append(
-                per_doc.join(first_here, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "n_shingles",
-                    F.coalesce(F.col("n_novel"), F.lit(0).cast("bigint")).alias(
-                        "n_novel"
-                    ),
+                rounds.cut(
+                    per_doc.join(first_here, "doc_id", "left").select(
+                        "doc_id",
+                        "n_shingles",
+                        F.coalesce(F.col("n_novel"), F.lit(0).cast("bigint")).alias(
+                            "n_novel"
+                        ),
+                    )
                 )
-                .localCheckpoint(eager=True)
             )
         return (
             reports[0]
@@ -4032,11 +4025,11 @@ def _dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint an identical copy of the sha256+hex-decode map —
     memoized."""
     return memo.shared(
-        "dsir_feats", spark, sf_dir, lambda keep: _build_dsir_feats(spark, sf_dir, keep)
+        "dsir_feats", spark, sf_dir, lambda _keep: _build_dsir_feats(spark, sf_dir)
     )
 
 
-def _build_dsir_feats(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+def _build_dsir_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import hex_to_bigint_sql, spread_for_cpu
 
     # CPU-bound map (sha256 + 15-digit hex decode per feature) over a
@@ -4065,14 +4058,13 @@ def _build_dsir_feats(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
             "hx", F.expr("substr(sha2(concat('dsir:', feat), 256), 1, 15)")
         )
     )
-    return keep.frame(
+    return rounds.cut(
         plan_barrier(raw)
         .withColumn(
             "bucket",
             F.expr(hex_to_bigint_sql("hx") + f" % {_DSIR_B}"),
         )
         .select("doc_id", "source", "bucket")
-        .localCheckpoint()
     )
 
 
@@ -4115,10 +4107,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dsir_weights",
         spark,
         sf_dir,
-        lambda keep: keep.frame(
+        lambda _keep: rounds.cut(
             _dsir_weights_from_feats(
                 _dsir_feats(spark, sf_dir).withColumn("n", F.lit(1).cast("bigint"))
-            ).localCheckpoint()
+            )
         ),
     )
 
@@ -4228,7 +4220,7 @@ def dsir_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = state.select(
             "doc_id", "source", "bucket", F.col("n").cast("bigint").alias("n")
         )
-        return _dsir_weights_from_feats(st).localCheckpoint(eager=True)
+        return rounds.cut(_dsir_weights_from_feats(st))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

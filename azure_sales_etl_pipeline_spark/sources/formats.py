@@ -90,18 +90,6 @@ def read_xml(
     return reader.xml(path)
 
 
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:  # noqa: BLE001
-        if "Failed to find data source: avro" in str(e):
-            raise RuntimeError(
-                "spark-avro is not on the classpath; deploy with "
-                "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-            ) from e
-        raise
-
-
 def write_wds_shards(
     df: DataFrame,
     out_dir: str,

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from .functions import local_df
 
 from .catalog import table_exists, table_path
+from .operators.rounds import cut
 
 
 def _stream_csv_source(spark: SparkSession, schema, source_glob: str) -> DataFrame:
@@ -726,9 +727,7 @@ def stream_curation_funnel_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, glob, schema, state, checkpoint=ckpt
             ),
         )
-        return curation_funnel_report(spark, state).localCheckpoint(
-            eager=True
-        )
+        return cut(curation_funnel_report(spark, state))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1277,7 +1276,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 checkpoint=ckpt,
             ),
         )
-        return drift_report(spark, state).localCheckpoint(eager=True)
+        return cut(drift_report(spark, state))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1455,7 +1454,7 @@ def stream_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, glob, schema, state, checkpoint=ckpt
             ),
         )
-        return quality_report(spark, state).localCheckpoint(eager=True)
+        return cut(quality_report(spark, state))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1556,7 +1555,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 checkpoint=ckpt,
             ),
         )
-        return psi_report(spark, state).localCheckpoint(eager=True)
+        return cut(psi_report(spark, state))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1592,7 +1591,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, glob, schema, state, key_col="k", checkpoint=ckpt
             ),
         )
-        return cms_topk_report(spark, state, keys, "k").localCheckpoint(eager=True)
+        return cut(cms_topk_report(spark, state, keys, "k"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1684,7 +1683,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(err).alias("err_permille"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1778,7 +1777,7 @@ def stream_token_stats_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("tf").cast("bigint").alias("tf_total"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1865,7 +1864,7 @@ def stream_bootstrap_ci_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
             F.col("n_rows").cast("bigint").alias("n_rows"),
         )
-        return _boot_summarize(totals).localCheckpoint(eager=True)
+        return cut(_boot_summarize(totals))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

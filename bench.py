@@ -46,6 +46,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from azure_sales_etl_pipeline_spark import memo
+from azure_sales_etl_pipeline_spark.operators import rounds
 from azure_sales_etl_pipeline_spark.session import get_spark
 
 #: Full-GC cadence (queries between gc.collect + System.gc rounds).
@@ -88,7 +89,8 @@ def main() -> None:
         if w in qs:
             warm.append(w)
     for w in warm:
-        qs[w](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with rounds.scope():
+            qs[w](spark, sf_dir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -132,13 +134,16 @@ def main() -> None:
                     continue  # this one doesn't fit; a cheaper one may
             fn = qs[name]
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            # The scope frees the query's eager cuts once its write is
+            # done (memo builds keep theirs until the next pass).
+            with rounds.scope():
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(time.perf_counter() - t0)
-            # Session hygiene between queries: drop cached/checkpointed
-            # blocks so query N+1 isn't taxed by query N's leftovers (the
-            # JVM ContextCleaner's periodic GC is far too slow for a
-            # 97-query sweep — measured 5-30x inflation on late queries
-            # without this). clearCache is cheap and runs every query;
+            # Session hygiene between queries: drop cached blocks so
+            # query N+1 isn't taxed by query N's leftovers (the JVM
+            # ContextCleaner's periodic GC is far too slow for a 97-query
+            # sweep — measured 5-30x inflation on late queries without
+            # this). clearCache is cheap and runs every query;
             # the FULL GC runs every _GC_EVERY queries only — System.gc
             # kicks off concurrent G1 phases that stall the NEXT timed
             # query (A/B at sf0.1: per-query gc turned embedding_gram's

@@ -42,6 +42,7 @@ import pyarrow as pa
 
 from __spark_entry__ import oracle_sql, queries
 from azure_sales_etl_pipeline_spark.catalog import TESTDATA_TABLES, table_path
+from azure_sales_etl_pipeline_spark.operators import rounds
 from azure_sales_etl_pipeline_spark.session import get_spark
 
 _REL_EPS = 1e-9
@@ -212,9 +213,12 @@ def main() -> int:
             continue
         t0 = time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
+            # One scope per query, as the bench runs it: a query that
+            # reads another query's released cut fails here.
+            with rounds.scope():
+                sdf = fn(spark, sf_dir)
+                srows = sdf.collect()
+                scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failures += 1

@@ -6,7 +6,8 @@ redundant checkpoints, checkpoint cadence) is evidenced by the number
 of Spark jobs a query submits — read off the DAGScheduler's job-id
 counter around the run. Unlike wall-clock on this host (±15-20 %
 between JVMs), the job count is DETERMINISTIC, so before/after deltas
-are exact. Same per-pass memo eviction as bench.py (``memo.evict_all``).
+are exact. Same per-pass memo eviction as bench.py (``memo.evict_all``),
+and the same query scope (``rounds.scope``) around each run and its write.
 
 Several comma-separated queries share ONE session (one JVM cold start
 instead of one per query); each gets its own warm run and passes.
@@ -31,6 +32,7 @@ def main() -> None:
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 
     from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.operators import rounds
     from azure_sales_etl_pipeline_spark.session import get_spark
     from __spark_entry__ import queries
 
@@ -43,14 +45,16 @@ def main() -> None:
         return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
     for name, fn in zip(names, fns):
-        fn(spark, sf).write.format("noop").mode("overwrite").save()  # warm
+        with rounds.scope():
+            fn(spark, sf).write.format("noop").mode("overwrite").save()  # warm
         spark.catalog.clearCache()
         ts = []
         for i in range(passes):
             memo.evict_all()
             j0 = next_job_id()
             t0 = time.perf_counter()
-            fn(spark, sf).write.format("noop").mode("overwrite").save()
+            with rounds.scope():
+                fn(spark, sf).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             ts.append(dt)
             print(f"pass {i}: {dt:.2f}s jobs={next_job_id() - j0}", flush=True)

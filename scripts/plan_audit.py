@@ -197,13 +197,15 @@ def audit(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, dict]
     # 45 subset∪expectation queries for the IVF centroids; the build
     # jobs never appear in the audited plan).
     from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.operators import rounds
 
     memo.evict_all()
     for name, fn in queries.items():
         try:
             spark.catalog.clearCache()
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
+            with rounds.scope():
+                df = fn(spark, sf_dir)
+                plan = df._jdf.queryExecution().explainString(mode)
             feats = plan_features(plan)
             feats["error"] = None
         except Exception as e:  # noqa: BLE001

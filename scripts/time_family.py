@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Ad-hoc steady-state timer for a named subset of registry queries.
 
-Mimics bench.py's hygiene (per-pass memo eviction, per-query
-clearCache, warm-up pass) so the numbers are comparable to
+Mimics bench.py's hygiene (per-pass memo eviction, a query scope
+around each run and its write, per-query clearCache, warm-up pass) so the numbers are comparable to
 BENCH_r*.json, but runs only the queries named on the command line —
 the measurement loop for targeted optimization work.
 
@@ -30,6 +30,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from azure_sales_etl_pipeline_spark import memo
+    from azure_sales_etl_pipeline_spark.operators import rounds
     from azure_sales_etl_pipeline_spark.session import get_spark
     from __spark_entry__ import queries
 
@@ -42,7 +43,8 @@ def main() -> None:
     # Warm-up: run each target once so JIT/codegen/session costs don't
     # land on pass 1.
     for n in args.names:
-        qs[n](spark, args.sf).write.format("noop").mode("overwrite").save()
+        with rounds.scope():
+            qs[n](spark, args.sf).write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
 
     samples: dict[str, list[float]] = {n: [] for n in args.names}
@@ -50,7 +52,8 @@ def main() -> None:
         memo.evict_all()
         for n in args.names:
             t0 = time.perf_counter()
-            qs[n](spark, args.sf).write.format("noop").mode("overwrite").save()
+            with rounds.scope():
+                qs[n](spark, args.sf).write.format("noop").mode("overwrite").save()
             samples[n].append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
     mins = {n: min(v) for n, v in samples.items()}

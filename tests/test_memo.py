@@ -288,6 +288,43 @@ def test_pass_harnesses_call_memo_evict_all(harness):
     assert len(calls) == 1
 
 
+def _is_query_call(node: ast.AST) -> bool:
+    """``fn(spark, ...)`` or ``qs[name](spark, ...)``: a registry query."""
+    return (
+        isinstance(node, ast.Call)
+        and (isinstance(node.func, ast.Subscript) or ast.unparse(node.func) == "fn")
+        and bool(node.args)
+        and ast.unparse(node.args[0]) == "spark"
+    )
+
+
+@pytest.mark.parametrize(
+    "harness",
+    ["bench.py", "scripts/time_family.py", "scripts/count_jobs.py",
+     "scripts/check_oracle.py", "scripts/plan_audit.py"],
+    ids=["bench", "time_family", "count_jobs", "check_oracle", "plan_audit"],
+)
+def test_harnesses_run_each_query_in_a_scope(harness):
+    """Each harness calls every query, and that query's write (or
+    collect, or plan read), inside one ``rounds.scope()``, so the
+    query's eager cuts are freed when it is done instead of waiting
+    for a JVM GC."""
+    tree = ast.parse((REPO / harness).read_text())
+    scoped = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.With)
+        and any(ast.unparse(i.context_expr) in ("rounds.scope()", "scope()") for i in node.items)
+    ]
+    inside = {id(n) for w in scoped for n in ast.walk(w) if _is_query_call(n)}
+    calls = [n for n in ast.walk(tree) if _is_query_call(n)]
+    assert calls and all(id(n) in inside for n in calls), harness
+    for w in scoped:
+        names = {n.func.attr for n in ast.walk(w)
+                 if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)}
+        assert names & {"save", "collect", "explainString"}, f"{harness}:{w.lineno}"
+
+
 def test_benchmark_memo_discovery_finds_and_evicts_the_store(spark, monkeypatch):
     """perfbench finds memos by walking the package for ``evict_*``
     callables and the dict globals their code names; a misnamed

@@ -472,6 +472,25 @@ def test_iterative_ops_reliable_checkpoint_knob(spark, request):
         assert set(ckpt.rglob("*")) - before, f"{name} wrote no reliable checkpoint"
 
 
+def test_released_reliable_cuts_leave_no_files(spark, tmp_path, request):
+    """With a session checkpoint dir, a cut is a reliable checkpoint,
+    and Spark keeps its ``rdd-N`` files after the RDD is gone. Freeing
+    a cut deletes them: after one SCD2 upsert (its own scope) and one
+    scoped connected-components query, the dir holds no checkpoint."""
+    from azure_sales_etl_pipeline_spark.operators import rounds
+    from azure_sales_etl_pipeline_spark.operators.scd2 import SCD2Table
+    from azure_sales_etl_pipeline_spark.plans.dedup import golden_part_records
+
+    ckpt = request.getfixturevalue("session_checkpoint_dir")
+    schema = "id int, name string"
+    dim = SCD2Table(spark, str(tmp_path / "dim"), "id")
+    dim.upsert(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    assert dim.upsert(spark.createDataFrame([(1, "a"), (2, "c")], schema))["update"] == 1
+    with rounds.scope():
+        golden_part_records(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    assert ckpt.is_dir() and not list(ckpt.rglob("rdd-*"))
+
+
 def test_curation_funnel_single_scan(spark):
     """The funnel's four stage signals are per-row expressions off ONE
     scan of documents — never a join of four stage DataFrames."""
