@@ -13,15 +13,15 @@ later session would hand back a frame whose lineage points at a stopped
 context.
 
 Each entry is ``(value, releases)``: every tmp dir the build created,
-and the JVM RDD handle of every ``rounds.cut`` it made. The build runs
-inside its own ``rounds.scope()``, so its cuts belong to the entry,
-never to the query scope that happened to pay for the build (the
-ownership contract is in ``operators/rounds.py``).
+and what every ``rounds.cut`` it made handed its scope (the JVM RDD
+handle, plus the checkpoint directory of a reliable cut on the local
+file system). The build runs inside its own ``rounds.scope()``, so its
+cuts belong to the entry, never to the query scope that happened to pay
+for the build (the ownership contract is in ``operators/rounds.py``).
 
-A harness that times passes (``bench.py``, ``scripts/time_family.py``,
-``scripts/count_jobs.py``, the ``perfbench`` workloads) calls
-``evict_all()`` before every pass, so each pass pays every build exactly
-once. ``perfbench`` finds the store by walking the package for
+A harness that times passes (``bench.py``, the ``perfbench`` workloads)
+calls ``evict_all()`` before every pass, so each pass pays every build
+exactly once. ``perfbench`` finds the store by walking the package for
 module-level ``evict_*`` callables and the dict globals their code
 names, so ``evict_all`` keeps its name and names ``_STORE`` in its own
 body.
@@ -30,7 +30,6 @@ body.
 from __future__ import annotations
 
 import atexit
-import shutil
 import tempfile
 from typing import Callable
 
@@ -68,28 +67,22 @@ def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
                 releases.items += cuts
                 cuts.clear()  # the entry owns them now
         except BaseException:
-            _free(releases.items)
+            rounds.free(releases.items)
             raise
         hit = _STORE[key] = (value, releases.items)
     return hit[0]
 
 
-def _free(releases: list) -> None:
-    for item in releases:
-        if isinstance(item, str):
-            shutil.rmtree(item, ignore_errors=True)
-    rounds.free([item for item in releases if not isinstance(item, str)])
-
-
 def evict_all(where: Callable[[tuple[str, str, str]], bool] | None = None) -> None:
     """Free and drop every entry, or those whose key ``where`` accepts."""
     for key in [k for k in _STORE if where is None or where(k)]:
-        _free(_STORE.pop(key)[1])
+        rounds.free(_STORE.pop(key)[1])
 
 
 @atexit.register
-def _remove_tmp_dirs() -> None:
-    """At exit the JVM takes every checkpoint block with it; only the
-    tmp dirs would outlive the process."""
+def _remove_dirs() -> None:
+    """At exit the JVM takes every checkpoint block with it, and may be
+    gone already; the tmp dirs and local checkpoint directories would
+    outlive the process, and are deleted without Spark."""
     for _value, releases in _STORE.values():
-        _free([item for item in releases if isinstance(item, str)])
+        rounds.free([item for item in releases if isinstance(item, str)])

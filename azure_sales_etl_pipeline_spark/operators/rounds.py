@@ -26,7 +26,10 @@ Freeing goes through the cut's own RDD handle. ``DataFrame.unpersist``
 and ``spark.catalog.clearCache()`` go through the cache manager, which
 never saw a checkpoint, so both leave its blocks persistent; and Spark
 keeps a reliable checkpoint's files after the RDD is gone, so freeing
-deletes its ``getCheckpointFile()`` directory too.
+deletes its ``getCheckpointFile()`` directory too. A reliable cut on
+the local file system also hands its owner that directory as a plain
+path, which ``free`` deletes without Spark: an owner that outlives the
+JVM (a memo entry at process exit) can still remove the files.
 
 A probe rides the round's one materialization through ``observe()``, so
 it costs no ``count()`` job. Write probes as ``F.count(F.when(cond, 1))``
@@ -45,28 +48,34 @@ Spark Engine of Azure Synapse" (VLDB 2021).
 
 from __future__ import annotations
 
+import shutil
 import threading
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation
 
 #: ``stack``: the open scopes on this thread, innermost last; each is
-#: the list of the cuts' JVM RDD handles it owns
+#: the list of the cuts' JVM RDD handles it owns, and of the local
+#: checkpoint directories of its reliable cuts
 _SCOPES = threading.local()
 
 
 def cut(df: DataFrame) -> DataFrame:
     """Materialize ``df`` now and cut its lineage (policy above); the
     innermost open scope owns the result."""
-    if df.sparkSession.sparkContext.getCheckpointDir():
-        out = df.checkpoint(eager=True)
-    else:
-        out = df.localCheckpoint(eager=True)
+    reliable = bool(df.sparkSession.sparkContext.getCheckpointDir())
+    out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
     stack = getattr(_SCOPES, "stack", None)
     if stack:
-        stack[-1].append(_handle(out))
+        handle = _handle(out)
+        stack[-1].append(handle)
+        if reliable:
+            files = urlparse(handle.getCheckpointFile().get())
+            if files.scheme == "file":
+                stack[-1].append(files.path)
     return out
 
 
@@ -86,17 +95,23 @@ def scope() -> Iterator[list]:
 
 
 def release(df: DataFrame) -> None:
-    """Free the cut ``df`` now and drop it from its owning scope."""
+    """Free the cut ``df`` now and drop it from its owning scope (a
+    local checkpoint directory it handed over stays listed; deleting it
+    again later is a no-op)."""
     rdd = _handle(df)
     rid = rdd.id()
     for owned in getattr(_SCOPES, "stack", ()):
-        owned[:] = [h for h in owned if h.id() != rid]
+        owned[:] = [h for h in owned if isinstance(h, str) or h.id() != rid]
     free([rdd])
 
 
-def free(handles: list) -> None:
-    """Unpersist each cut's blocks and delete its checkpoint files."""
-    for rdd in handles:
+def free(items: list) -> None:
+    """Unpersist each cut's blocks and delete its checkpoint files;
+    delete each plain path (a directory) without Spark."""
+    for rdd in items:
+        if isinstance(rdd, str):
+            shutil.rmtree(rdd, ignore_errors=True)
+            continue
         try:
             rdd.unpersist(False)
             ckpt = rdd.getCheckpointFile()

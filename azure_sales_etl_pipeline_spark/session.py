@@ -29,9 +29,10 @@ _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow batching for the pandas_udf extension operators.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Parquet scans: allow per-file schema differences (the engine's
-    # mergeSchema-append shim relies on merge-on-read).
-    "spark.sql.parquet.mergeSchema": "false",  # opt-in per read; global off for scan speed
+    # Parquet scans: no schema merge by default. A pointer table's read
+    # takes the schema its commit pinned; only the legacy fallback read
+    # (a pointer without a schema, or the flat layout) merges, per read.
+    "spark.sql.parquet.mergeSchema": "false",
     "spark.sql.parquet.filterPushdown": "true",
     # The driver testdata's events.parquet stores TIMESTAMP(NANOS), which
     # Spark rejects outright; read as long and convert in the catalog

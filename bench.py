@@ -1,7 +1,17 @@
-"""Benchmark harness: times every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:  {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: times every registered query, or the queries named
+on the command line, at $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata)
+on local[$SPARK_GRAFT_CPUS], and counts each run's Spark jobs.
+
+    python bench.py              # all queries
+    python bench.py q1 q2 ...    # only these
+
+A full run writes BENCH_FULL.json and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec},
+"sf": ...}. A named run prints its full record (samples, min and jobs
+per pass for each query) and leaves BENCH_FULL.json alone. Queries run
+in name order, so which query pays for a shared memo build does not
+move when the registry's sweep order does. Job counts, unlike the
+wall clock, are deterministic: before/after job deltas are exact.
 
 Timing = full plan execution to a count-style action (``collect`` would
 measure driver materialization; the engine's unit of work is the job).
@@ -46,6 +56,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from azure_sales_etl_pipeline_spark import memo
+from azure_sales_etl_pipeline_spark.observe import count_jobs
 from azure_sales_etl_pipeline_spark.operators import rounds
 from azure_sales_etl_pipeline_spark.session import get_spark
 
@@ -53,13 +64,30 @@ from azure_sales_etl_pipeline_spark.session import get_spark
 _GC_EVERY = 8
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="bench")
+def run_order(qs: dict, names: list[str]) -> list[str]:
+    """The queries to time, ``names`` or every one in ``qs``, sorted by
+    name; an unknown name exits before any session starts."""
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    return sorted(set(names) or qs)
 
+
+def _run(spark, fn, sf_dir: str) -> None:
+    # The scope frees the query's eager cuts once its write is done
+    # (memo builds keep theirs until the next pass).
+    with rounds.scope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from __spark_entry__ import queries
 
     qs = queries()
+    order = run_order(qs, names)
+    spark = get_spark(app_name="bench")
+
     timings: dict[str, float] = {}
     # Warm the JVM + parquet footers + shuffle/codegen paths once so the
     # first timed query isn't charged for session startup (the driver
@@ -76,7 +104,8 @@ def main() -> None:
     # Stateful Structured Streaming adds two more one-time families:
     # session-window state codegen and the symmetric stream-stream join —
     # measured ~35s/~10s first-run vs ~7s steady-state each.
-    warm = [next(iter(qs))]
+    # A named run warms exactly its own queries.
+    warm = list(order) if names else [order[0]]
     for w in (
         "seller_performance_daily",
         "seller_performance_daily_approx",
@@ -86,16 +115,16 @@ def main() -> None:
         # one-time family: ~7.7s first-run vs ~1.7s steady-state.
         "stream_user_totals_custom_state",
     ):
-        if w in qs:
+        if not names and w in qs:
             warm.append(w)
     for w in warm:
-        with rounds.scope():
-            qs[w](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        _run(spark, qs[w], sf_dir)
     spark.catalog.clearCache()
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2400"))
-    samples: dict[str, list[float]] = {name: [] for name in qs}
+    samples: dict[str, list[float]] = {name: [] for name in order}
+    jobs: dict[str, list[int]] = {name: [] for name in order}
     queries_run = 0
     bench_t0 = time.perf_counter()
     passes_done = 0
@@ -118,26 +147,22 @@ def main() -> None:
                 break
             # Estimate each query by its last sample; run expensive
             # first, the in-loop gate skips whatever doesn't fit.
-            run_order = sorted(
-                qs, key=lambda n: -(samples[n][-1] if samples[n] else 0.0)
+            pass_order = sorted(
+                order, key=lambda n: -(samples[n][-1] if samples[n] else 0.0)
             )
         else:
-            run_order = list(qs)
+            pass_order = order
         pass_t0 = time.perf_counter()
         # Every pass pays each shared-memo build once, on whichever
         # consumer runs first (see azure_sales_etl_pipeline_spark.memo).
         memo.evict_all()
-        for name in run_order:
+        for name in pass_order:
             if partial:
                 est = samples[name][-1] if samples[name] else 0.0
                 if time.perf_counter() - bench_t0 + est > budget:
                     continue  # this one doesn't fit; a cheaper one may
-            fn = qs[name]
             t0 = time.perf_counter()
-            # The scope frees the query's eager cuts once its write is
-            # done (memo builds keep theirs until the next pass).
-            with rounds.scope():
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            jobs[name].append(count_jobs(spark, lambda: _run(spark, qs[name], sf_dir)))
             samples[name].append(time.perf_counter() - t0)
             # Session hygiene between queries: drop cached blocks so
             # query N+1 isn't taxed by query N's leftovers (the JVM
@@ -182,6 +207,27 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
+    full = {
+        "metric": "all_queries_total",
+        "value": round(total, 3),
+        "value_median": round(total_median, 3),
+        "unit": "sec",
+        "queries": timings,
+        "samples": {n: [round(s, 3) for s in ss] for n, ss in samples.items()},
+        "jobs": jobs,
+        "passes": passes_done,
+        "partial_passes": partial_passes,
+        "wall_sec": round(wall, 3),
+        "sf": sf_val,
+    }
+    # Quiet the JVM before printing so shutdown logs can't push the
+    # result line out of the harness's tail window.
+    spark.sparkContext.setLogLevel("ERROR")
+    if names:
+        print(json.dumps(full, indent=1))
+        spark.stop()
+        return
+
     # The external harness keeps only the LAST ~2000 chars of this
     # process's output and json-parses the result line from it. The
     # full 80-query dict is ~2.4k chars — a line that long gets its
@@ -190,18 +236,6 @@ def main() -> None:
     # goes to BENCH_FULL.json next to this script, and stdout gets ONE
     # compact line guaranteed to fit — heaviest queries inline (they
     # carry the perf signal), the fastest aggregated under "omitted".
-    full = {
-        "metric": "all_queries_total",
-        "value": round(total, 3),
-        "value_median": round(total_median, 3),
-        "unit": "sec",
-        "queries": timings,
-        "samples": {n: [round(s, 3) for s in ss] for n, ss in samples.items()},
-        "passes": passes_done,
-        "partial_passes": partial_passes,
-        "wall_sec": round(wall, 3),
-        "sf": sf_val,
-    }
     (Path(__file__).resolve().parent / "BENCH_FULL.json").write_text(
         json.dumps(full, indent=1) + "\n"
     )
@@ -238,12 +272,9 @@ def main() -> None:
             "sec": round(sum(s for _, s in rest), 2),
         }
 
-    # Quiet the JVM before printing so shutdown logs can't push the
-    # result line out of the harness's tail window.
-    spark.sparkContext.setLogLevel("ERROR")
     print(_line())
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -25,14 +25,13 @@ is re-checked under a 1e-9 relative epsilon purely to CLASSIFY it:
   visible; a coarse type-category comparison against Spark's dtypes
   flags the divergence BEFORE the driver does.
 
-Usage:  python scripts/check_oracle.py [sf_dir] [name...] [--vanilla] [--time]
+Usage:  python scripts/check_oracle.py [sf_dir] [name...] [--vanilla]
 """
 
 from __future__ import annotations
 
 import math
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -185,15 +184,12 @@ def main() -> int:
     # relying on a green sweep.
     ap.add_argument("--vanilla", action="store_true",
                     help="bare SparkSession (the driver's environment)")
-    ap.add_argument("--time", dest="timing", action="store_true",
-                    help="print per-query wall time")
     # parse_intermixed_args: plain parse_args rejects positional names
     # that FOLLOW a flag (`sf_dir --vanilla name1 name2` → "unrecognized
     # arguments") because nargs='*' positionals don't re-open after an
     # optional; intermixed parsing handles both orders.
     ns = ap.parse_intermixed_args()
     vanilla = ns.vanilla
-    timing = ns.timing
     sf_dir = ns.sf_dir
     only = set(ns.names)
     if vanilla:
@@ -211,7 +207,6 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.monotonic()
         try:
             # One scope per query, as the bench runs it: a query that
             # reads another query's released cut fails here.
@@ -223,10 +218,8 @@ def main() -> int:
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failures += 1
             continue
-        elapsed = time.monotonic() - t0
-        suffix = f" [{elapsed:.2f}s]" if timing else ""
         if name not in os_:
-            print(f"OK?  {name}: rows-only ({len(srows)} rows, no oracle){suffix}")
+            print(f"OK?  {name}: rows-only ({len(srows)} rows, no oracle)")
             continue
         try:
             # Arrow keeps the true DuckDB column types visible (fetchall
@@ -269,7 +262,7 @@ def main() -> int:
             print(f"FRAGILE-TYPE {name}: values match but column types differ "
                   f"(driver hash at risk): {'; '.join(bad_types)}")
             continue
-        print(f"PASS {name} ({len(srows)} rows){suffix}")
+        print(f"PASS {name} ({len(srows)} rows)")
     spark.stop()
     if fragiles:
         print(f"-- {fragiles} FRAGILE (eps-only float agreement; convert to exact types)")

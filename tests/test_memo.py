@@ -5,8 +5,8 @@ Each memo is pinned by one parametrized case: a repeat call hits, the
 key carries the session's applicationId, every checkpointed frame the
 build registered is freed by ``evict_all`` (``DataFrame.unpersist``
 would not free it), every tmp dir is removed, and the consumer's
-content is right. Structural pins keep a second cache mechanism, or a
-harness that skips eviction, from coming back.
+content is right. Structural pins keep a second cache mechanism, a
+harness that skips eviction, or a second job counter from coming back.
 """
 
 from __future__ import annotations
@@ -14,6 +14,8 @@ from __future__ import annotations
 import ast
 import importlib
 import os
+import subprocess
+import sys
 import time
 from dataclasses import dataclass
 from pathlib import Path
@@ -29,6 +31,7 @@ from azure_sales_etl_pipeline_spark.plans import (
     similarity,
     textops,
 )
+from tests.conftest import SF_DIR
 
 REPO = Path(__file__).resolve().parents[1]
 PACKAGE = REPO / "azure_sales_etl_pipeline_spark"
@@ -271,11 +274,7 @@ def test_memo_is_the_only_module_level_cache():
     assert found == {"memo._STORE", "catalog._SCHEMA_CACHE"}
 
 
-@pytest.mark.parametrize(
-    "harness",
-    ["bench.py", "scripts/time_family.py", "scripts/count_jobs.py"],
-    ids=["bench", "time_family", "count_jobs"],
-)
+@pytest.mark.parametrize("harness", ["bench.py"], ids=["bench"])
 def test_pass_harnesses_call_memo_evict_all(harness):
     """Each harness that times passes evicts every memo before a pass
     with the one call, so no memo can be missing from a hand-kept list."""
@@ -300,9 +299,8 @@ def _is_query_call(node: ast.AST) -> bool:
 
 @pytest.mark.parametrize(
     "harness",
-    ["bench.py", "scripts/time_family.py", "scripts/count_jobs.py",
-     "scripts/check_oracle.py", "scripts/plan_audit.py"],
-    ids=["bench", "time_family", "count_jobs", "check_oracle", "plan_audit"],
+    ["bench.py", "scripts/check_oracle.py", "scripts/plan_audit.py"],
+    ids=["bench", "check_oracle", "plan_audit"],
 )
 def test_harnesses_run_each_query_in_a_scope(harness):
     """Each harness calls every query, and that query's write (or
@@ -325,13 +323,46 @@ def test_harnesses_run_each_query_in_a_scope(harness):
         assert names & {"save", "collect", "explainString"}, f"{harness}:{w.lineno}"
 
 
+def test_job_counter_is_read_in_observe_only():
+    """Jobs are counted one way, by ``observe.count_jobs``: no other
+    module outside ``perfbench/`` reads the job-id counter or a job
+    group's job ids."""
+    readers = {
+        str(rel)
+        for rel in (p.relative_to(REPO) for p in REPO.rglob("*.py"))
+        if not any(part == "perfbench" or part.startswith(".") for part in rel.parts)
+        for node in ast.walk(ast.parse((REPO / rel).read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in ("nextJobId", "getJobIdsForGroup")
+    }
+    assert readers == {"azure_sales_etl_pipeline_spark/observe.py"}
+
+
+def test_exit_removes_memo_checkpoint_files(tmp_path):
+    """With a session checkpoint dir, a memo entry's cuts are reliable
+    checkpoints; a process that stops Spark and exits without
+    ``evict_all`` must still leave none of their ``rdd-N`` dirs."""
+    ckpt = tmp_path / "ckpt"
+    script = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from azure_sales_etl_pipeline_spark.operators import rounds
+from azure_sales_etl_pipeline_spark.plans import registry
+from azure_sales_etl_pipeline_spark.session import get_spark
+spark = get_spark(master="local[2]", extra_conf={{"spark.checkpoint.dir": {str(ckpt)!r}}})
+with rounds.scope():
+    registry()[0]["ngram_jaccard_pairs"](spark, {SF_DIR!r}).write.format("noop").mode("overwrite").save()
+spark.stop()
+"""
+    subprocess.run([sys.executable, "-c", script], check=True, capture_output=True, timeout=600)
+    assert list(ckpt.iterdir()), "the session checkpointed nowhere"
+    assert not list(ckpt.glob("*/rdd-*"))
+
+
 def test_benchmark_memo_discovery_finds_and_evicts_the_store(spark, monkeypatch):
     """perfbench finds memos by walking the package for ``evict_*``
     callables and the dict globals their code names; a misnamed
     evictor, or a store hidden behind a helper, makes every pass after
     the first read the memo warm."""
-    from tests.conftest import SF_DIR
-
     monkeypatch.syspath_prepend(str(REPO / "perfbench"))
     workloads = importlib.import_module("workloads")
 

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import datetime as dt
 import hashlib
-import uuid
 from collections import Counter
 from decimal import Decimal
 
@@ -35,6 +34,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from azure_sales_etl_pipeline_spark.catalog import table_exists
+from azure_sales_etl_pipeline_spark.observe import count_jobs
 from azure_sales_etl_pipeline_spark.operators.maintenance import (
     _CC_MAX_ITERS,
     _cc_min_label,
@@ -428,17 +428,6 @@ def test_cc_kernel_raises_past_round_bound(spark):
         _cc_min_label(deep)
 
 
-def _jobs_in_group(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_dedup_clusters_job_count_pins_exchange_reuse(spark, tmp_path):
     """The CC build over a planted 30-doc dup chain (5 pointer-doubling
     rounds) fires 27 jobs: two eager cuts (adjacency, seed labels) and
@@ -458,7 +447,7 @@ def test_dedup_clusters_job_count_pins_exchange_reuse(spark, tmp_path):
     ).write.parquet(str(tmp_path / "documents.parquet"))
     jaccard_pairs_raw(spark, str(tmp_path))  # the memoized pair table is not CC work
 
-    assert _jobs_in_group(spark, lambda: _compute_dedup_clusters(spark, str(tmp_path))) == 27
+    assert count_jobs(spark, lambda: _compute_dedup_clusters(spark, str(tmp_path))) == 27
 
 
 def _ref_hash(row, tracked):
@@ -619,8 +608,8 @@ def test_scd2_upsert_job_count(spark, tmp_path):
     batch = spark.createDataFrame(
         [(i, f"n{i}", "B" if i % 5 == 0 else "A") for i in range(45)], schema
     )
-    changing = _jobs_in_group(spark, lambda: dim.upsert(batch))
-    replay = _jobs_in_group(spark, lambda: dim.upsert(batch))
+    changing = count_jobs(spark, lambda: dim.upsert(batch))
+    replay = count_jobs(spark, lambda: dim.upsert(batch))
     assert changing <= 4  # two AQE map stages + the cut, then the write
     assert replay <= 3
 
@@ -649,6 +638,16 @@ def test_loop_consumer_job_count(spark, name):
     call also pays one-off session work); the eviction after it makes
     the counted run pay every memo build."""
     from azure_sales_etl_pipeline_spark import memo
+
+    run = _query_run(spark, name)
+    run()
+    memo.evict_all()
+    jobs = count_jobs(spark, run)
+    assert jobs <= _LOOP_CONSUMER_JOBS[name], f"{name}: {jobs} jobs"
+
+
+def _query_run(spark, name):
+    """A registry query plus its noop write in one scope, as bench runs it."""
     from azure_sales_etl_pipeline_spark.operators import rounds
     from azure_sales_etl_pipeline_spark.plans import registry
 
@@ -658,10 +657,16 @@ def test_loop_consumer_job_count(spark, name):
         with rounds.scope():
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
+    return run
+
+
+def test_count_jobs_counts_stream_micro_batches(spark):
+    """A stream runs its micro-batch on its own thread under its own job
+    group; the job counter still counts that job (counting the caller's
+    job group gives 2)."""
+    run = _query_run(spark, "stream_tumbling_counts")
     run()
-    memo.evict_all()
-    jobs = _jobs_in_group(spark, run)
-    assert jobs <= _LOOP_CONSUMER_JOBS[name], f"{name}: {jobs} jobs"
+    assert count_jobs(spark, run) == 3
 
 
 # ---------------------------------------------------------------------------
@@ -714,7 +719,7 @@ def test_iterate_bound_and_cut_cadence(spark, target, max_rounds, cut_every, on_
             run()
         return
     out = []
-    jobs = _jobs_in_group(spark, lambda: out.append(run()))
+    jobs = count_jobs(spark, lambda: out.append(run()))
     last = settled or max_rounds
     assert out[0].first()["x"] == last
     assert jobs == sum(r <= last for r in cut_rounds)
@@ -930,11 +935,11 @@ def test_pointer_table_reads_fire_no_jobs(spark, tmp_path):
     store = WatermarkStore(spark, str(tmp_path / "wm"))
     store.set("t", dt.datetime(2024, 5, 6, 7, 8, 9, 123456))
     for path in (snap, app):
-        assert _jobs_in_group(
+        assert count_jobs(
             spark, lambda: (read_table(spark, path).schema, table_schema(spark, path))
         ) == 0, path
     got = []
-    assert _jobs_in_group(spark, lambda: got.append(store.get("t"))) == 0
+    assert count_jobs(spark, lambda: got.append(store.get("t"))) == 0
     assert got == [dt.datetime(2024, 5, 6, 7, 8, 9, 123456)]
     assert read_table(spark, app).columns == ["k", "v"]
 
@@ -971,7 +976,7 @@ def test_pointer_without_schema_reads_through_fallback(spark, tmp_path):
     assert table_schema(spark, path) == want[0] and read_commit_meta(path) == {"m": 1}
 
     append_evolve(spark, spark.createDataFrame([(2, 3.5)], "k bigint, w double"), path)
-    assert _jobs_in_group(spark, lambda: read_table(spark, path).schema) == 0
+    assert count_jobs(spark, lambda: read_table(spark, path).schema) == 0
     assert [tuple(r) for r in read_table(spark, path).orderBy("k").collect()] == [
         (1, "a", None), (2, None, 3.5)
     ]
