@@ -12,12 +12,13 @@ bound to the SparkContext that materialized its blocks: a hit from a
 later session would hand back a frame whose lineage points at a stopped
 context.
 
-Each entry is ``(value, releases)``: every tmp dir the build created,
-and what every ``rounds.cut`` it made handed its scope (the JVM RDD
-handle, plus the checkpoint directory of a reliable cut on the local
-file system). The build runs inside its own ``rounds.scope()``, so its
-cuts belong to the entry, never to the query scope that happened to pay
-for the build (the ownership contract is in ``operators/rounds.py``).
+Each entry is ``(value, releases)``: everything the build's own
+``rounds.scope()`` was handed — each cut's JVM RDD handle, the
+checkpoint directory of a reliable cut on the local file system, and
+every tmp dir the build created. So the build's cuts and dirs belong to
+the entry, never to the query scope that happened to pay for the build;
+what ``evict_all`` has not freed by process exit is deleted then (the
+ownership contract is in ``operators/rounds.py``).
 
 A harness that times passes (``bench.py``, the ``perfbench`` workloads)
 calls ``evict_all()`` before every pass, so each pass pays every build
@@ -29,7 +30,6 @@ body.
 
 from __future__ import annotations
 
-import atexit
 import tempfile
 from typing import Callable
 
@@ -40,16 +40,14 @@ _STORE: dict[tuple[str, str, str], tuple[object, list]] = {}
 
 
 class Releases:
-    """Handed to a ``shared`` build: registers what ``evict_all`` frees
-    besides the build's cuts."""
+    """Handed to a ``shared`` build: makes what the entry keeps besides
+    the build's cuts."""
 
-    def __init__(self) -> None:
-        self.items: list = []
-
-    def tmpdir(self, prefix: str) -> str:
+    @staticmethod
+    def tmpdir(prefix: str) -> str:
         """Create a tmp dir that lives as long as the entry."""
         path = tempfile.mkdtemp(prefix=prefix)
-        self.items.append(path)
+        rounds.own(path)  # the build's scope hands it to the entry
         return path
 
 
@@ -60,16 +58,10 @@ def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
     key = (name, spark.sparkContext.applicationId, sf_dir)
     hit = _STORE.get(key)
     if hit is None:
-        releases = Releases()
-        try:
-            with rounds.scope() as cuts:
-                value = build(releases)
-                releases.items += cuts
-                cuts.clear()  # the entry owns them now
-        except BaseException:
-            rounds.free(releases.items)
-            raise
-        hit = _STORE[key] = (value, releases.items)
+        with rounds.scope() as owned:  # a failed build frees what it made
+            value = build(Releases())
+            hit = _STORE[key] = (value, owned[:])
+            owned.clear()  # the entry owns them now
     return hit[0]
 
 
@@ -77,12 +69,3 @@ def evict_all(where: Callable[[tuple[str, str, str]], bool] | None = None) -> No
     """Free and drop every entry, or those whose key ``where`` accepts."""
     for key in [k for k in _STORE if where is None or where(k)]:
         rounds.free(_STORE.pop(key)[1])
-
-
-@atexit.register
-def _remove_dirs() -> None:
-    """At exit the JVM takes every checkpoint block with it, and may be
-    gone already; the tmp dirs and local checkpoint directories would
-    outlive the process, and are deleted without Spark."""
-    for _value, releases in _STORE.values():
-        rounds.free([item for item in releases if isinstance(item, str)])

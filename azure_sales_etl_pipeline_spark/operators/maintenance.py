@@ -21,7 +21,8 @@ Every whole-table rewrite here commits through writer.py's one
 protocol, ``overwrite_table`` (version directory + atomic pointer flip
 carrying ``commit_meta``; single writer per table), except
 ``compact_partitioned``, which rewrites partitions in place through
-``write_partitioned`` — the documented non-atomic family. writer.py's
+``write_partitioned``. Those two are the only writers that rewrite
+partitions in place (writer.py's non-atomic family). writer.py's
 resolver refuses Delta tables for every read and write here.
 """
 

@@ -20,16 +20,18 @@ never outlive it. ``release(df)`` frees one cut now (a build's
 intermediate that no kept frame reads any more); ``iterate`` releases
 nothing, since a step may read every earlier round (BFS unions its
 rings). A cut made with no scope open has no owner: only a JVM GC
-frees it.
+frees its blocks.
 
 Freeing goes through the cut's own RDD handle. ``DataFrame.unpersist``
 and ``spark.catalog.clearCache()`` go through the cache manager, which
 never saw a checkpoint, so both leave its blocks persistent; and Spark
 keeps a reliable checkpoint's files after the RDD is gone, so freeing
 deletes its ``getCheckpointFile()`` directory too. A reliable cut on
-the local file system also hands its owner that directory as a plain
-path, which ``free`` deletes without Spark: an owner that outlives the
-JVM (a memo entry at process exit) can still remove the files.
+the local file system also hands that directory over as a plain path
+(``own``), which ``free`` deletes without Spark. The process is every
+plain path's owner of last resort: whatever no scope or memo entry has
+freed by exit (a memo entry's files, an unscoped cut's files) is
+deleted then, even after ``spark.stop()``.
 
 A probe rides the round's one materialization through ``observe()``, so
 it costs no ``count()`` job. Write probes as ``F.count(F.when(cond, 1))``
@@ -48,6 +50,7 @@ Spark Engine of Azure Synapse" (VLDB 2021).
 
 from __future__ import annotations
 
+import atexit
 import shutil
 import threading
 from collections.abc import Callable, Iterator
@@ -58,9 +61,11 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation
 
 #: ``stack``: the open scopes on this thread, innermost last; each is
-#: the list of the cuts' JVM RDD handles it owns, and of the local
-#: checkpoint directories of its reliable cuts
+#: the list of the cuts' JVM RDD handles it owns, and of the plain
+#: paths handed to it (``own``)
 _SCOPES = threading.local()
+#: every plain path handed over by ``own`` and not freed yet
+_UNFREED: set[str] = set()
 
 
 def cut(df: DataFrame) -> DataFrame:
@@ -70,13 +75,22 @@ def cut(df: DataFrame) -> DataFrame:
     out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
     stack = getattr(_SCOPES, "stack", None)
     if stack:
-        handle = _handle(out)
-        stack[-1].append(handle)
-        if reliable:
-            files = urlparse(handle.getCheckpointFile().get())
-            if files.scheme == "file":
-                stack[-1].append(files.path)
+        stack[-1].append(_handle(out))
+    if reliable:
+        files = urlparse(_handle(out).getCheckpointFile().get())
+        if files.scheme == "file":
+            own(files.path)
     return out
+
+
+def own(path: str) -> None:
+    """Hand the local directory ``path`` to the innermost open scope,
+    and in any case to the process, which deletes it at exit unless it
+    was freed before."""
+    _UNFREED.add(path)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(path)
 
 
 @contextmanager
@@ -111,6 +125,7 @@ def free(items: list) -> None:
     for rdd in items:
         if isinstance(rdd, str):
             shutil.rmtree(rdd, ignore_errors=True)
+            _UNFREED.discard(rdd)
             continue
         try:
             rdd.unpersist(False)
@@ -120,6 +135,13 @@ def free(items: list) -> None:
                 path.getFileSystem(rdd.context().hadoopConfiguration()).delete(path, True)
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
+
+
+@atexit.register
+def _remove_unfreed() -> None:
+    """At exit the JVM takes every block with it, and may be gone
+    already; the plain paths nobody freed are deleted without Spark."""
+    free(list(_UNFREED))
 
 
 def _handle(df: DataFrame):

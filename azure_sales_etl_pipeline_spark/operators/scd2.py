@@ -32,24 +32,10 @@ materializes it once, the per-action counts ride that cut as observed
 metrics, and the rewrite and ``on_insert`` read the cut. A key repeated
 on either side (the join fans out to one row per pair) is handled
 row-locally by per-key windows that reuse the join's shuffle. An
-all-NO-CHANGE replay stops after the cut. Two storage modes behind one API:
-
-- ``n_buckets=None`` (default): whole-table ``overwrite_table`` rewrite
-  per batch — simplest, atomic, right for small/medium dimensions.
-- ``n_buckets=N``: the table is partitioned by a stable key-hash bucket
-  (``pmod(xxhash64(key), N)``) and an upsert rewrites ONLY the buckets
-  containing changed keys via dynamic partition overwrite
-  (``partitionOverwriteMode=dynamic``, set in session.py). At 100 TB
-  this turns "rewrite the dimension" into "rewrite touched buckets":
-  untouched bucket files are not rewritten, and only the touched
-  buckets' history is read back (the join scans the current rows of
-  every bucket). This is writer.py's documented non-atomic family:
-  per-bucket overwrite is not atomic ACROSS buckets — a crash
-  mid-upsert leaves some buckets advanced; the watermark-replay
-  contract (advance only after success) re-runs the batch and SCD2's
-  NO-CHANGE detection makes the replay a no-op for already-advanced
-  buckets, restoring consistency. This is the same at-least-once
-  self-heal the reference relies on (SURVEY §3).
+all-NO-CHANGE replay stops after the cut. Every batch that changes
+something rewrites the whole table through ``overwrite_table``, so the
+dimension is always a pointer table with a pinned schema, including
+after an empty first load.
 
 An injectable ``clock`` makes effective/end timestamps deterministic for
 tests and oracles (SURVEY.md F1 nondeterminism risk).
@@ -58,10 +44,9 @@ tests and oracles (SURVEY.md F1 nondeterminism risk).
 from __future__ import annotations
 
 import datetime as dt
-import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table_exists
@@ -70,7 +55,6 @@ from .rounds import cut, scope
 from .writer import overwrite_table, read_table, table_schema
 
 SCD_COLS = ("hash", "is_current", "effective_date", "end_date")
-BUCKET_COL = "__bucket"
 _ACTIONS = ("INSERT", "UPDATE", "NO CHANGE", "ABSENT")
 
 
@@ -97,7 +81,6 @@ class SCD2Table:
         tracked_cols: Sequence[str] | None = None,
         clock: Callable[[], dt.datetime] | None = None,
         on_insert: Callable[[DataFrame], None] | None = None,
-        n_buckets: int | None = None,
         on_delete: str = "ignore",
     ):
         if on_delete not in self.ON_DELETE_MODES:
@@ -110,20 +93,12 @@ class SCD2Table:
         self.tracked_cols = list(tracked_cols) if tracked_cols else None
         self.clock = clock or utcnow_naive
         self.on_insert = on_insert
-        self.n_buckets = n_buckets
         self.on_delete = on_delete
-
-    def _bucket_of(self, key_col: Column) -> Column:
-        return F.pmod(F.xxhash64(key_col), F.lit(self.n_buckets)).cast("int")
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(BUCKET_COL, self._bucket_of(F.col(self.key)))
 
     # -- reads ------------------------------------------------------------
 
     def history(self) -> DataFrame:
-        df = read_table(self.spark, self.path)
-        return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+        return read_table(self.spark, self.path)
 
     def current(self) -> DataFrame:
         return self.history().where(F.col("is_current"))
@@ -165,7 +140,7 @@ class SCD2Table:
         ``effective_date``/``end_date`` columns (common in ETL facts)
         neither collides nor gets silently dropped (r8 advisory)."""
         hist = self.history()
-        dim_cols = [c for c in hist.columns if c not in SCD_COLS and c != BUCKET_COL]
+        dim_cols = [c for c in hist.columns if c not in SCD_COLS]
         renamed = hist.select(
             *[F.col(c).alias(f"dim_{c}") for c in dim_cols],
             F.col("effective_date").alias("dim_effective_date"),
@@ -206,7 +181,7 @@ class SCD2Table:
         tracked_fields = [
             f
             for f in table_schema(self.spark, self.path).fields
-            if f.name != self.key and f.name not in SCD_COLS and f.name != BUCKET_COL
+            if f.name != self.key and f.name not in SCD_COLS
         ]
         missing = (
             keys_df.select(self.key)
@@ -281,16 +256,8 @@ class SCD2Table:
             first = self._stamp(self._hashed(source), now).observe(
                 obs, F.count(F.lit(1)).alias("n")
             )
-            if self.n_buckets:
-                first = self._bucketed(first)
-                first.write.partitionBy(BUCKET_COL).mode("errorifexists").parquet(self.path)
-            else:
-                overwrite_table(first, self.path)
+            overwrite_table(first, self.path)
             n = int(obs.get["n"])
-            if self.n_buckets and not n:
-                # No row, no bucket directory, no schema to read back:
-                # leave no table, so the next batch is the first load.
-                shutil.rmtree(self.path)
             if self.on_insert is not None and n:
                 self.on_insert(source)
             return self._stats(n, 0, 0, 0)
@@ -326,13 +293,6 @@ class SCD2Table:
         )
         action = F.col("__action")
         metrics = [F.count(F.when(action == a, 1)).alias(a) for a in _ACTIONS]
-        if self.n_buckets:
-            key = F.coalesce(F.col(f"s__{self.key}"), F.col(f"t__{self.key}"))
-            metrics.append(
-                F.collect_set(
-                    F.when(F.col("__expire") | F.col("__new"), self._bucket_of(key))
-                ).alias("buckets")
-            )
         obs = Observation()
         with scope():  # frees every cut below on the way out
             joined = cut(joined.observe(obs, *metrics))
@@ -362,35 +322,18 @@ class SCD2Table:
 
             # allowMissingColumns: a schema-evolved batch (new source
             # column, or a column the batch dropped) null-backfills the
-            # other side — same contract as writer.append_evolve.
-            if self.n_buckets:
-                # Surgical path: rewrite only buckets containing a changed
-                # key. The history read prunes on the PARTITION column
-                # (untouched buckets are neither read nor written); the
-                # changed buckets' current and new rows come from the cut.
-                # Staged before the write: dynamic partition overwrite
-                # writes into self.path while the plan reads it.
-                in_changed = F.col(BUCKET_COL).isin(m["buckets"])
-                current, new = (self._bucketed(d).where(in_changed) for d in (current, new))
-                staged = cut(
-                    read_table(self.spark, self.path)
-                    .where(in_changed & ~F.col("is_current"))
-                    .unionByName(current, allowMissingColumns=True)
-                    .unionByName(new, allowMissingColumns=True)
-                )
-                staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.path)
-            else:
-                # No pre-write materialization needed: overwrite_table
-                # writes a new version directory and flips the pointer
-                # only after the job completes, so the plan's reads of the
-                # CURRENT table files happen while those files still exist.
-                overwrite_table(
-                    self.history()
-                    .where(~F.col("is_current"))
-                    .unionByName(current, allowMissingColumns=True)
-                    .unionByName(new, allowMissingColumns=True),
-                    self.path,
-                )
+            # other side — same contract as writer.append_evolve. No
+            # pre-write materialization needed: overwrite_table writes a
+            # new version directory and flips the pointer only after the
+            # job completes, so the plan's reads of the CURRENT table
+            # files happen while those files still exist.
+            overwrite_table(
+                self.history()
+                .where(~F.col("is_current"))
+                .unionByName(current, allowMissingColumns=True)
+                .unionByName(new, allowMissingColumns=True),
+                self.path,
+            )
 
             if self.on_insert is not None and n_insert:
                 self.on_insert(

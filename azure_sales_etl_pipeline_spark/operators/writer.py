@@ -24,11 +24,10 @@ then infers nothing and fires no Spark job. Footer inference
 (``mergeSchema`` on read, one job per read) is the fallback for tables
 whose pointer predates the schema field and for the legacy flat layout.
 
-The non-atomic family: ``write_partitioned`` (and the bucketed SCD2
-upsert and ``compact_partitioned``) replaces Hive partitions in place by
-dynamic partition overwrite, and ``append_evolve`` adds files. A crash
-there can leave some partitions advanced; the watermark replay re-runs
-the batch and SCD2's no-change detection makes it a no-op.
+The non-atomic family: ``write_partitioned`` and ``compact_partitioned``
+replace Hive partitions in place by dynamic partition overwrite, and
+``append_evolve`` adds files. A crash there can leave some partitions
+advanced; the watermark replay re-runs the batch.
 
 Schema evolution: the reference appends Delta with ``mergeSchema=true``
 (1_Landing_to_Bronze.py:59-62). ``append_evolve`` owns an evolving
@@ -67,7 +66,10 @@ def _table_dir(path: str | Path) -> Path | None:
     ``path`` (``path/v=N`` with a pointer, else ``path`` itself if it
     holds a ``_SUCCESS`` marker or parquet files outside ``v=*``
     directories — pointer-less ``v=*`` directories are uncommitted
-    stages), or None when no table is committed there.
+    stages), or None when no table is committed there. The flat layout
+    is what ``write_partitioned`` (and ``compact_partitioned`` through
+    it) writes, and what tables written before the pointer existed
+    keep until their next overwrite.
 
     Refuses a Delta table written by another tool: reading it as plain
     parquet resurrects tombstoned files, and rewriting it destroys its
@@ -237,12 +239,7 @@ def write_csv(
     )
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    mode: str = "overwrite",
-) -> None:
+def write_partitioned(df: DataFrame, path: str, keys: list[str]) -> None:
     """Hive-partitioned parquet sink (``key=value`` directory layout):
     the physical layout that makes partition PRUNING work — a query
     filtering on a partition key lists and reads ONLY the matching
@@ -250,9 +247,9 @@ def write_partitioned(
     tests/test_plans_explain.py), which at 100 TB is the difference
     between scanning a day and scanning a decade.
 
-    With ``mode="overwrite"`` the write REPLACES only the partitions
-    present in ``df`` (dynamic partition overwrite, set per-write via
-    the DataFrameWriter option rather than mutating session conf) —
+    The write REPLACES only the partitions present in ``df`` (dynamic
+    partition overwrite, set per write through the DataFrameWriter
+    option; the session keeps Spark's static default) —
     the idempotent daily-reload idiom: re-running a day's load rewrites
     that day's directory and leaves history untouched. Choose partition
     keys with bounded cardinality (date, region, status — not user_id):
@@ -262,7 +259,7 @@ def write_partitioned(
     (
         df.write.option("partitionOverwriteMode", "dynamic")
         .partitionBy(*keys)
-        .mode(mode)
+        .mode("overwrite")
         .parquet(path)
     )
 

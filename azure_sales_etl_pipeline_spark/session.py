@@ -38,8 +38,6 @@ _DEFAULTS = {
     # Spark rejects outright; read as long and convert in the catalog
     # (catalog.load_table) — DuckDB equivalently truncates ns → µs.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Partitioned upsert rewrites only the partitions it touches.
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Scan split size. Local profile defaults to 8m so the single-file
     # testdata parquet still fans out across cores (a 40 MB lineitem →
     # 5 tasks instead of 1); a real cluster reading 128-512 MB files

@@ -337,10 +337,9 @@ def test_job_counter_is_read_in_observe_only():
     assert readers == {"azure_sales_etl_pipeline_spark/observe.py"}
 
 
-def test_exit_removes_memo_checkpoint_files(tmp_path):
-    """With a session checkpoint dir, a memo entry's cuts are reliable
-    checkpoints; a process that stops Spark and exits without
-    ``evict_all`` must still leave none of their ``rdd-N`` dirs."""
+def _leftover_checkpoints(tmp_path, body: str) -> list[Path]:
+    """Run ``body`` in a fresh process whose session checkpoints into a
+    local dir, then stop Spark and exit; the ``rdd-N`` dirs left."""
     ckpt = tmp_path / "ckpt"
     script = f"""
 import sys
@@ -349,13 +348,28 @@ from azure_sales_etl_pipeline_spark.operators import rounds
 from azure_sales_etl_pipeline_spark.plans import registry
 from azure_sales_etl_pipeline_spark.session import get_spark
 spark = get_spark(master="local[2]", extra_conf={{"spark.checkpoint.dir": {str(ckpt)!r}}})
-with rounds.scope():
-    registry()[0]["ngram_jaccard_pairs"](spark, {SF_DIR!r}).write.format("noop").mode("overwrite").save()
+{body}
 spark.stop()
 """
     subprocess.run([sys.executable, "-c", script], check=True, capture_output=True, timeout=600)
     assert list(ckpt.iterdir()), "the session checkpointed nowhere"
-    assert not list(ckpt.glob("*/rdd-*"))
+    return list(ckpt.glob("*/rdd-*"))
+
+
+def test_exit_removes_memo_checkpoint_files(tmp_path):
+    """With a session checkpoint dir, a memo entry's cuts are reliable
+    checkpoints; a process that stops Spark and exits without
+    ``evict_all`` must still leave none of their ``rdd-N`` dirs."""
+    assert not _leftover_checkpoints(tmp_path, f"""
+with rounds.scope():
+    registry()[0]["ngram_jaccard_pairs"](spark, {SF_DIR!r}).write.format("noop").mode("overwrite").save()
+""")
+
+
+def test_exit_removes_unscoped_checkpoint_files(tmp_path):
+    """A reliable cut made with no scope open has the process as its
+    owner of last resort: exiting leaves none of its ``rdd-N`` dirs."""
+    assert not _leftover_checkpoints(tmp_path, "rounds.cut(spark.range(10))")
 
 
 def test_benchmark_memo_discovery_finds_and_evicts_the_store(spark, monkeypatch):

@@ -12,8 +12,8 @@ fixture data:
 - ``operators.rounds.iterate`` honours its bound, cut cadence and null probes
 - an evolving append's pinned schema reads the same rows, types and
   nullability as footer inference, in ``existing + arrivals`` order
-- the SCD2 upsert (both delete modes, bucketed or not, with
-  ``ensure_members``) ≡ a plain-Python SCD2 reference
+- the SCD2 upsert (both delete modes, with ``ensure_members``) ≡ a
+  plain-Python SCD2 reference
 
 Hypothesis drives row multisets (with duplicates and skew) through the
 same code paths the fixture tests use; Spark jobs per example are kept
@@ -459,11 +459,10 @@ def _ref_hash(row, tracked):
 class _RefDim:
     """Plain-Python SCD2 over non-null keys: the join counts pairs, a
     key with any UPDATE pair expires ALL its current rows and versions
-    ALL its batch rows, and ABSENT keys expire only in expire mode. An
-    empty first load of a bucketed table leaves no table."""
+    ALL its batch rows, and ABSENT keys expire only in expire mode."""
 
-    def __init__(self, expire: bool, bucketed: bool):
-        self.expire, self.bucketed, self.cols, self.rows = expire, bucketed, [], None
+    def __init__(self, expire: bool):
+        self.expire, self.cols, self.rows = expire, [], None
 
     def upsert(self, cols, batch, now, expire_absent=None):
         expire = self.expire if expire_absent is None else expire_absent
@@ -475,8 +474,7 @@ class _RefDim:
             stats["deleted"] = 0
         stamp = {"is_current": True, "effective_date": now, "end_date": None}
         if self.rows is None:
-            if src or not self.bucketed:
-                self.cols, self.rows = list(cols), [{**s, **stamp} for s in src]
+            self.cols, self.rows = list(cols), [{**s, **stamp} for s in src]
             stats["insert"] = len(src)
             return stats
         current = [t for t in self.rows if t["is_current"]]
@@ -550,27 +548,24 @@ _SCD2_EXAMPLE = [
 @given(
     steps=_scd2_steps(),
     on_delete=st.sampled_from(["ignore", "expire"]),
-    n_buckets=st.sampled_from([None, 3]),
 )
-@example(steps=_SCD2_EXAMPLE, on_delete="ignore", n_buckets=None)
-@example(steps=_SCD2_EXAMPLE, on_delete="expire", n_buckets=3)
+@example(steps=_SCD2_EXAMPLE, on_delete="ignore")
+@example(steps=_SCD2_EXAMPLE, on_delete="expire")
 @example(  # an empty batch expires every key
     steps=[("batch", _DIM, [(0, "a", "a")]), ("batch", _DIM, [])],
     on_delete="expire",
-    n_buckets=None,
 )
-@example(  # an empty first load of a bucketed table leaves no table
+@example(  # an empty first load commits an empty table; key 1 joins, then versions
     steps=[("batch", _DIM, []), ("members", [1]), ("batch", _DIM, [(1, "a", "a")])],
     on_delete="ignore",
-    n_buckets=3,
 )
-def test_scd2_upsert_matches_reference(spark, tmp_path_factory, steps, on_delete, n_buckets):
+def test_scd2_upsert_matches_reference(spark, tmp_path_factory, steps, on_delete):
     now = [dt.datetime(2024, 1, 1)]
     dim = SCD2Table(
         spark, str(tmp_path_factory.mktemp("scd2") / "dim"), "id",
-        clock=lambda: now[0], n_buckets=n_buckets, on_delete=on_delete,
+        clock=lambda: now[0], on_delete=on_delete,
     )
-    ref = _RefDim(on_delete == "expire", n_buckets is not None)
+    ref = _RefDim(on_delete == "expire")
     for i, step in enumerate(steps):
         now[0] = dt.datetime(2024, 1, 1) + dt.timedelta(days=i)
         if step[0] == "members":
@@ -770,6 +765,38 @@ def test_round_loops_go_through_iterate():
             ):
                 offenders.append(f"{rel}:{node.lineno} {node.func.attr}")
     assert offenders == []
+
+
+def test_scd2_writes_only_through_overwrite_table():
+    """``SCD2Table`` has one storage layout: ``operators/scd2.py`` never
+    reaches a ``DataFrameWriter`` (no ``.write``, no writer
+    ``partitionBy``) and writes through ``overwrite_table``, imported by
+    name so a tracer can patch it there. Dynamic partition overwrite is
+    set per write by ``write_partitioned`` alone, never session-wide."""
+    import ast
+    from pathlib import Path
+
+    import azure_sales_etl_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    tree = ast.parse((root / "operators/scd2.py").read_text())
+    attrs = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute)]
+    assert not [n.lineno for n in attrs if n.attr in ("write", "writeTo", "writeStream")]
+    assert {ast.unparse(n) for n in attrs if n.attr == "partitionBy"} <= {"Window.partitionBy"}
+    writer_names = {
+        a.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom) and n.module == "writer"
+        for a in n.names
+    }
+    calls = {ast.unparse(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    assert "overwrite_table" in writer_names & calls
+    holders = {
+        f.relative_to(root).as_posix()
+        for f in root.rglob("*.py")
+        if "partitionOverwriteMode" in f.read_text()
+    }
+    assert holders == {"operators/writer.py"}
 
 
 # ---------------------------------------------------------------------------

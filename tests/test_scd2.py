@@ -379,13 +379,12 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-@pytest.mark.parametrize("fault", ["write", "on_insert", "bucketed_write", "none_bucketed"])
+@pytest.mark.parametrize("fault", ["write", "on_insert", "none", "replay"])
 def test_upsert_releases_its_materializations(spark, tmp_path, clock, monkeypatch, fault):
-    """An upsert leaves no persisted frame behind — neither when the
-    table write or the ``on_insert`` hook raises, nor after a bucketed
-    upsert's pre-write staging."""
-    from pyspark.sql import DataFrameWriter
-
+    """An upsert leaves no persisted frame behind: neither when the
+    table write or the ``on_insert`` hook raises, nor when a changing
+    upsert succeeds, nor when an all-NO-CHANGE replay returns right
+    after the cut."""
     from azure_sales_etl_pipeline_spark.operators import scd2
 
     state, tick = clock
@@ -399,20 +398,17 @@ def test_upsert_releases_its_materializations(spark, tmp_path, clock, monkeypatc
         if armed:
             boom()
 
-    bucketed = fault in ("bucketed_write", "none_bucketed")
-    dim = make_dim(spark, tmp_path, state, on_insert=hook, n_buckets=4 if bucketed else None)
+    dim = make_dim(spark, tmp_path, state, on_insert=hook)
     dim.upsert(df(spark, [(1, "A", "R"), (2, "B", "C")]))
     tick(dt.datetime(2024, 2, 1))
     if fault == "write":
         monkeypatch.setattr(scd2, "overwrite_table", boom)
-    elif fault == "bucketed_write":
-        monkeypatch.setattr(DataFrameWriter, "parquet", boom)
     elif fault == "on_insert":
         armed.append(True)
     before = _persistent_rdds(spark)
-    batch = df(spark, [(1, "A", "W"), (3, "C", "N")])
-    if fault == "none_bucketed":
-        dim.upsert(batch)
+    batch = df(spark, [(1, "A", "R")] if fault == "replay" else [(1, "A", "W"), (3, "C", "N")])
+    if fault in ("none", "replay"):
+        assert dim.upsert(batch)["update"] == (fault == "none")
     else:
         with pytest.raises(RuntimeError, match="injected fault"):
             dim.upsert(batch)
