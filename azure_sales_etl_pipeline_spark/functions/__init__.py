@@ -1,17 +1,27 @@
 """Reusable column expressions.
 
-Everything here is built-in ``pyspark.sql.functions`` composition — JVM
-side, whole-stage-codegen friendly. No Python UDFs (the reference is
-likewise UDF-free: SURVEY.md §2.8).
+Every expression here is built-in ``pyspark.sql.functions`` composition —
+JVM side, whole-stage-codegen friendly. No Python UDFs (the reference is
+likewise UDF-free: SURVEY.md §2.8). Beside them live the driver-side
+helpers the package shares: ``local_df``, ``utcnow_naive`` and
+``concurrent_map``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
+
+from ..operators import rounds
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 
 def local_df(spark: SparkSession, rows: Sequence[tuple], ddl_schema) -> DataFrame:
@@ -46,6 +56,37 @@ def local_df(spark: SparkSession, rows: Sequence[tuple], ddl_schema) -> DataFram
     cols = {f.name: [r[i] for r in rows] for i, f in enumerate(st.fields)}
     table = pa.Table.from_pydict(cols, schema=arrow_schema)
     return spark.createDataFrame(table)
+
+
+def concurrent_map(fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
+    """``list(map(fn, items))`` with every call on its own thread — the
+    package's one thread pool, for independent driver-bound units (the
+    medallion stages: while one unit's driver plans, another's jobs
+    keep the executors busy).
+
+    Results come back in ``items`` order; 0 or 1 item runs inline.
+    Each thread starts with the caller's Spark local properties (job
+    group, description, scheduler pool) and runs in its own
+    ``rounds.scope()``, whose cuts go to the caller's innermost scope
+    once every call has returned (with none open they stay unowned, as
+    a cut made inline would). A failing call re-raises here, after
+    every other call has finished."""
+    items = list(items)
+    if len(items) < 2:
+        return [fn(item) for item in items]
+
+    def scoped(item: T) -> tuple[R, list]:
+        with rounds.scope() as owned:
+            out = fn(item)
+            kept = owned[:]
+            owned.clear()
+        return out, kept
+
+    session = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        futures = [pool.submit(inheritable_thread_target(session)(scoped), i) for i in items]
+    rounds.adopt([h for f in futures if f.exception() is None for h in f.result()[1]])
+    return [f.result()[0] for f in futures]
 
 
 def utcnow_naive() -> dt.datetime:

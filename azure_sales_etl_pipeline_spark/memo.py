@@ -59,9 +59,12 @@ def shared(name: str, spark, sf_dir: str, build: Callable[[Releases], object]):
     hit = _STORE.get(key)
     if hit is None:
         with rounds.scope() as owned:  # a failed build frees what it made
-            value = build(Releases())
-            hit = _STORE[key] = (value, owned[:])
-            owned.clear()  # the entry owns them now
+            entry = (build(Releases()), owned[:])
+            # Two threads that miss at once both build; the first to
+            # store wins, and the loser's scope frees what it made.
+            hit = _STORE.setdefault(key, entry)
+            if hit is entry:
+                owned.clear()  # the entry owns them now
     return hit[0]
 
 

@@ -20,7 +20,10 @@ never outlive it. ``release(df)`` frees one cut now (a build's
 intermediate that no kept frame reads any more); ``iterate`` releases
 nothing, since a step may read every earlier round (BFS unions its
 rings). A cut made with no scope open has no owner: only a JVM GC
-frees its blocks.
+frees its blocks. Scopes are per thread: ``functions.concurrent_map``
+runs each call in its own scope and ``adopt``s what it still owns into
+the caller's innermost scope, so a cut made on a pool thread has the
+owner it would have had inline.
 
 Freeing goes through the cut's own RDD handle. ``DataFrame.unpersist``
 and ``spark.catalog.clearCache()`` go through the cache manager, which
@@ -73,9 +76,7 @@ def cut(df: DataFrame) -> DataFrame:
     innermost open scope owns the result."""
     reliable = bool(df.sparkSession.sparkContext.getCheckpointDir())
     out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-    stack = getattr(_SCOPES, "stack", None)
-    if stack:
-        stack[-1].append(_handle(out))
+    adopt([_handle(out)])
     if reliable:
         files = urlparse(_handle(out).getCheckpointFile().get())
         if files.scheme == "file":
@@ -88,9 +89,17 @@ def own(path: str) -> None:
     and in any case to the process, which deletes it at exit unless it
     was freed before."""
     _UNFREED.add(path)
+    adopt([path])
+
+
+def adopt(items: list) -> None:
+    """Hand cut handles and plain paths to the innermost open scope on
+    this thread; with none open they stay unowned. ``cut`` and ``own``
+    hand over what they make, ``functions.concurrent_map`` what a pool
+    thread's scope still owns when its call returns."""
     stack = getattr(_SCOPES, "stack", None)
     if stack:
-        stack[-1].append(path)
+        stack[-1].extend(items)
 
 
 @contextmanager

@@ -14,9 +14,11 @@ overwrite. Read engine tables through ``read_table``: a raw
 ``spark.read.parquet(path)`` sees ``v=`` as a partition column.
 Single-writer contract: two concurrent writers can both stage v=N+1
 and the second flip wins; the orchestrator, like the reference's ADF
-trigger, runs one writer per table. ``os.replace`` is atomic on local
-POSIX only: HDFS needs the Hadoop FileSystem rename, object stores a
-log-based table format.
+trigger, runs one writer per table. Its concurrent stages write
+disjoint paths (each table's bronze, silver and watermark tables, each
+mart's gold table), and it appends the run log once, after every stage
+has returned. ``os.replace`` is atomic on local POSIX only: HDFS needs
+the Hadoop FileSystem rename, object stores a log-based table format.
 
 Schema is served from the commit, the way a metastore serves it:
 ``read_table`` hands the pointer's schema to the parquet reader, which

@@ -3,12 +3,24 @@
 
 The reference's control flow, re-expressed:
 - Lookup table list (S13, pipeline.json:63-87)   → TableConfig list
-- ForEach with per-table watermark window (T1)   → run_table loop
+- ForEach with per-table watermark window (T1)   → concurrent_map over
+                                                   the tables
 - Landing→Bronze→Silver stage chain (:277-362)   → ingest → scd2
 - per-table error isolation (C3; notebooks catch
   and continue, 2_Bronze_to_Silver.py:152-158)   → try/except per table
 - New-customer Lookup → Web POST (:364-441)      → on_insert callback,
   pluggable (no HTTP in the engine; tests inject a recorder)
+
+ADF runs ForEach items in parallel unless ``isSequential`` is set; so
+does the engine. Each stage — ingest, bronze→silver SCD2, silver→gold —
+maps its independent units (tables, marts) through
+``functions.concurrent_map``, an order-preserving thread map: the pass
+is driver-bound, so while one unit's driver plans, another's jobs keep
+the executors busy. A stage starts after every unit of the one before
+it has returned; results and run-log rows keep config order. Each unit
+writes only its own paths (``bronze/<t>``, ``silver/<t>``,
+``state/watermarks/<t>.wm``, ``gold/<mart>``), and its jobs carry its
+run-log stage name as their description (``observe.described``).
 
 Stages communicate only through tables on disk (same as the reference's
 layer containers), so any stage can rerun independently; watermarks make
@@ -28,7 +40,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import LayerCatalog, table_exists
-from .functions import local_df, utcnow_naive
+from .functions import concurrent_map, local_df, utcnow_naive
+from .observe import described
 from .operators.scd2 import SCD2Table
 from .operators.watermark import WatermarkStore
 from .operators.writer import append_evolve, overwrite_table, read_table
@@ -203,39 +216,39 @@ class MedallionPipeline:
         """One stage with the retry policy: up to 1 + self.retry
         attempts, self.retry_wait seconds apart (the ADF activity
         policy, adf/pipeline.json:13-14), then per-stage isolation —
-        the failure is recorded, the run continues (C3)."""
-        for attempt in range(1 + self.retry):
-            try:
-                stats = fn()
-                if attempt:
-                    stats = {**stats, "attempts": attempt + 1}
-                return StageResult(stage, True, stats)
-            except Exception:  # noqa: BLE001 — per-stage isolation (C3)
-                err = traceback.format_exc(limit=3)
-                if attempt < self.retry:
-                    self.sleep(self.retry_wait)
+        the failure is recorded, the run continues (C3). The stage's
+        jobs are described by its name."""
+        with described(self.spark, stage):
+            for attempt in range(1 + self.retry):
+                try:
+                    stats = fn()
+                    if attempt:
+                        stats = {**stats, "attempts": attempt + 1}
+                    return StageResult(stage, True, stats)
+                except Exception:  # noqa: BLE001 — per-stage isolation (C3)
+                    err = traceback.format_exc(limit=3)
+                    if attempt < self.retry:
+                        self.sleep(self.retry_wait)
         return StageResult(stage, False, error=err)
 
     def run(self, landing_root: str) -> list[StageResult]:
         """Full run: ingest all landed tables, SCD2 each configured
-        table, then refresh gold marts — retry policy + per-stage
-        isolation throughout (C3: one bad table/mart never blocks the
-        rest), and the outcome of every stage appended to the persisted
-        run log."""
+        table, then refresh gold marts — each stage's units concurrently,
+        retry policy + per-stage isolation throughout (C3: one bad
+        table/mart never blocks the rest), and the outcome of every
+        stage appended to the persisted run log once all have
+        returned."""
         run_id = self._next_run_id()
         run_at = self.clock()
-        results: list[StageResult] = []
         ingest_stats = self.landing_to_bronze(landing_root)
-        results.append(StageResult("__ingest__", True, {"rows": ingest_stats}))
-        for cfg in self.tables:
-            results.append(
-                self._attempt(cfg.name, lambda cfg=cfg: self.bronze_to_silver(cfg))
-            )
-        for name in self.gold_marts:
-            results.append(
-                self._attempt(
-                    f"gold:{name}", lambda name=name: self.silver_to_gold(name)
-                )
-            )
+        results = [StageResult("__ingest__", True, {"rows": ingest_stats})]
+        results += concurrent_map(
+            lambda cfg: self._attempt(cfg.name, lambda: self.bronze_to_silver(cfg)),
+            self.tables,
+        )
+        results += concurrent_map(
+            lambda name: self._attempt(f"gold:{name}", lambda: self.silver_to_gold(name)),
+            self.gold_marts,
+        )
         self._persist_log(run_id, run_at, results)
         return results

@@ -18,8 +18,9 @@ Lifecycle per table (faithful to the reference):
 
 Scale: CSV read parallelism is per-file/per-split; the audit columns are
 pure map. The append itself writes without shuffle. At 100 TB you'd
-land compressed CSV in many files — the loop is per-table, the files
-within a table load as one distributed job.
+land compressed CSV in many files — the files within a table load as
+one distributed job, and ``run`` loads the tables concurrently
+(``functions.concurrent_map``), each writing only its own Bronze table.
 """
 
 from __future__ import annotations
@@ -33,7 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..catalog import table_exists
-from ..functions import utcnow_naive
+from ..functions import concurrent_map, utcnow_naive
+from ..observe import described
 from ..operators.writer import append_evolve, table_schema
 
 AUDIT_COLS = ("ingestion_timestamp", "source_file")
@@ -128,17 +130,21 @@ class CsvIngestor:
         return int(obs.get["n"])
 
     def run(self, landing_root: str) -> dict[str, int | None]:
-        """The per-table loop with error isolation (C3; the reference
-        skips missing-path tables and raises on real errors,
-        1_Landing_to_Bronze.py:71-73). Returns per-table row counts,
-        None for tables that failed."""
-        results: dict[str, int | None] = {}
-        for table, path in discover_sources(landing_root).items():
+        """Ingest every discovered table, concurrently, with error
+        isolation (C3; the reference skips missing-path tables and
+        raises on real errors, 1_Landing_to_Bronze.py:71-73). Returns
+        per-table row counts in discovery order, None for tables that
+        failed. Each table's jobs are described ``ingest:<table>``."""
+        sources = discover_sources(landing_root)
+        return dict(zip(sources, concurrent_map(self._isolated, sources.items())))
+
+    def _isolated(self, source: tuple[str, str]) -> int | None:
+        table, path = source
+        with described(self.spark, f"ingest:{table}"):
             try:
-                results[table] = self.ingest(table, path)
+                return self.ingest(table, path)
             except Exception:  # noqa: BLE001 — per-table isolation
-                results[table] = None
-        return results
+                return None
 
 
 def land_batch(

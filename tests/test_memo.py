@@ -246,6 +246,48 @@ def test_failed_build_releases_what_it_registered(tmp_path):
     assert ("failing", "app", str(tmp_path)) not in memo._STORE
 
 
+def test_racing_builds_keep_one_entry(tmp_path):
+    """Threads that miss the same key at once all build: every caller
+    gets the entry stored first, and each losing build's tmp dir is
+    freed at once instead of outliving its unreachable entry. More
+    threads than cores, and a short switch interval, so a lost update
+    between the miss and the store would show."""
+    import threading
+
+    class Session:
+        class sparkContext:
+            applicationId = "app"
+
+    n = 2 * os.cpu_count()
+    all_missed = threading.Barrier(n, timeout=30)
+    made, got = [], []
+
+    def build(keep):
+        made.append(keep.tmpdir("memo_race_"))
+        all_missed.wait()
+        return object()
+
+    def call():
+        got.append(memo.shared("race", Session, str(tmp_path), build))
+
+    threads = [threading.Thread(target=call) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    value, releases = memo._STORE[("race", "app", str(tmp_path))]
+    assert got == [value] * n
+    assert [d for d in made if os.path.exists(d)] == releases
+    memo.evict_all(where=lambda k: k[0] == "race")
+    assert not any(os.path.exists(d) for d in made)
+
+
 def _module_level_dict_stores(path: Path) -> list[str]:
     names = []
     for node in ast.parse(path.read_text()).body:

@@ -278,3 +278,111 @@ def test_legacy_flat_run_log_stays_readable_and_appendable(spark, tmp_path):
     log = sorted((r["run_id"], r["stage"], r["n_insert"]) for r in pipe.run_log().collect())
     assert log == [(7, "__ingest__", 3), (8, "__ingest__", 0)]
     assert not (Path(pipe.log_path) / "_current_version.json").exists()
+
+
+def _two_table_landing(tmp_path):
+    landing = tmp_path / "landing"
+    write_csv(landing / "a" / "b.csv", "id,v\n1,x\n2,y\n")
+    write_csv(landing / "b" / "b.csv", "id,v\n1,p\n")
+    return landing
+
+
+def _current(table):
+    def mart(sp, catalog):
+        return read_table(sp, catalog.path("silver", table)).where("is_current").select("id", "v")
+
+    return mart
+
+
+def test_concurrent_map_keeps_order_and_runs_units_together(spark):
+    """The one thread map: results in item order, every call on its own
+    thread at the same time (a barrier only the concurrent calls pass),
+    each inheriting the caller's job group; one item runs inline."""
+    import threading
+
+    from azure_sales_etl_pipeline_spark.functions import concurrent_map
+
+    sc = spark.sparkContext
+    together = threading.Barrier(3, timeout=60)
+
+    def unit(i):
+        together.wait()
+        return i, sc.getLocalProperty("spark.jobGroup.id")
+
+    sc.setJobGroup("caller", "caller")
+    try:
+        assert concurrent_map(unit, [2, 0, 1]) == [(2, "caller"), (0, "caller"), (1, "caller")]
+    finally:
+        sc._jsc.clearJobGroup()
+    caller = threading.get_ident()
+    assert concurrent_map(lambda _: threading.get_ident(), ["one"]) == [caller]
+    assert concurrent_map(unit, []) == []
+
+
+def test_concurrent_stage_cuts_belong_to_the_caller_scope(spark, tmp_path):
+    """A gold mart that cuts runs on a pool thread, yet its cut belongs
+    to the scope open around ``run``: kept until that scope exits, then
+    freed, so ``getPersistentRDDs()`` is back to its prior set."""
+    from azure_sales_etl_pipeline_spark.operators import rounds
+
+    def cut_current(table):
+        return lambda sp, catalog: rounds.cut(_current(table)(sp, catalog))
+
+    pipe = MedallionPipeline(
+        spark,
+        str(tmp_path / "lake"),
+        [TableConfig("a", "id"), TableConfig("b", "id")],
+        clock=lambda: dt.datetime(2024, 1, 1),
+        gold_marts={"ma": cut_current("a"), "mb": cut_current("b")},
+    )
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    with rounds.scope():
+        assert all(r.ok for r in pipe.run(str(_two_table_landing(tmp_path))))
+        assert len(persistent() - before) == 2  # the marts' cuts, still owned
+    assert persistent() == before
+
+
+def test_every_stage_job_carries_the_caller_group_and_its_stage(spark, tmp_path, monkeypatch):
+    """Under a caller job group, a 2-table, 2-mart run labels every job:
+    the group is the caller's, and each stage's jobs are described by
+    its run-log stage name. The jobs left with the caller's own
+    description are exactly the run's control-plane jobs."""
+    from azure_sales_etl_pipeline_spark.observe import count_jobs, jobs_by_stage
+
+    pipe = MedallionPipeline(
+        spark,
+        str(tmp_path / "lake"),
+        [TableConfig("a", "id"), TableConfig("b", "id")],
+        clock=lambda: dt.datetime(2024, 1, 1),
+        gold_marts={"ma": _current("a"), "mb": _current("b")},
+    )
+    control = []
+
+    def counted(call):
+        def wrapper(*args):
+            out = []
+            control.append(count_jobs(spark, lambda: out.append(call(*args))))
+            return out[0]
+
+        return wrapper
+
+    for name in ("_next_run_id", "_persist_log"):
+        monkeypatch.setattr(pipe, name, counted(getattr(pipe, name)))
+    landing = _two_table_landing(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("run-group", "control")
+    try:
+        jobs = jobs_by_stage(spark, lambda: pipe.run(str(landing)))
+    finally:
+        sc._jsc.clearJobGroup()
+
+    assert {group for group, _ in jobs} == {"run-group"}
+    by_stage = {desc: n for (_, desc), n in jobs.items()}
+    stages = {"ingest:a", "ingest:b", "a", "b", "gold:ma", "gold:mb"}
+    assert set(by_stage) == stages | {"control"}
+    assert all(by_stage[s] > 0 for s in stages)
+    assert len(control) == 2 and by_stage["control"] == sum(control)

@@ -609,6 +609,116 @@ def test_scd2_upsert_job_count(spark, tmp_path):
     assert replay <= 3
 
 
+# ---------------------------------------------------------------------------
+# Concurrent medallion stages (``functions.concurrent_map``) against the
+# serial loop they replace: the same runs leave the same lake.
+# ---------------------------------------------------------------------------
+
+_cdc_batch = st.dictionaries(st.integers(0, 6), st.sampled_from("abc"), max_size=5)
+
+
+@st.composite
+def _cdc_runs(draw):
+    """Per run, one landing batch (key → value, possibly empty) for each
+    of 1-2 good tables; 2-3 runs."""
+    n_tables = draw(st.integers(1, 2))
+    batches = st.lists(_cdc_batch, min_size=n_tables, max_size=n_tables)
+    return draw(st.lists(batches, min_size=2, max_size=3))
+
+
+def _run_medallion(spark, lake, landing, runs):
+    """Run ``MedallionPipeline`` once per landing state in ``runs`` (a
+    callable that writes run i's landing files), with a table whose
+    business key is missing (fails every run) and a mart that fails
+    once under ``retry=1``; return everything the runs left."""
+    from azure_sales_etl_pipeline_spark.functions import local_df
+    from azure_sales_etl_pipeline_spark.operators.writer import read_table
+    from azure_sales_etl_pipeline_spark.pipeline import MedallionPipeline, TableConfig
+
+    failed = []
+
+    def current(sp, catalog, table):
+        path = catalog.path("silver", table)
+        if not table_exists(path):
+            return local_df(sp, [], "id int, v string")
+        return read_table(sp, path).where("is_current").select("id", "v")
+
+    def by_value(sp, catalog):
+        return current(sp, catalog, "t0").groupBy("v").count()
+
+    def flaky(sp, catalog):
+        if not failed:
+            failed.append(True)
+            raise RuntimeError("transient")
+        return current(sp, catalog, "t1")
+
+    clock = [dt.datetime(2024, 1, 1)]
+    tables = [TableConfig("bad", "missing_key"), TableConfig("t0", "id"), TableConfig("t1", "id")]
+    pipe = MedallionPipeline(
+        spark, str(lake), tables, clock=lambda: clock[0],
+        gold_marts={"by_value": by_value, "flaky": flaky},
+        retry=1, sleep=lambda s: None,
+    )
+
+    def clean(error):
+        return None if error is None else error.replace(str(lake), "<lake>")
+
+    results = []
+    for i, write_landing in enumerate(runs):
+        clock[0] = dt.datetime(2024, 1, 1) + dt.timedelta(days=i)
+        write_landing()
+        results.append([(r.table, r.ok, r.stats, clean(r.error)) for r in pipe.run(str(landing))])
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    lake_rows = {
+        (layer, name): rows(read_table(spark, pipe.catalog.path(layer, name)))
+        for layer, names in (("silver", ("t0", "t1")), ("gold", ("by_value", "flaky")))
+        for name in names
+        if table_exists(pipe.catalog.path(layer, name))
+    }
+    log = [(*r[:-1], clean(r[-1])) for r in rows(pipe.run_log())]
+    return results, lake_rows, {t.name: pipe.watermarks.get(t.name) for t in tables}, log
+
+
+@settings(_slow, max_examples=3)  # each example runs 2-3 pipeline runs twice
+@given(runs=_cdc_runs())
+@example(runs=[[{1: "a", 2: "b"}, {3: "c"}], [{1: "b", 4: "a"}, {}], [{1: "b", 4: "a"}, {3: "a"}]])
+def test_concurrent_stages_match_the_serial_loop(spark, tmp_path_factory, runs):
+    """Serial (``concurrent_map`` replaced by the builtin ``map``) and
+    concurrent runs over the same landing batches leave identical
+    results (order, ``ok``, stats, errors), silver history, gold,
+    watermarks and run log — including a table that fails every run
+    and a mart that fails once and is retried."""
+    from azure_sales_etl_pipeline_spark import pipeline
+    from azure_sales_etl_pipeline_spark.sources import ingest
+
+    root = tmp_path_factory.mktemp("concurrent")
+    landing = root / "landing"
+
+    def write_run(batches):
+        def write():
+            for name, batch in [("bad", {1: "x"}), *((f"t{i}", b) for i, b in enumerate(batches))]:
+                (landing / name).mkdir(parents=True, exist_ok=True)
+                body = "".join(f"{k},{v}\n" for k, v in sorted(batch.items()))
+                (landing / name / "b.csv").write_text("id,v\n" + body)
+
+        return write
+
+    writers = [write_run(batches) for batches in runs]
+    concurrent = _run_medallion(spark, root / "lake_concurrent", landing, writers)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(pipeline, "concurrent_map", map)
+        m.setattr(ingest, "concurrent_map", map)
+        serial = _run_medallion(spark, root / "lake_serial", landing, writers)
+    assert concurrent == serial
+    results = concurrent[0]
+    assert [t for t, *_ in results[0]] == ["__ingest__", "bad", "t0", "t1", "gold:by_value", "gold:flaky"]
+    assert all(not ok for r in results for t, ok, *_ in r if t == "bad")
+    assert results[0][-1][1:3] == (True, {"rows": results[0][-1][2]["rows"], "attempts": 2})
+
+
 # Jobs per cold run (memos evicted, noop write) at sf0.001 under this
 # session's 4 shuffle partitions: the counts before the round loops
 # moved onto ``operators.rounds.iterate``. A loop consumer may only
@@ -797,6 +907,38 @@ def test_scd2_writes_only_through_overwrite_table():
         if "partitionOverwriteMode" in f.read_text()
     }
     assert holders == {"operators/writer.py"}
+
+
+def test_threads_are_built_only_by_concurrent_map():
+    """The package has one thread pool: ``ThreadPoolExecutor``,
+    ``threading.Thread`` and ``InheritableThread`` are built only inside
+    ``functions.concurrent_map``, with one worker per item (no size from
+    config or the environment). Any other concurrency reuses it, and so
+    keeps Spark local-property inheritance and the scope hand-off."""
+    import ast
+    from pathlib import Path
+
+    import azure_sales_etl_pipeline_spark as pkg
+
+    repo = Path(pkg.__file__).parent.parent
+    files = [*Path(pkg.__file__).parent.rglob("*.py"), *(repo / "scripts").rglob("*.py"),
+             repo / "bench.py", repo / "__spark_entry__.py"]
+    builders = ("ThreadPoolExecutor", "Thread", "InheritableThread")
+    built = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and ast.unparse(node.func).split(".")[-1] in builders:
+                fn = node
+                while fn in parents and not isinstance(fn, ast.FunctionDef):
+                    fn = parents[fn]
+                where = getattr(fn, "name", "<module>")
+                built.append((f.relative_to(repo).as_posix(), where, ast.unparse(node)))
+    assert [(f, fn) for f, fn, _ in built] == [
+        ("azure_sales_etl_pipeline_spark/functions/__init__.py", "concurrent_map")
+    ]
+    assert built[0][2] == "ThreadPoolExecutor(max_workers=len(items))"
 
 
 # ---------------------------------------------------------------------------
