@@ -3,8 +3,8 @@
 Every expression here is built-in ``pyspark.sql.functions`` composition —
 JVM side, whole-stage-codegen friendly. No Python UDFs (the reference is
 likewise UDF-free: SURVEY.md §2.8). Beside them live the driver-side
-helpers the package shares: ``local_df``, ``utcnow_naive`` and
-``concurrent_map``.
+helpers the package shares: ``LocalRows``, ``local_df``,
+``utcnow_naive`` and ``concurrent_map``.
 """
 
 from __future__ import annotations
@@ -24,6 +24,32 @@ T = TypeVar("T")
 R = TypeVar("R")
 
 
+class LocalRows:
+    """Rows held on the driver with their Spark schema: positional
+    tuples in the schema's field order, exactly like the classic
+    ``createDataFrame`` API. ``schema`` is a DDL string or a
+    ``StructType``; empty ``rows`` is fine (schema only).
+
+    A ``LocalRows`` is the source of ``local_df`` and, in place of a
+    DataFrame, of the writer's commits (``writer.write_snapshot``,
+    ``overwrite_table``, ``append_evolve``), which write it as one
+    parquet file from the driver and fire no Spark job."""
+
+    def __init__(self, rows: Sequence[tuple], schema) -> None:
+        from pyspark.sql.types import StructType, _parse_datatype_string
+
+        self.rows = list(rows)
+        self.schema = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+
+    def to_arrow(self):
+        """The rows as a ``pyarrow.Table`` typed by ``to_arrow_schema``."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cols = {f.name: [r[i] for r in self.rows] for i, f in enumerate(self.schema.fields)}
+        return pa.Table.from_pydict(cols, schema=to_arrow_schema(self.schema))
+
+
 def local_df(spark: SparkSession, rows: Sequence[tuple], ddl_schema) -> DataFrame:
     """Small local-rows DataFrame via the ARROW path — a drop-in for
     ``spark.createDataFrame(rows, ddl_schema)`` on control-plane data
@@ -34,28 +60,15 @@ def local_df(spark: SparkSession, rows: Sequence[tuple], ddl_schema) -> DataFram
     deserialization pass — measured 5-7 s per tiny write/action in
     this environment vs 0.3 s through Arrow (r10's "fixed per-query
     session overhead" was largely this). Routing through a
-    ``pyarrow.Table`` yields a JVM-side LocalRelation: no Python in
-    any later job, plans can constant-fold/broadcast it, and the
-    result is byte-identical (timestamps, nested arrays, and NULLs
-    round-trip exactly — pinned by tests/test_functions.py).
+    ``pyarrow.Table`` (``LocalRows.to_arrow``) yields a JVM-side
+    LocalRelation: no Python in any later job, plans can
+    constant-fold/broadcast it, and the result is byte-identical
+    (timestamps, nested arrays, and NULLs round-trip exactly — pinned
+    by tests/test_functions.py).
 
-    Rows are positional tuples matching the DDL field order, exactly
-    like the classic API. ``ddl_schema`` is a DDL string or a
-    ``StructType``. Empty ``rows`` is fine (schema-only frame).
+    ``rows`` and ``ddl_schema`` are as for ``LocalRows``.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _parse_datatype_string
-
-    st = (
-        ddl_schema
-        if isinstance(ddl_schema, StructType)
-        else _parse_datatype_string(ddl_schema)
-    )
-    arrow_schema = to_arrow_schema(st)
-    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(st.fields)}
-    table = pa.Table.from_pydict(cols, schema=arrow_schema)
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(LocalRows(rows, ddl_schema).to_arrow())
 
 
 def concurrent_map(fn: Callable[[T], R], items: Iterable[T]) -> list[R]:

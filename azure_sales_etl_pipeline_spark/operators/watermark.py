@@ -6,7 +6,8 @@ in a one-line text file (2_Bronze_to_Silver.py:44-67,143-147). The
 engine uses a single-row parquet table per key, committed through
 ``writer.overwrite_table`` — atomic to replace, schema'd, and readable
 by any engine. The value also rides the commit's metadata, so ``get``
-reads it from the version pointer without a Spark job. Missing state
+reads it from the version pointer without a Spark job; ``set`` writes
+the row from the driver, without one either. Missing state
 defaults to 1900-01-01, the reference's full-history sentinel
 (2_Bronze_to_Silver.py:44; adf/pipeline.json:129).
 
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table_exists
-from ..functions import local_df
+from ..functions import LocalRows, local_df
 from .writer import overwrite_table, read_commit_meta, read_table
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
@@ -92,15 +93,17 @@ class WatermarkStore(_WatermarkOps):
 
     def set(self, table: str, value: dt.datetime) -> None:
         """Atomic replace through the engine's table-commit protocol: a
-        crash leaves the old watermark or the new one, never none.
+        crash leaves the old watermark or the new one, never none. The
+        row is written from the driver (``LocalRows``): no Spark job.
 
         The pointer flip is local-POSIX-atomic; on object stores keep
         watermark state in a transactional store (``JdbcWatermarkStore``;
         the reference uses a SQL table, adf/pipeline.json:186-272 — the
         right call at cluster scale)."""
-        df = local_df(self.spark, [(table, value)], _SCHEMA)
         overwrite_table(
-            df.coalesce(1), str(self._path(table)), commit_meta={"watermark": value.isoformat()}
+            LocalRows([(table, value)], _SCHEMA),
+            str(self._path(table)),
+            commit_meta={"watermark": value.isoformat()},
         )
 
 

@@ -20,6 +20,14 @@ mart's gold table), and it appends the run log once, after every stage
 has returned. ``os.replace`` is atomic on local POSIX only: HDFS needs
 the Hadoop FileSystem rename, object stores a log-based table format.
 
+The data step has two sources. A DataFrame is written by a Spark job.
+Control-plane rows held on the driver (``functions.LocalRows``: a
+watermark, a run's log rows) are written as one parquet file by
+``pyarrow``, typed by Spark's ``to_arrow_schema``, so committing them
+fires no job; an append renames the file into place from a hidden
+name. ``column_max`` reads a column's maximum from the committed files'
+parquet footers on the driver (the run log's last run id).
+
 Schema is served from the commit, the way a metastore serves it:
 ``read_table`` hands the pointer's schema to the parquet reader, which
 then infers nothing and fires no Spark job. Footer inference
@@ -45,12 +53,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..functions import LocalRows
 
 _VERSION_PTR = "_current_version.json"
 #: Commit-metadata side file of the legacy flat layout, read for tables
@@ -98,7 +109,7 @@ def _table_dir(path: str | Path) -> Path | None:
 
 
 def overwrite_table(
-    df: DataFrame,
+    df: DataFrame | LocalRows,
     path: str,
     commit_meta: dict | Callable[[], dict] | None = None,
 ) -> None:
@@ -149,7 +160,7 @@ def table_schema(spark: SparkSession, path: str) -> StructType:
     return schema if schema is not None else read_table(spark, path).schema
 
 
-def append_evolve(spark: SparkSession, df: DataFrame, path: str) -> None:
+def append_evolve(spark: SparkSession, df: DataFrame | LocalRows, path: str) -> None:
     """Append with schema evolution (S5): union-by-name against the
     table's committed schema. The first write to a fresh path is a
     ``write_snapshot`` commit. New batch columns join the schema after
@@ -160,7 +171,10 @@ def append_evolve(spark: SparkSession, df: DataFrame, path: str) -> None:
 
     The files land in the committed version's directory. On a pointer
     table the evolved schema is committed before the files are written,
-    so no appended row is ever visible without its columns."""
+    so no appended row is ever visible without its columns. A
+    ``LocalRows`` batch lands as one file written on the driver (no
+    job); its missing table columns are left out of the file, which
+    readers fill with nulls as they do for old files."""
     d = _table_dir(path)
     if d is None:
         write_snapshot(df, path, retain=1)
@@ -177,15 +191,81 @@ def append_evolve(spark: SparkSession, df: DataFrame, path: str) -> None:
     if clash:
         raise ValueError(f"append to {path} changes column types: {', '.join(clash)}")
     aligned = df
-    for field in existing.fields:
-        if field.name not in df.columns:
-            aligned = aligned.withColumn(field.name, F.lit(None).cast(field.dataType))
+    if isinstance(df, DataFrame):
+        for field in existing.fields:
+            if field.name not in df.columns:
+                aligned = aligned.withColumn(field.name, F.lit(None).cast(field.dataType))
     ptr = _pointer(path)
     if ptr is not None:
         evolved = StructType(existing.fields + [f for f in df.schema.fields if f.name not in have])
         if ptr.get("schema") != evolved.jsonValue():
             _flip(Path(path), {**ptr, "schema": evolved.jsonValue()})
-    aligned.write.mode("append").parquet(str(d))
+    _write_data(aligned, d, "append")
+
+
+def _write_data(data: DataFrame | LocalRows, d: Path, mode: str) -> None:
+    """The data step of every commit: a Spark write job for a DataFrame,
+    or for ``LocalRows`` one parquet file written on the driver by
+    ``pyarrow`` (no job). ``mode`` is ``"overwrite"`` for a fresh
+    ``v=N`` stage, which nothing reads before its flip, and
+    ``"append"`` for a committed directory: there the local file is
+    written under a hidden name (readers skip ``.``-prefixed files) and
+    renamed into place, so a crash never exposes a partial file."""
+    if isinstance(data, DataFrame):
+        data.write.mode(mode).parquet(str(d))
+        return
+    import pyarrow.parquet as pq
+
+    if mode == "overwrite" and d.exists():
+        shutil.rmtree(d)  # a crashed writer's stage of the same version
+    d.mkdir(parents=True, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    if mode == "overwrite":
+        pq.write_table(data.to_arrow(), d / name)
+        return
+    pq.write_table(data.to_arrow(), d / f".{name}")
+    os.rename(d / f".{name}", d / name)
+
+
+def column_max(path: str, column: str):
+    """The largest value of the non-partition ``column`` over the
+    committed files of the table at ``path`` (the files ``read_table``
+    reads), or None when there is no table or no non-null value. Read
+    on the driver from the parquet footers' min/max statistics; a row
+    group without them is read. No Spark job."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    d = _table_dir(path)
+    if d is None:
+        return None
+    best = None
+    for f in sorted(d.rglob("*")):
+        parts = f.relative_to(d).parts
+        if (
+            not f.is_file()
+            or any(part.startswith((".", "_")) for part in parts)
+            or (d == Path(path) and parts[0].startswith("v="))
+        ):
+            continue
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            chunk = next(
+                (rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == column),
+                None,
+            )
+            if chunk is None:  # a file from before the column existed
+                break
+            stats = chunk.statistics
+            if stats is not None and stats.has_min_max:
+                top = stats.max
+            else:
+                top = pc.max(pf.read_row_group(g, columns=[column])[column]).as_py()
+            if top is not None and (best is None or top > best):
+                best = top
+    return best
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -297,7 +377,7 @@ def save_managed_table(df: DataFrame, qualified_name: str, mode: str = "overwrit
 # ---------------------------------------------------------------------------
 
 def write_snapshot(
-    df: DataFrame,
+    df: DataFrame | LocalRows,
     path: str,
     retain: int = 5,
     commit_meta: dict | Callable[[], dict] | None = None,
@@ -312,12 +392,18 @@ def write_snapshot(
     Readers of version N−1 keep a consistent view while N lands, because
     snapshot files are never mutated; old versions stay readable
     (``read_snapshot(..., version=k)``) until pruned. Returns the
-    committed version number."""
+    committed version number.
+
+    ``df`` is the data step's source: a DataFrame, written by a Spark
+    job, or ``LocalRows`` held on the driver, written as one parquet
+    file by ``pyarrow`` with no job (``_write_data``) — the commit of
+    the control-plane tables (watermarks, the run log). Staging, flip
+    and prune are the same for both."""
     p = Path(path)
     _table_dir(p)  # refuses a Delta table before anything is written
     cur = snapshot_current_version(path)
     new = 1 if cur is None else cur + 1
-    df.write.mode("overwrite").parquet(str(p / f"v={new}"))
+    _write_data(df, p / f"v={new}", "overwrite")
     meta = commit_meta() if callable(commit_meta) else commit_meta
     _flip(p, {"version": new, "meta": meta, "schema": df.schema.jsonValue()})
     # max(1, retain): the just-committed version must never prune

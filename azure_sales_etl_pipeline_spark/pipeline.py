@@ -23,13 +23,34 @@ writes only its own paths (``bronze/<t>``, ``silver/<t>``,
 run-log stage name as their description (``observe.described``).
 
 Stages communicate only through tables on disk (same as the reference's
-layer containers), so any stage can rerun independently; watermarks make
-reruns incremental and SCD2's no-change detection makes them idempotent.
+layer containers), so any stage can rerun independently, and watermarks
+make reruns incremental. Each gold mart is refreshed when its inputs
+changed (S7 refreshes every mart on every run; the result is the same):
+a mart whose plan and input files match the fingerprint in its commit
+meta is left alone. What a rerun leaves unchanged, today:
+- bronze→silver over a window silver already holds (a crash between the
+  silver commit and the watermark advance): SCD2 classifies every row NO
+  CHANGE and writes nothing;
+- silver→gold over unchanged silver: no mart is rewritten;
+- the run log: an append that crashed shows all of the run's rows or
+  none, and the next run takes an id no visible row holds.
+Not covered (ROADMAP O): ingest appends every landing file it finds on
+every run, so a rerun over the same landing root lands the batch again;
+and a window holding two rows of one key makes both current versions.
+
+Past the first load's probes (CSV schema inference, the empty-window
+check), every Spark job of a run moves data: watermarks and the run log
+commit from the driver (``writer``'s ``LocalRows`` data step), the next
+run id comes from the log's parquet footers, the landing probes read
+files on the driver, and a mart left alone fires nothing.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+import os
+import re
 import traceback
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -40,11 +61,17 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import LayerCatalog, table_exists
-from .functions import concurrent_map, local_df, utcnow_naive
+from .functions import LocalRows, concurrent_map, local_df, utcnow_naive
 from .observe import described
 from .operators.scd2 import SCD2Table
 from .operators.watermark import WatermarkStore
-from .operators.writer import append_evolve, overwrite_table, read_table
+from .operators.writer import (
+    append_evolve,
+    column_max,
+    overwrite_table,
+    read_commit_meta,
+    read_table,
+)
 from .sources.ingest import CsvIngestor
 
 #: Persisted run-log row shape (the reference DESCRIBES a logging table,
@@ -76,6 +103,45 @@ class StageResult:
     error: str | None = None
 
 
+def _input_fingerprint(df: DataFrame) -> str | None:
+    """A digest of what ``df`` computes and reads, or None when that
+    cannot tell whether its result changed. It covers the optimized
+    plan's text, expression ids (``#<n>``) stripped, and every file the
+    plan's relations list (``df.inputFiles()`` plus the files of
+    subqueries), sorted, with size and mtime for local files. None
+    unless the analyzed plan and its subqueries are deterministic
+    (``rand()`` is not) and every leaf is a file relation (a
+    ``local_df`` or ``rounds.cut`` leaf is held in memory).
+    ``current_timestamp()`` is deterministic in the analyzed plan; the
+    optimizer folds it to a literal, so it changes the plan text on
+    every call. Fires no job."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    files = set()
+    for plan in [analyzed, *_seq(analyzed.subqueriesAll())]:
+        if not plan.deterministic():
+            return None
+        for leaf in _seq(plan.collectLeaves()):
+            if (
+                leaf.getClass().getSimpleName() != "LogicalRelation"
+                or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+            ):
+                return None
+            files.update(leaf.relation().inputFiles())
+    text = df._jdf.queryExecution().optimizedPlan().treeString(False, False, 2**31 - 1, False, False)
+    parts = [re.sub(r"#\d+", "", text)]
+    for f in sorted(files):
+        if f.startswith("file:"):
+            st = os.stat("/" + f[len("file:"):].lstrip("/"))
+            f = f"{f} {st.st_size} {st.st_mtime_ns}"
+        parts.append(f)
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
+
+
+def _seq(seq) -> list:
+    """A Scala ``Seq`` as a Python list of its JVM objects."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 class MedallionPipeline:
     def __init__(
         self,
@@ -95,8 +161,8 @@ class MedallionPipeline:
         self.clock = clock or utcnow_naive
         self.on_insert = on_insert or {}
         # Silver→Gold stage (3_Silver_to_Gold.py): each mart is a
-        # builder over the silver layer, overwritten per run (S7 — the
-        # reference full-refreshes every gold mart).
+        # builder over the silver layer, overwritten on every run whose
+        # inputs changed (S7 — the reference full-refreshes every mart).
         self.gold_marts = gold_marts or {}
         self.watermarks = WatermarkStore(spark, self.catalog.path("state", "watermarks"))
         self.ingestor = CsvIngestor(spark, str(self.catalog.layer_root("bronze")), clock=self.clock)
@@ -125,7 +191,12 @@ class MedallionPipeline:
             return {"skipped": 1}
         bronze = read_table(self.spark, bronze_path)
         batch = self.watermarks.cut(bronze, cfg.ts_col, cfg.name)
-        if batch.isEmpty():
+        silver_path = self.catalog.path("silver", cfg.name)
+        # The empty-window probe guards only the first load, which would
+        # otherwise commit an empty silver table. Once silver exists an
+        # empty window runs the upsert: its cut counts zero of every
+        # action and nothing is written.
+        if not table_exists(silver_path) and batch.isEmpty():
             return {"insert": 0, "update": 0, "no_change": 0}
         # The new watermark (max ts of the batch) rides the upsert's own
         # first full pass over the batch via observe() instead of a
@@ -137,7 +208,7 @@ class MedallionPipeline:
         batch = batch.observe(wm_obs, F.max(F.col(cfg.ts_col)).alias("wm"))
         dim = SCD2Table(
             self.spark,
-            self.catalog.path("silver", cfg.name),
+            silver_path,
             cfg.business_key,
             # Audit/engine columns never participate in change detection.
             tracked_cols=[
@@ -151,23 +222,38 @@ class MedallionPipeline:
         stats = dim.upsert(batch)
         # Commit order preserved: the watermark advances only after the
         # upsert returned (at-least-once contract); the value itself was
-        # observed during the upsert's full scan of the batch.
-        wm = wm_obs.get["wm"]
-        if wm is not None:
-            self.watermarks.set(cfg.name, wm)
+        # observed during the upsert's full scan of the batch. Every
+        # batch row is classified INSERT, UPDATE or NO CHANGE, so zero of
+        # each means an empty window: the watermark stays, and its
+        # observation is not read (AQE drops an empty join side's
+        # metrics node, leaving the observation without a value).
+        if stats["insert"] or stats["update"] or stats["no_change"]:
+            self.watermarks.set(cfg.name, wm_obs.get["wm"])
         return stats
 
     def silver_to_gold(self, name: str) -> dict[str, int]:
         """Materialize one gold mart: full refresh by ``overwrite_table``,
         the reference's mode for every mart
-        (3_Silver_to_Gold.py:60,66,72,92,112,133 / S7)."""
+        (3_Silver_to_Gold.py:60,66,72,92,112,133 / S7), when its inputs
+        changed. The mart's commit meta records ``_input_fingerprint`` of
+        the frame it wrote; a mart whose frame has the same fingerprint
+        now is left alone (no job) and reports the rows it recorded —
+        the same table and the same run-log row a refresh would give."""
         df = self.gold_marts[name](self.spark, self.catalog)
         path = self.catalog.path("gold", name)
+        inputs = _input_fingerprint(df)
+        meta = read_commit_meta(path)
+        if inputs is not None and meta and meta.get("inputs") == inputs:
+            return {"rows": meta["rows"]}
         # The row count rides the mart write via observe() instead of a
         # count() re-read of the just-written parquet — one job, same
         # number (every written row passes the CollectMetrics node).
         obs = Observation()
-        overwrite_table(df.observe(obs, F.count(F.lit(1)).alias("n")), path)
+        overwrite_table(
+            df.observe(obs, F.count(F.lit(1)).alias("n")),
+            path,
+            commit_meta=lambda: {"rows": int(obs.get["n"]), "inputs": inputs},
+        )
         return {"rows": int(obs.get["n"])}
 
     # -- run log -------------------------------------------------------------
@@ -179,10 +265,10 @@ class MedallionPipeline:
         return read_table(self.spark, self.log_path)
 
     def _next_run_id(self) -> int:
-        if not table_exists(self.log_path):
-            return 1
-        prev = read_table(self.spark, self.log_path).agg(F.max("run_id")).first()[0]
-        return int(prev or 0) + 1
+        """One past the largest run id of the visible log rows, read from
+        the log files' footers (no job). An append shows all of a run's
+        rows or none, so even after a crash no visible id is reused."""
+        return int(column_max(self.log_path, "run_id") or 0) + 1
 
     def _persist_log(self, run_id: int, run_at: dt.datetime, results: list[StageResult]) -> None:
         rows = []
@@ -205,10 +291,10 @@ class MedallionPipeline:
                         r.error,
                     )
                 )
-        # One tiny control-plane file per run, appended — the log IS a
-        # queryable engine table (vs the reference's described-only one).
-        log = local_df(self.spark, rows, RUN_LOG_SCHEMA).coalesce(1)
-        append_evolve(self.spark, log, self.log_path)
+        # One tiny control-plane file per run, appended from the driver
+        # (no job) — the log IS a queryable engine table (vs the
+        # reference's described-only one).
+        append_evolve(self.spark, LocalRows(rows, RUN_LOG_SCHEMA), self.log_path)
 
     # -- driver -------------------------------------------------------------
 

@@ -14,7 +14,10 @@ Lifecycle per table (faithful to the reference):
   and source_file lineage (F2; :54-55)
 - append with schema evolution (S5, ``operators.writer.append_evolve``;
   :59-62), which also creates the table on first write (S6; :65-67)
-- empty input short-circuits (P12; :49) with df.isEmpty(), not .rdd
+- empty input short-circuits (P12; :49). The reference asks Spark
+  (``df.rdd.isEmpty()``); the engine reads each landing file's header
+  and checks for a data line after it on the driver
+  (``landing_header``), so neither probe fires a Spark job
 
 Scale: CSV read parallelism is per-file/per-split; the audit columns are
 pure map. The append itself writes without shuffle. At 100 TB you'd
@@ -25,7 +28,10 @@ one distributed job, and ``run`` loads the tables concurrently
 
 from __future__ import annotations
 
+import bz2
+import csv
 import datetime as dt
+import gzip
 from collections.abc import Callable
 from pathlib import Path
 
@@ -40,6 +46,12 @@ from ..operators.writer import append_evolve, table_schema
 
 AUDIT_COLS = ("ingestion_timestamp", "source_file")
 
+#: Compressed landing files the driver opens itself, by suffix (the
+#: suffixes Hadoop picks its codec by).
+_DRIVER_CODECS = {".gz": gzip.open, ".bz2": bz2.open}
+#: Hadoop codecs only Spark reads.
+_SPARK_CODECS = (".deflate", ".lz4", ".snappy", ".zst")
+
 
 def discover_sources(landing_root: str) -> dict[str, str]:
     """Per-table landing dirs/files, `_`-prefixed entries skipped."""
@@ -53,6 +65,34 @@ def discover_sources(landing_root: str) -> dict[str, str]:
         name = entry.stem if entry.is_file() else entry.name
         out[name] = str(entry)
     return out
+
+
+def landing_header(csv_path: str) -> tuple[list[str] | None, bool] | None:
+    """What Spark's CSV reader finds at ``csv_path``, read on the
+    driver: ``(header, has_rows)``. ``header`` is the column list every
+    file's header shares, None when they disagree; ``has_rows`` says
+    whether any file has a line after its header. Spark reads the file,
+    or every file under the directory whose path has no ``_``- or
+    ``.``-prefixed part; it skips a UTF-8 byte-order mark and blank
+    lines, and each file's first remaining line is its header. Returns
+    None when a file is compressed by a codec only Spark reads."""
+    root = Path(csv_path)
+    files = [root] if root.is_file() else sorted(
+        f for f in root.rglob("*")
+        if f.is_file() and not any(p.startswith(("_", ".")) for p in f.relative_to(root).parts)
+    )
+    headers, has_rows = set(), False
+    for f in files:
+        if f.suffix in _SPARK_CODECS:
+            return None
+        opener = _DRIVER_CODECS.get(f.suffix, open)
+        with opener(f, "rt", encoding="utf-8-sig", errors="replace") as lines:
+            filled = (line for line in lines if line.strip())
+            header = next(filled, None)
+            if header is not None:
+                headers.add(tuple(next(csv.reader([header]))))
+                has_rows = has_rows or next(filled, None) is not None
+    return (list(headers.pop()) if len(headers) == 1 else None), has_rows
 
 
 class CsvIngestor:
@@ -87,18 +127,28 @@ class CsvIngestor:
         Divergence from the reference, deliberate: imposing the pinned
         StructType on the CSV reader (1_Landing_to_Bronze.py:41-42)
         silently DROPS columns the batch added, so mergeSchema-on-write
-        never sees them. The engine reads the header first (one
-        first-line job): a batch whose columns the table already has is
-        parsed with the pinned types in header order (FAILFAST, so a
-        malformed value fails the load), with no inference pass. A batch
-        that adds a column is inferred, then the already-known columns
-        are cast back to their pinned types — type drift is still
-        impossible, but new columns survive to evolve the table.
+        never sees them. The engine reads the header first, on the
+        driver (``landing_header``): a batch whose files share a header
+        of columns the table already has is parsed with the pinned types
+        in header order (FAILFAST, so a malformed value fails the load),
+        with no inference pass. A batch that adds a column, or whose
+        files' headers disagree, is inferred, then the already-known
+        columns are cast back to their pinned types — type drift is
+        still impossible, but new columns survive to evolve the table.
+        On the pinned path the write is the load's one Spark job.
         """
+        probe = landing_header(csv_path)
+        if probe is not None and not probe[1]:
+            return 0
         pinned = self._pinned_schema(table)
         reader = self.spark.read.option("header", "true")
         types = {f.name: f.dataType for f in pinned.fields} if pinned else {}
-        names = reader.csv(csv_path).columns if pinned else []
+        if not pinned:
+            names = None
+        elif probe is None:  # a codec only Spark reads: Spark reads the header
+            names = reader.csv(csv_path).columns
+        else:
+            names = probe[0]
         if names and all(c in types for c in names):
             df = (
                 reader.schema(StructType([StructField(c, types[c]) for c in names]))
@@ -117,7 +167,7 @@ class CsvIngestor:
                     for c in df.columns
                 ]
             )
-        if df.isEmpty():
+        if probe is None and df.isEmpty():
             return 0
         # The ingested-rows count rides the WRITE job via the Observation
         # API instead of a second count() pass — at 100 TB that second

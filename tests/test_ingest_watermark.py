@@ -138,6 +138,27 @@ def test_discover_skips_underscore(tmp_path):
     assert list(discover_sources(str(tmp_path))) == ["real"]
 
 
+def test_landing_header_reads_plain_and_compressed_files_on_the_driver(tmp_path):
+    """The driver probe sees what Spark's CSV reader sees: a BOM and
+    blank lines skipped, gzip and bzip2 files opened, and a codec only
+    Spark reads left to Spark (None)."""
+    import bz2
+    import gzip
+
+    from azure_sales_etl_pipeline_spark.sources.ingest import landing_header
+
+    t = tmp_path / "t"
+    write_csv(t / "a.csv", "\ufeff\n  \n\"id\",v\n\n")
+    assert landing_header(str(t)) == (["id", "v"], False)
+    with gzip.open(t / "b.csv.gz", "wt") as f:
+        f.write("id,v\n1,x\n")
+    (t / "c.csv.bz2").write_bytes(bz2.compress(b"id,v\n"))
+    assert landing_header(str(t)) == (["id", "v"], True)
+    assert landing_header(str(t / "c.csv.bz2")) == (["id", "v"], False)
+    (t / "d.csv.zst").write_bytes(b"\x28\xb5\x2f\xfd")
+    assert landing_header(str(t)) is None
+
+
 def test_empty_csv_short_circuits(spark, tmp_path):
     landing = tmp_path / "landing"
     write_csv(landing / "t" / "b1.csv", "id,name\n")

@@ -349,8 +349,9 @@ def test_concurrent_stage_cuts_belong_to_the_caller_scope(spark, tmp_path):
 def test_every_stage_job_carries_the_caller_group_and_its_stage(spark, tmp_path, monkeypatch):
     """Under a caller job group, a 2-table, 2-mart run labels every job:
     the group is the caller's, and each stage's jobs are described by
-    its run-log stage name. The jobs left with the caller's own
-    description are exactly the run's control-plane jobs."""
+    its run-log stage name. The control plane (the run id, the run-log
+    append) fires no job, so no job is left with the caller's own
+    description."""
     from azure_sales_etl_pipeline_spark.observe import count_jobs, jobs_by_stage
 
     pipe = MedallionPipeline(
@@ -383,6 +384,151 @@ def test_every_stage_job_carries_the_caller_group_and_its_stage(spark, tmp_path,
     assert {group for group, _ in jobs} == {"run-group"}
     by_stage = {desc: n for (_, desc), n in jobs.items()}
     stages = {"ingest:a", "ingest:b", "a", "b", "gold:ma", "gold:mb"}
-    assert set(by_stage) == stages | {"control"}
+    assert set(by_stage) == stages
     assert all(by_stage[s] > 0 for s in stages)
-    assert len(control) == 2 and by_stage["control"] == sum(control)
+    assert control == [0, 0]
+
+
+def test_control_plane_commits_fire_no_job(spark, tmp_path):
+    """The next run id, the run-log append and a watermark commit are
+    written and read on the driver: 0 Spark jobs each, and the log still
+    reads back through ``read_table``."""
+    from azure_sales_etl_pipeline_spark.observe import count_jobs
+
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("a", "id")],
+                             clock=lambda: dt.datetime(2024, 1, 1))
+    pipe.run(str(_two_table_landing(tmp_path)))
+    got = []
+    assert count_jobs(spark, lambda: got.append(pipe._next_run_id())) == 0
+    assert got == [2]
+    assert count_jobs(spark, lambda: pipe._persist_log(2, dt.datetime(2024, 1, 2), [])) == 0
+    assert count_jobs(spark, lambda: pipe._persist_log(
+        3, dt.datetime(2024, 1, 3), [pipe._attempt("a", lambda: {"insert": 4})])) == 0
+    assert count_jobs(spark, lambda: pipe.watermarks.set("a", dt.datetime(2024, 5, 1))) == 0
+    assert pipe.watermarks.get("a") == dt.datetime(2024, 5, 1)
+    assert pipe._next_run_id() == 4
+    log = sorted((r["run_id"], r["stage"], r["n_insert"]) for r in
+                 read_table(spark, pipe.log_path).collect())
+    assert log == [(1, "__ingest__", 3), (1, "a", 2), (3, "a", 4)]
+
+
+def test_replay_run_fires_only_data_jobs(spark, tmp_path):
+    """A replay of the same landing batch: each ingest fires its write
+    alone, each all-NO-CHANGE SCD2 stage at most 3 jobs (the cut), and
+    gold, whose silver inputs did not change, none."""
+    from azure_sales_etl_pipeline_spark.observe import jobs_by_stage
+
+    clock = [dt.datetime(2024, 1, 1)]
+    pipe = MedallionPipeline(
+        spark,
+        str(tmp_path / "lake"),
+        [TableConfig("a", "id"), TableConfig("b", "id")],
+        clock=lambda: clock[0],
+        gold_marts={"ma": _current("a"), "mb": _current("b")},
+    )
+    landing = _two_table_landing(tmp_path)
+    first = pipe.run(str(landing))
+    clock[0] = dt.datetime(2024, 1, 2)
+    out = []
+    jobs = jobs_by_stage(spark, lambda: out.append(pipe.run(str(landing))))
+    by_stage = {desc: n for (_, desc), n in jobs.items()}
+    assert by_stage.pop("ingest:a") == 1 and by_stage.pop("ingest:b") == 1
+    assert set(by_stage) <= {"a", "b"} and all(n <= 3 for n in by_stage.values())
+    replay = {r.table: r.stats for r in out[0]}
+    assert replay["a"] == {"insert": 0, "update": 0, "no_change": 2}
+    assert replay["gold:ma"] == {"rows": 2} and replay["gold:mb"] == {"rows": 1}
+    assert [r.stats for r in first if r.table.startswith("gold:")] == [{"rows": 2}, {"rows": 1}]
+
+
+def _lake_files(root):
+    return {f: f.read_bytes() for f in sorted(root.rglob("*")) if f.is_file()}
+
+
+def test_header_only_landing_and_empty_window_write_nothing(spark, tmp_path):
+    """After a first load, a run whose landing file holds only its
+    header ingests 0 rows, and the SCD2 stage then sees an empty
+    watermark window: today's zero stats, and bronze, silver and the
+    watermark are left byte for byte as they were."""
+    landing = tmp_path / "landing"
+    write_csv(landing / "t" / "b.csv", "id,v\n1,x\n2,y\n")
+    clock = [dt.datetime(2024, 1, 1)]
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("t", "id")],
+                             clock=lambda: clock[0])
+    assert all(r.ok for r in pipe.run(str(landing)))
+    lake = tmp_path / "lake"
+    before = {layer: _lake_files(lake / layer) for layer in ("bronze", "silver")}
+    wm = _lake_files(lake / "state" / "watermarks")
+    clock[0] = dt.datetime(2024, 1, 2)
+    write_csv(landing / "t" / "b.csv", "\nid,v\n  \n")
+    results = {r.table: r for r in pipe.run(str(landing))}
+    assert results["__ingest__"].stats == {"rows": {"t": 0}}
+    assert results["t"].ok and results["t"].stats == {"insert": 0, "update": 0, "no_change": 0}
+    assert {layer: _lake_files(lake / layer) for layer in ("bronze", "silver")} == before
+    assert _lake_files(lake / "state" / "watermarks") == wm
+
+
+def test_two_file_landing_with_one_header_takes_the_pinned_path(spark, tmp_path):
+    """A landing dir of two files with the same header loads through the
+    pinned reader, read on the driver: the write is the load's one job.
+    A file whose header disagrees sends the load to inference."""
+    from azure_sales_etl_pipeline_spark.observe import count_jobs
+    from azure_sales_etl_pipeline_spark.sources.ingest import CsvIngestor, landing_header
+
+    landing = tmp_path / "landing" / "t"
+    write_csv(landing / "b0.csv", "id,amount\n1,1.5\n")
+    ing = CsvIngestor(spark, str(tmp_path / "bronze"), clock=lambda: dt.datetime(2024, 1, 1))
+    assert ing.ingest("t", str(landing)) == 1
+    write_csv(landing / "b0.csv", "id,amount\n2,3\n\n")
+    write_csv(landing / "b1.csv", '"id","amount"\n3,4.25\n4,5\n')
+    write_csv(landing / "_skipped" / "x.csv", "other\n")
+    assert landing_header(str(landing)) == (["id", "amount"], True)
+    got = []
+    assert count_jobs(spark, lambda: got.append(ing.ingest("t", str(landing)))) == 1
+    assert got == [3]
+    bronze = read_table(spark, str(tmp_path / "bronze" / "t"))
+    assert sorted((r["id"], r["amount"]) for r in bronze.collect()) == [
+        (1, 1.5), (2, 3.0), (3, 4.25), (4, 5.0)]
+    write_csv(landing / "b2.csv", "id,amount,extra\n")
+    assert landing_header(str(landing)) == (None, True)
+
+
+def test_gold_mart_refreshes_every_run_unless_its_inputs_are_files(spark, tmp_path):
+    """Replays over unchanged silver leave a plain mart alone (one
+    commit, three runs), but refresh, on every run, a mart that reads
+    the clock, draws ``rand``, has a ``local_df`` or ``rounds.cut``
+    leaf, or whose builder changes a literal."""
+    from pyspark.sql import functions as F
+
+    from azure_sales_etl_pipeline_spark.functions import local_df
+    from azure_sales_etl_pipeline_spark.operators import rounds
+    from azure_sales_etl_pipeline_spark.operators.writer import snapshot_current_version
+
+    current = _current("a")
+    calls = []
+
+    def literal(sp, catalog):
+        calls.append(1)
+        return current(sp, catalog).withColumn("n", F.lit(len(calls)))
+
+    marts = {
+        "plain": current,
+        "clock": lambda sp, c: current(sp, c).withColumn("at", F.current_timestamp()),
+        # a fixed seed prints the same plan on every run: only the
+        # determinism guard refreshes it
+        "rand": lambda sp, c: current(sp, c).withColumn("r", F.rand(7)),
+        "local": lambda sp, c: current(sp, c).unionByName(local_df(sp, [(9, "z")], "id int, v string")),
+        "cut": lambda sp, c: rounds.cut(current(sp, c)),
+        "literal": literal,
+    }
+    clock = [dt.datetime(2024, 1, 1)]
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("a", "id")],
+                             clock=lambda: clock[0], gold_marts=marts)
+    landing = _two_table_landing(tmp_path)
+    with rounds.scope():
+        for day in (1, 2, 3):
+            clock[0] = dt.datetime(2024, 1, day)
+            assert all(r.ok for r in pipe.run(str(landing)))
+    versions = {m: snapshot_current_version(pipe.catalog.path("gold", m)) for m in marts}
+    assert versions == {"plain": 1, "clock": 3, "rand": 3, "local": 3, "cut": 3, "literal": 3}
+    gold = read_table(spark, pipe.catalog.path("gold", "literal"))
+    assert {r["n"] for r in gold.collect()} == {3}

@@ -719,6 +719,64 @@ def test_concurrent_stages_match_the_serial_loop(spark, tmp_path_factory, runs):
     assert results[0][-1][1:3] == (True, {"rows": results[0][-1][2]["rows"], "attempts": 2})
 
 
+@settings(_slow, max_examples=3)  # each example runs 3-4 pipeline runs twice
+@given(runs=_cdc_runs())
+@example(runs=[[{1: "a", 2: "b"}, {3: "c"}], [{1: "b", 4: "a"}, {}]])
+def test_gold_left_alone_matches_a_full_refresh(spark, tmp_path_factory, runs):
+    """Random CDC runs, then a replay of the last landing, with a table
+    that fails every run: after every run each gold mart equals a fresh
+    evaluation of its builder, and results, silver, gold, watermarks and
+    the run log equal those of runs that refresh every mart. The replay
+    leaves the marts over silver files alone."""
+    from azure_sales_etl_pipeline_spark import pipeline
+    from azure_sales_etl_pipeline_spark.operators.writer import (
+        read_table,
+        snapshot_current_version,
+    )
+
+    root = tmp_path_factory.mktemp("gold_skip")
+    landing = root / "landing"
+
+    def write_run(batches):
+        def write():
+            for name, batch in [("bad", {1: "x"}), *((f"t{i}", b) for i, b in enumerate(batches))]:
+                (landing / name).mkdir(parents=True, exist_ok=True)
+                body = "".join(f"{k},{v}\n" for k, v in sorted(batch.items()))
+                (landing / name / "b.csv").write_text("id,v\n" + body)
+
+        return write
+
+    writers = [write_run(batches) for batches in runs] + [lambda: None]  # the replay
+    real_run = pipeline.MedallionPipeline.run
+    left_alone = []
+
+    def checked_run(pipe, landing_root):
+        def versions():
+            return {m: snapshot_current_version(pipe.catalog.path("gold", m)) for m in pipe.gold_marts}
+
+        before = versions()
+        out = real_run(pipe, landing_root)
+        left_alone.append({m for m, v in versions().items() if v is not None and v == before[m]})
+        for name, build in pipe.gold_marts.items():
+            path = pipe.catalog.path("gold", name)
+            if table_exists(path):
+                fresh = sorted(map(tuple, build(spark, pipe.catalog).collect()), key=repr)
+                assert sorted(map(tuple, read_table(spark, path).collect()), key=repr) == fresh
+        return out
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(pipeline.MedallionPipeline, "run", checked_run)
+        skipping = _run_medallion(spark, root / "lake_skip", landing, writers)
+        skipped = left_alone[:]
+        m.setattr(pipeline, "_input_fingerprint", lambda df: None)
+        refreshing = _run_medallion(spark, root / "lake_full", landing, writers)
+    assert skipping == refreshing
+    assert not any(left_alone[len(writers):])  # the refreshing side rewrote every run
+    if any(batches[0] for batches in runs):  # by_value reads t0's silver files
+        # the replay changes no silver row, so it leaves by_value alone
+        assert "by_value" in skipped[-1]
+
+
 # Jobs per cold run (memos evicted, noop write) at sf0.001 under this
 # session's 4 shuffle partitions: the counts before the round loops
 # moved onto ``operators.rounds.iterate``. A loop consumer may only

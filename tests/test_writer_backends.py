@@ -497,10 +497,13 @@ def _crash_after(monkeypatch, step: str) -> list:
     import os
     import shutil
 
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     targets = {
-        "data": [(DataFrameWriter, "parquet")],
+        # A DataFrame's data step is a Spark write, driver-held rows'
+        # (``LocalRows``) one pyarrow file.
+        "data": [(DataFrameWriter, "parquet"), (pq, "write_table")],
         "flip": [(os, "replace")],
         "prune": [(shutil, "rmtree"), (Path, "unlink")],
     }[step]
@@ -594,6 +597,62 @@ def test_watermark_set_survives_crash_at_every_step(spark, tmp_path, monkeypatch
     assert store.get("t") in ((before, new) if fired else (new,))
     store.set("t", new)
     assert store.get("t") == new
+
+
+@pytest.mark.parametrize("state", _STATES)
+@pytest.mark.parametrize("step", ["data", "flip", "prune"])
+def test_run_log_append_survives_crash_at_every_step(spark, tmp_path, monkeypatch, step, state):
+    """A run whose run-log append crashes after any step leaves all of
+    its log rows visible or none; the next run takes an id no visible
+    row holds, and no row is duplicated or torn."""
+    from collections import Counter
+
+    from azure_sales_etl_pipeline_spark.functions import local_df
+    from azure_sales_etl_pipeline_spark.pipeline import (
+        RUN_LOG_SCHEMA,
+        MedallionPipeline,
+        TableConfig,
+    )
+
+    clock = [dt.datetime(2024, 1, 1)]
+    # "ghost" is never landed: its stage logs a row and writes nothing,
+    # so the log append is the run's only write.
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("ghost", "id")],
+                             clock=lambda: clock[0])
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    if state == "pointer":
+        pipe.run(str(landing))
+    elif state == "legacy":
+        old = [(7, clock[0], stage, True, 0, None, None, None, None)
+               for stage in ("__ingest__", "ghost")]
+        local_df(spark, old, RUN_LOG_SCHEMA).coalesce(1).write.parquet(pipe.log_path)
+
+    def runs():
+        log = pipe.run_log().collect() if Path(pipe.log_path).exists() else []
+        rows = Counter((r["run_id"], r["stage"]) for r in log)
+        assert set(rows.values()) <= {1}, rows  # no duplicated row
+        per_run = Counter(run_id for run_id, _ in rows)
+        assert set(per_run.values()) <= {2}, per_run  # no torn run
+        return sorted(per_run)
+
+    before = runs()
+    clock[0] = dt.datetime(2024, 1, 2)
+    fired = _crash_after(monkeypatch, step)
+    try:
+        pipe.run(str(landing))
+    except _Crash:
+        pass
+    monkeypatch.undo()
+    crashed = runs()
+    assert crashed == before or (crashed[:-1] == before and crashed[-1] > max(before, default=0))
+    assert fired or step != "data"
+    if not fired:
+        assert len(crashed) == len(before) + 1
+    clock[0] = dt.datetime(2024, 1, 3)
+    pipe.run(str(landing))
+    after = runs()
+    assert after[:-1] == crashed and after[-1] > max(crashed, default=0)
 
 
 @pytest.mark.parametrize("step", ["flip", "data"])
