@@ -91,10 +91,17 @@ class WatermarkStore(_WatermarkOps):
         row = read_table(self.spark, p).first()
         return row["watermark"] if row else DEFAULT_WATERMARK
 
-    def set(self, table: str, value: dt.datetime) -> None:
+    def inputs(self, table: str) -> str | None:
+        """The ``inputs`` the table's watermark was last ``set`` with."""
+        meta = read_commit_meta(str(self._path(table)))
+        return meta.get("inputs") if meta else None
+
+    def set(self, table: str, value: dt.datetime, inputs: str | None = None) -> None:
         """Atomic replace through the engine's table-commit protocol: a
         crash leaves the old watermark or the new one, never none. The
         row is written from the driver (``LocalRows``): no Spark job.
+        ``inputs`` (a caller's digest of what the window was cut from)
+        commits with the value; ``inputs`` reads it back.
 
         The pointer flip is local-POSIX-atomic; on object stores keep
         watermark state in a transactional store (``JdbcWatermarkStore``;
@@ -103,7 +110,7 @@ class WatermarkStore(_WatermarkOps):
         overwrite_table(
             LocalRows([(table, value)], _SCHEMA),
             str(self._path(table)),
-            commit_meta={"watermark": value.isoformat()},
+            commit_meta={"watermark": value.isoformat(), "inputs": inputs},
         )
 
 

@@ -227,13 +227,12 @@ def _write_data(data: DataFrame | LocalRows, d: Path, mode: str) -> None:
     os.rename(d / f".{name}", d / name)
 
 
-def column_max(path: str, column: str):
-    """The largest value of the non-partition ``column`` over the
-    committed files of the table at ``path`` (the files ``read_table``
-    reads), or None when there is no table or no non-null value. Read
-    on the driver from the parquet footers' min/max statistics; a row
-    group without them is read. No Spark job."""
-    import pyarrow.compute as pc
+def column_max(path: str, column: str) -> int | None:
+    """The largest value of the int64 ``column`` over the committed files
+    of the table at ``path`` (the files ``read_table`` reads), or None
+    when there is no table or no non-null value. Read on the driver from
+    the parquet footers' min/max statistics, which pyarrow and Spark
+    both write for int64 columns: no Spark job."""
     import pyarrow.parquet as pq
 
     d = _table_dir(path)
@@ -248,23 +247,15 @@ def column_max(path: str, column: str):
             or (d == Path(path) and parts[0].startswith("v="))
         ):
             continue
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
+        md = pq.read_metadata(f)
+        j = md.schema.names.index(column)
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
-            chunk = next(
-                (rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == column),
-                None,
-            )
-            if chunk is None:  # a file from before the column existed
-                break
-            stats = chunk.statistics
-            if stats is not None and stats.has_min_max:
-                top = stats.max
-            else:
-                top = pc.max(pf.read_row_group(g, columns=[column])[column]).as_py()
-            if top is not None and (best is None or top > best):
-                best = top
+            if not rg.num_rows:  # an empty file's row group has no statistics
+                continue
+            stats = rg.column(j).statistics
+            if stats.has_min_max and (best is None or stats.max > best):  # all null: none
+                best = stats.max
     return best
 
 

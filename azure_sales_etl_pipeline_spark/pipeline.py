@@ -42,7 +42,8 @@ Past the first load's probes (CSV schema inference, the empty-window
 check), every Spark job of a run moves data: watermarks and the run log
 commit from the driver (``writer``'s ``LocalRows`` data step), the next
 run id comes from the log's parquet footers, the landing probes read
-files on the driver, and a mart left alone fires nothing.
+files on the driver, and an idle table (bronze holds the files its
+watermark was advanced over) and a mart left alone fire nothing.
 """
 
 from __future__ import annotations
@@ -55,6 +56,8 @@ import traceback
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 
@@ -108,17 +111,21 @@ def _input_fingerprint(df: DataFrame) -> str | None:
     cannot tell whether its result changed. It covers the optimized
     plan's text, expression ids (``#<n>``) stripped, and every file the
     plan's relations list (``df.inputFiles()`` plus the files of
-    subqueries), sorted, with size and mtime for local files. None
-    unless the analyzed plan and its subqueries are deterministic
-    (``rand()`` is not) and every leaf is a file relation (a
-    ``local_df`` or ``rounds.cut`` leaf is held in memory).
-    ``current_timestamp()`` is deterministic in the analyzed plan; the
-    optimizer folds it to a literal, so it changes the plan text on
-    every call. Fires no job."""
+    subqueries, ``_stamped``). None unless the analyzed plan and its
+    subqueries are deterministic (``rand()`` is not), call no
+    user-defined function (a Python or Scala UDF, ``mapInPandas`` and
+    ``applyInPandas`` included: the plan names the function but does
+    not hold its code, so an edited body would print the same plan),
+    and every leaf is a file relation (a ``local_df`` or ``rounds.cut``
+    leaf is held in memory). ``current_timestamp()`` is deterministic
+    in the analyzed plan; the optimizer folds it to a literal, so it
+    changes the plan text on every call. Fires no job."""
     analyzed = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    udfs = [patterns.withName(n) for n in ("PYTHON_UDF", "SCALA_UDF")]
     files = set()
     for plan in [analyzed, *_seq(analyzed.subqueriesAll())]:
-        if not plan.deterministic():
+        if not plan.deterministic() or any(plan.containsPattern(u) for u in udfs):
             return None
         for leaf in _seq(plan.collectLeaves()):
             if (
@@ -128,12 +135,24 @@ def _input_fingerprint(df: DataFrame) -> str | None:
                 return None
             files.update(leaf.relation().inputFiles())
     text = df._jdf.queryExecution().optimizedPlan().treeString(False, False, 2**31 - 1, False, False)
-    parts = [re.sub(r"#\d+", "", text)]
+    return _digest([re.sub(r"#\d+", "", text), *_stamped(files)])
+
+
+def _stamped(files) -> list[str]:
+    """``files`` (URIs, as Spark lists them), sorted, each local file
+    with its size and mtime. Spark percent-encodes the URIs (a space
+    reads ``%20``), so a local one is decoded before its stat."""
+    out = []
     for f in sorted(files):
-        if f.startswith("file:"):
-            st = os.stat("/" + f[len("file:"):].lstrip("/"))
+        uri = urlparse(f)
+        if uri.scheme == "file":
+            st = os.stat(url2pathname(uri.path))
             f = f"{f} {st.st_size} {st.st_mtime_ns}"
-        parts.append(f)
+        out.append(f)
+    return out
+
+
+def _digest(parts: list[str]) -> str:
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()
 
 
@@ -192,11 +211,18 @@ class MedallionPipeline:
         bronze = read_table(self.spark, bronze_path)
         batch = self.watermarks.cut(bronze, cfg.ts_col, cfg.name)
         silver_path = self.catalog.path("silver", cfg.name)
-        # The empty-window probe guards only the first load, which would
-        # otherwise commit an empty silver table. Once silver exists an
-        # empty window runs the upsert: its cut counts zero of every
-        # action and nothing is written.
-        if not table_exists(silver_path) and batch.isEmpty():
+        # The watermark's commit records the bronze files it was advanced
+        # over; every row in them is at or below it. So while bronze
+        # holds the same files the window is empty, decided on the
+        # driver: an idle table fires no job. The first load keeps its
+        # probe, which saves committing an empty silver table. Over
+        # changed bronze the window is cut without a probe: an empty one
+        # (rows only at or below the watermark) runs the upsert, whose
+        # cut counts zero of every action, and nothing is written.
+        inputs = _digest(_stamped(bronze.inputFiles()))
+        if self.watermarks.inputs(cfg.name) == inputs or (
+            not table_exists(silver_path) and batch.isEmpty()
+        ):
             return {"insert": 0, "update": 0, "no_change": 0}
         # The new watermark (max ts of the batch) rides the upsert's own
         # first full pass over the batch via observe() instead of a
@@ -228,7 +254,7 @@ class MedallionPipeline:
         # observation is not read (AQE drops an empty join side's
         # metrics node, leaving the observation without a value).
         if stats["insert"] or stats["update"] or stats["no_change"]:
-            self.watermarks.set(cfg.name, wm_obs.get["wm"])
+            self.watermarks.set(cfg.name, wm_obs.get["wm"], inputs=inputs)
         return stats
 
     def silver_to_gold(self, name: str) -> dict[str, int]:

@@ -17,7 +17,9 @@ Lifecycle per table (faithful to the reference):
 - empty input short-circuits (P12; :49). The reference asks Spark
   (``df.rdd.isEmpty()``); the engine reads each landing file's header
   and checks for a data line after it on the driver
-  (``landing_header``), so neither probe fires a Spark job
+  (``landing_header``), so neither probe fires a Spark job. A compressed
+  landing is left to Spark: the header and the empty check are a job
+  each
 
 Scale: CSV read parallelism is per-file/per-split; the audit columns are
 pure map. The append itself writes without shuffle. At 100 TB you'd
@@ -28,10 +30,8 @@ one distributed job, and ``run`` loads the tables concurrently
 
 from __future__ import annotations
 
-import bz2
 import csv
 import datetime as dt
-import gzip
 from collections.abc import Callable
 from pathlib import Path
 
@@ -46,11 +46,9 @@ from ..operators.writer import append_evolve, table_schema
 
 AUDIT_COLS = ("ingestion_timestamp", "source_file")
 
-#: Compressed landing files the driver opens itself, by suffix (the
-#: suffixes Hadoop picks its codec by).
-_DRIVER_CODECS = {".gz": gzip.open, ".bz2": bz2.open}
-#: Hadoop codecs only Spark reads.
-_SPARK_CODECS = (".deflate", ".lz4", ".snappy", ".zst")
+#: The suffixes Hadoop picks a compression codec by: such landing files
+#: are left to Spark.
+_CODECS = (".bz2", ".deflate", ".gz", ".lz4", ".snappy", ".zst")
 
 
 def discover_sources(landing_root: str) -> dict[str, str]:
@@ -75,7 +73,7 @@ def landing_header(csv_path: str) -> tuple[list[str] | None, bool] | None:
     or every file under the directory whose path has no ``_``- or
     ``.``-prefixed part; it skips a UTF-8 byte-order mark and blank
     lines, and each file's first remaining line is its header. Returns
-    None when a file is compressed by a codec only Spark reads."""
+    None when a file is compressed."""
     root = Path(csv_path)
     files = [root] if root.is_file() else sorted(
         f for f in root.rglob("*")
@@ -83,10 +81,9 @@ def landing_header(csv_path: str) -> tuple[list[str] | None, bool] | None:
     )
     headers, has_rows = set(), False
     for f in files:
-        if f.suffix in _SPARK_CODECS:
+        if f.suffix in _CODECS:
             return None
-        opener = _DRIVER_CODECS.get(f.suffix, open)
-        with opener(f, "rt", encoding="utf-8-sig", errors="replace") as lines:
+        with open(f, encoding="utf-8-sig", errors="replace") as lines:
             filled = (line for line in lines if line.strip())
             header = next(filled, None)
             if header is not None:
@@ -145,7 +142,7 @@ class CsvIngestor:
         types = {f.name: f.dataType for f in pinned.fields} if pinned else {}
         if not pinned:
             names = None
-        elif probe is None:  # a codec only Spark reads: Spark reads the header
+        elif probe is None:  # compressed: Spark reads the header
             names = reader.csv(csv_path).columns
         else:
             names = probe[0]

@@ -138,11 +138,10 @@ def test_discover_skips_underscore(tmp_path):
     assert list(discover_sources(str(tmp_path))) == ["real"]
 
 
-def test_landing_header_reads_plain_and_compressed_files_on_the_driver(tmp_path):
+def test_landing_header_reads_plain_files_and_leaves_compressed_ones_to_spark(tmp_path):
     """The driver probe sees what Spark's CSV reader sees: a BOM and
-    blank lines skipped, gzip and bzip2 files opened, and a codec only
-    Spark reads left to Spark (None)."""
-    import bz2
+    blank lines skipped, each file's first line its header. A landing
+    holding a compressed file is left to Spark (None)."""
     import gzip
 
     from azure_sales_etl_pipeline_spark.sources.ingest import landing_header
@@ -150,13 +149,36 @@ def test_landing_header_reads_plain_and_compressed_files_on_the_driver(tmp_path)
     t = tmp_path / "t"
     write_csv(t / "a.csv", "\ufeff\n  \n\"id\",v\n\n")
     assert landing_header(str(t)) == (["id", "v"], False)
-    with gzip.open(t / "b.csv.gz", "wt") as f:
-        f.write("id,v\n1,x\n")
-    (t / "c.csv.bz2").write_bytes(bz2.compress(b"id,v\n"))
+    write_csv(t / "b.csv", "id,v\n1,x\n")
     assert landing_header(str(t)) == (["id", "v"], True)
-    assert landing_header(str(t / "c.csv.bz2")) == (["id", "v"], False)
-    (t / "d.csv.zst").write_bytes(b"\x28\xb5\x2f\xfd")
+    with gzip.open(t / "c.csv.gz", "wt") as f:
+        f.write("id,v\n")
     assert landing_header(str(t)) is None
+    assert landing_header(str(t / "c.csv.gz")) is None
+
+
+def test_compressed_landing_loads_through_spark_probes(spark, tmp_path):
+    """A gzip landing takes Spark's header read and empty check: the
+    first load infers, a later one pins the bronze types, and a
+    header-only file ingests nothing."""
+    import gzip
+
+    def land(name, text):
+        with gzip.open(tmp_path / "landing" / "t" / name, "wt") as f:
+            f.write(text)
+
+    (tmp_path / "landing" / "t").mkdir(parents=True)
+    land("b0.csv.gz", "id,amount\n1,1.5\n")
+    ing = CsvIngestor(spark, str(tmp_path / "bronze"), clock=lambda: dt.datetime(2024, 1, 1))
+    landing = str(tmp_path / "landing" / "t")
+    assert ing.ingest("t", landing) == 1
+    land("b0.csv.gz", "id,amount\n")
+    assert ing.ingest("t", landing) == 0
+    land("b0.csv.gz", "amount,id\n3,2\n")
+    assert ing.ingest("t", landing) == 1
+    bronze = read_table(spark, str(tmp_path / "bronze" / "t"))
+    assert dict(bronze.dtypes)["amount"] == "double"
+    assert sorted((r["id"], r["amount"]) for r in bronze.collect()) == [(1, 1.5), (2, 3.0)]
 
 
 def test_empty_csv_short_circuits(spark, tmp_path):

@@ -496,7 +496,9 @@ def test_gold_mart_refreshes_every_run_unless_its_inputs_are_files(spark, tmp_pa
     """Replays over unchanged silver leave a plain mart alone (one
     commit, three runs), but refresh, on every run, a mart that reads
     the clock, draws ``rand``, has a ``local_df`` or ``rounds.cut``
-    leaf, or whose builder changes a literal."""
+    leaf, calls a Python UDF (plain, ``mapInPandas`` or
+    ``applyInPandas``: the plan names the function, not its code), or
+    whose builder changes a literal."""
     from pyspark.sql import functions as F
 
     from azure_sales_etl_pipeline_spark.functions import local_df
@@ -504,6 +506,7 @@ def test_gold_mart_refreshes_every_run_unless_its_inputs_are_files(spark, tmp_pa
     from azure_sales_etl_pipeline_spark.operators.writer import snapshot_current_version
 
     current = _current("a")
+    bang = F.udf(lambda v: v + "!", "string")
     calls = []
 
     def literal(sp, catalog):
@@ -519,6 +522,10 @@ def test_gold_mart_refreshes_every_run_unless_its_inputs_are_files(spark, tmp_pa
         "local": lambda sp, c: current(sp, c).unionByName(local_df(sp, [(9, "z")], "id int, v string")),
         "cut": lambda sp, c: rounds.cut(current(sp, c)),
         "literal": literal,
+        "udf": lambda sp, c: current(sp, c).withColumn("v", bang("v")),
+        "pandas_map": lambda sp, c: current(sp, c).mapInPandas(lambda frames: frames, "id int, v string"),
+        "pandas_group": lambda sp, c: current(sp, c).groupBy("id").applyInPandas(
+            lambda frame: frame, "id int, v string"),
     }
     clock = [dt.datetime(2024, 1, 1)]
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("a", "id")],
@@ -529,6 +536,81 @@ def test_gold_mart_refreshes_every_run_unless_its_inputs_are_files(spark, tmp_pa
             clock[0] = dt.datetime(2024, 1, day)
             assert all(r.ok for r in pipe.run(str(landing)))
     versions = {m: snapshot_current_version(pipe.catalog.path("gold", m)) for m in marts}
-    assert versions == {"plain": 1, "clock": 3, "rand": 3, "local": 3, "cut": 3, "literal": 3}
+    assert versions == {"plain": 1, **{m: 3 for m in marts if m != "plain"}}
     gold = read_table(spark, pipe.catalog.path("gold", "literal"))
     assert {r["n"] for r in gold.collect()} == {3}
+
+
+def test_gold_mart_is_left_alone_under_a_lake_root_with_a_space(spark, tmp_path):
+    """Spark lists input files as percent-encoded URIs (``my%20lake``);
+    the fingerprints stat the decoded paths, so a second run over
+    unchanged silver succeeds and leaves the mart at its first commit."""
+    from azure_sales_etl_pipeline_spark.operators.writer import snapshot_current_version
+
+    clock = [dt.datetime(2024, 1, 1)]
+    pipe = MedallionPipeline(spark, str(tmp_path / "my lake"), [TableConfig("a", "id")],
+                             clock=lambda: clock[0], gold_marts={"ma": _current("a")})
+    landing = _two_table_landing(tmp_path)
+    for day in (1, 2):
+        clock[0] = dt.datetime(2024, 1, day)
+        results = {r.table: r for r in pipe.run(str(landing))}
+        assert all(r.ok for r in results.values())
+        assert results["gold:ma"].stats == {"rows": 2}
+    assert snapshot_current_version(pipe.catalog.path("gold", "ma")) == 1
+
+
+def test_idle_table_fires_no_job_and_writes_nothing(spark, tmp_path):
+    """A table with nothing newly landed holds the bronze files its
+    watermark was advanced over: its SCD2 stage gives the empty window's
+    zero stats at 0 jobs, leaving silver and the watermark as they were.
+    Its next landed batch runs the upsert again."""
+    import shutil
+
+    from azure_sales_etl_pipeline_spark.observe import jobs_by_stage
+
+    clock = [dt.datetime(2024, 1, 1)]
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"),
+                             [TableConfig("a", "id"), TableConfig("b", "id")],
+                             clock=lambda: clock[0])
+    landing = _two_table_landing(tmp_path)
+    assert all(r.ok for r in pipe.run(str(landing)))
+    lake = tmp_path / "lake"
+    before = [_lake_files(lake / "silver" / "b"), _lake_files(lake / "state" / "watermarks")]
+    shutil.rmtree(landing / "b")
+    clock[0] = dt.datetime(2024, 1, 2)
+    out = []
+    jobs = jobs_by_stage(spark, lambda: out.append(pipe.run(str(landing))))
+    results = {r.table: r for r in out[0]}
+    assert results["b"].ok and results["b"].stats == {"insert": 0, "update": 0, "no_change": 0}
+    assert results["a"].stats == {"insert": 0, "update": 0, "no_change": 2}
+    assert {desc for _, desc in jobs} == {"ingest:a", "a"}
+    assert _lake_files(lake / "silver" / "b") == before[0]
+    assert {f: v for f, v in _lake_files(lake / "state" / "watermarks").items()
+            if "b.wm" in f.parts} == {f: v for f, v in before[1].items() if "b.wm" in f.parts}
+    write_csv(landing / "b" / "b2.csv", "id,v\n1,q\n")
+    clock[0] = dt.datetime(2024, 1, 3)
+    results = {r.table: r for r in pipe.run(str(landing))}
+    assert results["b"].stats["update"] == 1
+
+
+def test_late_rows_give_an_empty_window_that_writes_nothing(spark, tmp_path):
+    """Over changed bronze the window is cut without a probe: a batch
+    whose rows are all at or below the watermark (a business-time
+    ``ts_col``) runs the upsert, which counts zero of every action; the
+    stats are the empty window's, and silver and the watermark are left
+    byte for byte as they were."""
+    landing = tmp_path / "landing"
+    write_csv(landing / "t" / "b.csv", "id,v,ts\n1,x,2024-01-05 00:00:00\n")
+    clock = [dt.datetime(2024, 1, 6)]
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), [TableConfig("t", "id", ts_col="ts")],
+                             clock=lambda: clock[0])
+    assert all(r.ok for r in pipe.run(str(landing)))
+    lake = tmp_path / "lake"
+    before = [_lake_files(lake / "silver"), _lake_files(lake / "state" / "watermarks")]
+    write_csv(landing / "t" / "b.csv", "id,v,ts\n2,y,2024-01-01 00:00:00\n")
+    clock[0] = dt.datetime(2024, 1, 7)
+    results = {r.table: r for r in pipe.run(str(landing))}
+    assert results["__ingest__"].stats == {"rows": {"t": 1}}
+    assert results["t"].ok and results["t"].stats == {"insert": 0, "update": 0, "no_change": 0}
+    assert [_lake_files(lake / "silver"), _lake_files(lake / "state" / "watermarks")] == before
+    assert pipe.watermarks.get("t") == dt.datetime(2024, 1, 5)
